@@ -231,25 +231,10 @@ object Bench {
       "reading >25% apart - treat sub-2x movement on sub-second " +
       "queries as shot noise and solo-pin anything larger"
 
-  /** Round-17 comparability notes (see the base_changed emission
-    * above). Retire entries when the next round's diff re-baselines;
-    * r16's notes are recorded in the committed BENCH_QUERIES_r16. */
-  private val BaseChanged: Map[String, String] = Map(
-    "inc_lsh_store" ->
-      ("r17: +third 'compacted' phase (one compactSnapshotStore + a " +
-        "third store-served screen) AND each phase's certification " +
-        "now runs validateMinHashBands with the manifest-roster " +
-        "completeness check - proof cost, not a plan change"),
-    "rp_health_runs" ->
-      ("r17: the run store reads via loadRunStore (mergeSchema " +
-        "footer union) so the retry detector stays armed on " +
-        "upgraded stores - a read-path option, not a plan change"),
-    "st_health_runs" ->
-      ("r17: the run store reads via loadRunStore (mergeSchema " +
-        "footer union) so the retry detector stays armed on " +
-        "upgraded stores - a read-path option, not a plan change"),
-    "st_inc_lsh_store" ->
-      ("r17: lshScreenAgainst now refuses parameter-mismatched " +
-        "stores (one skinny min/max aggregate per screen) - proof " +
-        "cost only"))
+  /** Comparability notes for the current round (see the base_changed
+    * emission above). Empty: r18 re-baselined every query, and no
+    * query's measured work has changed under its name since. Earlier
+    * rounds' notes stay in their committed sidecars
+    * (BENCH_QUERIES_r16.json, BENCH_QUERIES_r17_c8.json). */
+  private val BaseChanged: Map[String, String] = Map.empty
 }

@@ -120,11 +120,12 @@ object StoreBench {
       // the cost dimension the skinny single-table probe never pays
       for (nlist <- Seq(4, 64)) {
         val annDir = fresh(s"ann$nlist")
-        val idx = Q.ivfPqIndex(emb, "vec_id", "embedding",
-          nlist = nlist, coarseIters = 2, m = 4, ksub = 4, pqIters = 2)
-        Q.persistIvfPqIndex(idx, annDir, manifest = true)
-        org.apache.spark.sql.graftshim.Shims
-          .unpersistLocalCheckpoint(idx.codes)
+        graft.core.Pins.scope { p =>
+          val idx = Q.ivfPqIndex(emb, "vec_id", "embedding",
+            nlist = nlist, coarseIters = 2, m = 4, ksub = 4, pqIters = 2)
+          p.own(idx.codes)
+          Q.persistIvfPqIndex(idx, annDir, manifest = true)
+        }
         val vecIds = emb.filter(col("vec_id") % 10 === 3)
           .select(col("vec_id").as("nid")).localCheckpoint(true)
         // the exact two expressions affectedCells runs, per branch

@@ -2,8 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.Shims
-
+import graft.core.Pins
 import graft.functions.NativeExpressions
 
 /** Embedding clustering — the "train the coarse quantizer" half of IVF
@@ -100,13 +99,12 @@ object Clustering {
     cents
   }
 
-  private def checkpointInput(emb: DataFrame, idCol: String,
+  private def checkpointInput(p: Pins, emb: DataFrame, idCol: String,
                               vecCol: String): DataFrame =
     // one materialization of the skinny (id, v) projection: every
     // assignment round and every centroid aggregation re-reads this,
     // and without the checkpoint each would re-scan the source
-    emb.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .localCheckpoint(true)
+    p(emb.select(col(idCol).as("id"), col(vecCol).as("v")))
 
   /** k-means cluster assignment: one row per input id,
     * (idCol, cluster). `iters` assignment rounds run against the
@@ -114,16 +112,14 @@ object Clustering {
     * final round's, materialized (localCheckpoint) so the input
     * checkpoint can be freed before returning. */
   def kMeans(emb: DataFrame, idCol: String, vecCol: String,
-             k: Int, iters: Int): DataFrame = {
+             k: Int, iters: Int): DataFrame = Pins.scope { p =>
     require(k > 0 && iters > 0, s"need k > 0 and iters > 0: $k, $iters")
-    val d0 = checkpointInput(emb, idCol, vecCol)
-    try {
-      val cents = trainedCents(d0, k, iters)
-      d0.withColumn("cluster", assignCol(col("v"), cents))
-        .select(col("id").as(idCol), col("cluster").cast("int")
-          .as("cluster"))
-        .localCheckpoint(true)
-    } finally Shims.unpersistLocalCheckpoint(d0)
+    val d0 = checkpointInput(p, emb, idCol, vecCol)
+    val cents = trainedCents(d0, k, iters)
+    d0.withColumn("cluster", assignCol(col("v"), cents))
+      .select(col("id").as(idCol), col("cluster").cast("int")
+        .as("cluster"))
+      .localCheckpoint(true)
   }
 
   /** [[kMeans]] plus the assignment similarity:
@@ -139,23 +135,21 @@ object Clustering {
     * k. Zero-norm products score the -2.0 sentinel, as in assignment.
     */
   def kMeansWithSim(emb: DataFrame, idCol: String, vecCol: String,
-                    k: Int, iters: Int): DataFrame = {
+                    k: Int, iters: Int): DataFrame = Pins.scope { p =>
     require(k > 0 && iters > 0, s"need k > 0 and iters > 0: $k, $iters")
     val spark = emb.sparkSession
     import spark.implicits._
-    val d0 = checkpointInput(emb, idCol, vecCol)
-    try {
-      val cents = trainedCents(d0, k, iters)
-      val centDf = cents.map { case (c, cvec) => (c, cvec.toSeq) }
-        .toDF("cluster", "cv")
-      val denom = Similarity.norm(col("v")) * Similarity.norm(col("cv"))
-      d0.withColumn("cluster", assignCol(col("v"), cents))
-        .join(broadcast(centDf), Seq("cluster"))
-        .withColumn("csim", when(denom === 0d, lit(-2d))
-          .otherwise(round(Similarity.dot(col("v"), col("cv")) / denom, 6)))
-        .select(col("id").as(idCol), col("cluster").cast("int")
-          .as("cluster"), col("csim"))
-        .localCheckpoint(true)
-    } finally Shims.unpersistLocalCheckpoint(d0)
+    val d0 = checkpointInput(p, emb, idCol, vecCol)
+    val cents = trainedCents(d0, k, iters)
+    val centDf = cents.map { case (c, cvec) => (c, cvec.toSeq) }
+      .toDF("cluster", "cv")
+    val denom = Similarity.norm(col("v")) * Similarity.norm(col("cv"))
+    d0.withColumn("cluster", assignCol(col("v"), cents))
+      .join(broadcast(centDf), Seq("cluster"))
+      .withColumn("csim", when(denom === 0d, lit(-2d))
+        .otherwise(round(Similarity.dot(col("v"), col("cv")) / denom, 6)))
+      .select(col("id").as(idCol), col("cluster").cast("int")
+        .as("cluster"), col("csim"))
+      .localCheckpoint(true)
   }
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.Shims
+import graft.core.Pins
 
 /** Deduplication for training-data pipelines: exact (hash group-by),
   * n-gram Jaccard (lossless inverted-index blocking), MinHash-LSH
@@ -102,25 +102,20 @@ object Dedup {
     */
   def jaccardPairs(df: DataFrame, idCol: String, textCol: String,
                    k: Int, theta: Double, dfCap: Int = 0,
-                   materialize: Boolean = true): DataFrame = {
+                   materialize: Boolean = true): DataFrame = Pins.scope { p =>
     // materialize the hashed shingle sets once — the postings explode
     // would otherwise re-run the tokenize+hash lineage.
     val shBase = df
       .select(col(idCol).as("id"), hashedShingles(col(textCol), k).as("hs"))
-    val sh = if (materialize) shBase.localCheckpoint(true) else shBase.cache()
+    val sh = if (materialize) p(shBase) else shBase.cache()
     val posting = postings(sh, dfCap)
     val out = scoredJaccardPairs(posting, posting,
       col("a.id") < col("b.id"), theta, "id_a", "id_b")
-    if (!materialize) out
-    else {
-      // materialize the (small) pair output, then free the shingle-set
-      // blocks — without this every call leaks its `sh` cache for the
-      // session's lifetime (measured 2-17× pollution on unrelated
-      // queries running later in the same session)
-      val ck = out.localCheckpoint(true)
-      Shims.unpersistLocalCheckpoint(sh)
-      ck
-    }
+    // materialize the (small) pair output; the scope then frees the
+    // shingle-set blocks — without this every call leaks its `sh`
+    // cache for the session's lifetime (measured 2-17× pollution on
+    // unrelated queries running later in the same session)
+    if (materialize) out.localCheckpoint(true) else out
   }
 
   /** (id, n, s) posting rows from a shingled frame — the doc's set
@@ -166,13 +161,12 @@ object Dedup {
     * @return (src_id, dst_id, containment) with containment ≥ theta. */
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
                        k: Int, theta: Double,
-                       dfCap: Int = 0): DataFrame = {
+                       dfCap: Int = 0): DataFrame = Pins.scope { p =>
     require(theta > 0 && theta <= 1, s"theta must be in (0, 1], got $theta")
-    val sh = df.select(col(idCol).as("id"),
-        hashedShingles(col(textCol), k).as("hs"))
-      .localCheckpoint(true)
+    val sh = p(df.select(col(idCol).as("id"),
+        hashedShingles(col(textCol), k).as("hs")))
     val posting = postings(sh, dfCap)
-    val out = posting.as("a")
+    posting.as("a")
       .join(posting.as("b"),
         col("a.s") === col("b.s") && col("a.id") < col("b.id"))
       .groupBy(col("a.id").as("ia"), col("b.id").as("ib"),
@@ -188,8 +182,6 @@ object Dedup {
       .select("e.*")
       .filter(col("containment") >= theta)
       .localCheckpoint(true)
-    Shims.unpersistLocalCheckpoint(sh)
-    out
   }
 
   /** PER-GROUP line dedup — the surgical form of [[lineDedup]]: a
@@ -222,7 +214,7 @@ object Dedup {
   private def lineDedupImpl(docs: DataFrame, idCol: String,
                             groupCol: Option[String], textCol: String,
                             minCount: Int,
-                            delimiter: String): DataFrame = {
+                            delimiter: String): DataFrame = Pins.scope { p =>
     require(minCount >= 2, s"minCount must be >= 2: $minCount")
     require(delimiter.nonEmpty, "delimiter must be non-empty")
     val delim = java.util.regex.Pattern.quote(delimiter)
@@ -234,32 +226,29 @@ object Dedup {
     // of that (isNull, value) struct, shared with the grouped
     // cross-corpus screen tables.
     val gkey = groupCol.map(g => lineGroupKey(g).as("__g")).toSeq
-    val lines = docs
+    val lines = p(docs
       .select((col(idCol) +: gcols.map(col)) ++ gkey :+
         posexplode(split(col(textCol), delim)).as(Seq("pos", "ln")): _*)
       .withColumn("key",
         when(trim(col("ln")) === "", lit(null))
-          .otherwise(xxhash64(trim(col("ln")))))
+          .otherwise(xxhash64(trim(col("ln"))))))
+    val countKeys = groupCol.map(_ => "__g").toSeq :+ "key"
+    val counts = lines.filter(col("key").isNotNull)
+      .groupBy(countKeys.map(col): _*)
+      .agg(count(lit(1)).as("cnt"),
+        min(struct(col(idCol), col("pos"))).as("ck"))
+    val flagged = lines.join(counts, countKeys, "left")
+      .withColumn("keep",
+        col("key").isNull || col("cnt") < minCount
+          || struct(col(idCol), col("pos")) === col("ck"))
+    flagged.groupBy((idCol +: gcols).map(col): _*)
+      .agg(
+        concat_ws(delimiter, transform(
+          filter(array_sort(collect_list(struct(col("pos"), col("ln"),
+            col("keep")))), e => e.getField("keep")),
+          e => e.getField("ln"))).as("text"),
+        sum(when(col("keep"), 0L).otherwise(1L)).as("n_removed"))
       .localCheckpoint(true)
-    try {
-      val countKeys = groupCol.map(_ => "__g").toSeq :+ "key"
-      val counts = lines.filter(col("key").isNotNull)
-        .groupBy(countKeys.map(col): _*)
-        .agg(count(lit(1)).as("cnt"),
-          min(struct(col(idCol), col("pos"))).as("ck"))
-      val flagged = lines.join(counts, countKeys, "left")
-        .withColumn("keep",
-          col("key").isNull || col("cnt") < minCount
-            || struct(col(idCol), col("pos")) === col("ck"))
-      flagged.groupBy((idCol +: gcols).map(col): _*)
-        .agg(
-          concat_ws(delimiter, transform(
-            filter(array_sort(collect_list(struct(col("pos"), col("ln"),
-              col("keep")))), e => e.getField("keep")),
-            e => e.getField("ln"))).as("text"),
-          sum(when(col("keep"), 0L).otherwise(1L)).as("n_removed"))
-        .localCheckpoint(true)
-    } finally Shims.unpersistLocalCheckpoint(lines)
   }
 
   /** The EXISTING side of cross-corpus line dedup, materialized once:
@@ -535,23 +524,17 @@ object Dedup {
   def crossDedupNear(incoming: DataFrame, existing: DataFrame,
                      idCol: String, textCol: String,
                      k: Int, theta: Double, dfCap: Int = 0,
-                     materialize: Boolean = true): DataFrame = {
+                     materialize: Boolean = true): DataFrame = Pins.scope { p =>
     def shingled(df: DataFrame) = {
       val base = df.select(col(idCol).as("id"),
         hashedShingles(col(textCol), k).as("hs"))
-      if (materialize) base.localCheckpoint(true) else base.cache()
+      if (materialize) p(base) else base.cache()
     }
     val shIn = shingled(incoming)
     val shEx = shingled(existing)
     val out = scoredJaccardPairs(postings(shIn, dfCap),
       postings(shEx, dfCap), lit(true), theta, "in_id", "ex_id")
-    if (!materialize) out
-    else {
-      val ck = out.localCheckpoint(true)
-      Shims.unpersistLocalCheckpoint(shIn)
-      Shims.unpersistLocalCheckpoint(shEx)
-      ck
-    }
+    if (materialize) out.localCheckpoint(true) else out
   }
 
   /** Prefix-filtered exact Jaccard pairs — the PPJoin-family candidate
@@ -602,11 +585,11 @@ object Dedup {
     * @return (id_a, id_b, jac) with id_a < id_b, jac ≥ theta. */
   def prefixJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                          k: Int, theta: Double,
-                         materialize: Boolean = true): DataFrame = {
+                         materialize: Boolean = true): DataFrame = Pins.scope { p =>
     require(theta > 0 && theta <= 1, s"theta must be in (0, 1], got $theta")
     val shBase = df
       .select(col(idCol).as("id"), hashedShingles(col(textCol), k).as("hs"))
-    val sh = if (materialize) shBase.localCheckpoint(true) else shBase.cache()
+    val sh = if (materialize) p(shBase) else shBase.cache()
     val cand = prefixCandidates(sh, theta)
     val out = cand
       .join(sh.select(col("id").as("id_a"), col("hs").as("hs_a")), Seq("id_a"))
@@ -616,12 +599,7 @@ object Dedup {
         / (size(col("hs_a")) + size(col("hs_b")) - col("shared")), 6))
       .filter(col("jac") >= theta)
       .select("id_a", "id_b", "jac")
-    if (!materialize) out
-    else {
-      val ck = out.localCheckpoint(true)
-      Shims.unpersistLocalCheckpoint(sh)
-      ck
-    }
+    if (materialize) out.localCheckpoint(true) else out
   }
 
   /** Cross-corpus prefix-filtered exact Jaccard — [[prefixJaccardPairs]]'s
@@ -670,7 +648,12 @@ object Dedup {
     * keeps these on disk and refreshes them as batches commit. */
   final case class PrefixCrossIndex(shEx: DataFrame, dfreq: DataFrame,
                                     prefEx: DataFrame, k: Int,
-                                    theta: Double)
+                                    theta: Double) {
+    /** The index's three checkpoints, for the caller's [[Pins]] scope
+      * to own ([[Pins.own]]): every verb returns fresh ones and leaves
+      * the superseded index's frames to the caller. */
+    def frames: Seq[DataFrame] = Seq(shEx, dfreq, prefEx)
+  }
 
   def prefixCrossIndex(existing: DataFrame, idCol: String,
                        textCol: String, k: Int,
@@ -699,27 +682,23 @@ object Dedup {
     * (posts, dfreq)) — the inc_prefix_refresh oracle's claim. */
   def refreshPrefixCrossIndex(idx: PrefixCrossIndex, batch: DataFrame,
                               idCol: String,
-                              textCol: String): PrefixCrossIndex = {
-    val shNew = batch.select(col(idCol).as("id"),
-        hashedShingles(col(textCol), idx.k).as("hs"))
+                              textCol: String): PrefixCrossIndex = Pins.scope { p =>
+    // the batch shingle table is internal — everything downstream is
+    // re-checkpointed, so holding it would pin one orphaned batch-sized
+    // block set per refresh cycle on a long-running driver. The
+    // SUPERSEDED index (idx.shEx/dfreq/prefEx) stays the caller's to
+    // free: it may still be serving queries.
+    val shNew = p(batch.select(col(idCol).as("id"),
+        hashedShingles(col(textCol), idx.k).as("hs")))
+    val shEx = idx.shEx.unionByName(shNew).localCheckpoint(true)
+    val dfNew = crossPost(shNew).groupBy("s")
+      .agg(count(lit(1)).as("df"))
+    val dfreq = Incremental.mergeRollups(Seq(idx.dfreq, dfNew),
+        Seq("s"), Seq("df" -> "sum"))
       .localCheckpoint(true)
-    try {
-      val shEx = idx.shEx.unionByName(shNew).localCheckpoint(true)
-      val dfNew = crossPost(shNew).groupBy("s")
-        .agg(count(lit(1)).as("df"))
-      val dfreq = Incremental.mergeRollups(Seq(idx.dfreq, dfNew),
-          Seq("s"), Seq("df" -> "sum"))
-        .localCheckpoint(true)
-      val prefEx = crossPrefix(crossPost(shEx), dfreq, idx.theta)
-        .localCheckpoint(true)
-      PrefixCrossIndex(shEx, dfreq, prefEx, idx.k, idx.theta)
-    } finally
-      // the batch shingle table is internal — everything downstream
-      // is re-checkpointed, so holding it would pin one orphaned
-      // batch-sized block set per refresh cycle on a long-running
-      // driver. The SUPERSEDED index (idx.shEx/dfreq/prefEx) stays
-      // the caller's to free: it may still be serving queries.
-      Shims.unpersistLocalCheckpoint(shNew)
+    val prefEx = crossPrefix(crossPost(shEx), dfreq, idx.theta)
+      .localCheckpoint(true)
+    PrefixCrossIndex(shEx, dfreq, prefEx, idx.k, idx.theta)
   }
 
   /** [[prefixCrossJaccard]] against a pre-built [[prefixCrossIndex]].
@@ -729,11 +708,10 @@ object Dedup {
     * — the property the st_cross_near streaming twin asserts. */
   def prefixCrossJaccardAgainst(incoming: DataFrame,
                                 idx: PrefixCrossIndex, idCol: String,
-                                textCol: String): DataFrame = {
+                                textCol: String): DataFrame = Pins.scope { p =>
     val theta = idx.theta
-    val shIn = incoming.select(col(idCol).as("id"),
-        hashedShingles(col(textCol), idx.k).as("hs"))
-      .localCheckpoint(true)
+    val shIn = p(incoming.select(col(idCol).as("id"),
+        hashedShingles(col(textCol), idx.k).as("hs")))
     val cand = crossPrefix(crossPost(shIn), idx.dfreq, theta).as("a")
       .join(idx.prefEx.as("b"),
         col("a.s") === col("b.s")
@@ -741,7 +719,7 @@ object Dedup {
           && col("a.n").cast("double") >= lit(theta) * col("b.n") - lit(1e-9))
       .select(col("a.id").as("in_id"), col("b.id").as("ex_id"))
       .dropDuplicates("in_id", "ex_id")
-    val out = cand
+    cand
       .join(shIn.select(col("id").as("in_id"), col("hs").as("hs_a")),
         Seq("in_id"))
       .join(idx.shEx.select(col("id").as("ex_id"), col("hs").as("hs_b")),
@@ -752,8 +730,6 @@ object Dedup {
       .filter(col("jac") >= theta)
       .select("in_id", "ex_id", "jac")
       .localCheckpoint(true)
-    Shims.unpersistLocalCheckpoint(shIn)
-    out
   }
 
   /** Retract documents from a [[PrefixCrossIndex]] WITHOUT rescanning
@@ -800,25 +776,22 @@ object Dedup {
   def updatePrefixCrossIndex(idx: PrefixCrossIndex,
                              removeIds: DataFrame, batch: DataFrame,
                              idCol: String,
-                             textCol: String): PrefixCrossIndex = {
+                             textCol: String): PrefixCrossIndex = Pins.scope { p =>
     val ids = removeIds.select(col(idCol).as("id"))
     val shRm = idx.shEx.join(ids, Seq("id"), "left_semi")
-    val shNew = batch.select(col(idCol).as("id"),
-        hashedShingles(col(textCol), idx.k).as("hs"))
+    val shNew = p(batch.select(col(idCol).as("id"),
+        hashedShingles(col(textCol), idx.k).as("hs")))
+    val shEx = idx.shEx.join(ids, Seq("id"), "left_anti")
+      .unionByName(shNew).localCheckpoint(true)
+    val dfreq = Incremental.mergeRollups(Seq(
+        Incremental.subtractRollups(idx.dfreq,
+          crossPost(shRm).groupBy("s").agg(count(lit(1)).as("df")),
+          Seq("s"), Seq("df")),
+        crossPost(shNew).groupBy("s").agg(count(lit(1)).as("df"))),
+      Seq("s"), Seq("df" -> "sum")).localCheckpoint(true)
+    val prefEx = crossPrefix(crossPost(shEx), dfreq, idx.theta)
       .localCheckpoint(true)
-    try {
-      val shEx = idx.shEx.join(ids, Seq("id"), "left_anti")
-        .unionByName(shNew).localCheckpoint(true)
-      val dfreq = Incremental.mergeRollups(Seq(
-          Incremental.subtractRollups(idx.dfreq,
-            crossPost(shRm).groupBy("s").agg(count(lit(1)).as("df")),
-            Seq("s"), Seq("df")),
-          crossPost(shNew).groupBy("s").agg(count(lit(1)).as("df"))),
-        Seq("s"), Seq("df" -> "sum")).localCheckpoint(true)
-      val prefEx = crossPrefix(crossPost(shEx), dfreq, idx.theta)
-        .localCheckpoint(true)
-      PrefixCrossIndex(shEx, dfreq, prefEx, idx.k, idx.theta)
-    } finally Shims.unpersistLocalCheckpoint(shNew)
+    PrefixCrossIndex(shEx, dfreq, prefEx, idx.k, idx.theta)
   }
 
   /** Assert a [[PrefixCrossIndex]]'s df table is well-formed: no
@@ -839,12 +812,12 @@ object Dedup {
   def prefixCrossJaccard(incoming: DataFrame, existing: DataFrame,
                          idCol: String, textCol: String,
                          k: Int, theta: Double,
-                         materialize: Boolean = true): DataFrame = {
+                         materialize: Boolean = true): DataFrame = Pins.scope { p =>
     require(theta > 0 && theta <= 1, s"theta must be in (0, 1], got $theta")
     def shingled(df: DataFrame) = {
       val base = df.select(col(idCol).as("id"),
         hashedShingles(col(textCol), k).as("hs"))
-      if (materialize) base.localCheckpoint(true) else base.cache()
+      if (materialize) p(base) else base.cache()
     }
     val shIn = shingled(incoming)
     val shEx = shingled(existing)
@@ -867,13 +840,7 @@ object Dedup {
         / (size(col("hs_a")) + size(col("hs_b")) - col("shared")), 6))
       .filter(col("jac") >= theta)
       .select("in_id", "ex_id", "jac")
-    if (!materialize) out
-    else {
-      val ck = out.localCheckpoint(true)
-      Shims.unpersistLocalCheckpoint(shIn)
-      Shims.unpersistLocalCheckpoint(shEx)
-      ck
-    }
+    if (materialize) out.localCheckpoint(true) else out
   }
 
   /** Candidate (id_a, id_b) pairs of [[prefixJaccardPairs]] — exposed
@@ -964,11 +931,11 @@ object Dedup {
                       k: Int, theta: Double,
                       numPerm: Int = 256, bands: Int = 64,
                       bucketCap: Int = 64,
-                      materialize: Boolean = true): DataFrame = {
+                      materialize: Boolean = true): DataFrame = Pins.scope { p =>
     require(numPerm % bands == 0, "bands must divide numPerm")
     val rows = numPerm / bands
     def barrier(d: DataFrame): DataFrame =
-      if (materialize) d.localCheckpoint(true) else d.cache()
+      if (materialize) p(d) else d.cache()
     // materialize the hashed shingle sets once: every perm reads `hs`,
     // and without a barrier CollapseProject would re-inline the
     // shingle hashing into all numPerm expressions
@@ -1017,15 +984,9 @@ object Dedup {
         / (size(col("hs_a")) + size(col("hs_b")) - col("shared")), 6))
       .filter(col("jac") >= theta)
       .select("id_a", "id_b", "jac")
-    if (!materialize) out
-    else {
-      // materialize the (small) output, then free the shingle-set and
-      // signature blocks this operator cached (see jaccardPairs)
-      val ck = out.localCheckpoint(true)
-      Shims.unpersistLocalCheckpoint(sh)
-      Shims.unpersistLocalCheckpoint(sig)
-      ck
-    }
+    // materialize the (small) output; the scope then frees the
+    // shingle-set and signature blocks (see jaccardPairs)
+    if (materialize) out.localCheckpoint(true) else out
   }
 
   /** The BANDING HALF of [[minHashLshPairs]] as a standalone table —
@@ -1053,28 +1014,24 @@ object Dedup {
     * keep oracles on the non-null slice. */
   def minHashBands(df: DataFrame, idCol: String, textCol: String,
                    k: Int, numPerm: Int = 256,
-                   bands: Int = 64): DataFrame = {
-    val (out, sig) = minHashBandsLazy(df, idCol, textCol, k, numPerm,
-      bands)
-    val ck = out.localCheckpoint(true)
-    Shims.unpersistLocalCheckpoint(sig)
-    ck
+                   bands: Int = 64): DataFrame = Pins.scope { p =>
+    minHashBandsLazy(p, df, idCol, textCol, k, numPerm, bands)
+      .localCheckpoint(true)
   }
 
   /** [[minHashBands]] for callers that immediately hand the band rows
     * to a materializing consumer (a store init/commit, whose write
-    * path pins its input itself): returns the LAZY banded plan plus
-    * the internal signature barrier it reads, so the band table
-    * materializes ONCE — in the consumer — instead of paying
-    * minHashBands' own output checkpoint first (r17: one fewer
-    * 64·N-row materialization per band build). Caller contract: free
-    * the returned barrier (`Shims.unpersistLocalCheckpoint`) only
-    * AFTER the banded rows have fully materialized downstream; the
-    * lazy plan recomputes from the barrier until then. Same rows,
-    * same coverage contract as [[minHashBands]]. */
-  def minHashBandsLazy(df: DataFrame, idCol: String, textCol: String,
-                       k: Int, numPerm: Int = 256,
-                       bands: Int = 64): (DataFrame, DataFrame) = {
+    * path pins its input itself): returns the LAZY banded plan, so the
+    * band table materializes ONCE — in the consumer — instead of
+    * paying minHashBands' own output checkpoint first (r17: one fewer
+    * 64·N-row materialization per band build). The plan reads an
+    * internal signature checkpoint owned by `pins`: the caller's scope
+    * must not exit before the banded rows have fully materialized
+    * downstream. Same rows, same coverage contract as
+    * [[minHashBands]]. */
+  def minHashBandsLazy(pins: Pins, df: DataFrame, idCol: String,
+                       textCol: String, k: Int, numPerm: Int = 256,
+                       bands: Int = 64): DataFrame = {
     require(numPerm % bands == 0, "bands must divide numPerm")
     val rows = numPerm / bands
     // isNotNull, not size(hs) > 0: non-strict hashedShingles NEVER
@@ -1082,16 +1039,14 @@ object Dedup {
     // fallback covers < k tokens, zero included), so the two filters
     // admit the same rows — but this spelling makes the exclusion
     // rule (null text only) readable and pushdown-friendly
-    val sig = df.filter(col(textCol).isNotNull)
+    val sig = pins(df.filter(col(textCol).isNotNull)
       .select(col(idCol), hashedShingles(col(textCol), k).as("hs"))
-      .select(col(idCol), minHashSig(col("hs"), numPerm).as("sig"))
-      .localCheckpoint(true)
+      .select(col(idCol), minHashSig(col("hs"), numPerm).as("sig")))
     val bandCols = (0 until bands).map(b =>
       xxhash64((b * rows until (b + 1) * rows)
         .map(i => element_at(col("sig"), i + 1)): _*))
-    val out = sig.select(col(idCol),
+    sig.select(col(idCol),
       posexplode(array(bandCols: _*)).as(Seq("band", "bh")))
-    (out, sig)
   }
 
   /** Loud structural validator for a maintained band table — the
@@ -1216,7 +1171,10 @@ object Dedup {
     *    would mis-scope;
     *  - structure: an id without exactly `bands` rows spanning
     *    band ids [0, bands) exactly (banded twice, torn band set,
-    *    or band ids from foreign parameters).
+    *    or band ids from foreign parameters);
+    *  - repeated bands: an id with the right count and range whose
+    *    band ids are not all distinct — one band duplicated while
+    *    another went missing (bands {0, 0, 2} at bands = 3).
     *
     * Strictly STRONGER than the sequence it replaces: the per-id
     * batch agreement also catches an id whose rows tore across two
@@ -1231,9 +1189,19 @@ object Dedup {
                        numPerm: Int = 256, bands: Int = 64): Unit = {
     requireBandParams(spark, dir, k, numPerm, bands)
     val I = Incremental
+    // distinct band ids per id, counted as set bits of one OR-ed
+    // bitmask per 64 band ids: countDistinct would plan an extra
+    // (id, band) shuffle, one more stage and job per certification,
+    // where a bitwise OR is an ordinary partial aggregate. Band ids
+    // outside [0, bands) set no bit; the torn check refuses them.
+    val distinctBands = (0 until (bands + 63) / 64).map { w =>
+      bit_count(coalesce(bit_or(when(shiftright(col("band"), 6) === w,
+        call_function("shiftleft", lit(1L), col("band").bitwiseAND(63)))),
+        lit(0L)))
+    }.reduce(_ + _)
     val perId = I.readStoreWithBatch(spark, dir)
       .groupBy(col(idCol)).agg(
-        count(lit(1)).as("__n"),
+        count(lit(1)).as("__n"), distinctBands.as("__bd"),
         min("band").as("__blo"), max("band").as("__bhi"),
         min("batch").as("__slo"), max("batch").as("__shi"))
     val mAgg = I.loadSnapshotStoreManifest(spark, dir)
@@ -1253,10 +1221,12 @@ object Dedup {
             col("__shi") =!= col("__mhi"))).as("drifted"),
         cnt(col("__n").isNotNull && (col("__n") =!= bands.toLong ||
           col("__blo") =!= 0 || col("__bhi") =!= bands - 1))
-          .as("torn")).head
-    val (nulls, missing, unclaimed, drifted, torn) =
+          .as("torn"),
+        cnt(col("__n").isNotNull && col("__bd") =!= bands.toLong)
+          .as("repeated")).head
+    val (nulls, missing, unclaimed, drifted, torn, repeated) =
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getLong(4))
+        r.getLong(4), r.getLong(5))
     require(nulls == 0,
       s"band store $dir holds null ids - a null id can never be " +
         "retracted by id (equi-join discovery cannot match it); " +
@@ -1281,6 +1251,12 @@ object Dedup {
         s"band rows spanning [0, ${bands - 1}] - a doc was banded " +
         "twice, a band set is torn, or rows carry foreign LSH " +
         "parameters; re-band the affected docs")
+    require(repeated == 0,
+      s"band table corrupt: $repeated id(s) repeat a band id - the " +
+        s"$bands rows span [0, ${bands - 1}] but one band was " +
+        "duplicated while another went missing, so a bucket probe " +
+        "on the missing band silently misses; re-band the affected " +
+        "docs")
   }
 
   /** Ingest-time near-dup screen of an incoming batch against a
@@ -1352,7 +1328,8 @@ object Dedup {
                        textCol: String, k: Int, theta: Double,
                        numPerm: Int = 256, bands: Int = 64,
                        incomingBands: Option[DataFrame] = None,
-                       storedCertified: Boolean = false): DataFrame = {
+                       storedCertified: Boolean = false)
+      : DataFrame = Pins.scope { p =>
     // refuse a parameter-mismatched store BEFORE probing: a store
     // built at bands'≠bands has band ids spanning [0, bands') — the
     // probe would silently miss every bucket (see scaladoc). An
@@ -1373,24 +1350,22 @@ object Dedup {
             "screen with the parameters it was built with")
       }
     }
-    val ownsInBands = incomingBands.isEmpty
     val inBands = incomingBands.getOrElse(
-      minHashBands(incoming, idCol, textCol, k, numPerm, bands))
+      p.own(minHashBands(incoming, idCol, textCol, k, numPerm, bands)))
     // collision probe: skinny (id, band, bh) vs skinny stored rows —
     // candidates deduplicate before any text is touched
-    val cand = inBands.as("a")
+    val cand = p(inBands.as("a")
       .join(storedBands.as("b"),
         col("a.band") === col("b.band") && col("a.bh") === col("b.bh"))
       .select(col(s"a.$idCol").as("in_id"), col(s"b.$idCol").as("ex_id"))
-      .dropDuplicates("in_id", "ex_id")
-      .localCheckpoint(true)
+      .dropDuplicates("in_id", "ex_id"))
     // exact re-score on the hashed shingle sets of the CANDIDATES
     // only: both text reads are semi-join-scoped to candidate ids
     def shingleSets(src: DataFrame, side: String, ids: DataFrame) =
       src.join(ids, col(idCol) === col(side), "left_semi")
         .select(col(idCol).as(side),
           hashedShingles(col(textCol), k).as(s"hs_$side"))
-    val out = cand
+    cand
       .join(shingleSets(incoming, "in_id",
         cand.select("in_id").distinct()), Seq("in_id"))
       .join(shingleSets(existing, "ex_id",
@@ -1403,9 +1378,6 @@ object Dedup {
       .filter(col("jac") >= theta)
       .select("in_id", "ex_id", "jac")
       .localCheckpoint(true)
-    if (ownsInBands) Shims.unpersistLocalCheckpoint(inBands)
-    Shims.unpersistLocalCheckpoint(cand)
-    out
   }
 
   /** 64-bit SimHash of word tokens: per-token xxhash64, bitwise majority
@@ -1776,9 +1748,9 @@ object Dedup {
     * @return one row per input id: (idCol, cluster, kept). */
   def semDedup(emb: DataFrame, idCol: String, vecCol: String,
                k: Int, iters: Int, theta: Double,
-               clusterCap: Int = 4096): DataFrame = {
+               clusterCap: Int = 4096): DataFrame = Pins.scope { p =>
     require(clusterCap > 0, s"clusterCap must be positive: $clusterCap")
-    val a = Clustering.kMeansWithSim(emb, idCol, vecCol, k, iters)
+    val a = p.own(Clustering.kMeansWithSim(emb, idCol, vecCol, k, iters))
     val d = emb.select(col(idCol).as("id"), col(vecCol).as("v"))
       .join(a.select(col(idCol).as("id"), col("cluster"), col("csim")),
         Seq("id"))
@@ -1801,13 +1773,10 @@ object Dedup {
         .otherwise(round(Similarity.dot(col("uv"), col("vv")) / denom, 6)))
       .filter(col("cos") >= theta)
       .select(col("vid").as("id")).distinct()
-    val out = d
-      .join(removed.withColumn("__rm", lit(true)), Seq("id"), "left")
+    d.join(removed.withColumn("__rm", lit(true)), Seq("id"), "left")
       .select(col("id").as(idCol), col("cluster"),
         col("__rm").isNull.as("kept"))
       .localCheckpoint(true)
-    Shims.unpersistLocalCheckpoint(a)
-    out
   }
 
   /** Corpus-wide exact LINE deduplication — the C4 cleanup rule

@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.Shims
+
+import graft.core.Pins
 
 /** One stage of the resolution waterfall: a rank-aligned 1:1 equi-join
   * on `leftKey`/`rightKey` column names. Rows whose key is NULL sit the
@@ -51,14 +52,12 @@ object EntityResolution {
                 stages: Seq[MatchStage],
                 fuzzyNames: Option[(String, String)] = None,
                 n: Int = 3, theta: Double = 0.5,
-                dfCap: Int = 0, materialize: Boolean = true): DataFrame = {
+                dfCap: Int = 0,
+                materialize: Boolean = true): DataFrame = Pins.scope { p =>
     require(leftId != rightId, "left and right id columns must differ")
     require(stages.nonEmpty || fuzzyNames.nonEmpty,
       "waterfall needs at least one key stage or a fuzzy terminal")
-    var toFree = Vector.empty[DataFrame]
-    def ckpt(df: DataFrame): DataFrame =
-      if (!materialize) df
-      else { val c = df.localCheckpoint(true); toFree :+= c; c }
+    def barrier(df: DataFrame): DataFrame = if (materialize) p(df) else df
     var lRes = left
     var rRes = right
     var matches = Vector.empty[DataFrame]
@@ -74,27 +73,22 @@ object EntityResolution {
           .withColumn("__rn", row_number().over(
             Window.partitionBy(col("__key")).orderBy(col(id))))
       }
-      val m = ckpt(side(lRes, leftId, st.leftKey)
+      val m = barrier(side(lRes, leftId, st.leftKey)
         .join(side(rRes, rightId, st.rightKey), Seq("__key", "__rn"))
         .select(col(leftId), col(rightId),
           lit(st.stage).as("stage"), lit(1.0).as("score")))
       matches :+= m
-      lRes = ckpt(lRes.join(m.select(leftId), Seq(leftId), "left_anti"))
-      rRes = ckpt(rRes.join(m.select(rightId), Seq(rightId), "left_anti"))
+      lRes = barrier(lRes.join(m.select(leftId), Seq(leftId), "left_anti"))
+      rRes = barrier(rRes.join(m.select(rightId), Seq(rightId), "left_anti"))
     }
     fuzzyNames.foreach { case (ln, rn) =>
       matches :+= fuzzyBest(lRes, leftId, ln, rRes, rightId, rn,
         n, theta, dfCap)
     }
     val out = matches.reduce(_ unionByName _)
-    if (!materialize) out
-    else {
-      // materialize the (small) match output, then free every stage
-      // block — the same leak discipline as Dedup/GraphOps
-      val res = out.localCheckpoint(true)
-      toFree.foreach(Shims.unpersistLocalCheckpoint)
-      res
-    }
+    // materialize the (small) match output; the scope then frees every
+    // stage block — the same leak discipline as Dedup/GraphOps
+    if (materialize) out.localCheckpoint(true) else out
   }
 
   /** Terminal fuzzy stage: best raw-TF char-n-gram cosine match per

@@ -2,7 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.Shims
+
+import graft.core.Pins
 
 /** Graph operators: similarity-graph build + connected components
   * (ref graph build `src/tagminder/core/tm_graph.py:106-451`; union-find
@@ -66,52 +67,55 @@ object GraphOps {
     * changed-row convergence check is a scan of the freshly
     * checkpointed result, not a join against the previous labels. */
   def connectedComponents(edges: DataFrame, maxIter: Int = 50,
-                          failOnMaxIter: Boolean = true): DataFrame = {
+                          failOnMaxIter: Boolean = true)
+      : DataFrame = Pins.scope { p =>
     // materialize the edge list once — without this every iteration
     // re-runs the upstream edge-build lineage (measured 10×+ slowdown
     // when edges come from a join+aggregate pipeline)
-    val sym = edges.select(col("src"), col("dst"))
+    val sym = p(edges.select(col("src"), col("dst"))
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
-      .repartition(col("src"))
-      .localCheckpoint(true)
+      .repartition(col("src")))
     val nodes = sym.select(col("src").as("node")).distinct()
     var labels = nodes.withColumn("comp", col("node"))
-    var prevCp: DataFrame = null // previous round's checkpoint, freed each round
+    var prev: Option[DataFrame] = None // previous round's checkpoint
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
       val msgs = sym.join(labels, sym("src") === labels("node"))
         .groupBy(col("dst").as("node")).agg(min("comp").as("nbr_comp"))
-      val next = labels.join(msgs, Seq("node"), "left")
+      // truncate lineage; also acts as a barrier
+      val next = p(labels.join(msgs, Seq("node"), "left")
         .select(col("node"), col("comp").as("__old"),
           least(col("comp"), coalesce(col("nbr_comp"), col("comp")))
-            .as("comp"))
-        .localCheckpoint(true) // truncate lineage; also acts as a barrier
+            .as("comp")))
       // `next` is materialized (eager checkpoint) → the previous round's
       // blocks have been fully consumed and can be freed; without this
-      // every round leaks a labels-sized cache for the session lifetime
-      if (prevCp != null) Shims.unpersistLocalCheckpoint(prevCp)
-      prevCp = next
+      // every round holds a labels-sized cache until the scope exits
+      prev.foreach(p.release)
+      prev = Some(next)
       converged =
         next.filter(col("comp") =!= col("__old")).limit(1).count() == 0
       labels = next.select("node", "comp")
       i += 1
     }
+    warnOrFail(converged,
+      s"connectedComponents did not converge in $maxIter rounds; " +
+        "labels would split components. Raise maxIter.", failOnMaxIter)
     // copy the final (small) labels out of the last round's checkpoint so
-    // the edge cache and the last per-round block can both be freed; only
+    // the scope can free the edge cache and the last per-round block; only
     // the labels-sized result stays cached for the caller to consume
-    val out = labels.localCheckpoint(true)
-    if (prevCp != null) Shims.unpersistLocalCheckpoint(prevCp)
-    Shims.unpersistLocalCheckpoint(sym)
+    labels.localCheckpoint(true)
+  }
+
+  /** The `maxIter` cap's report: throw (the default) or warn on stderr
+    * when the iteration stopped before convergence. */
+  private def warnOrFail(converged: Boolean, msg: => String,
+                         failOnMaxIter: Boolean): Unit =
     if (!converged) {
-      val msg = s"connectedComponents did not converge in $maxIter rounds; " +
-        "labels would split components. Raise maxIter."
       if (failOnMaxIter) throw new IllegalStateException(msg)
       else System.err.println(s"[graft] WARNING: $msg")
     }
-    out
-  }
 
   /** Connected components via alternating large-star / small-star
     * contraction (Kiveris et al., "Connected Components in MapReduce
@@ -128,20 +132,18 @@ object GraphOps {
     * propagation does fewer total shuffles; on adversarial chains this
     * one wins asymptotically (GraphOpsSpec checks both agree). */
   def connectedComponentsStar(edges: DataFrame, maxIter: Int = 50,
-                              failOnMaxIter: Boolean = true): DataFrame = {
+                              failOnMaxIter: Boolean = true)
+      : DataFrame = Pins.scope { p =>
     // one materialization of the (possibly expensive) edge build; both
     // the node universe and the canonical edge list derive from it
-    val base = edges.select(col("src"), col("dst")).localCheckpoint(true)
-    val allNodes = base.select(col("src").as("node"))
-      .union(base.select(col("dst").as("node"))).distinct()
-      .localCheckpoint(true)
-    var e = base
+    val base = p(edges.select(col("src"), col("dst")))
+    val allNodes = p(base.select(col("src").as("node"))
+      .union(base.select(col("dst").as("node"))).distinct())
+    var e = p(base
       .select(greatest(col("src"), col("dst")).as("u"),
         least(col("src"), col("dst")).as("v"))
-      .filter(col("u") =!= col("v")).distinct()
-      .localCheckpoint(true)
-    Shims.unpersistLocalCheckpoint(base)
-    var prevCp: DataFrame = e
+      .filter(col("u") =!= col("v")).distinct())
+    p.release(base)
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
@@ -156,37 +158,28 @@ object GraphOps {
       // small-star: every smaller neighbor (and u itself) re-points at
       // the minimum of u's smaller neighborhood
       val mins2 = ls.groupBy("u").agg(min("v").as("mn"))
-      val next = ls.join(mins2, Seq("u"))
+      val next = p(ls.join(mins2, Seq("u"))
         .select(col("v").as("u"), col("mn").as("v"))
         .filter(col("u") =!= col("v"))
         .unionByName(mins2.select(col("u"), col("mn").as("v")))
-        .distinct()
-        .localCheckpoint(true)
+        .distinct())
       converged = next.count() == e.count() &&
         next.join(e, Seq("u", "v"), "left_anti").limit(1).count() == 0
-      Shims.unpersistLocalCheckpoint(prevCp)
-      prevCp = next
+      p.release(e)
       e = next
       i += 1
     }
+    warnOrFail(converged, "connectedComponentsStar did not converge in " +
+      s"$maxIter rounds. Raise maxIter.", failOnMaxIter)
     // one row per node even on the non-converged escape hatch: mid-run
     // a node can hold several out-edges, and a bare left join would fan
     // out into conflicting labels — min(comp) keeps the contract
-    val out = allNodes
+    allNodes
       .join(e.select(col("u").as("node"), col("v").as("comp")),
         Seq("node"), "left")
       .groupBy("node")
       .agg(min(coalesce(col("comp"), col("node"))).as("comp"))
       .localCheckpoint(true)
-    Shims.unpersistLocalCheckpoint(prevCp)
-    Shims.unpersistLocalCheckpoint(allNodes)
-    if (!converged) {
-      val msg = "connectedComponentsStar did not converge in " +
-        s"$maxIter rounds. Raise maxIter."
-      if (failOnMaxIter) throw new IllegalStateException(msg)
-      else System.err.println(s"[graft] WARNING: $msg")
-    }
-    out
   }
 
   /** Per-component rollup stats (ref cluster stats `15-...py:347-375`):
@@ -228,33 +221,30 @@ object GraphOps {
     *
     * @return (node, pr) */
   def pageRank(edges: DataFrame, iters: Int = 5,
-               damping: Double = 0.85): DataFrame = {
+               damping: Double = 0.85): DataFrame = Pins.scope { p =>
     require(iters >= 1, s"iters must be >= 1: $iters")
     val sym = edges.select(col("src"), col("dst"), col("weight"))
       .union(edges.select(col("dst").as("src"), col("src").as("dst"),
         col("weight")))
-    val withOw = sym
+    val withOw = p(sym
       .join(sym.groupBy("src").agg(sum("weight").as("ow")), Seq("src"))
-      .repartition(col("src"))
-      .localCheckpoint(true)
+      .repartition(col("src")))
     // one-row N scalar, materialized once — every round broadcasts it,
     // and without the checkpoint each broadcast would re-run the
     // distinct+count aggregation
-    val nRow = withOw.select(col("src").as("node")).distinct()
-      .agg(count(lit(1)).as("nn"))
-      .localCheckpoint(true)
+    val nRow = p(withOw.select(col("src").as("node")).distinct()
+      .agg(count(lit(1)).as("nn")))
     // uniform start, rounded as the oracle rounds it
-    var pr = withOw.select(col("src").as("node")).distinct()
+    var pr = p(withOw.select(col("src").as("node")).distinct()
       .crossJoin(broadcast(nRow))
       .select(col("node"),
-        round(lit(1.0).cast("double") / col("nn"), 6).as("pr"))
-      .localCheckpoint(true)
+        round(lit(1.0).cast("double") / col("nn"), 6).as("pr")))
     var i = 0
     while (i < iters) {
       // every node of the symmetric graph has an in-edge, so the
       // contribution aggregation covers the full node set — no
       // left-join backfill needed
-      val next = withOw.join(pr, withOw("src") === pr("node"))
+      val next = p(withOw.join(pr, withOw("src") === pr("node"))
         .select(col("dst"),
           round(col("pr") * col("weight") / col("ow") * lit(1e6))
             .cast("long").as("__c"))
@@ -263,17 +253,12 @@ object GraphOps {
         .select(col("node"),
           round((lit(1.0) - lit(damping)) / col("nn")
             + lit(damping)
-              * (col("__sm").cast("double") / lit(1e6)), 6).as("pr"))
-        .localCheckpoint(true)
-      Shims.unpersistLocalCheckpoint(pr)
+              * (col("__sm").cast("double") / lit(1e6)), 6).as("pr")))
+      p.release(pr)
       pr = next
       i += 1
     }
-    // copy the (small) ranks out so the edge cache can be freed
-    val out = pr.localCheckpoint(true)
-    Shims.unpersistLocalCheckpoint(pr)
-    Shims.unpersistLocalCheckpoint(withOw)
-    Shims.unpersistLocalCheckpoint(nRow)
-    out
+    // copy the (small) ranks out so the scope can free the edge cache
+    pr.localCheckpoint(true)
   }
 }

@@ -3,8 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.Shims
 import org.apache.spark.sql.types.{LongType, StructType}
+
+import graft.core.Pins
 
 /** Incremental aggregate maintenance — the pattern that keeps a
   * 100 TB pipeline's rollups fresh WITHOUT rescanning the corpus:
@@ -260,8 +261,8 @@ object Incremental {
     // the rare full rebuild, and its retry is cheap next to a
     // destroyed store. Append-only commits keep the recomputable
     // persist (they never delete what their input may read).
-    val pinned = snap.localCheckpoint(true)
-    try {
+    Pins.scope { p =>
+      val pinned = p(snap)
       require(!pinned.isEmpty,
         s"refusing to init $dir from an empty snapshot - a " +
           "zero-partition layout is unreadable")
@@ -288,7 +289,7 @@ object Incremental {
           .partitionBy("batch").mode("overwrite")
           .parquet(manifestPath(dir))
       }
-    } finally Shims.unpersistLocalCheckpoint(pinned)
+    }
     // post-write sync check (see verifyBatchSync), OUTSIDE the pin:
     // the probe deliberately reads what landed on DISK, so holding
     // the corpus-scale pinned snapshot alive through it would be
@@ -675,10 +676,9 @@ object Incremental {
     val touched = discoverFrom.join(ids, Seq(idCol), "left_semi")
       .select("batch").distinct().collect().map(_.getLong(0))
     if (touched.isEmpty) return
-    val survivors = cur.filter(col("batch").isin(touched: _*))
-      .join(ids, Seq(idCol), "left_anti")
-      .localCheckpoint(true)
-    try {
+    Pins.scope { p =>
+      val survivors = p(cur.filter(col("batch").isin(touched: _*))
+        .join(ids, Seq(idCol), "left_anti"))
       val remaining = survivors.select("batch").distinct().count()
       require(remaining == touched.length,
         s"retraction would empty ${touched.length - remaining} batch " +
@@ -687,15 +687,14 @@ object Incremental {
       survivors.write.option("partitionOverwriteMode", "dynamic")
         .partitionBy("batch").mode("overwrite").parquet(dir)
       if (manifested) {
-        val mSurvivors = readStore(spark, manifestPath(dir))
-          .filter(col("batch").isin(touched: _*))
-          .join(ids, Seq(idCol), "left_anti")
-          .localCheckpoint(true)
-        try mSurvivors.write
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch").mode("overwrite")
-          .parquet(manifestPath(dir))
-        finally Shims.unpersistLocalCheckpoint(mSurvivors)
+        Pins.scope { pm =>
+          pm(readStore(spark, manifestPath(dir))
+              .filter(col("batch").isin(touched: _*))
+              .join(ids, Seq(idCol), "left_anti"))
+            .write.option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch").mode("overwrite")
+            .parquet(manifestPath(dir))
+        }
         // post-rewrite sync check, SCOPED to the touched partitions
         // (the verifyBatchSync discipline applied to retraction):
         // the store and manifest rewrites anti-join two SEPARATE
@@ -720,7 +719,7 @@ object Incremental {
               "compactSnapshotStore rebuilds the manifest exactly")
         }
       }
-    } finally Shims.unpersistLocalCheckpoint(survivors)
+    }
   }
 
   /** The raw store WITH its batch partition column — for sibling

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Pins
+
 /** Data-mixing operators for training-corpus assembly: deterministic
   * hash sampling (per-source mixing weights) and token-budget sequence
   * packing. Both are published pipeline staples; both are pure
@@ -129,13 +131,13 @@ object Mixing {
     * @return (idCol, n_tokens, score_micros, keep) */
   def dsirScores(docs: DataFrame, idCol: String, textCol: String,
                  targetFilter: Column,
-                 materialize: Boolean = true): DataFrame = {
+                 materialize: Boolean = true): DataFrame = Pins.scope { p =>
     def toks(c: Column) = filter(split(c, "\\s+"), t => t =!= "")
     val base = docs
       .select(col(idCol), coalesce(targetFilter.cast("int"), lit(0)).as("__tgt"),
         explode(toks(col(textCol))).as("__t"))
       .groupBy(idCol, "__tgt", "__t").agg(count(lit(1)).as("__tf"))
-    val postings = if (materialize) base.localCheckpoint(true) else base
+    val postings = if (materialize) p(base) else base
     val terms = postings.groupBy("__t").agg(
       sum("__tf").as("__cs"),
       sum(col("__tgt") * col("__tf")).as("__ct"))
@@ -154,12 +156,7 @@ object Mixing {
       .agg(sum("__tf").as("n_tokens"),
         sum(col("__tf") * col("__wm")).as("score_micros"))
       .withColumn("keep", (col("score_micros") > 0).cast("int"))
-    if (!materialize) out
-    else {
-      val ck = out.localCheckpoint(true)
-      org.apache.spark.sql.graftshim.Shims.unpersistLocalCheckpoint(postings)
-      ck
-    }
+    if (materialize) out.localCheckpoint(true) else out
   }
 
   /** Weighted sampling WITHOUT replacement, Gumbel-key formulation

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Pins
+
 /** Model-based quality scoring — the trained-classifier stage of the
   * published pretraining pipelines (the fastText wiki-reference filter
   * of LLaMA/CCNet, GPT-3's quality LR, FineWeb-Edu's scorer): a linear
@@ -65,9 +67,8 @@ object QualityModel {
     *         false (no evidence keeps nothing). */
   def lrQualityScores(docs: DataFrame, idCol: String, textCol: String,
                       label: Column, dims: Int = 64, steps: Int = 2,
-                      eta: Double = 0.5): DataFrame = {
+                      eta: Double = 0.5): DataFrame = Pins.scope { p =>
     require(dims > 0 && steps > 0, s"need positive dims/steps")
-    val shim = org.apache.spark.sql.graftshim.Shims
     val base = docs.select(col(idCol).as("id"),
       when(label, lit(1000000L)).otherwise(lit(0L)).as("ym"),
       TextAnalysis.wordTokens(lower(col(textCol))).as("ts"))
@@ -75,50 +76,44 @@ object QualityModel {
       .groupBy(col("id"), hashBucket(col("t"), dims).as("j"))
       .agg(count(lit(1)).as("c"))
     val ntok = cnt.groupBy("id").agg(sum("c").as("n"))
-    val x = cnt.join(ntok, "id")
+    val x = p(cnt.join(ntok, "id")
       .select(col("id"), col("j"),
-        round(col("c") * 1e6 / col("n")).cast("long").as("x"))
-      .localCheckpoint(true)
-    val labels = base.select("id", "ym").localCheckpoint(true)
-    try {
-      val nDocs = labels.count()
-      require(nDocs > 0, "cannot train on an empty corpus")
-      var w = Map.empty[Long, Long]
-      def wExpr: Column =
-        if (w.isEmpty) lit(0L)
-        else coalesce(try_element_at(typedlit(w), col("j")), lit(0L))
-      def spPerDoc: DataFrame = x
-        .select(col("id"), (col("x") * wExpr).as("wx"))
-        .groupBy("id").agg(sum("wx").as("sp"))
-      for (_ <- 1 to steps) {
-        // w = 0 ⇒ σ(0) = ½ exactly; skip the join on the first step
-        val withP =
-          if (w.isEmpty) x.join(labels, "id")
-            .withColumn("pm", lit(500000L))
-          else x.join(labels, "id").join(spPerDoc, "id")
-            .withColumn("pm", fastSigmoidMicros(col("sp")))
-        val g = withP
-          .select(col("j"),
-            round((col("pm") - col("ym")) * col("x") / 1e6)
-              .cast("long").as("cm"))
-          .groupBy("j").agg(sum("cm").as("g"))
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        w = (w.keySet ++ g.keySet).iterator.map { j =>
-          j -> (w.getOrElse(j, 0L)
-            - rnd(eta * g.getOrElse(j, 0L).toDouble / nDocs))
-        }.toMap
-      }
-      labels.join(spPerDoc, Seq("id"), "left")
-        .select(col("id").as(idCol),
-          round(coalesce(col("sp"), lit(0L)) / 1e6).cast("long")
-            .as("score_micros"),
-          fastSigmoidMicros(coalesce(col("sp"), lit(0L)))
-            .as("prob_micros"))
-        .withColumn("pred", col("prob_micros") > 500000L)
-        .localCheckpoint(true)
-    } finally {
-      shim.unpersistLocalCheckpoint(x)
-      shim.unpersistLocalCheckpoint(labels)
+        round(col("c") * 1e6 / col("n")).cast("long").as("x")))
+    val labels = p(base.select("id", "ym"))
+    val nDocs = labels.count()
+    require(nDocs > 0, "cannot train on an empty corpus")
+    var w = Map.empty[Long, Long]
+    def wExpr: Column =
+      if (w.isEmpty) lit(0L)
+      else coalesce(try_element_at(typedlit(w), col("j")), lit(0L))
+    def spPerDoc: DataFrame = x
+      .select(col("id"), (col("x") * wExpr).as("wx"))
+      .groupBy("id").agg(sum("wx").as("sp"))
+    for (_ <- 1 to steps) {
+      // w = 0 ⇒ σ(0) = ½ exactly; skip the join on the first step
+      val withP =
+        if (w.isEmpty) x.join(labels, "id")
+          .withColumn("pm", lit(500000L))
+        else x.join(labels, "id").join(spPerDoc, "id")
+          .withColumn("pm", fastSigmoidMicros(col("sp")))
+      val g = withP
+        .select(col("j"),
+          round((col("pm") - col("ym")) * col("x") / 1e6)
+            .cast("long").as("cm"))
+        .groupBy("j").agg(sum("cm").as("g"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      w = (w.keySet ++ g.keySet).iterator.map { j =>
+        j -> (w.getOrElse(j, 0L)
+          - rnd(eta * g.getOrElse(j, 0L).toDouble / nDocs))
+      }.toMap
     }
+    labels.join(spPerDoc, Seq("id"), "left")
+      .select(col("id").as(idCol),
+        round(coalesce(col("sp"), lit(0L)) / 1e6).cast("long")
+          .as("score_micros"),
+        fastSigmoidMicros(coalesce(col("sp"), lit(0L)))
+          .as("prob_micros"))
+      .withColumn("pred", col("prob_micros") > 500000L)
+      .localCheckpoint(true)
   }
 }

@@ -3,8 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.Shims
 
+import graft.core.Pins
 import graft.operators.Similarity
 
 /** Product quantization (Jégou, Douze, Schmid 2011, "Product
@@ -110,29 +110,26 @@ object Quantization {
 
   // vectors ride as doubles from the checkpoint on, so [[train]] can
   // consume raw embeddings and IVF residuals through one code path
-  private def checkpointed(emb: DataFrame, idCol: String,
+  private def checkpointed(pins: Pins, emb: DataFrame, idCol: String,
                            vecCol: String): DataFrame =
-    emb.select(col(idCol).as("id"),
-        transform(col(vecCol), x => x.cast("double")).as("v"))
-      .localCheckpoint(true)
+    pins(emb.select(col(idCol).as("id"),
+        transform(col(vecCol), x => x.cast("double")).as("v")))
 
   /** Train and encode: one row per input id,
     * (idCol, code: array<int> of length m). Encoding is a single
     * map-side pass — the m argmin expressions against the final
     * codebooks run inside the scan stage. */
   def pqCodes(emb: DataFrame, idCol: String, vecCol: String,
-              m: Int, k: Int, iters: Int): DataFrame = {
+              m: Int, k: Int, iters: Int): DataFrame = Pins.scope { pins =>
     val dsub = subDim(emb, vecCol, m)
     require(k > 0 && iters > 0, s"need k > 0 and iters > 0: $k, $iters")
-    val d0 = checkpointed(emb, idCol, vecCol)
-    try {
-      val model = train(d0, m, k, iters, dsub)
-      d0.select(col("id").as(idCol),
-          array((0 until m).map(s =>
-            assignExpr(subvec(col("v"), s, dsub), model.cents(s))
-              .cast("int")): _*).as("code"))
-        .localCheckpoint(true)
-    } finally Shims.unpersistLocalCheckpoint(d0)
+    val d0 = checkpointed(pins, emb, idCol, vecCol)
+    val model = train(d0, m, k, iters, dsub)
+    d0.select(col("id").as(idCol),
+        array((0 until m).map(s =>
+          assignExpr(subvec(col("v"), s, dsub), model.cents(s))
+            .cast("int")): _*).as("code"))
+      .localCheckpoint(true)
   }
 
   /** ADC top-k cosine: full-precision queries (`queryFilter` rows)
@@ -142,62 +139,57 @@ object Quantization {
     * nid. */
   def pqAdcTopK(emb: DataFrame, idCol: String, vecCol: String,
                 m: Int, k: Int, iters: Int, topK: Int,
-                queryFilter: Column): DataFrame = {
+                queryFilter: Column): DataFrame = Pins.scope { pins =>
     val spark = emb.sparkSession
     import spark.implicits._
     val dsub = subDim(emb, vecCol, m)
-    val d0 = checkpointed(emb, idCol, vecCol)
-    try {
-      val model = train(d0, m, k, iters, dsub)
-      // (nid, s, c) code rows — m longs per vector is ALL the database
-      // side ever shuffles
-      val codes = d0.select(col("id").as("nid"),
-          posexplode(array((0 until m).map(s =>
-            assignExpr(subvec(col("v"), s, dsub), model.cents(s))): _*))
-            .as(Seq("s", "c")))
-        .localCheckpoint(true)
-      // per-(s, code) centroid squared norms in integer micros —
-      // driver-computed (codebooks are driver-held), broadcast
-      val cw = model.cents.zipWithIndex.flatMap { case (cb, s) =>
-        cb.map { case (c, cv) =>
-          (s, c, math.round(cv.map(x => x * x).sum * 1e6))
-        }
-      }.toDF("s", "c", "sqm")
-      val nsq = codes.join(broadcast(cw), Seq("s", "c"))
-        .groupBy("nid").agg(sum("sqm").as("nsqm"))
-      // per-query LUT: m·k dot products in integer micros
-      val centDf = model.cents.zipWithIndex.flatMap { case (cb, s) =>
-        cb.map { case (c, cv) => (s, c, cv.toSeq) }
-      }.toDF("s", "c", "cv")
-      val q = d0.filter(queryFilter).select(col("id").as("qid"),
-        col("v").as("qv"), Similarity.norm(col("v")).as("qn"))
-      val lut = q.select(col("qid"), col("qn"),
-          posexplode(array((0 until m).map(s =>
-            subvec(col("qv"), s, dsub)): _*)).as(Seq("s", "qsv")))
-        .join(broadcast(centDf), Seq("s"))
-        .select(col("qid"), col("qn"), col("s"), col("c"),
-          round(aggregate(zip_with(col("qsv"), col("cv"),
-            (x, y) => x * y), lit(0d), (acc, e) => acc + e) * 1e6)
-            .cast("long").as("dotm"))
-      // score every code row via the LUT: integer-micro sums are
-      // order-independent, so the (qid, nid) aggregation is exact
-      val scored = codes.join(lut, Seq("s", "c"))
-        .filter(col("nid") =!= col("qid"))
-        .groupBy("qid", "qn", "nid").agg(sum("dotm").as("sdm"))
-        .join(nsq, Seq("nid"))
-        .withColumn("score",
-          when(col("qn") === 0d || col("nsqm") <= 0L, lit(-2d))
-            .otherwise(round((col("sdm") / 1e6)
-              / (col("qn") * sqrt(col("nsqm") / 1e6)), 6)))
-      val w = Window.partitionBy("qid")
-        .orderBy(col("score").desc, col("nid"))
-      val out = scored.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= topK)
-        .select("qid", "rank", "nid", "score")
-        .localCheckpoint(true)
-      Shims.unpersistLocalCheckpoint(codes)
-      out
-    } finally Shims.unpersistLocalCheckpoint(d0)
+    val d0 = checkpointed(pins, emb, idCol, vecCol)
+    val model = train(d0, m, k, iters, dsub)
+    // (nid, s, c) code rows — m longs per vector is ALL the database
+    // side ever shuffles
+    val codes = pins(d0.select(col("id").as("nid"),
+        posexplode(array((0 until m).map(s =>
+          assignExpr(subvec(col("v"), s, dsub), model.cents(s))): _*))
+          .as(Seq("s", "c"))))
+    // per-(s, code) centroid squared norms in integer micros —
+    // driver-computed (codebooks are driver-held), broadcast
+    val cw = model.cents.zipWithIndex.flatMap { case (cb, s) =>
+      cb.map { case (c, cv) =>
+        (s, c, math.round(cv.map(x => x * x).sum * 1e6))
+      }
+    }.toDF("s", "c", "sqm")
+    val nsq = codes.join(broadcast(cw), Seq("s", "c"))
+      .groupBy("nid").agg(sum("sqm").as("nsqm"))
+    // per-query LUT: m·k dot products in integer micros
+    val centDf = model.cents.zipWithIndex.flatMap { case (cb, s) =>
+      cb.map { case (c, cv) => (s, c, cv.toSeq) }
+    }.toDF("s", "c", "cv")
+    val q = d0.filter(queryFilter).select(col("id").as("qid"),
+      col("v").as("qv"), Similarity.norm(col("v")).as("qn"))
+    val lut = q.select(col("qid"), col("qn"),
+        posexplode(array((0 until m).map(s =>
+          subvec(col("qv"), s, dsub)): _*)).as(Seq("s", "qsv")))
+      .join(broadcast(centDf), Seq("s"))
+      .select(col("qid"), col("qn"), col("s"), col("c"),
+        round(aggregate(zip_with(col("qsv"), col("cv"),
+          (x, y) => x * y), lit(0d), (acc, e) => acc + e) * 1e6)
+          .cast("long").as("dotm"))
+    // score every code row via the LUT: integer-micro sums are
+    // order-independent, so the (qid, nid) aggregation is exact
+    val scored = codes.join(lut, Seq("s", "c"))
+      .filter(col("nid") =!= col("qid"))
+      .groupBy("qid", "qn", "nid").agg(sum("dotm").as("sdm"))
+      .join(nsq, Seq("nid"))
+      .withColumn("score",
+        when(col("qn") === 0d || col("nsqm") <= 0L, lit(-2d))
+          .otherwise(round((col("sdm") / 1e6)
+            / (col("qn") * sqrt(col("nsqm") / 1e6)), 6)))
+    val w = Window.partitionBy("qid")
+      .orderBy(col("score").desc, col("nid"))
+    scored.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= topK)
+      .select("qid", "rank", "nid", "score")
+      .localCheckpoint(true)
   }
 
   /** IVF-PQ end-to-end search — FAISS's IndexIVFPQ / the IVFADC layout
@@ -233,8 +225,8 @@ object Quantization {
     * deployment keeps while query batches arrive: the coarse cell
     * codebook and PQ codebooks (driver-held, config-table-sized) plus
     * the checkpointed (nid, cell, s, c) code table (the ONLY
-    * corpus-sized thing, m small ints + a cell id per vector). Free
-    * with [[Shims.unpersistLocalCheckpoint]] on `codes` when done. */
+    * corpus-sized thing, m small ints + a cell id per vector). Hold
+    * `codes` in the caller's [[graft.core.Pins]] scope (`own`). */
   final case class IvfPqIndex(cells: Seq[(Int, Array[Double])],
                               pq: PqModel, codes: DataFrame, dsub: Int)
 
@@ -243,22 +235,16 @@ object Quantization {
     * (and across a stream's micro-batches: see st_ann_probe). */
   def ivfPqIndex(emb: DataFrame, idCol: String, vecCol: String,
                  nlist: Int, coarseIters: Int, m: Int, ksub: Int,
-                 pqIters: Int): IvfPqIndex = {
+                 pqIters: Int): IvfPqIndex = Pins.scope { pins =>
     val dim = subDim(emb, vecCol, 1)
     val dsub = subDim(emb, vecCol, m)
     require(nlist > 0, s"need positive nlist: $nlist")
-    val d0 = checkpointed(emb, idCol, vecCol)
-    var rd: DataFrame = null
-    try {
-      val cells = train(d0, 1, nlist, coarseIters, dim).cents(0)
-      rd = cellResiduals(d0, cells).localCheckpoint(true)
-      val pq = train(rd.select("id", "v"), m, ksub, pqIters, dsub)
-      val codes = subCodes(rd, pq, dsub).localCheckpoint(true)
-      IvfPqIndex(cells, pq, codes, dsub)
-    } finally {
-      Seq(Option(rd), Some(d0)).flatten
-        .foreach(Shims.unpersistLocalCheckpoint)
-    }
+    val d0 = checkpointed(pins, emb, idCol, vecCol)
+    val cells = train(d0, 1, nlist, coarseIters, dim).cents(0)
+    val rd = pins(cellResiduals(d0, cells))
+    val pq = train(rd.select("id", "v"), m, ksub, pqIters, dsub)
+    val codes = subCodes(rd, pq, dsub).localCheckpoint(true)
+    IvfPqIndex(cells, pq, codes, dsub)
   }
 
   /** Coarse-assign + residual over normalized (id, v) rows — the
@@ -520,60 +506,58 @@ object Quantization {
     val spark = newEmb.sparkSession
     val idx = loadIvfPqIndex(spark, dir)
     val codes = encodeAgainst(idx, newEmb, idCol, vecCol)
-    if (hasIvfPqNidManifest(spark, dir)) {
+    if (hasIvfPqNidManifest(spark, dir)) Pins.scope { pins =>
       // pin once: the null-id refusal, the manifest append, and the
       // codes append must see ONE materialization of the encode — a
       // recomputed non-deterministic input landing different id sets
       // in manifest and codes would be the out-of-sync drift
       // validateIvfPqNidManifest exists to catch
-      val pinned = codes.localCheckpoint(true)
-      try {
-        val pairs = pinned.select(col("nid"), col("cell")).distinct()
-        require(pairs.filter(col("nid").isNull).isEmpty,
-          s"refusing to add null nids to the manifested layout $dir " +
-            "- a null id can never be retracted by id; scrub the " +
-            "batch first")
-        // refuse ids the manifest already claims (see scaladoc): a
-        // doubled add would corrupt the ADC sums silently AND land a
-        // second (nid, cell) pair that trips the sync validator
-        // later with the wrong diagnosis — refuse now, before either
-        // append, while the cause is still on the stack
-        val dupCount = pairs.join(
-            spark.read.parquet(nidManifestPath(dir)).select("nid"),
-            Seq("nid"), "left_semi")
-          .select("nid").distinct().count()
-        require(dupCount == 0L,
-          s"refusing to add $dupCount nid(s) already present in the " +
-            s"manifested layout $dir - a re-added id double-counts " +
-            "in every ADC sum; dedupe the batch against the corpus " +
-            "id space (or retract the old vectors first)")
-        // ...and ids duplicated WITHIN the batch, which the manifest
-        // probe cannot see (the id isn't claimed yet) and the sync
-        // validator cannot either (both sides distinct over
-        // (nid, cell)): the same silent ADC double-count, refused by
-        // the same pre-append rule. Encode emits one row per
-        // (nid, subspace), so any (nid, s) multiplicity is a
-        // duplicated input id.
-        val intra = pinned.groupBy(col("nid"), col("s"))
-          .agg(count(lit(1)).as("__graft_n"))
-          .filter(col("__graft_n") > 1L)
-          .select("nid").distinct().count()
-        require(intra == 0L,
-          s"refusing to add $intra nid(s) duplicated WITHIN the " +
-            s"batch to the manifested layout $dir - a doubled id " +
-            "double-counts in every ADC sum and the (nid, cell)-" +
-            "distinct sync validator would certify the corruption; " +
-            "dedupe the batch first")
-        // manifest FIRST (the writeCommit crash direction): dying
-        // between the appends leaves the manifest over-claiming ids
-        // the codes never landed — a later takedown rewrites those
-        // cells needlessly and self-heals; the reverse order would
-        // leave landed codes invisible to discovery, the silent miss
-        pairs.write.mode("append").partitionBy("cell")
-          .parquet(nidManifestPath(dir))
-        pinned.write.mode("append").partitionBy("cell")
-          .parquet(s"$dir/codes")
-      } finally Shims.unpersistLocalCheckpoint(pinned)
+      val pinned = pins(codes)
+      val pairs = pinned.select(col("nid"), col("cell")).distinct()
+      require(pairs.filter(col("nid").isNull).isEmpty,
+        s"refusing to add null nids to the manifested layout $dir " +
+          "- a null id can never be retracted by id; scrub the " +
+          "batch first")
+      // refuse ids the manifest already claims (see scaladoc): a
+      // doubled add would corrupt the ADC sums silently AND land a
+      // second (nid, cell) pair that trips the sync validator
+      // later with the wrong diagnosis — refuse now, before either
+      // append, while the cause is still on the stack
+      val dupCount = pairs.join(
+          spark.read.parquet(nidManifestPath(dir)).select("nid"),
+          Seq("nid"), "left_semi")
+        .select("nid").distinct().count()
+      require(dupCount == 0L,
+        s"refusing to add $dupCount nid(s) already present in the " +
+          s"manifested layout $dir - a re-added id double-counts " +
+          "in every ADC sum; dedupe the batch against the corpus " +
+          "id space (or retract the old vectors first)")
+      // ...and ids duplicated WITHIN the batch, which the manifest
+      // probe cannot see (the id isn't claimed yet) and the sync
+      // validator cannot either (both sides distinct over
+      // (nid, cell)): the same silent ADC double-count, refused by
+      // the same pre-append rule. Encode emits one row per
+      // (nid, subspace), so any (nid, s) multiplicity is a
+      // duplicated input id.
+      val intra = pinned.groupBy(col("nid"), col("s"))
+        .agg(count(lit(1)).as("__graft_n"))
+        .filter(col("__graft_n") > 1L)
+        .select("nid").distinct().count()
+      require(intra == 0L,
+        s"refusing to add $intra nid(s) duplicated WITHIN the " +
+          s"batch to the manifested layout $dir - a doubled id " +
+          "double-counts in every ADC sum and the (nid, cell)-" +
+          "distinct sync validator would certify the corruption; " +
+          "dedupe the batch first")
+      // manifest FIRST (the writeCommit crash direction): dying
+      // between the appends leaves the manifest over-claiming ids
+      // the codes never landed — a later takedown rewrites those
+      // cells needlessly and self-heals; the reverse order would
+      // leave landed codes invisible to discovery, the silent miss
+      pairs.write.mode("append").partitionBy("cell")
+        .parquet(nidManifestPath(dir))
+      pinned.write.mode("append").partitionBy("cell")
+        .parquet(s"$dir/codes")
     } else
       codes.write.mode("append").partitionBy("cell")
         .parquet(s"$dir/codes")
@@ -637,11 +621,10 @@ object Quantization {
         "scrub or re-type the batch")
     val affected = affectedCells(spark, dir, codes, ids)
     if (affected.isEmpty) return
-    val survivors = codes
-      .filter(col("cell").isin(affected: _*))
-      .join(ids, Seq("nid"), "left_anti")
-      .localCheckpoint(true)
-    try {
+    Pins.scope { pins =>
+      val survivors = pins(codes
+        .filter(col("cell").isin(affected: _*))
+        .join(ids, Seq("nid"), "left_anti"))
       // a layout emptied to zero rows is unrepresentable (a hive
       // table with no partitions has no schema to read) — that state
       // means the index is gone, which is a rebuild, not a remove
@@ -694,27 +677,24 @@ object Quantization {
       // before the dynamic overwrite that cannot delete them.
       if (hasIvfPqNidManifest(spark, dir)) {
         val mPath = nidManifestPath(dir)
-        val mSurvivors = spark.read.parquet(mPath)
+        val mSurvivors = pins(spark.read.parquet(mPath)
           .filter(col("cell").isin(affected: _*))
-          .join(ids, Seq("nid"), "left_anti")
-          .localCheckpoint(true)
-        try {
-          val mStill = mSurvivors.select("cell").distinct().collect()
-            .map(_.get(0)).toSet
-          val (mfs, mRoot) = fsAt(spark, mPath)
-          (affected.toSet -- mStill).foreach { c =>
-            val p = new org.apache.hadoop.fs.Path(mRoot, s"cell=$c")
-            if (mfs.exists(p)) require(mfs.delete(p, true),
-              s"could not delete emptied manifest cell cell=$c of " +
-                s"$mPath - its stale pairs would drive needless " +
-                "rewrites forever; refusing to report success")
-          }
-          mSurvivors.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("cell").parquet(mPath)
-        } finally Shims.unpersistLocalCheckpoint(mSurvivors)
+          .join(ids, Seq("nid"), "left_anti"))
+        val mStill = mSurvivors.select("cell").distinct().collect()
+          .map(_.get(0)).toSet
+        val (mfs, mRoot) = fsAt(spark, mPath)
+        (affected.toSet -- mStill).foreach { c =>
+          val p = new org.apache.hadoop.fs.Path(mRoot, s"cell=$c")
+          if (mfs.exists(p)) require(mfs.delete(p, true),
+            s"could not delete emptied manifest cell cell=$c of " +
+              s"$mPath - its stale pairs would drive needless " +
+              "rewrites forever; refusing to report success")
+        }
+        mSurvivors.write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy("cell").parquet(mPath)
       }
-    } finally Shims.unpersistLocalCheckpoint(survivors)
+    }
   }
 
   /** FAISS's `imbalance_factor` with the per-cell occupancy it
@@ -763,12 +743,11 @@ object Quantization {
     * retrains. */
   def ivfPqRetrain(emb: DataFrame, idCol: String, vecCol: String,
                    dir: String, nlist: Int, coarseIters: Int,
-                   m: Int, ksub: Int, pqIters: Int): Unit = {
+                   m: Int, ksub: Int, pqIters: Int): Unit = Pins.scope { pins =>
     val idx = ivfPqIndex(emb, idCol, vecCol, nlist, coarseIters, m,
       ksub, pqIters)
-    try persistIvfPqIndex(idx, dir)
-    finally org.apache.spark.sql.graftshim.Shims
-      .unpersistLocalCheckpoint(idx.codes)
+    pins.own(idx.codes)
+    persistIvfPqIndex(idx, dir)
   }
 
   /** Assert a [[persistIvfPqIndex]] layout's code table is
@@ -890,17 +869,14 @@ object Quantization {
   def ivfPqTopK(emb: DataFrame, idCol: String, vecCol: String,
                 nlist: Int, coarseIters: Int, m: Int, ksub: Int,
                 pqIters: Int, nprobe: Int, topK: Int,
-                queryFilter: Column): DataFrame = {
+                queryFilter: Column): DataFrame = Pins.scope { pins =>
     val idx = ivfPqIndex(emb, idCol, vecCol, nlist, coarseIters, m,
       ksub, pqIters)
-    try {
-      // queryFilter addresses the canonical (id, v) projection, as the
-      // call sites always have
-      val q = checkpointed(emb, idCol, vecCol).filter(queryFilter)
-      try ivfPqSearch(q, "id", "v", idx, nprobe, topK)
-        .localCheckpoint(true)
-      finally Shims.unpersistLocalCheckpoint(q)
-    } finally Shims.unpersistLocalCheckpoint(idx.codes)
+    pins.own(idx.codes)
+    // queryFilter addresses the canonical (id, v) projection, as the
+    // call sites always have
+    val q = checkpointed(pins, emb, idCol, vecCol).filter(queryFilter)
+    ivfPqSearch(q, "id", "v", idx, nprobe, topK).localCheckpoint(true)
   }
 
   /** The SQ8 → PQ residual ladder the [[sq8Codes]] scaladoc promises:
@@ -920,46 +896,39 @@ object Quantization {
     *
     * @return (idCol, err_sq8_micros, err_ladder_micros). */
   def sq8PqLadder(emb: DataFrame, idCol: String, vecCol: String,
-                  m: Int, ksub: Int, iters: Int): DataFrame = {
+                  m: Int, ksub: Int, iters: Int): DataFrame = Pins.scope { pins =>
     val dsub = subDim(emb, vecCol, m)
-    val d0 = checkpointed(emb, idCol, vecCol)
-    var rd: DataFrame = null
-    try {
-      val scales = d0
-        .select(posexplode(col("v")).as(Seq("i", "x")))
-        .groupBy("i").agg(max(abs(col("x"))).as("mx"))
-        .agg(transform(array_sort(collect_list(struct(col("i"), col("mx")))),
-          e => e.getField("mx")).as("__ms"))
-      val dequant = zip_with(col("v"), col("__ms"), (x, mx) =>
-        when(mx === 0d, lit(0d))
-          .otherwise(least(greatest(round(x * 127 / mx), lit(-127d)),
-            lit(127d)) * mx / 127))
-      rd = d0.crossJoin(broadcast(scales))
-        .select(col("id"), zip_with(col("v"), dequant, (x, q) => x - q)
-          .as("v"))
-        .localCheckpoint(true)
-      val pq = train(rd, m, ksub, iters, dsub)
-      def centFor(s: Int, code: Column): Column = {
-        val cb = pq.cents(s)
-        cb.tail.foldLeft(when(code === cb.head._1, lit(cb.head._2))) {
-          case (acc, (c, cv)) => acc.when(code === c, lit(cv))
-        }
+    val d0 = checkpointed(pins, emb, idCol, vecCol)
+    val scales = d0
+      .select(posexplode(col("v")).as(Seq("i", "x")))
+      .groupBy("i").agg(max(abs(col("x"))).as("mx"))
+      .agg(transform(array_sort(collect_list(struct(col("i"), col("mx")))),
+        e => e.getField("mx")).as("__ms"))
+    val dequant = zip_with(col("v"), col("__ms"), (x, mx) =>
+      when(mx === 0d, lit(0d))
+        .otherwise(least(greatest(round(x * 127 / mx), lit(-127d)),
+          lit(127d)) * mx / 127))
+    val rd = pins(d0.crossJoin(broadcast(scales))
+      .select(col("id"), zip_with(col("v"), dequant, (x, q) => x - q)
+        .as("v")))
+    val pq = train(rd, m, ksub, iters, dsub)
+    def centFor(s: Int, code: Column): Column = {
+      val cb = pq.cents(s)
+      cb.tail.foldLeft(when(code === cb.head._1, lit(cb.head._2))) {
+        case (acc, (c, cv)) => acc.when(code === c, lit(cv))
       }
-      val rhat = flatten(array((0 until m).map { s =>
-        centFor(s, assignExpr(subvec(col("v"), s, dsub), pq.cents(s)))
-      }: _*))
-      def sq(c: Column): Column =
-        round(aggregate(c, lit(0d), (acc, e) => acc + e * e) * 1e6)
-          .cast("long")
-      rd.select(col("id").as(idCol),
-          sq(col("v")).as("err_sq8_micros"),
-          sq(zip_with(col("v"), rhat, (r, h) => r - h))
-            .as("err_ladder_micros"))
-        .localCheckpoint(true)
-    } finally {
-      Seq(Option(rd), Some(d0)).flatten
-        .foreach(Shims.unpersistLocalCheckpoint)
     }
+    val rhat = flatten(array((0 until m).map { s =>
+      centFor(s, assignExpr(subvec(col("v"), s, dsub), pq.cents(s)))
+    }: _*))
+    def sq(c: Column): Column =
+      round(aggregate(c, lit(0d), (acc, e) => acc + e * e) * 1e6)
+        .cast("long")
+    rd.select(col("id").as(idCol),
+        sq(col("v")).as("err_sq8_micros"),
+        sq(zip_with(col("v"), rhat, (r, h) => r - h))
+          .as("err_ladder_micros"))
+      .localCheckpoint(true)
   }
 
   private def subDim(emb: DataFrame, vecCol: String, m: Int): Int = {

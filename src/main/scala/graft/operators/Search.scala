@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Pins
+
 /** Inverted-index text search with BM25 ranking — the retrieval side of
   * a training-data pipeline (nearest-neighbor text lookup, quality
   * probes, eval-set mining) expressed as keyed joins over a postings
@@ -100,29 +102,37 @@ object Search {
         "doc-disjoint")
   }
 
-  /** Shared index build: the snapshot plus the per-posting BM25
-    * impact (query-independent: idf depends on the term alone,
-    * saturation on (tf, dl)).
-    *
-    * @return (tfAll snapshot for cleanup, perPost(t, doc_id, s_micros),
-    *         qTerms(qid, t)) */
-  private def buildIndex(docs: DataFrame, idCol: String, textCol: String,
-                         queries: DataFrame, qidCol: String,
-                         qTextCol: String, k1: Double, b: Double,
-                         dfCap: Int, materialize: Boolean)
-      : (DataFrame, DataFrame, DataFrame) = {
+  /** The corpus snapshot an index build reads: pinned in `pins` when
+    * `materialize`, else cache-barriered (see [[Dedup.jaccardPairs]]). */
+  private def snapshotBarrier(pins: Pins, docs: DataFrame, idCol: String,
+                              textCol: String,
+                              materialize: Boolean): DataFrame = {
     val tfAllBase = tfSnapshot(docs, idCol, textCol)
-    val tfAll = if (materialize) tfAllBase.localCheckpoint(true)
-                else tfAllBase.cache()
-    (tfAll, perPostFrom(tfAll, k1, b, dfCap),
-      qTermsFrom(queries, qidCol, qTextCol))
+    if (materialize) pins(tfAllBase) else tfAllBase.cache()
   }
 
-  /** Per-posting impact table from a (materialized) snapshot.
+  private def seal(out: DataFrame, materialize: Boolean): DataFrame =
+    if (materialize) out.localCheckpoint(true) else out
+
+  /** Per-posting impact table (t, doc_id, s_micros) from a
+    * (materialized) snapshot.
     *
-    * A/B shape (r18 adjudication): the r16 groupBy+broadcast-join-back
-    * derivation of dl and df — see the window form in the main tree.
-    * Same IEEE ops on the same values; s_micros bit-identical. */
+    * Plan: dl is a groupBy(doc_id) sum over the snapshot and df a
+    * groupBy(t) count over the capped postings; each joins back to the
+    * postings on its key with a plain equi-join. Neither join carries
+    * a hint, so the planner picks broadcast or sort-merge by size (dl
+    * is per-doc, corpus-scale). The two corpus scalars come out of one
+    * aggregation and ride a broadcast one-row cross join.
+    *
+    * Why this shape: r17 derived dl and df as windows on doc_id and t
+    * instead. The r18 A/B at local[32] (two alternating solo runs per
+    * arm, `plans/r18/solo_perpost_{j,w}*.json`) measured the join-back
+    * form faster on d24 (warm 3.26-3.36 s against 3.37-4.15 s) and
+    * inc_store_levels (12.3-13.3 s against 15.7-17.9 s), with
+    * inc_bm25_store split between the arms, so the window form was
+    * reverted. Two pairs per arm is indicative, not a settled gain.
+    * Both forms run the same IEEE ops on the same values: s_micros is
+    * bit-identical. */
   private def perPostFrom(tfAll: DataFrame, k1: Double, b: Double,
                           dfCap: Int): DataFrame = {
     val postings = tfAll.filter(col("t") =!= "")
@@ -187,22 +197,17 @@ object Search {
   def bm25TopK(docs: DataFrame, idCol: String, textCol: String,
                queries: DataFrame, qidCol: String, qTextCol: String,
                k: Int, k1: Double = 1.2, b: Double = 0.75,
-               dfCap: Int = 0, materialize: Boolean = true): DataFrame = {
-    val (tfAll, perPost, qTerms) = buildIndex(docs, idCol, textCol,
-      queries, qidCol, qTextCol, k1, b, dfCap, materialize)
+               dfCap: Int = 0,
+               materialize: Boolean = true): DataFrame = Pins.scope { pins =>
+    val tfAll = snapshotBarrier(pins, docs, idCol, textCol, materialize)
     // the inverted-index probe: query terms equi-join the postings on
     // the term, never the documents
-    val scored = qTerms.join(perPost, Seq("t"))
+    val scored = qTermsFrom(queries, qidCol, qTextCol)
+      .join(perPostFrom(tfAll, k1, b, dfCap), Seq("t"))
       .groupBy("qid", "doc_id")
       .agg(sum("s_micros").as("score_micros"))
-    val out = rankTopK(scored, k)
-    if (!materialize) out
-    else {
-      // materialize the (small) top-k, then free the postings
-      val ck = out.localCheckpoint(true)
-      org.apache.spark.sql.graftshim.Shims.unpersistLocalCheckpoint(tfAll)
-      ck
-    }
+    // materialize the (small) top-k; the scope then frees the postings
+    seal(rankTopK(scored, k), materialize)
   }
 
   /** [[bm25TopK]] against a pre-materialized [[tfSnapshot]] — the
@@ -219,8 +224,7 @@ object Search {
       .join(perPostFrom(tfAll, k1, b, dfCap), Seq("t"))
       .groupBy("qid", "doc_id")
       .agg(sum("s_micros").as("score_micros"))
-    val out = rankTopK(scored, k)
-    if (materialize) out.localCheckpoint(true) else out
+    seal(rankTopK(scored, k), materialize)
   }
 
   /** [[bm25TopKMaxScore]] against a pre-materialized [[tfSnapshot]]
@@ -229,10 +233,10 @@ object Search {
                               qidCol: String, qTextCol: String, k: Int,
                               m: Int = 64, k1: Double = 1.2,
                               b: Double = 0.75, dfCap: Int = 0,
-                              materialize: Boolean = true): DataFrame = {
-    val p = maxScorePartsFrom(tfAll, ownsSnapshot = false, queries,
-      qidCol, qTextCol, k, m, k1, b, dfCap, materialize)
-    maxScoreEmit(p, k, materialize)
+                              materialize: Boolean = true)
+      : DataFrame = Pins.scope { pins =>
+    maxScoreEmit(maxScorePartsFrom(pins, tfAll, queries, qidCol,
+      qTextCol, k, m, k1, b, dfCap, materialize), k, materialize)
   }
 
   /** Impact-ordered BM25 top-k (the max-score/WAND family, relational
@@ -285,10 +289,10 @@ object Search {
                        qTextCol: String, k: Int, m: Int = 64,
                        k1: Double = 1.2, b: Double = 0.75,
                        dfCap: Int = 0,
-                       materialize: Boolean = true): DataFrame = {
-    val p = maxScoreParts(docs, idCol, textCol, queries, qidCol,
-      qTextCol, k, m, k1, b, dfCap, materialize)
-    maxScoreEmit(p, k, materialize)
+                       materialize: Boolean = true): DataFrame = Pins.scope { pins =>
+    val tfAll = snapshotBarrier(pins, docs, idCol, textCol, materialize)
+    maxScoreEmit(maxScorePartsFrom(pins, tfAll, queries, qidCol,
+      qTextCol, k, m, k1, b, dfCap, materialize), k, materialize)
   }
 
   /** Step 5, shared by both max-score entry points: certified queries
@@ -301,7 +305,7 @@ object Search {
     val fallbackScored = fallbackQ.join(p.perPost, Seq("t"))
       .groupBy("qid", "doc_id")
       .agg(sum("s_micros").as("score_micros"))
-    p.seal(provenOut.unionByName(rankTopK(fallbackScored, k)), materialize)
+    seal(provenOut.unionByName(rankTopK(fallbackScored, k)), materialize)
   }
 
   /** Per-query certificate outcomes of [[bm25TopKMaxScore]] — the
@@ -315,46 +319,25 @@ object Search {
                                qidCol: String, qTextCol: String, k: Int,
                                m: Int = 64, k1: Double = 1.2,
                                b: Double = 0.75, dfCap: Int = 0,
-                               materialize: Boolean = true): DataFrame = {
-    val p = maxScoreParts(docs, idCol, textCol, queries, qidCol,
-      qTextCol, k, m, k1, b, dfCap, materialize)
+                               materialize: Boolean = true)
+      : DataFrame = Pins.scope { pins =>
+    val tfAll = snapshotBarrier(pins, docs, idCol, textCol, materialize)
+    val p = maxScorePartsFrom(pins, tfAll, queries, qidCol, qTextCol,
+      k, m, k1, b, dfCap, materialize)
     val out = p.qTerms.select("qid").distinct()
       .join(p.proof.withColumn("certified", lit(true)), Seq("qid"), "left")
       .select(col("qid"), coalesce(col("certified"), lit(false))
         .as("certified"))
-    p.seal(out, materialize)
+    seal(out, materialize)
   }
 
   /** Intermediates of the max-score pipeline (steps 1-4), shared by
-    * the ranking path and the certificate diagnostic. `seal`
-    * checkpoints a result and frees `freeOnSeal` (the operator-owned
-    * barriers — a caller-owned snapshot is never in the list). */
-  private case class MaxScoreParts(freeOnSeal: Seq[DataFrame],
-                                   perPost: DataFrame, qTerms: DataFrame,
-                                   candTopK: DataFrame, proof: DataFrame) {
-    def seal(out: DataFrame, materialize: Boolean): DataFrame =
-      if (!materialize) out
-      else {
-        val ck = out.localCheckpoint(true)
-        freeOnSeal.foreach(
-          org.apache.spark.sql.graftshim.Shims.unpersistLocalCheckpoint)
-        ck
-      }
-  }
+    * the ranking path and the certificate diagnostic. Their barriers
+    * are held by the calling operator's [[Pins]] scope. */
+  private case class MaxScoreParts(perPost: DataFrame, qTerms: DataFrame,
+                                   candTopK: DataFrame, proof: DataFrame)
 
-  private def maxScoreParts(docs: DataFrame, idCol: String,
-                            textCol: String, queries: DataFrame,
-                            qidCol: String, qTextCol: String, k: Int,
-                            m: Int, k1: Double, b: Double, dfCap: Int,
-                            materialize: Boolean): MaxScoreParts = {
-    val tfAllBase = tfSnapshot(docs, idCol, textCol)
-    val tfAll = if (materialize) tfAllBase.localCheckpoint(true)
-                else tfAllBase.cache()
-    maxScorePartsFrom(tfAll, ownsSnapshot = true, queries, qidCol,
-      qTextCol, k, m, k1, b, dfCap, materialize)
-  }
-
-  private def maxScorePartsFrom(tfAll: DataFrame, ownsSnapshot: Boolean,
+  private def maxScorePartsFrom(pins: Pins, tfAll: DataFrame,
                                 queries: DataFrame, qidCol: String,
                                 qTextCol: String, k: Int, m: Int,
                                 k1: Double, b: Double, dfCap: Int,
@@ -366,7 +349,7 @@ object Search {
     // of replaying the posting joins per consumer (the jaccardPairs
     // materialize discipline)
     def barrier(d: DataFrame): DataFrame =
-      if (materialize) d.localCheckpoint(true) else d.cache()
+      if (materialize) pins(d) else d.cache()
     val perPost = barrier(perPostFrom(tfAll, k1, b, dfCap))
     val qTerms = barrier(qTermsFrom(queries, qidCol, qTextCol))
 
@@ -410,8 +393,6 @@ object Search {
       .join(bounds, Seq("qid"))
       .filter(col("n_top") === k && col("theta") > col("b_q"))
       .select("qid")
-    val owned = if (ownsSnapshot) Seq(tfAll, perPost, qTerms)
-                else Seq(perPost, qTerms)
-    MaxScoreParts(owned, perPost, qTerms, candTopK, proof)
+    MaxScoreParts(perPost, qTerms, candTopK, proof)
   }
 }

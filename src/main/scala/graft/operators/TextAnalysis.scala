@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Pins
+
 /** Text-analysis primitives for large-scale training-data pipelines:
   * tokenization, language-ID heuristic, quality scoring, fingerprinting.
   * All pure Column expressions — whole-stage codegen, no UDFs, so every
@@ -140,49 +142,43 @@ object TextAnalysis {
     * partitioning. If the vocabulary runs out of adjacent pairs early,
     * training stops and the table is short. */
   def bpeTrain(docs: DataFrame, textCol: String,
-               merges: Int): DataFrame = {
+               merges: Int): DataFrame = Pins.scope { p =>
     val spark = docs.sparkSession
     import spark.implicits._
     require(merges > 0, s"merges must be positive: $merges")
-    var cur = docs
+    var cur = p(docs
       .select(explode(wordTokens(lower(col(textCol)))).as("w"))
       .filter(col("w").rlike("^[a-z0-9]+\\z"))
       .groupBy("w").agg(count(lit(1)).as("wc"))
       .select(col("wc"),
-        regexp_replace(col("w"), "(.)", "\\|$1").as("symstr"))
-      .localCheckpoint(true)
+        regexp_replace(col("w"), "(.)", "\\|$1").as("symstr")))
     val learned = scala.collection.mutable.Buffer
       .empty[(Int, String, String, String, Long)]
-    try {
-      var step = 1
-      var exhausted = false
-      while (step <= merges && !exhausted) {
-        val sy = filter(split(col("symstr"), "\\|"), s => s =!= "")
-        val top = cur.select(col("wc"), sy.as("sy"))
-          .filter(size(col("sy")) >= 2)
-          .select(col("wc"), explode(zip_with(
-            slice(col("sy"), lit(1), size(col("sy")) - 1),
-            slice(col("sy"), lit(2), size(col("sy")) - 1),
-            (a, b) => struct(a.as("a"), b.as("b")))).as("p"))
-          .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-          .agg(sum("wc").as("n"))
-          .orderBy(col("n").desc, col("a"), col("b"))
-          .limit(1).collect()
-        if (top.isEmpty) exhausted = true
-        else {
-          val (a, b, n) =
-            (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-          learned += ((step, a, b, a + b, n))
-          val next = cur.select(col("wc"),
-              applyMerge(col("symstr"), a, b).as("symstr"))
-            .localCheckpoint(true)
-          org.apache.spark.sql.graftshim.Shims.unpersistLocalCheckpoint(cur)
-          cur = next
-          step += 1
-        }
+    var step = 1
+    var exhausted = false
+    while (step <= merges && !exhausted) {
+      val sy = filter(split(col("symstr"), "\\|"), s => s =!= "")
+      val top = cur.select(col("wc"), sy.as("sy"))
+        .filter(size(col("sy")) >= 2)
+        .select(col("wc"), explode(zip_with(
+          slice(col("sy"), lit(1), size(col("sy")) - 1),
+          slice(col("sy"), lit(2), size(col("sy")) - 1),
+          (a, b) => struct(a.as("a"), b.as("b")))).as("p"))
+        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
+        .agg(sum("wc").as("n"))
+        .orderBy(col("n").desc, col("a"), col("b"))
+        .limit(1).collect()
+      if (top.isEmpty) exhausted = true
+      else {
+        val (a, b, n) =
+          (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
+        learned += ((step, a, b, a + b, n))
+        val next = p(cur.select(col("wc"),
+            applyMerge(col("symstr"), a, b).as("symstr")))
+        p.release(cur)
+        cur = next
+        step += 1
       }
-    } finally {
-      org.apache.spark.sql.graftshim.Shims.unpersistLocalCheckpoint(cur)
     }
     learned.toSeq.toDF("step", "left_sym", "right_sym", "merged", "n")
   }
@@ -355,12 +351,12 @@ object TextAnalysis {
     *
     * @return (doc_id, n_bigrams, sum_logp_micros, mean_logp_micros) */
   def knScoreFromSnapshot(snap: DataFrame,
-                          materialize: Boolean = true): DataFrame = {
+                          materialize: Boolean = true): DataFrame = Pins.scope { p =>
     val d = lit(0.75d)
     val base = snap.filter(col("bf") > 0L)
       .select(col("doc_id"), col("h1").as("__h1"),
         col("h2").as("__h2"), col("bf").as("__bf"))
-    val postings = if (materialize) base.localCheckpoint(true) else base
+    val postings = if (materialize) p(base) else base
     val bigCounts = postings.groupBy("__h1", "__h2")
       .agg(sum("__bf").as("__bc"))
     // c(w1·) and N1+(w1·) share the __h1 key — one aggregation and
@@ -384,12 +380,7 @@ object TextAnalysis {
         sum(col("__bf") * col("__lpm")).as("sum_logp_micros"))
       .withColumn("mean_logp_micros",
         col("sum_logp_micros").cast("double") / col("n_bigrams"))
-    if (!materialize) out
-    else {
-      val ck = out.localCheckpoint(true)
-      org.apache.spark.sql.graftshim.Shims.unpersistLocalCheckpoint(postings)
-      ck
-    }
+    if (materialize) out.localCheckpoint(true) else out
   }
 
   /** Polynomial (Rabin-Karp-style) rolling-hash fingerprint: an ordered
@@ -418,13 +409,13 @@ object TextAnalysis {
     *
     * @return (idCol, n_tokens, sum_logp_micros, mean_logp_micros) */
   def unigramLmScore(docs: DataFrame, idCol: String, textCol: String,
-                     materialize: Boolean = true): DataFrame = {
+                     materialize: Boolean = true): DataFrame = Pins.scope { p =>
     val base = docs
       .select(col(idCol), explode(wordTokens(col(textCol))).as("__t"))
       .groupBy(idCol, "__t").agg(count(lit(1)).as("__tf"))
     // postings feed both the vocabulary rollup and the scoring join —
     // materialize once (same discipline as Search.bm25TopK)
-    val postings = if (materialize) base.localCheckpoint(true) else base
+    val postings = if (materialize) p(base) else base
     val termTotals = postings.groupBy("__t").agg(sum("__tf").as("__ct"))
     val total = broadcast(termTotals.agg(sum("__ct").as("__tot")))
     val lp = termTotals.crossJoin(total)
@@ -437,12 +428,7 @@ object TextAnalysis {
         sum(col("__tf") * col("__lpm")).as("sum_logp_micros"))
       .withColumn("mean_logp_micros",
         col("sum_logp_micros").cast("double") / col("n_tokens"))
-    if (!materialize) out
-    else {
-      val ck = out.localCheckpoint(true)
-      org.apache.spark.sql.graftshim.Shims.unpersistLocalCheckpoint(postings)
-      ck
-    }
+    if (materialize) out.localCheckpoint(true) else out
   }
 
   /** Corpus-bigram LM score per document, Laplace-smoothed — the next
@@ -476,7 +462,7 @@ object TextAnalysis {
     *
     * @return (idCol, n_bigrams, sum_logp_micros, mean_logp_micros) */
   def bigramLmScore(docs: DataFrame, idCol: String, textCol: String,
-                    materialize: Boolean = true): DataFrame = {
+                    materialize: Boolean = true): DataFrame = Pins.scope { p =>
     import graft.functions.NativeExpressions.{hashedNgrams, positionalNgramHashes}
     // th: per-token hashes (positions 0..n-1); bh: per-window bigram
     // hashes (positions 0..n-2). Zipping bh with th's strict prefix
@@ -493,7 +479,7 @@ object TextAnalysis {
           (a, b) => struct(a.as("h1"), b.as("hb")))).as("__p"))
       .select(col(idCol), col("__p.h1").as("__h1"), col("__p.hb").as("__hb"))
       .groupBy(idCol, "__h1", "__hb").agg(count(lit(1)).as("__bf"))
-    val postings = if (materialize) base.localCheckpoint(true) else base
+    val postings = if (materialize) p(base) else base
     val bigCounts = postings.groupBy("__h1", "__hb")
       .agg(sum("__bf").as("__bc"))
     val ctxCounts = bigCounts.groupBy("__h1").agg(sum("__bc").as("__cc"))
@@ -515,12 +501,7 @@ object TextAnalysis {
         sum(col("__bf") * col("__lpm")).as("sum_logp_micros"))
       .withColumn("mean_logp_micros",
         col("sum_logp_micros").cast("double") / col("n_bigrams"))
-    if (!materialize) out
-    else {
-      val ck = out.localCheckpoint(true)
-      org.apache.spark.sql.graftshim.Shims.unpersistLocalCheckpoint(postings)
-      ck
-    }
+    if (materialize) out.localCheckpoint(true) else out
   }
 
   /** CCNet-style per-language perplexity bucketing (Wenzek et al.
@@ -947,98 +928,94 @@ object TextAnalysis {
     *         dup10_frac), 6 dp; a doc with fewer than n words scores
     *         0 for that n. */
   def gopherNgramStats(docs: DataFrame, idCol: String,
-                       textCol: String): DataFrame = {
-    val base = docs
+                       textCol: String): DataFrame = Pins.scope { p =>
+    val base = p(docs
       .select(col(idCol), wordTokens(col(textCol)).as("__ws"))
       .withColumn("__totc",
-        aggregate(col("__ws"), lit(0L), (a, w) => a + length(w)))
-      .localCheckpoint(true)
-    try {
-      val lens = base.select(col(idCol),
-        posexplode(transform(col("__ws"), w => length(w)))
-          .as(Seq("__p0", "__len")))
-        .select(col(idCol), (col("__p0") + 1).as("__j"), col("__len"))
-      def gramRows(n: Int) = base
+        aggregate(col("__ws"), lit(0L), (a, w) => a + length(w))))
+    val lens = base.select(col(idCol),
+      posexplode(transform(col("__ws"), w => length(w)))
+        .as(Seq("__p0", "__len")))
+      .select(col(idCol), (col("__p0") + 1).as("__j"), col("__len"))
+    def gramRows(n: Int) = base
+      .filter(size(col("__ws")) >= n && col("__totc") > 0L)
+      .select(col(idCol), col("__totc"),
+        posexplode(transform(
+          sequence(lit(1), size(col("__ws")) - (n - 1)),
+          i => array_join(slice(col("__ws"), i, lit(n)), " ")))
+          .as(Seq("__p0", "__gr")))
+    val tops = Seq(2, 3, 4).map { n =>
+      val counts = gramRows(n)
+        .groupBy(col(idCol), col("__totc"), col("__gr"))
+        .agg(count(lit(1)).as("__c"))
+      // per-doc winner as min(struct(-count, gram)) — identical
+      // selection to the old row_number window (count desc, gram
+      // asc byte-wise: struct min orders field-wise and string
+      // min is the same UTF8-binary order orderBy uses), but
+      // partial-aggregable: map-side combine trims each doc to one
+      // candidate per map partition BEFORE the exchange, where the
+      // window shipped and sorted every (doc, gram) count (r17,
+      // guide §2.3 "aggregate before you shuffle")
+      counts
+        .groupBy(col(idCol), col("__totc"))
+        .agg(min(struct((-col("__c")).as("nc"), col("__gr").as("g")))
+          .as("__w"))
+        .select(col(idCol), lit(s"top$n").as("__m"),
+          (((-col("__w.nc")) * (length(col("__w.g")) - (n - 1)))
+            .cast("double") / col("__totc")).as("__f"))
+    }
+    val dups = (5 to 10).map { n =>
+      // the dup count rides a WINDOW on the (doc, gram-HASH) key —
+      // one pass, no join back, and the shuffle carries an 8-byte
+      // xxhash64 instead of the gram string (the lineDedup "never
+      // shuffle the text" idiom; dup membership needs identity
+      // only — no tie-break — so the w.h.p. hash argument of the
+      // d4/d34 family applies). r17: the hash chains xxhash64 over
+      // the window's TOKENS in place of hashing an array_join'd
+      // string — no per-window string allocation ever happens (the
+      // tops keep the joined string: they need its length and the
+      // tie-break). Hash values differ from the joined-string hash
+      // but dup membership is hash-agnostic by the same w.h.p.
+      // argument, and token-sequence hashing is collision-
+      // equivalent (tokens carry no whitespace).
+      val wc = org.apache.spark.sql.expressions.Window
+        .partitionBy(col(idCol), col("__gh"))
+      val covered = base
         .filter(size(col("__ws")) >= n && col("__totc") > 0L)
         .select(col(idCol), col("__totc"),
           posexplode(transform(
             sequence(lit(1), size(col("__ws")) - (n - 1)),
-            i => array_join(slice(col("__ws"), i, lit(n)), " ")))
-            .as(Seq("__p0", "__gr")))
-      val tops = Seq(2, 3, 4).map { n =>
-        val counts = gramRows(n)
-          .groupBy(col(idCol), col("__totc"), col("__gr"))
-          .agg(count(lit(1)).as("__c"))
-        // per-doc winner as min(struct(-count, gram)) — identical
-        // selection to the old row_number window (count desc, gram
-        // asc byte-wise: struct min orders field-wise and string
-        // min is the same UTF8-binary order orderBy uses), but
-        // partial-aggregable: map-side combine trims each doc to one
-        // candidate per map partition BEFORE the exchange, where the
-        // window shipped and sorted every (doc, gram) count (r17,
-        // guide §2.3 "aggregate before you shuffle")
-        counts
-          .groupBy(col(idCol), col("__totc"))
-          .agg(min(struct((-col("__c")).as("nc"), col("__gr").as("g")))
-            .as("__w"))
-          .select(col(idCol), lit(s"top$n").as("__m"),
-            (((-col("__w.nc")) * (length(col("__w.g")) - (n - 1)))
-              .cast("double") / col("__totc")).as("__f"))
-      }
-      val dups = (5 to 10).map { n =>
-        // the dup count rides a WINDOW on the (doc, gram-HASH) key —
-        // one pass, no join back, and the shuffle carries an 8-byte
-        // xxhash64 instead of the gram string (the lineDedup "never
-        // shuffle the text" idiom; dup membership needs identity
-        // only — no tie-break — so the w.h.p. hash argument of the
-        // d4/d34 family applies). r17: the hash chains xxhash64 over
-        // the window's TOKENS in place of hashing an array_join'd
-        // string — no per-window string allocation ever happens (the
-        // tops keep the joined string: they need its length and the
-        // tie-break). Hash values differ from the joined-string hash
-        // but dup membership is hash-agnostic by the same w.h.p.
-        // argument, and token-sequence hashing is collision-
-        // equivalent (tokens carry no whitespace).
-        val wc = org.apache.spark.sql.expressions.Window
-          .partitionBy(col(idCol), col("__gh"))
-        val covered = base
-          .filter(size(col("__ws")) >= n && col("__totc") > 0L)
-          .select(col(idCol), col("__totc"),
-            posexplode(transform(
-              sequence(lit(1), size(col("__ws")) - (n - 1)),
-              i => xxhash64((0 until n).map(o =>
-                element_at(col("__ws"), i + o)): _*)))
-              .as(Seq("__p0", "__gh")))
-          .withColumn("__c", count(lit(1)).over(wc))
-          .filter(col("__c") >= 2)
-          .select(col(idCol), col("__totc"),
-            explode(sequence(col("__p0") + 1, col("__p0") + n))
-              .as("__j"))
-          .distinct()
-        covered.join(lens, Seq(idCol, "__j"))
-          .groupBy(col(idCol), col("__totc"))
-          .agg(sum("__len").as("__dc"))
-          .select(col(idCol), lit(s"dup$n").as("__m"),
-            (col("__dc").cast("double") / col("__totc")).as("__f"))
-      }
-      val long = (tops ++ dups).reduce(_ unionByName _)
-      def metric(m: String) = round(coalesce(
-        max(when(col("__m") === m, col("__f"))), lit(0.0)), 6)
-      base.select(col(idCol))
-        .join(long, Seq(idCol), "left")
-        .groupBy(idCol)
-        .agg(metric("top2").as("top2_frac"),
-          metric("top3").as("top3_frac"),
-          metric("top4").as("top4_frac"),
-          metric("dup5").as("dup5_frac"),
-          metric("dup6").as("dup6_frac"),
-          metric("dup7").as("dup7_frac"),
-          metric("dup8").as("dup8_frac"),
-          metric("dup9").as("dup9_frac"),
-          metric("dup10").as("dup10_frac"))
-        .localCheckpoint(true)
-    } finally org.apache.spark.sql.graftshim.Shims
-      .unpersistLocalCheckpoint(base)
+            i => xxhash64((0 until n).map(o =>
+              element_at(col("__ws"), i + o)): _*)))
+            .as(Seq("__p0", "__gh")))
+        .withColumn("__c", count(lit(1)).over(wc))
+        .filter(col("__c") >= 2)
+        .select(col(idCol), col("__totc"),
+          explode(sequence(col("__p0") + 1, col("__p0") + n))
+            .as("__j"))
+        .distinct()
+      covered.join(lens, Seq(idCol, "__j"))
+        .groupBy(col(idCol), col("__totc"))
+        .agg(sum("__len").as("__dc"))
+        .select(col(idCol), lit(s"dup$n").as("__m"),
+          (col("__dc").cast("double") / col("__totc")).as("__f"))
+    }
+    val long = (tops ++ dups).reduce(_ unionByName _)
+    def metric(m: String) = round(coalesce(
+      max(when(col("__m") === m, col("__f"))), lit(0.0)), 6)
+    base.select(col(idCol))
+      .join(long, Seq(idCol), "left")
+      .groupBy(idCol)
+      .agg(metric("top2").as("top2_frac"),
+        metric("top3").as("top3_frac"),
+        metric("top4").as("top4_frac"),
+        metric("dup5").as("dup5_frac"),
+        metric("dup6").as("dup6_frac"),
+        metric("dup7").as("dup7_frac"),
+        metric("dup8").as("dup8_frac"),
+        metric("dup9").as("dup9_frac"),
+        metric("dup10").as("dup10_frac"))
+      .localCheckpoint(true)
   }
 
   /** PII patterns for training-data scrubbing, ordered most- to

@@ -3,9 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.Shims
 
-import graft.core.MultiValue
+import graft.core.{MultiValue, Pins}
 
 /** Conservative work-resolution scoring (ref
   * `scripts/pipeline/22-infer-works-in-library.py:60-129, 846-1275,
@@ -71,7 +70,8 @@ object WorkInference {
     *         flags, confidence_tier, should_apply. */
   def inferWorks(tracks: DataFrame, trackId: String, titleNorm: String,
                  workidCol: String, roleCols: Map[String, String],
-                 mbidCols: Seq[String], lookup: DataFrame): DataFrame = {
+                 mbidCols: Seq[String], lookup: DataFrame)
+      : DataFrame = Pins.scope { p =>
     val lk = lookup.select(col("work_id"),
       col("musicbrainz_workid").as("__lmbid"), col("work_title_norm"),
       col("alias_tokens"), col("role_names"), col("role_mbids"),
@@ -113,17 +113,15 @@ object WorkInference {
     // semi-joins — without a barrier the whole union-of-joins lineage
     // re-runs per consumer (measured 21.4 s → the pair build alone
     // dominated pl_infer_works at sf0.1)
-    val allPairs = titlePairs.unionByName(workidPairs)
-      .unionByName(aliasPairs)
-      .localCheckpoint(true)
-    val cand = allPairs.groupBy("__tid", "work_id")
+    val allPairs = p(titlePairs.unionByName(workidPairs)
+      .unionByName(aliasPairs))
+    val cand = p(allPairs.groupBy("__tid", "work_id")
       .agg(first("__lmbid").as("work_mbid"),
         sum("s_title").as("s_title"), sum("s_alias").as("s_alias"),
         sum("s_workid").as("s_workid"), sum("s_vetted").as("s_vetted"),
         max("exact_title").as("exact_title"),
         max("exact_alias").as("exact_alias"),
-        max("exact_workid").as("exact_workid"))
-      .localCheckpoint(true)
+        max("exact_workid").as("exact_workid")))
     val candKeys = cand.select("__tid", "work_id")
 
     val exactTitleCounts = allPairs.filter(col("exact_title"))
@@ -243,9 +241,9 @@ object WorkInference {
       !col("person_match")
     val routeBlock = !col("exact_workid") &&
       !(col("exact_title") && col("exact_title_cnt") === 1)
-    // materialize the per-track result, then free the pair/candidate
-    // blocks this operator checkpointed (same discipline as Dedup)
-    val out = summary
+    // materialize the per-track result; the scope then frees the
+    // pair/candidate blocks (same discipline as Dedup)
+    summary
       .withColumn("confidence_tier", tier)
       .withColumn("should_apply",
         (col("confidence_tier").isin("A", "B") &&
@@ -259,8 +257,5 @@ object WorkInference {
         col("exact_workid"), col("exact_title"), col("exact_alias"),
         col("person_match"), col("confidence_tier"), col("should_apply"))
       .localCheckpoint(true)
-    Shims.unpersistLocalCheckpoint(allPairs)
-    Shims.unpersistLocalCheckpoint(cand)
-    out
   }
 }

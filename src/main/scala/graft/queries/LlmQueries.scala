@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Snapshots, Tables => T}
+import graft.core.{Pins, Snapshots, Tables => T}
 import graft.operators.{Clustering, Dedup, GraphOps, Mixing, Multimodal, QualityModel, Quantization, Search, Similarity, TextAnalysis}
 
 /** LLM training-data pipeline operators: dedup (exact / n-gram Jaccard /
@@ -81,12 +81,13 @@ object LlmQueries {
       s.sparkContext.applicationId + "|" + d, _ => {
         val out = s"/tmp/graft_${s.sparkContext.applicationId}/" +
           s"ivfpq51_${pathDigest(d)}"
-        val built = Quantization.ivfPqIndex(T.embeddings(s, d),
-          "vec_id", "embedding", nlist = 4, coarseIters = 2, m = 4,
-          ksub = 4, pqIters = 2)
-        Quantization.persistIvfPqIndex(built, out)
-        org.apache.spark.sql.graftshim.Shims
-          .unpersistLocalCheckpoint(built.codes)
+        Pins.scope { p =>
+          val built = Quantization.ivfPqIndex(T.embeddings(s, d),
+            "vec_id", "embedding", nlist = 4, coarseIters = 2, m = 4,
+            ksub = 4, pqIters = 2)
+          p.own(built.codes)
+          Quantization.persistIvfPqIndex(built, out)
+        }
         out
       })
     Quantization.loadIvfPqIndex(s, dir)
@@ -849,9 +850,9 @@ object LlmQueries {
       val existing = src.filter(col("doc_id") % 5 =!= 0)
       // no barrier: the count table is skinny (16-byte rows over the
       // distinct repeated lines), so the validator's pass and the
-      // screen's pass just recompute it - a checkpoint freed in a
-      // finally would truncate the RETURNED plan's lineage before
-      // the caller materializes it
+      // screen's pass just recompute it - a checkpoint freed at scope
+      // exit would vanish under the RETURNED lazy plan before the
+      // caller materializes it (Pins.scope refuses that return)
       val counts = Dedup.subtractLineCounts(
         Dedup.lineCountPartial(existing, "text"),
         Dedup.lineCountPartial(
@@ -897,8 +898,7 @@ object LlmQueries {
       val I = graft.operators.Incremental
       val dir = s"/tmp/graft_${s.sparkContext.applicationId}/" +
         s"boilstore_${pathDigest(d)}"
-      val cps = scala.collection.mutable.ListBuffer.empty[DataFrame]
-      try {
+      Pins.scope { p =>
         // two crawl eras commit their count partials
         I.initSnapshotStore(Dedup.lineCountPartial(
           existing.filter(col("doc_id") % 2 === 0), "text"), dir)
@@ -912,14 +912,11 @@ object LlmQueries {
           val counts = I.loadRollupStore(s, dir, Seq("key"),
             Seq("cnt"))
           Dedup.validateLineCounts(counts)
-          val out = Dedup.lineDedupAgainst(incoming,
+          p(Dedup.lineDedupAgainst(incoming,
               Dedup.boilerplateFromCounts(counts, minCount = 3),
               "doc_id", "text")
             .select(lit(phase).as("phase"), col("doc_id"),
-              col("text"), col("n_removed"))
-            .localCheckpoint(true)
-          cps += out
-          out
+              col("text"), col("n_removed")))
         }
         val committed = screen("committed")
         // the takedown lands as an APPEND: the quarantined slice's
@@ -933,8 +930,7 @@ object LlmQueries {
         committed.unionByName(retracted).unionByName(compacted)
           .orderBy("phase", "doc_id")
           .localCheckpoint(true)
-      } finally cps.foreach(
-        org.apache.spark.sql.graftshim.Shims.unpersistLocalCheckpoint)
+      }
     }),
 
     // DURABLE LSH BAND STORE — the near-dup screen's maintained
@@ -972,49 +968,49 @@ object LlmQueries {
       // store write pins them itself, so each era's band table
       // materializes once (r17), with the signature barrier freed
       // after the write lands
-      val (b0, sig0) = Dedup.minHashBandsLazy(
-        existing.filter(col("doc_id") % 2 === 0), "doc_id", "text",
-        k = 5)
-      I.initSnapshotStore(b0, dir, manifestIdCol = Some("doc_id"))
-      // the store declares its LSH parameters (the sidecar every
-      // durable band store must carry — see requireBandParams)
-      Dedup.writeBandParams(s, dir, k = 5, numPerm = 256, bands = 64)
-      org.apache.spark.sql.graftshim.Shims.unpersistLocalCheckpoint(sig0)
-      val (b1, sig1) = Dedup.minHashBandsLazy(
-        existing.filter(col("doc_id") % 2 =!= 0), "doc_id", "text",
-        k = 5)
-      I.commitSnapshotBatch(b1, dir, 1L, manifestIdCol = Some("doc_id"))
-      org.apache.spark.sql.graftshim.Shims.unpersistLocalCheckpoint(sig1)
+      Pins.scope { p =>
+        I.initSnapshotStore(Dedup.minHashBandsLazy(p,
+            existing.filter(col("doc_id") % 2 === 0), "doc_id", "text",
+            k = 5),
+          dir, manifestIdCol = Some("doc_id"))
+        // the store declares its LSH parameters (the sidecar every
+        // durable band store must carry — see requireBandParams)
+        Dedup.writeBandParams(s, dir, k = 5, numPerm = 256, bands = 64)
+      }
+      Pins.scope { p =>
+        I.commitSnapshotBatch(Dedup.minHashBandsLazy(p,
+            existing.filter(col("doc_id") % 2 =!= 0), "doc_id", "text",
+            k = 5),
+          dir, 1L, manifestIdCol = Some("doc_id"))
+      }
       // each phase serves from what is ON DISK and re-certifies the
       // manifest; the screen output checkpoints eagerly inside the
       // operator, so the retraction between phases cannot invalidate
       // the committed result's plan — the phase checkpoints are
-      // tracked and freed once the final union materializes
-      val cps = scala.collection.mutable.ListBuffer.empty[DataFrame]
-      // the incoming batch is the SAME frame in all three phases —
-      // band it once and let every screen probe the shared table
-      // (r17: three identical bandings collapsed to one)
-      val inB = Dedup.minHashBands(incoming, "doc_id", "text", k = 5)
-      cps += inB
-      def screen(phase: String): DataFrame = {
-        // full certification, ONE job (r18): params sidecar, manifest
-        // sync, roster completeness (a doc whose band rows were ALL
-        // lost refuses here), and per-id structure (exactly 64 rows
-        // spanning [0,64)) all fold into certifyBandStore's single
-        // store scan — the same refusals the old four-job sequence
-        // made, each with its distinct diagnosis, at a third of the
-        // certification scans per phase
-        Dedup.certifyBandStore(s, dir, "doc_id", k = 5,
-          numPerm = 256, bands = 64)
-        val stored = I.loadSnapshotStore(s, dir)
-        val out = Dedup.lshScreenAgainst(incoming, stored, existing,
-          "doc_id", "text", k = 5, theta = 0.7,
-          incomingBands = Some(inB), storedCertified = true)
-        cps += out
-        out.select(lit(phase).as("phase"), col("in_id"),
-          col("ex_id"), col("jac"))
-      }
-      try {
+      // held and freed once the final union materializes
+      Pins.scope { p =>
+        // the incoming batch is the SAME frame in all three phases —
+        // band it once and let every screen probe the shared table
+        // (r17: three identical bandings collapsed to one)
+        val inB = p.own(Dedup.minHashBands(incoming, "doc_id", "text",
+          k = 5))
+        def screen(phase: String): DataFrame = {
+          // full certification, ONE job (r18): params sidecar, manifest
+          // sync, roster completeness (a doc whose band rows were ALL
+          // lost refuses here), and per-id structure (exactly 64 rows
+          // spanning [0,64)) all fold into certifyBandStore's single
+          // store scan — the same refusals the old four-job sequence
+          // made, each with its distinct diagnosis, at a third of the
+          // certification scans per phase
+          Dedup.certifyBandStore(s, dir, "doc_id", k = 5,
+            numPerm = 256, bands = 64)
+          val stored = I.loadSnapshotStore(s, dir)
+          val out = p.own(Dedup.lshScreenAgainst(incoming, stored,
+            existing, "doc_id", "text", k = 5, theta = 0.7,
+            incomingBands = Some(inB), storedCertified = true))
+          out.select(lit(phase).as("phase"), col("in_id"),
+            col("ex_id"), col("jac"))
+        }
         val committed = screen("committed")
         I.retractFromSnapshotStore(s, dir,
           existing.filter(col("doc_id") % 3 === 1).select("doc_id"))
@@ -1028,8 +1024,7 @@ object LlmQueries {
         committed.unionByName(retracted).unionByName(compacted)
           .orderBy("phase", "in_id", "ex_id")
           .localCheckpoint(true)
-      } finally cps.foreach(
-        org.apache.spark.sql.graftshim.Shims.unpersistLocalCheckpoint)
+      }
     }),
 
     // The PER-SITE boilerplate screen maintained incrementally — the
@@ -1097,14 +1092,16 @@ object LlmQueries {
     // the retracted index == probing against an index built on the
     // surviving existing docs — the d47 replay with the existing
     // side restricted.
-    "inc_prefix_remove" -> ((s, d) => {
+    "inc_prefix_remove" -> ((s, d) => Pins.scope { p =>
       val docs = T.documents(s, d)
       val existing = docs.filter(col("doc_id") % 7 =!= 0)
       val idx0 = Dedup.prefixCrossIndex(existing, "doc_id", "text",
         k = 5, theta = 0.5)
+      idx0.frames.foreach(p.own)
       val idx = Dedup.retractPrefixCrossIndex(idx0,
         existing.filter(col("doc_id") % 3 === 1).select("doc_id"),
         "doc_id")
+      idx.frames.foreach(p.own)
       Dedup.validatePrefixCrossIndex(idx)
       Dedup.prefixCrossJaccardAgainst(
           docs.filter(col("doc_id") % 7 === 0), idx, "doc_id", "text")
@@ -1134,14 +1131,16 @@ object LlmQueries {
     // postings — no text rescanned), then probe with d47's incoming
     // slice; refresh == full rebuild, hashed against the d47 oracle
     // verbatim.
-    "inc_prefix_refresh" -> ((s, d) => {
+    "inc_prefix_refresh" -> ((s, d) => Pins.scope { p =>
       val docs = T.documents(s, d)
       val existing = docs.filter(col("doc_id") % 7 =!= 0)
       val idx0 = Dedup.prefixCrossIndex(
         existing.filter(col("doc_id") % 2 === 0), "doc_id", "text",
         k = 5, theta = 0.5)
+      idx0.frames.foreach(p.own)
       val idx = Dedup.refreshPrefixCrossIndex(idx0,
         existing.filter(col("doc_id") % 2 =!= 0), "doc_id", "text")
+      idx.frames.foreach(p.own)
       Dedup.prefixCrossJaccardAgainst(
           docs.filter(col("doc_id") % 7 === 0), idx, "doc_id", "text")
         .orderBy("in_id", "ex_id")
@@ -1438,20 +1437,18 @@ object LlmQueries {
     "inc_bm25_refresh" -> ((s, d) => {
       val docs = T.documents(s, d)
       val queries = bm25QueryBatch(docs)
-      val tf = Search.mergeTfSnapshots(Seq(
-          Search.tfSnapshot(docs.filter(col("doc_id") % 2 === 0),
-            "doc_id", "text"),
-          Search.tfSnapshot(docs.filter(col("doc_id") % 2 =!= 0),
-            "doc_id", "text")))
-        .localCheckpoint(true)
-      // validate INSIDE the try: a tripped disjointness detector must
-      // still release the checkpointed snapshot on its way out
-      try {
+      Pins.scope { p =>
+        val tf = p(Search.mergeTfSnapshots(Seq(
+            Search.tfSnapshot(docs.filter(col("doc_id") % 2 === 0),
+              "doc_id", "text"),
+            Search.tfSnapshot(docs.filter(col("doc_id") % 2 =!= 0),
+              "doc_id", "text"))))
+        // validate INSIDE the scope: a tripped disjointness detector
+        // must still release the checkpointed snapshot on its way out
         Search.validateTfSnapshot(tf)
         Search.bm25TopKIndexed(tf, queries, "qid", "qtext", k = 5)
           .orderBy("qid", "rank")
-      } finally org.apache.spark.sql.graftshim.Shims
-        .unpersistLocalCheckpoint(tf)
+      }
     }),
 
     // The KN bigram LM maintained incrementally — the last maintained
@@ -1465,19 +1462,17 @@ object LlmQueries {
     // snapshot/scorer boundary are gated.
     "inc_kn_refresh" -> ((s, d) => {
       val docs = T.documents(s, d)
-      val snap = TextAnalysis.mergeKnSnapshots(Seq(
-          TextAnalysis.knSnapshot(docs.filter(col("doc_id") % 3 === 0),
-            "doc_id", "text"),
-          TextAnalysis.knSnapshot(docs.filter(col("doc_id") % 3 === 1),
-            "doc_id", "text"),
-          TextAnalysis.knSnapshot(docs.filter(col("doc_id") % 3 === 2),
-            "doc_id", "text")))
-        .localCheckpoint(true)
-      try {
+      Pins.scope { p =>
+        val snap = p(TextAnalysis.mergeKnSnapshots(Seq(
+            TextAnalysis.knSnapshot(docs.filter(col("doc_id") % 3 === 0),
+              "doc_id", "text"),
+            TextAnalysis.knSnapshot(docs.filter(col("doc_id") % 3 === 1),
+              "doc_id", "text"),
+            TextAnalysis.knSnapshot(docs.filter(col("doc_id") % 3 === 2),
+              "doc_id", "text"))))
         TextAnalysis.validateKnSnapshot(snap)
         TextAnalysis.knScoreFromSnapshot(snap).orderBy("doc_id")
-      } finally org.apache.spark.sql.graftshim.Shims
-        .unpersistLocalCheckpoint(snap)
+      }
     }),
 
     // RETRACTION for the BM25 index — the removal side of the
@@ -1497,11 +1492,10 @@ object LlmQueries {
     // side was not filtered along with the index.
     "inc_bm25_remove" -> ((s, d) => {
       val docs = T.documents(s, d)
-      val tf = graft.operators.Incremental.retractDocs(
-          Search.tfSnapshot(docs, "doc_id", "text"),
-          docs.filter(col("doc_id") % 10 === 3).select("doc_id"))
-        .localCheckpoint(true)
-      try {
+      Pins.scope { p =>
+        val tf = p(graft.operators.Incremental.retractDocs(
+            Search.tfSnapshot(docs, "doc_id", "text"),
+            docs.filter(col("doc_id") % 10 === 3).select("doc_id")))
         Search.validateTfSnapshot(tf)
         Search.bm25TopKIndexed(tf,
             docs.filter(col("doc_id") % 16 === 3)
@@ -1509,8 +1503,7 @@ object LlmQueries {
                 bm25Qtext(col("text")).as("qtext")),
             "qid", "qtext", k = 5)
           .orderBy("qid", "rank")
-      } finally org.apache.spark.sql.graftshim.Shims
-        .unpersistLocalCheckpoint(tf)
+      }
     }),
 
     // RETRACTION for the KN bigram LM — the same one-anti-join
@@ -1521,15 +1514,13 @@ object LlmQueries {
     // IS the LM a fresh build over the remaining docs produces.
     "inc_kn_remove" -> ((s, d) => {
       val docs = T.documents(s, d)
-      val snap = graft.operators.Incremental.retractDocs(
-          TextAnalysis.knSnapshot(docs, "doc_id", "text"),
-          docs.filter(col("doc_id") % 5 === 4).select("doc_id"))
-        .localCheckpoint(true)
-      try {
+      Pins.scope { p =>
+        val snap = p(graft.operators.Incremental.retractDocs(
+            TextAnalysis.knSnapshot(docs, "doc_id", "text"),
+            docs.filter(col("doc_id") % 5 === 4).select("doc_id")))
         TextAnalysis.validateKnSnapshot(snap)
         TextAnalysis.knScoreFromSnapshot(snap).orderBy("doc_id")
-      } finally org.apache.spark.sql.graftshim.Shims
-        .unpersistLocalCheckpoint(snap)
+      }
     }),
 
     // DURABLE STORE for the BM25 index — the tf snapshot persisted
@@ -1576,12 +1567,8 @@ object LlmQueries {
       // subplans, and an unpinned store scan would re-read the
       // parquet for each; both serve results are themselves
       // checkpointed (materialize=true), so the pins free on exit
-      val cps = scala.collection.mutable.ListBuffer.empty[DataFrame]
-      def ck(df: DataFrame): DataFrame = {
-        val c = df.localCheckpoint(true); cps += c; c
-      }
-      try {
-        val full = ck(graft.operators.Incremental
+      Pins.scope { p =>
+        val full = p(graft.operators.Incremental
           .loadSnapshotStore(s, dir))
         Search.validateTfSnapshot(full)
         graft.operators.Incremental.validateSnapshotStoreManifest(
@@ -1589,8 +1576,8 @@ object LlmQueries {
         // materialize=false: both phases stay lazy plans over their
         // PINNED snapshots (checkpoint blocks survive the store
         // rewrite below), and the one eager checkpoint on the final
-        // union — inside the try — materializes everything before
-        // the finally frees the pins; a per-phase output checkpoint
+        // union — inside the scope — materializes everything before
+        // the scope frees the pins; a per-phase output checkpoint
         // would just leak two blocks past the return
         val committed = Search.bm25TopKIndexed(full,
             bm25QueryBatch(docs), "qid", "qtext", k = 5,
@@ -1599,7 +1586,7 @@ object LlmQueries {
             col("rank"), col("doc_id"), col("score_micros"))
         graft.operators.Incremental.retractFromSnapshotStore(s, dir,
           docs.filter(col("doc_id") % 10 === 3).select("doc_id"))
-        val after = ck(graft.operators.Incremental
+        val after = p(graft.operators.Incremental
           .loadSnapshotStore(s, dir))
         Search.validateTfSnapshot(after)
         graft.operators.Incremental.validateSnapshotStoreManifest(
@@ -1612,7 +1599,7 @@ object LlmQueries {
           .select(lit("retracted").as("phase"), col("qid"),
             col("rank"), col("doc_id"), col("score_micros"))
         graft.operators.Incremental.compactSnapshotStore(s, dir)
-        val folded = ck(graft.operators.Incremental
+        val folded = p(graft.operators.Incremental
           .loadSnapshotStore(s, dir))
         Search.validateTfSnapshot(folded)
         graft.operators.Incremental.validateSnapshotStoreManifest(
@@ -1624,8 +1611,7 @@ object LlmQueries {
         committed.unionByName(retracted).unionByName(compacted)
           .orderBy("phase", "qid", "rank")
           .localCheckpoint(true)
-      } finally cps.foreach(
-        org.apache.spark.sql.graftshim.Shims.unpersistLocalCheckpoint)
+      }
     }),
 
     // DURABLE STORE for the KN bigram LM — the same batch-partitioned
@@ -1685,32 +1671,28 @@ object LlmQueries {
     "inc_store_levels" -> ((s, d) => {
       val docs = T.documents(s, d)
       val I = graft.operators.Incremental
-      val cps = scala.collection.mutable.ListBuffer.empty[DataFrame]
-      def ck(df: DataFrame): DataFrame = {
-        val c = df.localCheckpoint(true); cps += c; c
-      }
-      // the era snapshots are LEVEL-INVARIANT (the tiers differ in
-      // WHEN certification runs, never in what lands on disk — the
-      // query's own claim), so each builds ONCE and both lifecycles
-      // write from the shared checkpoint (r17: the second lifecycle
-      // was paying an identical tokenize+aggregate per era)
-      lazy val snapEven = ck(Search.tfSnapshot(
-        docs.filter(col("doc_id") % 2 === 0), "doc_id", "text"))
-      lazy val snapOdd = ck(Search.tfSnapshot(
-        docs.filter(col("doc_id") % 2 =!= 0), "doc_id", "text"))
-      def lifecycle(level: String): String = {
-        val dir = s"/tmp/graft_${s.sparkContext.applicationId}/" +
-          s"tfstore_${level}_${pathDigest(d)}"
-        I.initSnapshotStore(snapEven, dir,
-          manifestIdCol = Some("doc_id"), validate = level)
-        I.commitSnapshotBatch(snapOdd, dir, 1L,
-          manifestIdCol = Some("doc_id"), validate = level)
-        I.retractFromSnapshotStore(s, dir,
-          docs.filter(col("doc_id") % 10 === 3).select("doc_id"),
-          validate = level)
-        dir
-      }
-      try {
+      Pins.scope { p =>
+        // the era snapshots are LEVEL-INVARIANT (the tiers differ in
+        // WHEN certification runs, never in what lands on disk — the
+        // query's own claim), so each builds ONCE and both lifecycles
+        // write from the shared checkpoint (r17: the second lifecycle
+        // was paying an identical tokenize+aggregate per era)
+        lazy val snapEven = p(Search.tfSnapshot(
+          docs.filter(col("doc_id") % 2 === 0), "doc_id", "text"))
+        lazy val snapOdd = p(Search.tfSnapshot(
+          docs.filter(col("doc_id") % 2 =!= 0), "doc_id", "text"))
+        def lifecycle(level: String): String = {
+          val dir = s"/tmp/graft_${s.sparkContext.applicationId}/" +
+            s"tfstore_${level}_${pathDigest(d)}"
+          I.initSnapshotStore(snapEven, dir,
+            manifestIdCol = Some("doc_id"), validate = level)
+          I.commitSnapshotBatch(snapOdd, dir, 1L,
+            manifestIdCol = Some("doc_id"), validate = level)
+          I.retractFromSnapshotStore(s, dir,
+            docs.filter(col("doc_id") % 10 === 3).select("doc_id"),
+            validate = level)
+          dir
+        }
         val dirFull = lifecycle("full")
         val dirRec = lifecycle("recovery")
         // the recovery deployment's DEFERRED certification: one audit
@@ -1721,7 +1703,7 @@ object LlmQueries {
           .select(col("doc_id").as("qid"),
             bm25Qtext(col("text")).as("qtext"))
         def serve(dir: String, phase: String): DataFrame = {
-          val tf = ck(I.loadSnapshotStore(s, dir))
+          val tf = p(I.loadSnapshotStore(s, dir))
           Search.validateTfSnapshot(tf)
           Search.bm25TopKIndexed(tf, probe16, "qid", "qtext", k = 5,
               materialize = false)
@@ -1731,8 +1713,7 @@ object LlmQueries {
         serve(dirFull, "full").unionByName(serve(dirRec, "recovery"))
           .orderBy("phase", "qid", "rank")
           .localCheckpoint(true)
-      } finally cps.foreach(
-        org.apache.spark.sql.graftshim.Shims.unpersistLocalCheckpoint)
+      }
     }),
 
     // STORE MONITORING — the numbers that SCHEDULE compaction, the
@@ -2105,21 +2086,21 @@ object LlmQueries {
       val union = base.unionByName(drift)
       val dir = s"/tmp/graft_${s.sparkContext.applicationId}/" +
         s"ivfpq87_${pathDigest(d)}"
-      val baseIdx = Quantization.ivfPqIndex(base, "vec_id",
-        "embedding", nlist = 4, coarseIters = 2, m = 4, ksub = 4,
-        pqIters = 2)
-      try Quantization.persistIvfPqIndex(baseIdx, dir)
-      finally org.apache.spark.sql.graftshim.Shims
-        .unpersistLocalCheckpoint(baseIdx.codes)
+      Pins.scope { p =>
+        val baseIdx = Quantization.ivfPqIndex(base, "vec_id",
+          "embedding", nlist = 4, coarseIters = 2, m = 4, ksub = 4,
+          pqIters = 2)
+        p.own(baseIdx.codes)
+        Quantization.persistIvfPqIndex(baseIdx, dir)
+      }
       Quantization.ivfPqAddBatch(drift, "vec_id", "embedding", dir)
       // EAGER checkpoint: the retrain below OVERWRITES the layout
       // this lazy plan reads — materialize the before-row first
-      val before = Quantization
-        .ivfPqImbalance(Quantization.loadIvfPqIndex(s, dir))
-        .select(lit("before").as("phase"), col("cell"), col("n_vecs"),
-          col("share"), col("imbalance"))
-        .localCheckpoint(true)
-      try {
+      Pins.scope { p =>
+        val before = p(Quantization
+          .ivfPqImbalance(Quantization.loadIvfPqIndex(s, dir))
+          .select(lit("before").as("phase"), col("cell"), col("n_vecs"),
+            col("share"), col("imbalance")))
         Quantization.ivfPqRetrain(union, "vec_id", "embedding", dir,
           nlist = 4, coarseIters = 2, m = 4, ksub = 4, pqIters = 2)
         val after = Quantization
@@ -2128,8 +2109,7 @@ object LlmQueries {
             col("n_vecs"), col("share"), col("imbalance"))
         before.unionByName(after).orderBy("phase", "cell")
           .localCheckpoint(true)
-      } finally org.apache.spark.sql.graftshim.Shims
-        .unpersistLocalCheckpoint(before)
+      }
     }),
 
     // THE TAKEDOWN SWEEP — the retraction paths composed as ONE
@@ -2155,52 +2135,48 @@ object LlmQueries {
       val quarantined = docs.filter(col("doc_id") % 13 === 7)
       val quarantinedVecs = emb.filter(col("vec_id") % 13 === 7)
       val docIds = quarantined.select("doc_id")
-      val cps = scala.collection.mutable.ListBuffer.empty[DataFrame]
-      def ck(df: DataFrame): DataFrame = {
-        val c = df.localCheckpoint(true); cps += c; c
-      }
-      try {
+      Pins.scope { p =>
         // BEFORE-states checkpoint (multiple heavy consumers); the
         // AFTER-states stay LAZY since r17 — each is one broadcast
         // anti-join over its cached before-frame, and its two
         // consumers (validator, audit) re-run that join for less
         // than the cost of materializing a second corpus-scale copy
-        val tf = ck(Search.tfSnapshot(docs, "doc_id", "text"))
+        val tf = p(Search.tfSnapshot(docs, "doc_id", "text"))
         val tfAfter = graft.operators.Incremental
           .retractDocs(tf, docIds)
         Search.validateTfSnapshot(tfAfter)
-        val kn = ck(TextAnalysis.knSnapshot(docs, "doc_id", "text"))
+        val kn = p(TextAnalysis.knSnapshot(docs, "doc_id", "text"))
         val knAfter = graft.operators.Incremental
           .retractDocs(kn, docIds)
         TextAnalysis.validateKnSnapshot(knAfter)
-        val lc = ck(Dedup.lineCountPartial(docs, "text"))
-        val lcAfter = ck(Dedup.subtractLineCounts(lc,
+        val lc = p(Dedup.lineCountPartial(docs, "text"))
+        val lcAfter = p(Dedup.subtractLineCounts(lc,
           Dedup.lineCountPartial(quarantined, "text")))
         Dedup.validateLineCounts(lcAfter)
-        val glc = ck(Dedup.groupedLineCountPartial(docs, "lang",
+        val glc = p(Dedup.groupedLineCountPartial(docs, "lang",
           "text"))
-        val glcAfter = ck(Dedup.subtractGroupedLineCounts(glc,
+        val glcAfter = p(Dedup.subtractGroupedLineCounts(glc,
           Dedup.groupedLineCountPartial(quarantined, "lang", "text")))
         Dedup.validateLineCounts(glcAfter)
         val pidx = Dedup.prefixCrossIndex(docs, "doc_id", "text",
           k = 5, theta = 0.5)
-        Seq(pidx.shEx, pidx.dfreq, pidx.prefEx).foreach(cps += _)
+        pidx.frames.foreach(p.own)
         val pret = Dedup.retractPrefixCrossIndex(pidx, docIds,
           "doc_id")
-        Seq(pret.shEx, pret.dfreq, pret.prefEx).foreach(cps += _)
+        pret.frames.foreach(p.own)
         Dedup.validatePrefixCrossIndex(pret)
         // the LSH band table (r16's 7th maintained artifact): the
         // quarantined docs' band rows leave by the same anti-join,
         // and the m-rows-per-id validator re-certifies the survivors
-        val bands = Dedup.minHashBands(docs, "doc_id", "text", k = 5)
-        cps += bands
+        val bands = p.own(Dedup.minHashBands(docs, "doc_id", "text",
+          k = 5))
         val bandsAfter = graft.operators.Incremental
           .retractDocs(bands, docIds)
         Dedup.validateMinHashBands(bandsAfter, "doc_id")
         val dir = s"/tmp/graft_${s.sparkContext.applicationId}/" +
           s"takedown89_${pathDigest(d)}"
         Quantization.persistIvfPqIndex(sharedIvfPqIndex(s, d), dir)
-        val codesBefore = ck(s.read.parquet(dir + "/codes")
+        val codesBefore = p(s.read.parquet(dir + "/codes")
           .select("nid"))
         Quantization.ivfPqRemoveBatch(
           quarantinedVecs.select("vec_id"), "vec_id", dir)
@@ -2223,8 +2199,7 @@ object LlmQueries {
             coalesce(sum(col("df")), lit(0L))))
           .reduce(_ unionByName _).orderBy("artifact")
           .localCheckpoint(true)
-      } finally cps.foreach(
-        org.apache.spark.sql.graftshim.Shims.unpersistLocalCheckpoint)
+      }
     }),
 
     // THE CRAWL-COMMIT SWEEP — d89's add-side mirror: a newly
@@ -2259,44 +2234,38 @@ object LlmQueries {
           .otherwise(col("text")).as("text"))
       val existing = docs.filter(col("doc_id") % 10 < 8)
       val delta = docs.filter(col("doc_id") % 10 >= 8)
-      val cps = scala.collection.mutable.ListBuffer.empty[DataFrame]
-      def ck(df: DataFrame): DataFrame = {
-        val c = df.localCheckpoint(true); cps += c; c
-      }
-      try {
-        val tfA = ck(Search.tfSnapshot(existing, "doc_id", "text"))
-        val tfM = ck(Search.mergeTfSnapshots(Seq(tfA,
+      Pins.scope { p =>
+        val tfA = p(Search.tfSnapshot(existing, "doc_id", "text"))
+        val tfM = p(Search.mergeTfSnapshots(Seq(tfA,
           Search.tfSnapshot(delta, "doc_id", "text"))))
         Search.validateTfSnapshot(tfM)
-        val knA = ck(TextAnalysis.knSnapshot(existing, "doc_id",
+        val knA = p(TextAnalysis.knSnapshot(existing, "doc_id",
           "text"))
-        val knM = ck(TextAnalysis.mergeKnSnapshots(Seq(knA,
+        val knM = p(TextAnalysis.mergeKnSnapshots(Seq(knA,
           TextAnalysis.knSnapshot(delta, "doc_id", "text"))))
         TextAnalysis.validateKnSnapshot(knM)
-        val lcA = ck(Dedup.lineCountPartial(existing, "text"))
-        val lcM = ck(Dedup.mergeLineCounts(Seq(lcA,
+        val lcA = p(Dedup.lineCountPartial(existing, "text"))
+        val lcM = p(Dedup.mergeLineCounts(Seq(lcA,
           Dedup.lineCountPartial(delta, "text"))))
         Dedup.validateLineCounts(lcM)
-        val glcA = ck(Dedup.groupedLineCountPartial(existing, "lang",
+        val glcA = p(Dedup.groupedLineCountPartial(existing, "lang",
           "text"))
-        val glcM = ck(Dedup.mergeGroupedLineCounts(Seq(glcA,
+        val glcM = p(Dedup.mergeGroupedLineCounts(Seq(glcA,
           Dedup.groupedLineCountPartial(delta, "lang", "text"))))
         Dedup.validateLineCounts(glcM)
         val pidx = Dedup.prefixCrossIndex(existing, "doc_id", "text",
           k = 5, theta = 0.5)
-        Seq(pidx.shEx, pidx.dfreq, pidx.prefEx).foreach(cps += _)
+        pidx.frames.foreach(p.own)
         val pref = Dedup.refreshPrefixCrossIndex(pidx, delta,
           "doc_id", "text")
-        Seq(pref.shEx, pref.dfreq, pref.prefEx).foreach(cps += _)
+        pref.frames.foreach(p.own)
         Dedup.validatePrefixCrossIndex(pref)
         // the LSH band table: the delta's bands union-merge (per-doc
         // independence — merged == full build), validator re-certifies
-        val bandsA = Dedup.minHashBands(existing, "doc_id", "text",
-          k = 5)
-        cps += bandsA
-        val bandsD = Dedup.minHashBands(delta, "doc_id", "text",
-          k = 5)
-        cps += bandsD
+        val bandsA = p.own(Dedup.minHashBands(existing, "doc_id",
+          "text", k = 5))
+        val bandsD = p.own(Dedup.minHashBands(delta, "doc_id", "text",
+          k = 5))
         // LAZY union of the two checkpointed era tables (r17): its
         // consumers (validator, audit) re-scan cached blocks instead
         // of paying a third full band-table materialization
@@ -2308,7 +2277,7 @@ object LlmQueries {
         Quantization.persistIvfPqIndex(
           idx.copy(codes = idx.codes.filter(col("nid") % 10 < 8)),
           dir)
-        val codesBefore = ck(s.read.parquet(dir + "/codes")
+        val codesBefore = p(s.read.parquet(dir + "/codes")
           .select("nid"))
         Quantization.ivfPqAddBatch(
           T.embeddings(s, d).filter(col("vec_id") % 10 >= 8),
@@ -2345,8 +2314,7 @@ object LlmQueries {
             coalesce(sum(col("df")), lit(0L))))
           .reduce(_ unionByName _).orderBy("artifact")
           .localCheckpoint(true)
-      } finally cps.foreach(
-        org.apache.spark.sql.graftshim.Shims.unpersistLocalCheckpoint)
+      }
     }),
 
     // THE RECRAWL-UPDATE SWEEP — the lifecycle verb d89 (delete) and
@@ -2398,55 +2366,49 @@ object LlmQueries {
         "d91_recrawl_update: no re-crawled vectors (vec_id % 10 == " +
           "4) in this dataset - an empty update sweep has nothing " +
           "to supersede")
-      val cps = scala.collection.mutable.ListBuffer.empty[DataFrame]
-      def ck(df: DataFrame): DataFrame = {
-        val c = df.localCheckpoint(true); cps += c; c
-      }
-      try {
-        val tf0 = ck(Search.tfSnapshot(docs0, "doc_id", "text"))
-        val tfU = ck(Search.mergeTfSnapshots(Seq(
+      Pins.scope { p =>
+        val tf0 = p(Search.tfSnapshot(docs0, "doc_id", "text"))
+        val tfU = p(Search.mergeTfSnapshots(Seq(
           graft.operators.Incremental.retractDocs(tf0, updIds),
           Search.tfSnapshot(updated, "doc_id", "text"))))
         Search.validateTfSnapshot(tfU)
-        val kn0 = ck(TextAnalysis.knSnapshot(docs0, "doc_id", "text"))
-        val knU = ck(TextAnalysis.mergeKnSnapshots(Seq(
+        val kn0 = p(TextAnalysis.knSnapshot(docs0, "doc_id", "text"))
+        val knU = p(TextAnalysis.mergeKnSnapshots(Seq(
           graft.operators.Incremental.retractDocs(kn0, updIds),
           TextAnalysis.knSnapshot(updated, "doc_id", "text"))))
         TextAnalysis.validateKnSnapshot(knU)
-        val lc0 = ck(Dedup.lineCountPartial(docs0, "text"))
-        val lcU = ck(Dedup.mergeLineCounts(Seq(
+        val lc0 = p(Dedup.lineCountPartial(docs0, "text"))
+        val lcU = p(Dedup.mergeLineCounts(Seq(
           Dedup.subtractLineCounts(lc0,
             Dedup.lineCountPartial(slice0, "text")),
           Dedup.lineCountPartial(updated, "text"))))
         Dedup.validateLineCounts(lcU)
-        val glc0 = ck(Dedup.groupedLineCountPartial(docs0, "lang",
+        val glc0 = p(Dedup.groupedLineCountPartial(docs0, "lang",
           "text"))
-        val glcU = ck(Dedup.mergeGroupedLineCounts(Seq(
+        val glcU = p(Dedup.mergeGroupedLineCounts(Seq(
           Dedup.subtractGroupedLineCounts(glc0,
             Dedup.groupedLineCountPartial(slice0, "lang", "text")),
           Dedup.groupedLineCountPartial(updated, "lang", "text"))))
         Dedup.validateLineCounts(glcU)
         val pidx = Dedup.prefixCrossIndex(docs0, "doc_id", "text",
           k = 5, theta = 0.5)
-        Seq(pidx.shEx, pidx.dfreq, pidx.prefEx).foreach(cps += _)
+        pidx.frames.foreach(p.own)
         // ONE composed update derivation (r17): retract-then-refresh
         // == updatePrefixCrossIndex by sum associativity, and the
         // intermediate index's prefix postings — which nothing here
         // ever read — are no longer derived and checkpointed
         val pUpd = Dedup.updatePrefixCrossIndex(pidx, updIds, updated,
           "doc_id", "text")
-        Seq(pUpd.shEx, pUpd.dfreq, pUpd.prefEx).foreach(cps += _)
+        pUpd.frames.foreach(p.own)
         Dedup.validatePrefixCrossIndex(pUpd)
         // the LSH band table: update = retract-old + band-new, like
         // every other artifact (the re-fetched text re-bands — the
         // doc's 64 band hashes change hands while cardinality is
         // invariant, which is what the audit row shows)
-        val bands0 = Dedup.minHashBands(docs0, "doc_id", "text",
-          k = 5)
-        cps += bands0
-        val bandsNew = Dedup.minHashBands(updated, "doc_id", "text",
-          k = 5)
-        cps += bandsNew
+        val bands0 = p.own(Dedup.minHashBands(docs0, "doc_id", "text",
+          k = 5))
+        val bandsNew = p.own(Dedup.minHashBands(updated, "doc_id",
+          "text", k = 5))
         // LAZY retract+union over the two checkpointed band tables
         // (r17): one broadcast anti-join its two consumers re-run,
         // instead of a third full band-table materialization
@@ -2460,7 +2422,7 @@ object LlmQueries {
         // vectors against the FROZEN codebooks — update does not
         // retrain, drift is d80/d87's job
         Quantization.persistIvfPqIndex(sharedIvfPqIndex(s, d), dir)
-        val codesBefore = ck(s.read.parquet(dir + "/codes")
+        val codesBefore = p(s.read.parquet(dir + "/codes")
           .select("nid"))
         Quantization.ivfPqRemoveBatch(
           T.embeddings(s, d).filter(col("vec_id") % 10 === 4)
@@ -2492,8 +2454,7 @@ object LlmQueries {
             coalesce(sum(col("tf")), lit(0L))))
           .reduce(_ unionByName _).orderBy("artifact")
           .localCheckpoint(true)
-      } finally cps.foreach(
-        org.apache.spark.sql.graftshim.Shims.unpersistLocalCheckpoint)
+      }
     }),
 
     // THE STORE-SERVED INGEST FLAGSHIP — the production composition
@@ -2539,120 +2500,110 @@ object LlmQueries {
       // (id-keyed file-level retraction), append-only grouped count
       // PARTIALS (tombstone retraction). init resets both stores, so
       // the query is idempotent across re-invocations.
-      val (b0, sig0) = Dedup.minHashBandsLazy(
-        existing.filter(col("doc_id") % 2 === 0), "doc_id", "text",
-        k = 5)
-      I.initSnapshotStore(b0, bdir, manifestIdCol = Some("doc_id"))
-      Dedup.writeBandParams(s, bdir, k = 5, numPerm = 256, bands = 64)
-      org.apache.spark.sql.graftshim.Shims.unpersistLocalCheckpoint(sig0)
-      val (b1, sig1) = Dedup.minHashBandsLazy(
-        existing.filter(col("doc_id") % 2 =!= 0), "doc_id", "text",
-        k = 5)
-      I.commitSnapshotBatch(b1, bdir, 1L, manifestIdCol = Some("doc_id"))
-      org.apache.spark.sql.graftshim.Shims.unpersistLocalCheckpoint(sig1)
+      Pins.scope { p =>
+        I.initSnapshotStore(Dedup.minHashBandsLazy(p,
+            existing.filter(col("doc_id") % 2 === 0), "doc_id", "text",
+            k = 5),
+          bdir, manifestIdCol = Some("doc_id"))
+        Dedup.writeBandParams(s, bdir, k = 5, numPerm = 256, bands = 64)
+      }
+      Pins.scope { p =>
+        I.commitSnapshotBatch(Dedup.minHashBandsLazy(p,
+            existing.filter(col("doc_id") % 2 =!= 0), "doc_id", "text",
+            k = 5),
+          bdir, 1L, manifestIdCol = Some("doc_id"))
+      }
       I.initSnapshotStore(Dedup.groupedLineCountPartial(
         existing.filter(col("doc_id") % 2 === 0), "lang", "text"), gdir)
       I.commitSnapshotBatch(Dedup.groupedLineCountPartial(
         existing.filter(col("doc_id") % 2 =!= 0), "lang", "text"),
         gdir, 1L)
-      val cps = scala.collection.mutable.ListBuffer.empty[DataFrame]
-      def ck(df: DataFrame): DataFrame = {
-        val c = df.localCheckpoint(true); cps += c; c
-      }
-      def funnelAgg(df: DataFrame) =
-        df.agg(count(lit(1)).as("n_docs"),
-          coalesce(sum(length(col("text"))), lit(0L)).cast("long")
-            .as("n_chars"),
-          coalesce(sum(col("doc_id")), lit(0L)).cast("long")
-            .as("id_checksum"))
-      def label(agg: DataFrame, phase: String, idx: Int,
-                name: String) =
-        agg.select(lit(phase).as("phase"), lit(idx).as("stage_idx"),
-          lit(name).as("stage"), col("n_docs"), col("n_chars"),
-          col("id_checksum"))
-      def funnelRow(phase: String, idx: Int, name: String,
-                    df: DataFrame) = label(funnelAgg(df), phase, idx,
-        name)
-      // stage 1 (exact in-batch dedup) and the batch's banding are
-      // PHASE-INVARIANT — they depend only on the incoming batch,
-      // never on store state — so both build once and every phase
-      // serves from the shared tables (r17: the second phase was
-      // paying an identical exactDedup + banding). lazy: they first
-      // force inside the try, so a failure cannot leak them past
-      // the finally
-      lazy val s1Shared = {
-        val c = incoming.join(
+      Pins.scope { p =>
+        def funnelAgg(df: DataFrame) =
+          df.agg(count(lit(1)).as("n_docs"),
+            coalesce(sum(length(col("text"))), lit(0L)).cast("long")
+              .as("n_chars"),
+            coalesce(sum(col("doc_id")), lit(0L)).cast("long")
+              .as("id_checksum"))
+        def label(agg: DataFrame, phase: String, idx: Int,
+                  name: String) =
+          agg.select(lit(phase).as("phase"), lit(idx).as("stage_idx"),
+            lit(name).as("stage"), col("n_docs"), col("n_chars"),
+            col("id_checksum"))
+        def funnelRow(phase: String, idx: Int, name: String,
+                      df: DataFrame) = label(funnelAgg(df), phase, idx,
+          name)
+        // stage 1 (exact in-batch dedup) and the batch's banding are
+        // PHASE-INVARIANT — they depend only on the incoming batch,
+        // never on store state — so both build once and every phase
+        // serves from the shared tables (r17: the second phase was
+        // paying an identical exactDedup + banding). lazy: each first
+        // builds inside the first ingest, after that serve's store
+        // checks
+        lazy val s1Shared = p(incoming.join(
           Dedup.exactDedup(incoming, "doc_id", "text")
             .select(col("keeper").as("doc_id")),
-          Seq("doc_id")).localCheckpoint(true)
-        cps += c; c
-      }
-      lazy val s1Bands = {
-        val b = Dedup.minHashBands(s1Shared, "doc_id", "text", k = 5)
-        cps += b; b
-      }
-      // ...and so are the stage-0/1 funnel aggregates (one row each):
-      // both phases emit the SAME numbers under different labels, so
-      // the corpus scan behind '0_incoming' and the s1 pass behind
-      // '1_exact' run once, not per phase (r18)
-      lazy val inAgg = ck(funnelAgg(incoming))
-      lazy val s1Agg = ck(funnelAgg(s1Shared))
-      // one serve of the whole ingest loop from what is ON DISK;
-      // the funnel checkpoints eagerly because the takedown between
-      // phases mutates the stores these plans read
-      def ingest(phase: String, survivors: DataFrame): DataFrame = {
-        // re-certify EVERY touched store before serving from it:
-        // the band store's params + manifest sync + roster
-        // completeness + per-id structure fold into
-        // certifyBandStore's ONE store scan (r18 — was four jobs
-        // and three full band-table scans per phase), and the
-        // rollup fold keeps its non-negativity validator
-        Dedup.certifyBandStore(s, bdir, "doc_id", k = 5,
-          numPerm = 256, bands = 64)
-        val bands = I.loadSnapshotStore(s, bdir)
-        val counts = I.loadRollupStore(s, gdir, Seq("grp", "key"),
-          Seq("cnt"))
-        Dedup.validateLineCounts(counts)
-        val s1 = s1Shared
-        val flagged = Dedup.lshScreenAgainst(s1, bands, survivors,
-          "doc_id", "text", k = 5, theta = 0.7,
-          incomingBands = Some(s1Bands), storedCertified = true)
-        cps += flagged
-        // s2 stays LAZY (the d89-d91 r17 treatment): one broadcast
-        // anti-join over the pinned s1 and the checkpointed flagged
-        // set, re-run by its two consumers (the screen, its funnel
-        // row) for less than a second corpus-scale materialization
-        val s2 = s1.join(
-          flagged.select(col("in_id").as("doc_id")).distinct(),
-          Seq("doc_id"), "left_anti")
-        // s3 keeps its checkpoint: the screen's explode + collect_list
-        // shuffle is the one recompute not worth paying twice
-        val s3 = ck(Dedup.groupedLineDedupAgainst(s2,
-            Dedup.groupedBoilerplateFromCounts(counts, minCount = 3),
-            "doc_id", "lang", "text")
-          .select("doc_id", "lang", "text"))
-        // quality gate = the d15 floor (token count + language-ID
-        // agreement), NOT the full Gopher battery: this corpus is
-        // multilingual and Gopher's stopword rule is English-gated —
-        // it would keep zero docs here, a vacuous stage (the battery
-        // itself stays gate-green standalone as d52/d84).
-        // LAZY too (r18): its only consumer is the funnel row, which
-        // re-filters s3's cached blocks — the checkpoint was a pure
-        // extra corpus-scale materialization
-        val s4 = s3.filter(
-          TextAnalysis.textStats(col("text")).getField("n_toks")
-            >= 20 &&
-            TextAnalysis.langIdHeuristic(col("text")) === col("lang"))
-        val out = Seq(label(inAgg, phase, 0, "0_incoming"),
-            label(s1Agg, phase, 1, "1_exact"),
-            funnelRow(phase, 2, "2_neardup", s2),
-            funnelRow(phase, 3, "3_screen", s3),
-            funnelRow(phase, 4, "4_quality", s4))
-          .reduce(_ unionByName _).localCheckpoint(true)
-        cps += out
-        out
-      }
-      try {
+          Seq("doc_id")))
+        lazy val s1Bands = p.own(Dedup.minHashBands(s1Shared, "doc_id",
+          "text", k = 5))
+        // ...and so are the stage-0/1 funnel aggregates (one row each):
+        // both phases emit the SAME numbers under different labels, so
+        // the corpus scan behind '0_incoming' and the s1 pass behind
+        // '1_exact' run once, not per phase (r18)
+        lazy val inAgg = p(funnelAgg(incoming))
+        lazy val s1Agg = p(funnelAgg(s1Shared))
+        // one serve of the whole ingest loop from what is ON DISK;
+        // the funnel checkpoints eagerly because the takedown between
+        // phases mutates the stores these plans read
+        def ingest(phase: String, survivors: DataFrame): DataFrame = {
+          // re-certify EVERY touched store before serving from it:
+          // the band store's params + manifest sync + roster
+          // completeness + per-id structure fold into
+          // certifyBandStore's ONE store scan (r18 — was four jobs
+          // and three full band-table scans per phase), and the
+          // rollup fold keeps its non-negativity validator
+          Dedup.certifyBandStore(s, bdir, "doc_id", k = 5,
+            numPerm = 256, bands = 64)
+          val bands = I.loadSnapshotStore(s, bdir)
+          val counts = I.loadRollupStore(s, gdir, Seq("grp", "key"),
+            Seq("cnt"))
+          Dedup.validateLineCounts(counts)
+          val s1 = s1Shared
+          val flagged = p.own(Dedup.lshScreenAgainst(s1, bands,
+            survivors, "doc_id", "text", k = 5, theta = 0.7,
+            incomingBands = Some(s1Bands), storedCertified = true))
+          // s2 stays LAZY (the d89-d91 r17 treatment): one broadcast
+          // anti-join over the pinned s1 and the checkpointed flagged
+          // set, re-run by its two consumers (the screen, its funnel
+          // row) for less than a second corpus-scale materialization
+          val s2 = s1.join(
+            flagged.select(col("in_id").as("doc_id")).distinct(),
+            Seq("doc_id"), "left_anti")
+          // s3 keeps its checkpoint: the screen's explode + collect_list
+          // shuffle is the one recompute not worth paying twice
+          val s3 = p(Dedup.groupedLineDedupAgainst(s2,
+              Dedup.groupedBoilerplateFromCounts(counts, minCount = 3),
+              "doc_id", "lang", "text")
+            .select("doc_id", "lang", "text"))
+          // quality gate = the d15 floor (token count + language-ID
+          // agreement), NOT the full Gopher battery: this corpus is
+          // multilingual and Gopher's stopword rule is English-gated —
+          // it would keep zero docs here, a vacuous stage (the battery
+          // itself stays gate-green standalone as d52/d84).
+          // LAZY too (r18): its only consumer is the funnel row, which
+          // re-filters s3's cached blocks — the checkpoint was a pure
+          // extra corpus-scale materialization
+          val s4 = s3.filter(
+            TextAnalysis.textStats(col("text")).getField("n_toks")
+              >= 20 &&
+              TextAnalysis.langIdHeuristic(col("text")) === col("lang"))
+          p(Seq(label(inAgg, phase, 0, "0_incoming"),
+              label(s1Agg, phase, 1, "1_exact"),
+              funnelRow(phase, 2, "2_neardup", s2),
+              funnelRow(phase, 3, "3_screen", s3),
+              funnelRow(phase, 4, "4_quality", s4))
+            .reduce(_ unionByName _))
+        }
         val committed = ingest("committed", existing)
         // the takedown lands MID-SEQUENCE, one retraction per store
         // discipline: file-level partition rewrite on the band
@@ -2669,8 +2620,7 @@ object LlmQueries {
         committed.unionByName(retracted)
           .orderBy("phase", "stage_idx")
           .localCheckpoint(true)
-      } finally cps.foreach(
-        org.apache.spark.sql.graftshim.Shims.unpersistLocalCheckpoint)
+      }
     }),
 
     // Shingle df histogram — the dfCap / prefix-path tuning
@@ -2899,15 +2849,13 @@ object LlmQueries {
       nearDup: Boolean,
       stageDir: Option[String] = None,
       healthRunsDir: Option[String] = None): DataFrame = {
-    val cps = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    def ck(df: DataFrame, stage: String): DataFrame = stageDir match {
-      case Some(dir) =>
-        df.write.mode("overwrite").parquet(s"$dir/$stage")
-        s.read.parquet(s"$dir/$stage")
-      case None =>
-        val c = df.localCheckpoint(true); cps += c; c
-    }
-    try {
+    Pins.scope { p =>
+      def stage(df: DataFrame, name: String): DataFrame = stageDir match {
+        case Some(dir) =>
+          df.write.mode("overwrite").parquet(s"$dir/$name")
+          s.read.parquet(s"$dir/$name")
+        case None => p(df)
+      }
       val raw = T.documents(s, d)
       val ws = TextAnalysis.wordTokens(col("text"))
       val nChunks = greatest(ceil(size(ws) / lit(12.0)).cast("int"),
@@ -2952,10 +2900,10 @@ object LlmQueries {
           when(col("doc_id") % 68 === 2, canonText)
             .when(col("doc_id") % 68 === 36, nearText)
         else when(col("doc_id") % 34 === 2, canonText)
-      val s0 = ck(raw.select(col("doc_id"), col("lang"),
+      val s0 = stage(raw.select(col("doc_id"), col("lang"),
         planted.otherwise(array_join(pageLines, "\n")).as("text")),
         "s0_raw")
-      val s1 = ck(s0.select(col("doc_id"), col("lang"),
+      val s1 = stage(s0.select(col("doc_id"), col("lang"),
         TextAnalysis.stripMarkupKeepLines(col("text")).as("text")),
         "s1_markup")
       // lang rides THROUGH the stage operators (r18): c4LineRules and
@@ -2963,14 +2911,14 @@ object LlmQueries {
       // column passes for free — the old shape re-joined each stage
       // onto its predecessor just to recover it (two
       // BroadcastHashJoins per DAG, gone from the stage plans)
-      val s2 = ck(TextAnalysis.c4LineRules(s1, "doc_id", "text",
+      val s2 = stage(TextAnalysis.c4LineRules(s1, "doc_id", "text",
           passThrough = Seq("lang"))
         .filter(col("page_kept"))
         .select(col("doc_id"), col("lang"), col("text")), "s2_c4")
-      val s3 = ck(s2.join(
+      val s3 = stage(s2.join(
         gopherFullGate(s2).filter(col("full_pass")).select("doc_id"),
         Seq("doc_id")), "s3_gopher")
-      val s4 = ck(s3.select(col("doc_id"), col("lang"),
+      val s4 = stage(s3.select(col("doc_id"), col("lang"),
         TextAnalysis.piiRedact(col("text")).as("text")), "s4_pii")
       val keepers = Dedup.priorityDedup(
         s4.withColumn("src",
@@ -2980,19 +2928,18 @@ object LlmQueries {
         "doc_id", "text", "src",
         Map("curated" -> 0, "books" -> 1, "cc" -> 2))
         .select(col("keeper").as("doc_id"))
-      val s5 = ck(s4.join(keepers, Seq("doc_id")), "s5_dedup")
+      val s5 = stage(s4.join(keepers, Seq("doc_id")), "s5_dedup")
       val s5n = if (!nearDup) s5 else {
         // the gate-green d5 kernel on the stage-5 survivors; drop
         // every doc with a >= theta near-dup of smaller id (id_a <
         // id_b by construction, so the drop set is the id_b side)
-        val pairs = Dedup.minHashLshPairs(s5, "doc_id", "text",
-          k = 5, theta = 0.7)
-        cps += pairs
-        ck(s5.join(pairs.select(col("id_b").as("doc_id")).distinct(),
+        val pairs = p.own(Dedup.minHashLshPairs(s5, "doc_id", "text",
+          k = 5, theta = 0.7))
+        stage(s5.join(pairs.select(col("id_b").as("doc_id")).distinct(),
           Seq("doc_id"), "left_anti"), "s6_neardup")
       }
       val screen = Dedup.boilerplateLineSet(s5n, "text", minCount = 3)
-      val s6 = ck(Dedup.lineDedupAgainst(s5n, screen, "doc_id", "text",
+      val s6 = stage(Dedup.lineDedupAgainst(s5n, screen, "doc_id", "text",
           passThrough = Seq("lang"))
         .select(col("doc_id"), col("lang"), col("text")), "s6_screen")
       val bench = s6.filter(col("doc_id") % 37 === 0)
@@ -3000,7 +2947,7 @@ object LlmQueries {
           slice(split(col("text"), "\\s+"), 1, 15)).as("btext"))
       val hits = Dedup.decontaminate(s6, "doc_id", "text", bench,
         "btext").select("doc_id")
-      val s7 = ck(s6.join(hits, Seq("doc_id"), "left_anti"),
+      val s7 = stage(s6.join(hits, Seq("doc_id"), "left_anti"),
         "s7_decontam")
       val withN = s7.withColumn("n_chars",
         length(col("text")).cast("long"))
@@ -3013,7 +2960,7 @@ object LlmQueries {
       val sampled = Mixing.stratifiedSample(
         withN.select("doc_id", "lang", "n_chars"),
         "doc_id", "lang", ratesBp, defaultBp = 0)
-      val s8 = ck(Mixing.assignSplit(
+      val s8 = stage(Mixing.assignSplit(
           sampled.withColumn("__sid",
             concat(col("doc_id").cast("string"), lit("#split"))),
           "__sid", Seq(("train", 9800), ("valid", 100), ("test", 100)))
@@ -3066,8 +3013,7 @@ object LlmQueries {
       // durable mode keeps even the returned funnel off executor-local
       // blocks: its branches scan the landed stage parquet directly
       if (stageDir.isDefined) funnel else funnel.localCheckpoint(true)
-    } finally cps.foreach(
-      org.apache.spark.sql.graftshim.Shims.unpersistLocalCheckpoint)
+    }
   }
 
 
@@ -3640,11 +3586,12 @@ object LlmQueries {
       s.sparkContext.applicationId + "|" + d, _ => {
         val out = s"/tmp/graft_${s.sparkContext.applicationId}/cc_labels_" +
           pathDigest(d)
-        val labels = GraphOps.connectedComponents(
-          cooccurEdges(s, d).filter(col("weight") >= 3L))
-        labels.write.mode("overwrite").parquet(out)
-        // the fixpoint's final localCheckpoint is now on disk — free it
-        org.apache.spark.sql.graftshim.Shims.unpersistLocalCheckpoint(labels)
+        // the fixpoint's final localCheckpoint is freed once on disk
+        Pins.scope { p =>
+          p.own(GraphOps.connectedComponents(
+              cooccurEdges(s, d).filter(col("weight") >= 3L)))
+            .write.mode("overwrite").parquet(out)
+        }
         out
       })
     s.read.parquet(path)

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Exprs, Tables => T}
+import graft.core.{Exprs, Pins, Tables => T}
 
 /** Event-time windowed aggregation (§2.11). The reference is batch-only;
   * these are the batch equivalents of the Structured Streaming jobs in
@@ -75,18 +75,20 @@ object StreamQueries {
         // the full result each batch, so the LAST overwrite wins
         graft.streaming.EventStream.runAvailableNow(build(in), s"$base/ckpt",
           mode) { (b, _) =>
-          transform(b).write
-            .mode(if (mode == "complete") "overwrite" else "append")
-            .parquet(s"$base/out")
+          Pins.scope { p =>
+            val out = transform(b)
+            // an operator that seals its output (a bare local
+            // checkpoint) leaves the sink the only handle to it: free
+            // it once the batch has landed
+            if (Pins.isCheckpoint(out)) p.own(out)
+            out.write
+              .mode(if (mode == "complete") "overwrite" else "append")
+              .parquet(s"$base/out")
+          }
         }
         s"$base/out"
       })
 
-  /** [[materializedStream]]'s FOLD variant: instead of writing each
-    * micro-batch, `step` folds it into a running state frame (e.g. a
-    * maintained rollup), and the FINAL state is what materializes.
-    * The state localCheckpoints every batch so the plan never chains
-    * across batches. */
   /** Shared body of the IVF-PQ lifecycle twins (st_inc_ivfpq_add /
     * st_inc_ivfpq_remove): persist a starting layout, serve era A's
     * query slice (every 20th vector) from it via an AvailableNow
@@ -130,6 +132,11 @@ object StreamQueries {
       .orderBy("qid", "rank")
   }
 
+  /** [[materializedStream]]'s FOLD variant: instead of writing each
+    * micro-batch, `step` folds it into a running state frame (e.g. a
+    * maintained rollup), and the FINAL state is what materializes.
+    * The state localCheckpoints every batch so the plan never chains
+    * across batches. */
   private def materializedFold(s: SparkSession, d: String, name: String,
       srcFile: String, step: (Option[DataFrame], DataFrame) => DataFrame)(
       build: String => DataFrame): String =
@@ -152,16 +159,20 @@ object StreamQueries {
         }
         rmTree(s"$base/out")
         rmTree(s"$base/ckpt")
-        var state: Option[DataFrame] = None
-        graft.streaming.EventStream.runAvailableNow(build(in),
-          s"$base/ckpt", "append") { (b, _) =>
-          val next = step(state, b).localCheckpoint(true)
-          state.foreach(
-            org.apache.spark.sql.graftshim.Shims.unpersistLocalCheckpoint)
-          state = Some(next)
+        // the scope owns every fold state: each batch's checkpoint
+        // replaces (and releases) the previous one, and the final
+        // state is freed once it is on disk
+        Pins.scope { p =>
+          var state: Option[DataFrame] = None
+          graft.streaming.EventStream.runAvailableNow(build(in),
+            s"$base/ckpt", "append") { (b, _) =>
+            val next = p(step(state, b))
+            state.foreach(p.release)
+            state = Some(next)
+          }
+          state.getOrElse(s.emptyDataFrame)
+            .write.mode("overwrite").parquet(s"$base/out")
         }
-        state.getOrElse(s.emptyDataFrame)
-          .write.mode("overwrite").parquet(s"$base/out")
         s"$base/out"
       })
 
@@ -253,10 +264,9 @@ object StreamQueries {
     // grams derive from its own row (micro-batch-local by
     // construction; see Dedup.crossDupSpansAgainst). Hashed against
     // the BATCH d37 oracle verbatim.
-    "st_cross_spans" -> ((s, d) => {
-      lazy val seen = graft.operators.Dedup.existingGramSet(
-        T.documents(s, d).filter(col("doc_id") % 5 =!= 0), "text")
-        .localCheckpoint(true)
+    "st_cross_spans" -> ((s, d) => Pins.scope { p =>
+      lazy val seen = p(graft.operators.Dedup.existingGramSet(
+        T.documents(s, d).filter(col("doc_id") % 5 =!= 0), "text"))
       val out = materializedStream(s, d, "xspans", "documents.parquet",
         transform = batch =>
           graft.operators.Dedup.crossDupSpansAgainst(
@@ -277,10 +287,14 @@ object StreamQueries {
     // it, and per-incoming-row work depends only on that row plus the
     // index, so batch splits cannot change the result. Hashed against
     // the BATCH d47 oracle (= d26's pairwise SQL) verbatim.
-    "st_cross_near" -> ((s, d) => {
-      lazy val idx = graft.operators.Dedup.prefixCrossIndex(
-        T.documents(s, d).filter(col("doc_id") % 7 =!= 0),
-        "doc_id", "text", k = 5, theta = 0.5)
+    "st_cross_near" -> ((s, d) => Pins.scope { p =>
+      lazy val idx = {
+        val i = graft.operators.Dedup.prefixCrossIndex(
+          T.documents(s, d).filter(col("doc_id") % 7 =!= 0),
+          "doc_id", "text", k = 5, theta = 0.5)
+        i.frames.foreach(p.own)
+        i
+      }
       val out = materializedStream(s, d, "xnear", "documents.parquet",
         transform = batch =>
           graft.operators.Dedup.prefixCrossJaccardAgainst(
@@ -318,15 +332,15 @@ object StreamQueries {
     // per-row work depends only on the row plus the static set, so
     // batch splits cannot change results. Hashed against the BATCH
     // d64 oracle verbatim.
-    "st_line_dedup" -> ((s, d) => {
+    "st_line_dedup" -> ((s, d) => Pins.scope { p =>
       val boiler = "subscribe to our newsletter for updates today"
       def planted(df: DataFrame) = df.select(col("doc_id"),
         when(col("doc_id") % 4 === 0,
           concat(col("text"), lit("\n" + boiler)))
           .otherwise(col("text")).as("text"))
-      lazy val set = graft.operators.Dedup.boilerplateLineSet(
+      lazy val set = p(graft.operators.Dedup.boilerplateLineSet(
         planted(T.documents(s, d)).filter(col("doc_id") % 5 =!= 0),
-        "text", minCount = 3).localCheckpoint(true)
+        "text", minCount = 3))
       val out = materializedStream(s, d, "xlines", "documents.parquet",
         transform = batch =>
           graft.operators.Dedup.lineDedupAgainst(
@@ -347,25 +361,25 @@ object StreamQueries {
     // screens the rest. Each incoming doc is screened by exactly one
     // era's set (doc_id parity), so the composite is deterministic
     // and the oracle states both sets explicitly.
-    "st_inc_boiler" -> ((s, d) => {
+    "st_inc_boiler" -> ((s, d) => Pins.scope { p =>
       val boiler = "subscribe to our newsletter for updates today"
       def planted(df: DataFrame) = df.select(col("doc_id"),
         when(col("doc_id") % 4 === 0,
           concat(col("text"), lit("\n" + boiler)))
           .otherwise(col("text")).as("text"))
-      lazy val partA = graft.operators.Dedup.lineCountPartial(
+      lazy val partA = p(graft.operators.Dedup.lineCountPartial(
         planted(T.documents(s, d)
           .filter(col("doc_id") % 5 =!= 0 && col("doc_id") % 2 === 0)),
-        "text").localCheckpoint(true)
-      lazy val partB = graft.operators.Dedup.lineCountPartial(
+        "text"))
+      lazy val partB = p(graft.operators.Dedup.lineCountPartial(
         planted(T.documents(s, d)
           .filter(col("doc_id") % 5 =!= 0 && col("doc_id") % 2 =!= 0)),
-        "text").localCheckpoint(true)
-      lazy val setA = graft.operators.Dedup.boilerplateFromCounts(
-        partA, minCount = 3).localCheckpoint(true)
-      lazy val setAB = graft.operators.Dedup.boilerplateFromCounts(
+        "text"))
+      lazy val setA = p(graft.operators.Dedup.boilerplateFromCounts(
+        partA, minCount = 3))
+      lazy val setAB = p(graft.operators.Dedup.boilerplateFromCounts(
         graft.operators.Dedup.mergeLineCounts(Seq(partA, partB)),
-        minCount = 3).localCheckpoint(true)
+        minCount = 3))
       def screen(set: DataFrame, era: Int)(batch: DataFrame) =
         graft.operators.Dedup.lineDedupAgainst(
           planted(batch.filter(col("doc_id") % 5 === 0
@@ -407,35 +421,32 @@ object StreamQueries {
           when(col("doc_id") % 7 === 1 || col("doc_id") === 2 ||
             col("doc_id") === 9 || col("doc_id") % 5 === 0,
             lit("\n" + banner)).otherwise(lit(""))).as("text"))
-      // checkpoints register as they materialize, so a run that
+      // checkpoints are pinned as they materialize, so a run that
       // fails early frees only what actually exists (the st_inc_kn
       // cleanup discipline)
-      val cps = scala.collection.mutable.ListBuffer.empty[DataFrame]
-      def reg(df: DataFrame): DataFrame = { cps += df; df }
-      lazy val countsFull = reg(D.lineCountPartial(
-        planted(T.documents(s, d).filter(col("doc_id") % 5 =!= 0)),
-        "text").localCheckpoint(true))
-      lazy val setFull = reg(D.boilerplateFromCounts(countsFull,
-        minCount = 3).localCheckpoint(true))
-      lazy val setRet = {
-        val sub = D.subtractLineCounts(countsFull,
-          D.lineCountPartial(
-            planted(T.documents(s, d)
-              .filter(col("doc_id") % 5 =!= 0
-                && col("doc_id") % 7 === 1)), "text"))
-        D.validateLineCounts(sub)
-        reg(D.boilerplateFromCounts(sub, minCount = 3)
-          .localCheckpoint(true))
-      }
-      // set taken BY NAME: on a warm (memoized-stream) re-invocation
-      // the transforms never run, so the count/subtract/validate
-      // chain must not be forced either — the by-name + lazy-val
-      // pairing the sibling twins use
-      def screen(set: => DataFrame, era: Int)(batch: DataFrame) =
-        D.lineDedupAgainst(
-          planted(batch.filter(col("doc_id") % 5 === 0
-            && col("doc_id") % 2 === era)), set, "doc_id", "text")
-      try {
+      Pins.scope { p =>
+        lazy val countsFull = p(D.lineCountPartial(
+          planted(T.documents(s, d).filter(col("doc_id") % 5 =!= 0)),
+          "text"))
+        lazy val setFull = p(D.boilerplateFromCounts(countsFull,
+          minCount = 3))
+        lazy val setRet = {
+          val sub = D.subtractLineCounts(countsFull,
+            D.lineCountPartial(
+              planted(T.documents(s, d)
+                .filter(col("doc_id") % 5 =!= 0
+                  && col("doc_id") % 7 === 1)), "text"))
+          D.validateLineCounts(sub)
+          p(D.boilerplateFromCounts(sub, minCount = 3))
+        }
+        // set taken BY NAME: on a warm (memoized-stream) re-invocation
+        // the transforms never run, so the count/subtract/validate
+        // chain must not be forced either — the by-name + lazy-val
+        // pairing the sibling twins use
+        def screen(set: => DataFrame, era: Int)(batch: DataFrame) =
+          D.lineDedupAgainst(
+            planted(batch.filter(col("doc_id") % 5 === 0
+              && col("doc_id") % 2 === era)), set, "doc_id", "text")
         val run1 = materializedStream(s, d, "boilrmA",
           "documents.parquet", transform = screen(setFull, 0)) { in =>
           val schema = s.read.parquet(s"$d/documents.parquet").schema
@@ -448,8 +459,7 @@ object StreamQueries {
         }
         s.read.parquet(run1).unionByName(s.read.parquet(run2))
           .orderBy("doc_id")
-      } finally cps.foreach(
-        org.apache.spark.sql.graftshim.Shims.unpersistLocalCheckpoint)
+      }
     }),
 
     // The boilerplate screen served from the DURABLE ROLLUP STORE
@@ -486,37 +496,33 @@ object StreamQueries {
         .filter(col("doc_id") % 5 =!= 0))
       val dir = s"/tmp/graft_${s.sparkContext.applicationId}/" +
         s"st_boilstore_${LlmQueries.pathDigest(d)}"
-      val cps = scala.collection.mutable.ListBuffer.empty[DataFrame]
-      def reg(df: DataFrame): DataFrame = { cps += df; df }
-      // store mutations run UNCONDITIONALLY, outside the lazy serve
-      // state (the st_inc_bm25_store discipline): memoized streams
-      // may skip a run entirely on a retried invocation, and a
-      // commit hidden inside a lazy initializer against a store a
-      // failed attempt already committed to would refuse forever in
-      // this JVM. Init resets the layout, so everything lands fresh.
-      I.initSnapshotStore(D.lineCountPartial(
-        existing.filter(col("doc_id") % 2 === 0), "text"), dir)
-      I.commitSnapshotBatch(D.lineCountPartial(
-        existing.filter(col("doc_id") % 2 =!= 0), "text"), dir, 1L)
-      // each era's screen set folds the ON-DISK store once, is
-      // validated, and pins (every micro-batch probes it)
-      lazy val setFull = {
-        val counts = I.loadRollupStore(s, dir, Seq("key"), Seq("cnt"))
-        D.validateLineCounts(counts)
-        reg(D.boilerplateFromCounts(counts, minCount = 3)
-          .localCheckpoint(true))
-      }
-      lazy val setRet = {
-        val counts = I.loadRollupStore(s, dir, Seq("key"), Seq("cnt"))
-        D.validateLineCounts(counts)
-        reg(D.boilerplateFromCounts(counts, minCount = 3)
-          .localCheckpoint(true))
-      }
-      def screen(set: => DataFrame, era: Int)(batch: DataFrame) =
-        D.lineDedupAgainst(
-          planted(batch.filter(col("doc_id") % 5 === 0
-            && col("doc_id") % 2 === era)), set, "doc_id", "text")
-      try {
+      Pins.scope { p =>
+        // store mutations run UNCONDITIONALLY, outside the lazy serve
+        // state (the st_inc_bm25_store discipline): memoized streams
+        // may skip a run entirely on a retried invocation, and a
+        // commit hidden inside a lazy initializer against a store a
+        // failed attempt already committed to would refuse forever in
+        // this JVM. Init resets the layout, so everything lands fresh.
+        I.initSnapshotStore(D.lineCountPartial(
+          existing.filter(col("doc_id") % 2 === 0), "text"), dir)
+        I.commitSnapshotBatch(D.lineCountPartial(
+          existing.filter(col("doc_id") % 2 =!= 0), "text"), dir, 1L)
+        // each era's screen set folds the ON-DISK store once, is
+        // validated, and pins (every micro-batch probes it)
+        lazy val setFull = {
+          val counts = I.loadRollupStore(s, dir, Seq("key"), Seq("cnt"))
+          D.validateLineCounts(counts)
+          p(D.boilerplateFromCounts(counts, minCount = 3))
+        }
+        lazy val setRet = {
+          val counts = I.loadRollupStore(s, dir, Seq("key"), Seq("cnt"))
+          D.validateLineCounts(counts)
+          p(D.boilerplateFromCounts(counts, minCount = 3))
+        }
+        def screen(set: => DataFrame, era: Int)(batch: DataFrame) =
+          D.lineDedupAgainst(
+            planted(batch.filter(col("doc_id") % 5 === 0
+              && col("doc_id") % 2 === era)), set, "doc_id", "text")
         val run1 = materializedStream(s, d, "boilstA",
           "documents.parquet", transform = screen(setFull, 0)) { in =>
           val schema = s.read.parquet(s"$d/documents.parquet").schema
@@ -538,8 +544,7 @@ object StreamQueries {
         }
         s.read.parquet(run1).unionByName(s.read.parquet(run2))
           .orderBy("doc_id")
-      } finally cps.foreach(
-        org.apache.spark.sql.graftshim.Shims.unpersistLocalCheckpoint)
+      }
     }),
 
     // The LSH BAND STORE serving across catch-up runs — the
@@ -567,50 +572,49 @@ object StreamQueries {
         .filter(col("doc_id") % 5 =!= 0))
       val dir = s"/tmp/graft_${s.sparkContext.applicationId}/" +
         s"st_lshstore_${LlmQueries.pathDigest(d)}"
-      val cps = scala.collection.mutable.ListBuffer.empty[DataFrame]
-      def reg(df: DataFrame): DataFrame = { cps += df; df }
       // lazy band plans: the store writes pin them, so each era's
       // band table materializes once (r17) — the signature barrier
       // frees after the write lands
-      val (b0, sig0) = D.minHashBandsLazy(
-        existing.filter(col("doc_id") % 2 === 0), "doc_id", "text",
-        k = 5)
-      I.initSnapshotStore(b0, dir, manifestIdCol = Some("doc_id"))
-      D.writeBandParams(s, dir, k = 5, numPerm = 256, bands = 64)
-      org.apache.spark.sql.graftshim.Shims.unpersistLocalCheckpoint(sig0)
-      val (b1, sig1) = D.minHashBandsLazy(
-        existing.filter(col("doc_id") % 2 =!= 0), "doc_id", "text",
-        k = 5)
-      I.commitSnapshotBatch(b1, dir, 1L, manifestIdCol = Some("doc_id"))
-      org.apache.spark.sql.graftshim.Shims.unpersistLocalCheckpoint(sig1)
-      // each era certifies then PINS the on-disk band table once (a
-      // checkpoint: era A's screen must keep reading pre-retraction
-      // bands even as micro-batches interleave with nothing — and
-      // the pin keeps per-batch probes off repeated parquet reads)
-      def loadPinned(): DataFrame = {
-        // one-job certification (r18): params + manifest sync +
-        // roster completeness + per-id structure in a single store
-        // scan (certifyBandStore), strictly stronger than the old
-        // manifest-sync-only probe — and it licenses the screens
-        // below to skip their per-MICRO-BATCH band-range job
-        // (storedCertified: the pinned table is immutable per era)
-        D.certifyBandStore(s, dir, "doc_id", k = 5, numPerm = 256,
-          bands = 64)
-        reg(I.loadSnapshotStore(s, dir).localCheckpoint(true))
+      Pins.scope { p =>
+        I.initSnapshotStore(D.minHashBandsLazy(p,
+            existing.filter(col("doc_id") % 2 === 0), "doc_id", "text",
+            k = 5),
+          dir, manifestIdCol = Some("doc_id"))
+        D.writeBandParams(s, dir, k = 5, numPerm = 256, bands = 64)
       }
-      lazy val bandsA = loadPinned()
-      lazy val bandsB = loadPinned()
-      // per micro-batch the operator checkpoints its candidates and
-      // output internally; those blocks are bounded by the era's
-      // micro-batch count and swept by the harness after the query
-      // (no handle survives the foreachBatch write to free earlier)
-      def screen(bands: => DataFrame, era: Int)(batch: DataFrame) =
-        D.lshScreenAgainst(
-          planted(batch.filter(col("doc_id") % 5 === 0
-            && col("doc_id") % 2 === era)),
-          bands, existing, "doc_id", "text", k = 5, theta = 0.7,
-          storedCertified = true)
-      try {
+      Pins.scope { p =>
+        I.commitSnapshotBatch(D.minHashBandsLazy(p,
+            existing.filter(col("doc_id") % 2 =!= 0), "doc_id", "text",
+            k = 5),
+          dir, 1L, manifestIdCol = Some("doc_id"))
+      }
+      Pins.scope { p =>
+        // each era certifies then PINS the on-disk band table once (a
+        // checkpoint: era A's screen must keep reading pre-retraction
+        // bands even as micro-batches interleave with nothing — and
+        // the pin keeps per-batch probes off repeated parquet reads)
+        def loadPinned(): DataFrame = {
+          // one-job certification (r18): params + manifest sync +
+          // roster completeness + per-id structure in a single store
+          // scan (certifyBandStore), strictly stronger than the old
+          // manifest-sync-only probe — and it licenses the screens
+          // below to skip their per-MICRO-BATCH band-range job
+          // (storedCertified: the pinned table is immutable per era)
+          D.certifyBandStore(s, dir, "doc_id", k = 5, numPerm = 256,
+            bands = 64)
+          p(I.loadSnapshotStore(s, dir))
+        }
+        lazy val bandsA = loadPinned()
+        lazy val bandsB = loadPinned()
+        // per micro-batch the operator checkpoints its candidates and
+        // output; it frees the candidates itself, and the sink frees
+        // the sealed output once the batch has landed
+        def screen(bands: => DataFrame, era: Int)(batch: DataFrame) =
+          D.lshScreenAgainst(
+            planted(batch.filter(col("doc_id") % 5 === 0
+              && col("doc_id") % 2 === era)),
+            bands, existing, "doc_id", "text", k = 5, theta = 0.7,
+            storedCertified = true)
         val run1 = materializedStream(s, d, "lshstA",
           "documents.parquet", transform = screen(bandsA, 0)) { in =>
           val schema = s.read.parquet(s"$d/documents.parquet").schema
@@ -629,8 +633,7 @@ object StreamQueries {
         }
         s.read.parquet(run1).unionByName(s.read.parquet(run2))
           .orderBy("in_id", "ex_id")
-      } finally cps.foreach(
-        org.apache.spark.sql.graftshim.Shims.unpersistLocalCheckpoint)
+      }
     }),
 
     // The KN LM RETRACTED between catch-up runs — inc_kn_remove in
@@ -643,24 +646,22 @@ object StreamQueries {
     // cannot change a row.
     "st_inc_kn_remove" -> ((s, d) => {
       val TA = graft.operators.TextAnalysis
-      val cps = scala.collection.mutable.ListBuffer.empty[DataFrame]
-      def reg(df: DataFrame): DataFrame = { cps += df; df }
-      lazy val snapFull = reg(TA.knSnapshot(
-        T.documents(s, d), "doc_id", "text").localCheckpoint(true))
-      lazy val scoresFull = reg(TA.knScoreFromSnapshot(snapFull))
-      lazy val scoresRet = {
-        val ret = reg(graft.operators.Incremental.retractDocs(
-          snapFull,
-          T.documents(s, d).filter(col("doc_id") % 5 === 4)
-            .select("doc_id")).localCheckpoint(true))
-        TA.validateKnSnapshot(ret)
-        reg(TA.knScoreFromSnapshot(ret))
-      }
-      def serve(scores: => DataFrame, era: Int)(batch: DataFrame) =
-        batch.filter(col("doc_id") % 16 === era * 8)
-          .select("doc_id")
-          .join(scores, Seq("doc_id"))
-      try {
+      Pins.scope { p =>
+        lazy val snapFull = p(TA.knSnapshot(
+          T.documents(s, d), "doc_id", "text"))
+        lazy val scoresFull = p.own(TA.knScoreFromSnapshot(snapFull))
+        lazy val scoresRet = {
+          val ret = p(graft.operators.Incremental.retractDocs(
+            snapFull,
+            T.documents(s, d).filter(col("doc_id") % 5 === 4)
+              .select("doc_id")))
+          TA.validateKnSnapshot(ret)
+          p.own(TA.knScoreFromSnapshot(ret))
+        }
+        def serve(scores: => DataFrame, era: Int)(batch: DataFrame) =
+          batch.filter(col("doc_id") % 16 === era * 8)
+            .select("doc_id")
+            .join(scores, Seq("doc_id"))
         val run1 = materializedStream(s, d, "knrmA",
           "documents.parquet", transform = serve(scoresFull, 0)) { in =>
           val schema = s.read.parquet(s"$d/documents.parquet").schema
@@ -673,8 +674,7 @@ object StreamQueries {
         }
         s.read.parquet(run1).unionByName(s.read.parquet(run2))
           .orderBy("doc_id")
-      } finally cps.foreach(
-        org.apache.spark.sql.graftshim.Shims.unpersistLocalCheckpoint)
+      }
     }),
 
     // The BM25 index RETRACTED between catch-up runs —
@@ -687,24 +687,22 @@ object StreamQueries {
     // this twin pins the mid-stream landing.
     "st_inc_bm25_remove" -> ((s, d) => {
       val S = graft.operators.Search
-      val cps = scala.collection.mutable.ListBuffer.empty[DataFrame]
-      def reg(df: DataFrame): DataFrame = { cps += df; df }
-      lazy val tfFull = reg(S.tfSnapshot(
-        T.documents(s, d), "doc_id", "text").localCheckpoint(true))
-      lazy val tfRet = {
-        val r = reg(graft.operators.Incremental.retractDocs(tfFull,
-          T.documents(s, d).filter(col("doc_id") % 10 === 3)
-            .select("doc_id")).localCheckpoint(true))
-        S.validateTfSnapshot(r)
-        r
-      }
-      def serve(tf: => DataFrame, era: Int)(batch: DataFrame) =
-        S.bm25TopKIndexed(tf,
-          batch.filter(col("doc_id") % 80 === era * 40)
-            .select(col("doc_id").as("qid"),
-              LlmQueries.bm25Qtext(col("text")).as("qtext")),
-          "qid", "qtext", k = 5, materialize = false)
-      try {
+      Pins.scope { p =>
+        lazy val tfFull = p(S.tfSnapshot(
+          T.documents(s, d), "doc_id", "text"))
+        lazy val tfRet = {
+          val r = p(graft.operators.Incremental.retractDocs(tfFull,
+            T.documents(s, d).filter(col("doc_id") % 10 === 3)
+              .select("doc_id")))
+          S.validateTfSnapshot(r)
+          r
+        }
+        def serve(tf: => DataFrame, era: Int)(batch: DataFrame) =
+          S.bm25TopKIndexed(tf,
+            batch.filter(col("doc_id") % 80 === era * 40)
+              .select(col("doc_id").as("qid"),
+                LlmQueries.bm25Qtext(col("text")).as("qtext")),
+            "qid", "qtext", k = 5, materialize = false)
         val run1 = materializedStream(s, d, "bm25rmA",
           "documents.parquet", transform = serve(tfFull, 0)) { in =>
           val schema = s.read.parquet(s"$d/documents.parquet").schema
@@ -717,8 +715,7 @@ object StreamQueries {
         }
         s.read.parquet(run1).unionByName(s.read.parquet(run2))
           .orderBy("qid", "rank")
-      } finally cps.foreach(
-        org.apache.spark.sql.graftshim.Shims.unpersistLocalCheckpoint)
+      }
     }),
 
     // The BM25 index refreshed between catch-up runs — the
@@ -730,16 +727,16 @@ object StreamQueries {
     // predicate (every 80th doc per era), so per-query results
     // depend only on (own qtext, static snapshot) and micro-batch
     // splits cannot change them.
-    "st_inc_bm25" -> ((s, d) => {
+    "st_inc_bm25" -> ((s, d) => Pins.scope { p =>
       val S = graft.operators.Search
-      lazy val tfA = S.tfSnapshot(
+      lazy val tfA = p(S.tfSnapshot(
         T.documents(s, d).filter(col("doc_id") % 2 === 0),
-        "doc_id", "text").localCheckpoint(true)
+        "doc_id", "text"))
       lazy val tfAB = {
-        val merged = S.mergeTfSnapshots(Seq(tfA,
+        val merged = p(S.mergeTfSnapshots(Seq(tfA,
           S.tfSnapshot(
             T.documents(s, d).filter(col("doc_id") % 2 =!= 0),
-            "doc_id", "text"))).localCheckpoint(true)
+            "doc_id", "text"))))
         S.validateTfSnapshot(merged)
         merged
       }
@@ -784,47 +781,45 @@ object StreamQueries {
     "st_inc_bm25_store" -> ((s, d) => {
       val S = graft.operators.Search
       val I = graft.operators.Incremental
-      val cps = scala.collection.mutable.ListBuffer.empty[DataFrame]
-      def reg(df: DataFrame): DataFrame = { cps += df; df }
-      val dir = s"/tmp/graft_${s.sparkContext.applicationId}/" +
-        s"st_tfstore_${LlmQueries.pathDigest(d)}"
-      // the store mutations run UNCONDITIONALLY, outside the lazy
-      // serve state (the ivfPqLifecycleTwin discipline): the streams
-      // MEMOIZE, so a retried invocation may skip run1 entirely — a
-      // commit hidden inside run2's lazy initializer against a store
-      // that a failed attempt already committed to would then refuse
-      // ('batch 1 already committed') forever in this JVM. Init
-      // resets the layout first, so the commit below always lands
-      // fresh and the query stays idempotent.
-      I.initSnapshotStore(S.tfSnapshot(
-        T.documents(s, d).filter(col("doc_id") % 2 === 0),
-        "doc_id", "text"), dir, manifestIdCol = Some("doc_id"))
-      // each era's loaded store pins ONCE (the st_inc_bm25 snapshot-
-      // checkpoint discipline): every micro-batch's serve derives
-      // postings/dl/df/scalars from the snapshot, and an unpinned
-      // load would re-read the store parquet for each subplan of
-      // each micro-batch
-      lazy val tfA = {
-        val t = reg(I.loadSnapshotStore(s, dir).localCheckpoint(true))
-        S.validateTfSnapshot(t)
-        I.validateSnapshotStoreManifest(s, dir)
-        t
-      }
-      lazy val tfAB = {
-        val t = reg(I.loadSnapshotStore(s, dir).localCheckpoint(true))
-        S.validateTfSnapshot(t)
-        I.validateSnapshotStoreManifest(s, dir)
-        t
-      }
-      // materialize = false, as in st_inc_bm25: the sink write
-      // consumes each micro-batch's result once
-      def serve(tf: => DataFrame, era: Int)(batch: DataFrame) =
-        S.bm25TopKIndexed(tf,
-          batch.filter(col("doc_id") % 80 === era * 40)
-            .select(col("doc_id").as("qid"),
-              LlmQueries.bm25Qtext(col("text")).as("qtext")),
-          "qid", "qtext", k = 5, materialize = false)
-      try {
+      Pins.scope { p =>
+        val dir = s"/tmp/graft_${s.sparkContext.applicationId}/" +
+          s"st_tfstore_${LlmQueries.pathDigest(d)}"
+        // the store mutations run UNCONDITIONALLY, outside the lazy
+        // serve state (the ivfPqLifecycleTwin discipline): the streams
+        // MEMOIZE, so a retried invocation may skip run1 entirely — a
+        // commit hidden inside run2's lazy initializer against a store
+        // that a failed attempt already committed to would then refuse
+        // ('batch 1 already committed') forever in this JVM. Init
+        // resets the layout first, so the commit below always lands
+        // fresh and the query stays idempotent.
+        I.initSnapshotStore(S.tfSnapshot(
+          T.documents(s, d).filter(col("doc_id") % 2 === 0),
+          "doc_id", "text"), dir, manifestIdCol = Some("doc_id"))
+        // each era's loaded store pins ONCE (the st_inc_bm25 snapshot-
+        // checkpoint discipline): every micro-batch's serve derives
+        // postings/dl/df/scalars from the snapshot, and an unpinned
+        // load would re-read the store parquet for each subplan of
+        // each micro-batch
+        lazy val tfA = {
+          val t = p(I.loadSnapshotStore(s, dir))
+          S.validateTfSnapshot(t)
+          I.validateSnapshotStoreManifest(s, dir)
+          t
+        }
+        lazy val tfAB = {
+          val t = p(I.loadSnapshotStore(s, dir))
+          S.validateTfSnapshot(t)
+          I.validateSnapshotStoreManifest(s, dir)
+          t
+        }
+        // materialize = false, as in st_inc_bm25: the sink write
+        // consumes each micro-batch's result once
+        def serve(tf: => DataFrame, era: Int)(batch: DataFrame) =
+          S.bm25TopKIndexed(tf,
+            batch.filter(col("doc_id") % 80 === era * 40)
+              .select(col("doc_id").as("qid"),
+                LlmQueries.bm25Qtext(col("text")).as("qtext")),
+            "qid", "qtext", k = 5, materialize = false)
         val run1 = materializedStream(s, d, "incbm25storeA",
           "documents.parquet", transform = serve(tfA, 0)) { in =>
           val schema = s.read.parquet(s"$d/documents.parquet").schema
@@ -849,8 +844,7 @@ object StreamQueries {
         }
         s.read.parquet(run1).unionByName(s.read.parquet(run2))
           .orderBy("qid", "rank")
-      } finally cps.foreach(
-        org.apache.spark.sql.graftshim.Shims.unpersistLocalCheckpoint)
+      }
     }),
 
     // The health run store fed by the stream — rp_health_runs in its
@@ -897,35 +891,30 @@ object StreamQueries {
     // splits cannot change it.
     "st_inc_kn" -> ((s, d) => {
       val TA = graft.operators.TextAnalysis
-      // every block this query pins is registered here and freed in
-      // the finally (the d86/d87/inc_kn_refresh cleanup discipline);
-      // registration happens inside the lazy initializers so a run
-      // that fails early frees only what was actually materialized
-      val cps = scala.collection.mutable.ListBuffer.empty[DataFrame]
-      def reg(df: DataFrame): DataFrame = { cps += df; df }
-      lazy val snapA = reg(TA.knSnapshot(
-        T.documents(s, d).filter(col("doc_id") % 2 === 0),
-        "doc_id", "text").localCheckpoint(true))
-      lazy val scoresA = reg(TA.knScoreFromSnapshot(snapA))
-      lazy val scoresAB = {
-        // merged is ALSO registered: if the validator or the scorer
-        // throws, the finally still frees it (the early inline
-        // unpersist stays — re-unpersisting a freed block is a no-op)
-        val merged = reg(TA.mergeKnSnapshots(Seq(snapA,
-          TA.knSnapshot(
-            T.documents(s, d).filter(col("doc_id") % 2 =!= 0),
-            "doc_id", "text"))).localCheckpoint(true))
-        TA.validateKnSnapshot(merged)
-        val sc = reg(TA.knScoreFromSnapshot(merged))
-        org.apache.spark.sql.graftshim.Shims
-          .unpersistLocalCheckpoint(merged)
-        sc
-      }
-      def serve(scores: => DataFrame, era: Int)(batch: DataFrame) =
-        batch.filter(col("doc_id") % 16 === era * 5)
-          .select("doc_id")
-          .join(scores, Seq("doc_id"))
-      try {
+      // every block this query pins is held by this scope and freed on
+      // exit (the d86/d87/inc_kn_refresh cleanup discipline); pinning
+      // happens inside the lazy initializers so a run that fails early
+      // frees only what was actually materialized. Both era outputs
+      // are parquet on disk by the time the scope exits.
+      Pins.scope { p =>
+        lazy val snapA = p(TA.knSnapshot(
+          T.documents(s, d).filter(col("doc_id") % 2 === 0),
+          "doc_id", "text"))
+        lazy val scoresA = p.own(TA.knScoreFromSnapshot(snapA))
+        // merged lives in its own scope: freed as soon as the era-B
+        // scores are sealed, or if the validator or the scorer throws
+        lazy val scoresAB = Pins.scope { pm =>
+          val merged = pm(TA.mergeKnSnapshots(Seq(snapA,
+            TA.knSnapshot(
+              T.documents(s, d).filter(col("doc_id") % 2 =!= 0),
+              "doc_id", "text"))))
+          TA.validateKnSnapshot(merged)
+          p.own(TA.knScoreFromSnapshot(merged))
+        }
+        def serve(scores: => DataFrame, era: Int)(batch: DataFrame) =
+          batch.filter(col("doc_id") % 16 === era * 5)
+            .select("doc_id")
+            .join(scores, Seq("doc_id"))
         val run1 = materializedStream(s, d, "incknA",
           "documents.parquet", transform = serve(scoresA, 0)) { in =>
           val schema = s.read.parquet(s"$d/documents.parquet").schema
@@ -938,13 +927,6 @@ object StreamQueries {
         }
         s.read.parquet(run1).unionByName(s.read.parquet(run2))
           .orderBy("doc_id")
-      } finally {
-        // both era outputs are parquet on disk by now, so the era-A
-        // snapshot and both score-table checkpoints can go
-        // (knScoreFromSnapshot frees its internal postings blocks on
-        // its own exit)
-        cps.foreach(
-          org.apache.spark.sql.graftshim.Shims.unpersistLocalCheckpoint)
       }
     }),
 
@@ -958,35 +940,33 @@ object StreamQueries {
     "st_inc_kn_store" -> ((s, d) => {
       val TA = graft.operators.TextAnalysis
       val I = graft.operators.Incremental
-      val cps = scala.collection.mutable.ListBuffer.empty[DataFrame]
-      def reg(df: DataFrame): DataFrame = { cps += df; df }
-      val dir = s"/tmp/graft_${s.sparkContext.applicationId}/" +
-        s"st_knstore_${LlmQueries.pathDigest(d)}"
-      // store mutations run UNCONDITIONALLY outside the lazy serve
-      // state (the ivfPqLifecycleTwin discipline, as in
-      // st_inc_bm25_store): memoized streams may skip a run on
-      // retry, and a commit hidden in a lazy initializer would then
-      // refuse against the leftover store forever in this JVM
-      I.initSnapshotStore(TA.knSnapshot(
-        T.documents(s, d).filter(col("doc_id") % 2 === 0),
-        "doc_id", "text"), dir, manifestIdCol = Some("doc_id"))
-      lazy val scoresA = {
-        val t = I.loadSnapshotStore(s, dir)
-        TA.validateKnSnapshot(t)
-        I.validateSnapshotStoreManifest(s, dir)
-        reg(TA.knScoreFromSnapshot(t))
-      }
-      lazy val scoresAB = {
-        val t = I.loadSnapshotStore(s, dir)
-        TA.validateKnSnapshot(t)
-        I.validateSnapshotStoreManifest(s, dir)
-        reg(TA.knScoreFromSnapshot(t))
-      }
-      def serve(scores: => DataFrame, era: Int)(batch: DataFrame) =
-        batch.filter(col("doc_id") % 16 === era * 5)
-          .select("doc_id")
-          .join(scores, Seq("doc_id"))
-      try {
+      Pins.scope { p =>
+        val dir = s"/tmp/graft_${s.sparkContext.applicationId}/" +
+          s"st_knstore_${LlmQueries.pathDigest(d)}"
+        // store mutations run UNCONDITIONALLY outside the lazy serve
+        // state (the ivfPqLifecycleTwin discipline, as in
+        // st_inc_bm25_store): memoized streams may skip a run on
+        // retry, and a commit hidden in a lazy initializer would then
+        // refuse against the leftover store forever in this JVM
+        I.initSnapshotStore(TA.knSnapshot(
+          T.documents(s, d).filter(col("doc_id") % 2 === 0),
+          "doc_id", "text"), dir, manifestIdCol = Some("doc_id"))
+        lazy val scoresA = {
+          val t = I.loadSnapshotStore(s, dir)
+          TA.validateKnSnapshot(t)
+          I.validateSnapshotStoreManifest(s, dir)
+          p.own(TA.knScoreFromSnapshot(t))
+        }
+        lazy val scoresAB = {
+          val t = I.loadSnapshotStore(s, dir)
+          TA.validateKnSnapshot(t)
+          I.validateSnapshotStoreManifest(s, dir)
+          p.own(TA.knScoreFromSnapshot(t))
+        }
+        def serve(scores: => DataFrame, era: Int)(batch: DataFrame) =
+          batch.filter(col("doc_id") % 16 === era * 5)
+            .select("doc_id")
+            .join(scores, Seq("doc_id"))
         val run1 = materializedStream(s, d, "incknstoreA",
           "documents.parquet", transform = serve(scoresA, 0)) { in =>
           val schema = s.read.parquet(s"$d/documents.parquet").schema
@@ -1002,8 +982,7 @@ object StreamQueries {
         }
         s.read.parquet(run1).unionByName(s.read.parquet(run2))
           .orderBy("doc_id")
-      } finally cps.foreach(
-        org.apache.spark.sql.graftshim.Shims.unpersistLocalCheckpoint)
+      }
     }),
 
     // The PER-SITE boilerplate screen refreshed between catch-up runs
@@ -1012,28 +991,26 @@ object StreamQueries {
     // run; era B's partial sum-merges in before the second. Per-site
     // templates arriving incrementally is the production ingest shape
     // inc_grouped_boiler batch-gates; this is its streaming twin.
-    "st_inc_grouped_boiler" -> ((s, d) => {
+    "st_inc_grouped_boiler" -> ((s, d) => Pins.scope { p =>
       val boiler = "copyright example site all rights reserved"
       def planted(df: DataFrame) = df.select(col("doc_id"), col("lang"),
         when(col("doc_id") % 4 === 0,
           concat(col("text"), lit("\n" + boiler)))
           .otherwise(col("text")).as("text"))
-      lazy val partA = graft.operators.Dedup.groupedLineCountPartial(
+      lazy val partA = p(graft.operators.Dedup.groupedLineCountPartial(
         planted(T.documents(s, d)
           .filter(col("doc_id") % 5 =!= 0 && col("doc_id") % 2 === 0)),
-        "lang", "text").localCheckpoint(true)
-      lazy val partB = graft.operators.Dedup.groupedLineCountPartial(
+        "lang", "text"))
+      lazy val partB = p(graft.operators.Dedup.groupedLineCountPartial(
         planted(T.documents(s, d)
           .filter(col("doc_id") % 5 =!= 0 && col("doc_id") % 2 =!= 0)),
-        "lang", "text").localCheckpoint(true)
-      lazy val setA = graft.operators.Dedup
-        .groupedBoilerplateFromCounts(partA, minCount = 3)
-        .localCheckpoint(true)
-      lazy val setAB = graft.operators.Dedup
+        "lang", "text"))
+      lazy val setA = p(graft.operators.Dedup
+        .groupedBoilerplateFromCounts(partA, minCount = 3))
+      lazy val setAB = p(graft.operators.Dedup
         .groupedBoilerplateFromCounts(
           graft.operators.Dedup.mergeGroupedLineCounts(
-            Seq(partA, partB)), minCount = 3)
-        .localCheckpoint(true)
+            Seq(partA, partB)), minCount = 3))
       def screen(set: => DataFrame, era: Int)(batch: DataFrame) =
         graft.operators.Dedup.groupedLineDedupAgainst(
           planted(batch.filter(col("doc_id") % 5 === 0
@@ -1059,15 +1036,13 @@ object StreamQueries {
     // distinct-unions in (mergeGramSets — idempotent/associative/
     // commutative, so the merged set IS the full recompute) before
     // the second.
-    "st_inc_grams" -> ((s, d) => {
+    "st_inc_grams" -> ((s, d) => Pins.scope { p =>
       lazy val exist = T.documents(s, d).filter(col("doc_id") % 5 =!= 0)
-      lazy val setA = graft.operators.Dedup.existingGramSet(
-        exist.filter(col("doc_id") % 2 === 0), "text")
-        .localCheckpoint(true)
-      lazy val setM = graft.operators.Dedup.mergeGramSets(Seq(setA,
+      lazy val setA = p(graft.operators.Dedup.existingGramSet(
+        exist.filter(col("doc_id") % 2 === 0), "text"))
+      lazy val setM = p(graft.operators.Dedup.mergeGramSets(Seq(setA,
         graft.operators.Dedup.existingGramSet(
-          exist.filter(col("doc_id") % 2 =!= 0), "text")))
-        .localCheckpoint(true)
+          exist.filter(col("doc_id") % 2 =!= 0), "text"))))
       def screen(set: => DataFrame, era: Int)(batch: DataFrame) =
         graft.operators.Dedup.crossDupSpansAgainst(
           batch.filter(col("doc_id") % 5 === 0
@@ -1091,13 +1066,17 @@ object StreamQueries {
     // counts merge, prefixes re-derive, no text rescanned) before
     // the second incoming run. The prefix filter is LOSSLESS, so the
     // oracle states the pairwise truth per era directly.
-    "st_inc_prefix" -> ((s, d) => {
+    "st_inc_prefix" -> ((s, d) => Pins.scope { p =>
+      def held(i: graft.operators.Dedup.PrefixCrossIndex) = {
+        i.frames.foreach(p.own)
+        i
+      }
       lazy val exist = T.documents(s, d).filter(col("doc_id") % 7 =!= 0)
-      lazy val idxA = graft.operators.Dedup.prefixCrossIndex(
+      lazy val idxA = held(graft.operators.Dedup.prefixCrossIndex(
         exist.filter(col("doc_id") % 2 === 0), "doc_id", "text",
-        k = 5, theta = 0.5)
-      lazy val idxM = graft.operators.Dedup.refreshPrefixCrossIndex(
-        idxA, exist.filter(col("doc_id") % 2 =!= 0), "doc_id", "text")
+        k = 5, theta = 0.5))
+      lazy val idxM = held(graft.operators.Dedup.refreshPrefixCrossIndex(
+        idxA, exist.filter(col("doc_id") % 2 =!= 0), "doc_id", "text"))
       def screen(idx: => graft.operators.Dedup.PrefixCrossIndex,
                  era: Int)(batch: DataFrame) =
         graft.operators.Dedup.prefixCrossJaccardAgainst(
@@ -1171,12 +1150,11 @@ object StreamQueries {
     // every doc's grams derive from its own row, so the per-batch
     // groupBy equals the global one (the st_cross_spans argument).
     // Hashed against the BATCH d18 oracle verbatim.
-    "st_decontam_stream" -> ((s, d) => {
-      lazy val bench = T.documents(s, d)
+    "st_decontam_stream" -> ((s, d) => Pins.scope { p =>
+      lazy val bench = p(T.documents(s, d)
         .filter(col("doc_id") % 37 === 0)
         .select(concat_ws(" ",
-          slice(split(col("text"), "\\s+"), 1, 15)).as("btext"))
-        .localCheckpoint(true)
+          slice(split(col("text"), "\\s+"), 1, 15)).as("btext")))
       val out = materializedStream(s, d, "decontam", "documents.parquet",
         transform = batch =>
           graft.operators.Dedup.decontaminate(

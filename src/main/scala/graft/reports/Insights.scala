@@ -3,7 +3,7 @@ package graft.reports
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Exprs, Tables => T}
+import graft.core.{Exprs, Pins, Tables => T}
 
 /** The analytics-dashboard shape (SURVEY §3.3, ref
   * `scripts/reports/92-library-insights.py`): ONE cached base read
@@ -660,7 +660,8 @@ object Insights {
     *         albums_impacted, album_denom, album_pct), pcts at 6 dp. */
   def healthRadar(tracks: DataFrame, dirCol: String,
                   criticalCols: Seq[String],
-                  compilationCol: Option[String] = None): DataFrame = {
+                  compilationCol: Option[String] = None)
+      : DataFrame = Pins.scope { p =>
     val spark = tracks.sparkSession
     import spark.implicits._
     def missing(c: String): Column = {
@@ -670,47 +671,41 @@ object Insights {
     val comp = compilationCol.map(col(_).cast("int")).getOrElse(lit(0))
     val aggs = count(lit(1)).as("__n") +:
       criticalCols.map(c => sum(missing(c)).as(c)) :+ max(comp).as("__c")
-    val byAlbum = tracks
+    val byAlbum = p(tracks
       .groupBy(Exprs.albumRoot(col(dirCol)).as("__root"))
-      .agg(aggs.head, aggs.tail: _*)
-      .localCheckpoint(true)
-    try {
-      val albumDenom = byAlbum.count()
-      val totalTracks = tracks.count()
-      val nonCompTracks = compilationCol
-        .map(c => tracks.filter(col(c).cast("int") === 0).count())
-        .getOrElse(totalTracks)
-      def adj(c: String): Column =
-        if (compilationCol.isDefined && c == "albumartist")
-          when(col("__c") === 1, lit(0)).otherwise(col(c))
-        else col(c)
-      val sums = byAlbum.agg(
-        criticalCols.map(c => struct(
-          sum(adj(c)).cast("long").as("miss"),
-          sum((adj(c) > 0).cast("int")).cast("long").as("alb")).as(c))
-          .head,
-        criticalCols.map(c => struct(
-          sum(adj(c)).cast("long").as("miss"),
-          sum((adj(c) > 0).cast("int")).cast("long").as("alb")).as(c))
-          .tail: _*).head()
-      // positive-half-up at 6 dp — the ROUND rule both engines share
-      def pct(num: Long, den: Long): Double =
-        if (den == 0) 0.0
-        else math.floor(100.0 * num / den * 1e6 + 0.5) / 1e6
-      val rows = criticalCols.zipWithIndex.map { case (c, i) =>
-        val st = sums.getStruct(i)
-        val miss = st.getLong(0); val alb = st.getLong(1)
-        val denom =
-          if (compilationCol.isDefined && c == "albumartist") nonCompTracks
-          else totalTracks
-        (c, miss, denom, pct(miss, denom), alb, albumDenom,
-          pct(alb, albumDenom))
-      }
-      rows.toDF("field", "track_missing", "track_denom", "track_pct",
-        "albums_impacted", "album_denom", "album_pct")
-    } finally {
-      org.apache.spark.sql.graftshim.Shims
-        .unpersistLocalCheckpoint(byAlbum)
+      .agg(aggs.head, aggs.tail: _*))
+    val albumDenom = byAlbum.count()
+    val totalTracks = tracks.count()
+    val nonCompTracks = compilationCol
+      .map(c => tracks.filter(col(c).cast("int") === 0).count())
+      .getOrElse(totalTracks)
+    def adj(c: String): Column =
+      if (compilationCol.isDefined && c == "albumartist")
+        when(col("__c") === 1, lit(0)).otherwise(col(c))
+      else col(c)
+    val sums = byAlbum.agg(
+      criticalCols.map(c => struct(
+        sum(adj(c)).cast("long").as("miss"),
+        sum((adj(c) > 0).cast("int")).cast("long").as("alb")).as(c))
+        .head,
+      criticalCols.map(c => struct(
+        sum(adj(c)).cast("long").as("miss"),
+        sum((adj(c) > 0).cast("int")).cast("long").as("alb")).as(c))
+        .tail: _*).head()
+    // positive-half-up at 6 dp — the ROUND rule both engines share
+    def pct(num: Long, den: Long): Double =
+      if (den == 0) 0.0
+      else math.floor(100.0 * num / den * 1e6 + 0.5) / 1e6
+    val rows = criticalCols.zipWithIndex.map { case (c, i) =>
+      val st = sums.getStruct(i)
+      val miss = st.getLong(0); val alb = st.getLong(1)
+      val denom =
+        if (compilationCol.isDefined && c == "albumartist") nonCompTracks
+        else totalTracks
+      (c, miss, denom, pct(miss, denom), alb, albumDenom,
+        pct(alb, albumDenom))
     }
+    rows.toDF("field", "track_missing", "track_denom", "track_pct",
+      "albums_impacted", "album_denom", "album_pct")
   }
 }

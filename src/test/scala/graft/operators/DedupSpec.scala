@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.core.Pins
 
 class DedupSpec extends SparkSpec {
   import spark.implicits._
@@ -739,19 +740,19 @@ class DedupSpec extends SparkSpec {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_bandstore").toString + "/s"
     // small parameters keep the fixture tiny: 4 bands of 2 perms
-    val (b0, sig0) = Dedup.minHashBandsLazy(
-      docs.filter(col("doc_id") <= 3), "doc_id", "text", k = 3,
-      numPerm = 8, bands = 4)
-    Incremental.initSnapshotStore(b0, dir,
-      manifestIdCol = Some("doc_id"))
-    Dedup.writeBandParams(spark, dir, k = 3, numPerm = 8, bands = 4)
-    org.apache.spark.sql.graftshim.Shims.unpersistLocalCheckpoint(sig0)
-    val (b1, sig1) = Dedup.minHashBandsLazy(
-      docs.filter(col("doc_id") > 3), "doc_id", "text", k = 3,
-      numPerm = 8, bands = 4)
-    Incremental.commitSnapshotBatch(b1, dir, 1L,
-      manifestIdCol = Some("doc_id"))
-    org.apache.spark.sql.graftshim.Shims.unpersistLocalCheckpoint(sig1)
+    Pins.scope { p =>
+      Incremental.initSnapshotStore(Dedup.minHashBandsLazy(p,
+          docs.filter(col("doc_id") <= 3), "doc_id", "text", k = 3,
+          numPerm = 8, bands = 4),
+        dir, manifestIdCol = Some("doc_id"))
+      Dedup.writeBandParams(spark, dir, k = 3, numPerm = 8, bands = 4)
+    }
+    Pins.scope { p =>
+      Incremental.commitSnapshotBatch(Dedup.minHashBandsLazy(p,
+          docs.filter(col("doc_id") > 3), "doc_id", "text", k = 3,
+          numPerm = 8, bands = 4),
+        dir, 1L, manifestIdCol = Some("doc_id"))
+    }
     def certify(): Unit = Dedup.certifyBandStore(spark, dir,
       "doc_id", k = 3, numPerm = 8, bands = 4)
     // healthy store certifies, and stays certified through the
@@ -768,6 +769,15 @@ class DedupSpec extends SparkSpec {
     assert(eParam.getMessage.contains("silently miss"))
     // corruption classes, staged in REVERSE refusal priority so each
     // new tamper is the one its assert sees.
+    // repeated: a claimed id whose 4 rows pass the count and range
+    // checks but carry band 0 twice and no band 1 ({0, 0, 2, 3})
+    Seq((998L, 0, 1L), (998L, 0, 2L), (998L, 2, 3L), (998L, 3, 4L))
+      .toDF("doc_id", "band", "bh").withColumn("batch", lit(0L))
+      .write.partitionBy("batch").mode("append").parquet(dir)
+    Seq(998L).toDF("doc_id").withColumn("batch", lit(0L))
+      .write.partitionBy("batch").mode("append").parquet(dir + "__manifest")
+    val eRepeated = intercept[IllegalArgumentException] { certify() }
+    assert(eRepeated.getMessage.contains("repeat a band id"))
     // torn: extra band rows for a present id (13 rows, band range ok)
     Seq((3L, 0, 777L)).toDF("doc_id", "band", "bh")
       .withColumn("batch", lit(0L)).write.partitionBy("batch")
