@@ -200,14 +200,16 @@ object Bench {
     // 8-core run clobbered the 32-core run's full map — per-query
     // evidence for the main configuration was destroyed by the
     // scaling run minutes later). The live BENCH_QUERIES.json stays
-    // for every existing consumer; the stamped copy (core count
-    // always; round when SPARK_GRAFT_ROUND is exported) survives
-    // sibling runs at other core counts. Additive only: the printed
-    // one-line contract is untouched.
-    val stamp = sys.env.get("SPARK_GRAFT_ROUND")
-      .map(r => s"_r$r").getOrElse("") + s"_c$cpus"
+    // for every existing consumer; the stamped copy (core count in
+    // the name; under plans/r<round>/ when SPARK_GRAFT_ROUND is
+    // exported, else under plans/) survives sibling runs at other
+    // core counts. Additive only: the printed one-line contract is
+    // untouched.
+    val stampDir = java.nio.file.Paths.get("plans",
+      sys.env.get("SPARK_GRAFT_ROUND").map(r => s"r$r").toSeq: _*)
+    java.nio.file.Files.createDirectories(stampDir)
     java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"BENCH_QUERIES$stamp.json"), full + "\n")
+      stampDir.resolve(s"BENCH_QUERIES_c$cpus.json"), full + "\n")
     println(full)
     val slowest = results.sortBy(-_._2).take(12)
       .map { case (k, v, _) => "\"" + k + "\":" + f(v) }

@@ -638,3 +638,15 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectOptimizerRule(_ => graft.plans.CollapseRedundantArrayOps)
   }
 }
+
+object GraftExtensions {
+
+  /** Register graft's SQL functions (`uuid5`, `title_case`) and the
+    * codec-collapse optimizer rule on a session. */
+  def install(spark: SparkSession): Unit = {
+    NativeExpressions.register(spark)
+    spark.experimental.extraOptimizations =
+      spark.experimental.extraOptimizations :+
+        graft.plans.CollapseRedundantArrayOps
+  }
+}

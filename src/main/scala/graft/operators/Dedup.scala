@@ -118,6 +118,22 @@ object Dedup {
     if (materialize) out.localCheckpoint(true) else out
   }
 
+  /** Near-dup survivors: [[jaccardPairs]] at `theta` clustered by
+    * [[GraphOps.connectedComponents]]; every clustered doc except its
+    * component's min-id keeper is dropped, and unclustered docs all
+    * survive. Output: `df`'s rows and columns, non-keepers removed. */
+  def nearDupSurvivors(df: DataFrame, idCol: String, textCol: String,
+                       k: Int, theta: Double): DataFrame = Pins.scope { p =>
+    // the components are an eager checkpoint of their own, so the
+    // pair checkpoint is freed once they are built
+    val pairs = p.own(jaccardPairs(df, idCol, textCol, k, theta))
+      .select(col("id_a").as("src"), col("id_b").as("dst"))
+    val drop = GraphOps.connectedComponents(pairs)
+      .filter(col("node") =!= col("comp"))
+      .select(col("node").as(idCol))
+    df.join(drop, Seq(idCol), "left_anti")
+  }
+
   /** (id, n, s) posting rows from a shingled frame — the doc's set
     * size rides every posting (8 bytes/row) so the pair aggregation
     * needs no per-side size-lookup joins (two whole shuffles saved). */
@@ -580,18 +596,13 @@ object Dedup {
     * candidate join, not the prep, is the bottleneck (the sf1 probe
     * quantifies the crossover).
     *
-    * `materialize` as in [[jaccardPairs]].
-    *
     * @return (id_a, id_b, jac) with id_a < id_b, jac ≥ theta. */
   def prefixJaccardPairs(df: DataFrame, idCol: String, textCol: String,
-                         k: Int, theta: Double,
-                         materialize: Boolean = true): DataFrame = Pins.scope { p =>
+                         k: Int, theta: Double): DataFrame = Pins.scope { p =>
     require(theta > 0 && theta <= 1, s"theta must be in (0, 1], got $theta")
-    val shBase = df
-      .select(col(idCol).as("id"), hashedShingles(col(textCol), k).as("hs"))
-    val sh = if (materialize) p(shBase) else shBase.cache()
-    val cand = prefixCandidates(sh, theta)
-    val out = cand
+    val sh = p(df
+      .select(col(idCol).as("id"), hashedShingles(col(textCol), k).as("hs")))
+    prefixCandidates(sh, theta)
       .join(sh.select(col("id").as("id_a"), col("hs").as("hs_a")), Seq("id_a"))
       .join(sh.select(col("id").as("id_b"), col("hs").as("hs_b")), Seq("id_b"))
       .withColumn("shared", size(array_intersect(col("hs_a"), col("hs_b"))))
@@ -599,7 +610,7 @@ object Dedup {
         / (size(col("hs_a")) + size(col("hs_b")) - col("shared")), 6))
       .filter(col("jac") >= theta)
       .select("id_a", "id_b", "jac")
-    if (materialize) out.localCheckpoint(true) else out
+      .localCheckpoint(true)
   }
 
   /** Cross-corpus prefix-filtered exact Jaccard — [[prefixJaccardPairs]]'s
@@ -811,14 +822,10 @@ object Dedup {
 
   def prefixCrossJaccard(incoming: DataFrame, existing: DataFrame,
                          idCol: String, textCol: String,
-                         k: Int, theta: Double,
-                         materialize: Boolean = true): DataFrame = Pins.scope { p =>
+                         k: Int, theta: Double): DataFrame = Pins.scope { p =>
     require(theta > 0 && theta <= 1, s"theta must be in (0, 1], got $theta")
-    def shingled(df: DataFrame) = {
-      val base = df.select(col(idCol).as("id"),
-        hashedShingles(col(textCol), k).as("hs"))
-      if (materialize) p(base) else base.cache()
-    }
+    def shingled(df: DataFrame) = p(df.select(col(idCol).as("id"),
+      hashedShingles(col(textCol), k).as("hs")))
     val shIn = shingled(incoming)
     val shEx = shingled(existing)
     val dfreq = crossPost(shEx).groupBy("s").agg(count(lit(1)).as("df"))
@@ -830,7 +837,7 @@ object Dedup {
           && col("a.n").cast("double") >= lit(theta) * col("b.n") - lit(1e-9))
       .select(col("a.id").as("in_id"), col("b.id").as("ex_id"))
       .dropDuplicates("in_id", "ex_id")
-    val out = cand
+    cand
       .join(shIn.select(col("id").as("in_id"), col("hs").as("hs_a")),
         Seq("in_id"))
       .join(shEx.select(col("id").as("ex_id"), col("hs").as("hs_b")),
@@ -840,7 +847,7 @@ object Dedup {
         / (size(col("hs_a")) + size(col("hs_b")) - col("shared")), 6))
       .filter(col("jac") >= theta)
       .select("in_id", "ex_id", "jac")
-    if (materialize) out.localCheckpoint(true) else out
+      .localCheckpoint(true)
   }
 
   /** Candidate (id_a, id_b) pairs of [[prefixJaccardPairs]] — exposed
@@ -1052,10 +1059,13 @@ object Dedup {
   /** Loud structural validator for a maintained band table — the
     * [[graft.operators.Quantization.validateIvfPqCodes]] discipline
     * applied to the LSH artifact: every PRESENT id carries EXACTLY
-    * `bands` rows, or a doc was banded twice (a doubled commit — its
-    * collisions double downstream) / a band set is torn (a partial
-    * write — its doc under-collides silently). One skinny
-    * aggregation.
+    * `bands` rows spanning band ids [0, bands), each band id once, or
+    * a doc was banded twice (a doubled commit — its collisions double
+    * downstream) / a band set is torn (a partial write — its doc
+    * under-collides silently) / rows carry foreign LSH parameters / a
+    * band repeats while another went missing. The per-id structure
+    * checks are [[certifyBandStore]]'s, with its diagnoses. One
+    * skinny aggregation.
     *
     * SCOPE: the structural check alone cannot see a doc whose band
     * rows are ALL missing (zero rows ⇒ nothing to count) — pass
@@ -1067,39 +1077,71 @@ object Dedup {
   def validateMinHashBands(bandsTable: DataFrame, idCol: String,
                            bands: Int = 64,
                            expectedIds: Option[DataFrame] = None): Unit = {
-    val perId = bandsTable.groupBy(col(idCol))
-      .agg(count(lit(1)).as("__graft_n"))
-    expectedIds match {
-      case None =>
-        val bad = perId
-          .filter(col("__graft_n") =!= bands.toLong).count()
-        require(bad == 0,
-          s"band table corrupt: $bad id(s) without exactly $bands " +
-            "band rows - a doc was banded twice or a band set is torn")
-      case Some(ids) =>
-        // ONE job carries both checks (r17): the per-id counts
-        // full-outer-join the roster, a roster id with no count row
-        // is the completeness failure, a count row off `bands` the
-        // structural one — the band table scans once, not twice, and
-        // the two failure classes keep their distinct diagnoses
-        val r = ids.select(col(idCol)).distinct()
-          .join(perId, Seq(idCol), "full_outer")
-          .agg(
-            coalesce(sum(when(col("__graft_n").isNotNull &&
-              col("__graft_n") =!= bands.toLong, 1L).otherwise(0L)),
-              lit(0L)).as("bad"),
-            coalesce(sum(when(col("__graft_n").isNull, 1L)
-              .otherwise(0L)), lit(0L)).as("missing")).head
-        val (bad, missing) = (r.getLong(0), r.getLong(1))
-        require(bad == 0,
-          s"band table corrupt: $bad id(s) without exactly $bands " +
-            "band rows - a doc was banded twice or a band set is torn")
-        require(missing == 0,
-          s"band table corrupt: $missing expected id(s) carry NO " +
-            "band rows at all - a whole band set was lost (the " +
-            "structural per-id check cannot see an absent doc); " +
-            "re-band the missing docs")
-    }
+    val st = bandStructure(bands)
+    val perId = bandsTable.groupBy(col(idCol)).agg(st.head, st.tail: _*)
+    // ONE job carries every check (r17): with a roster, the per-id
+    // structure full-outer-joins it, and a roster id with no
+    // structure row is the completeness failure — the band table
+    // scans once, not twice, and each failure class keeps its
+    // distinct diagnosis
+    val r = expectedIds
+      .fold(perId)(ids => ids.select(col(idCol)).distinct()
+        .join(perId, Seq(idCol), "full_outer"))
+      .agg(countWhere(tornBands(bands)).as("torn"),
+        countWhere(repeatedBands(bands)).as("repeated"),
+        countWhere(col("__n").isNull).as("missing")).head
+    requireBandStructure(r.getLong(0), r.getLong(1), bands)
+    val missing = r.getLong(2)
+    require(missing == 0,
+      s"band table corrupt: $missing expected id(s) carry NO " +
+        "band rows at all - a whole band set was lost (the " +
+        "structural per-id check cannot see an absent doc); " +
+        "re-band the missing docs")
+  }
+
+  /** Per-id structure aggregates of a band table, shared by
+    * [[validateMinHashBands]] and [[certifyBandStore]]: row count
+    * `__n`, distinct band ids `__bd`, and the band-id range
+    * `__blo`/`__bhi`. Distinct band ids are counted as set bits of
+    * one OR-ed bitmask per 64 band ids: countDistinct would plan an
+    * extra (id, band) shuffle, one more stage and job per check,
+    * where a bitwise OR is an ordinary partial aggregate. Band ids
+    * outside [0, bands) set no bit; [[tornBands]] refuses them. */
+  private def bandStructure(bands: Int): Seq[Column] = {
+    val distinctBands = (0 until (bands + 63) / 64).map { w =>
+      bit_count(coalesce(bit_or(when(shiftright(col("band"), 6) === w,
+        call_function("shiftleft", lit(1L), col("band").bitwiseAND(63)))),
+        lit(0L)))
+    }.reduce(_ + _)
+    Seq(count(lit(1)).as("__n"), distinctBands.as("__bd"),
+      min("band").as("__blo"), max("band").as("__bhi"))
+  }
+
+  /** A present id without exactly `bands` rows spanning [0, bands). */
+  private def tornBands(bands: Int): Column =
+    col("__n").isNotNull && (col("__n") =!= bands.toLong ||
+      col("__blo") =!= 0 || col("__bhi") =!= bands - 1)
+
+  /** A present id whose band ids are not all distinct. */
+  private def repeatedBands(bands: Int): Column =
+    col("__n").isNotNull && col("__bd") =!= bands.toLong
+
+  private def countWhere(c: Column): Column =
+    coalesce(sum(when(c, 1L).otherwise(0L)), lit(0L))
+
+  private def requireBandStructure(torn: Long, repeated: Long,
+                                   bands: Int): Unit = {
+    require(torn == 0,
+      s"band table corrupt: $torn id(s) without exactly $bands " +
+        s"band rows spanning [0, ${bands - 1}] - a doc was banded " +
+        "twice, a band set is torn, or rows carry foreign LSH " +
+        "parameters; re-band the affected docs")
+    require(repeated == 0,
+      s"band table corrupt: $repeated id(s) repeat a band id - the " +
+        s"$bands rows span [0, ${bands - 1}] but one band was " +
+        "duplicated while another went missing, so a bucket probe " +
+        "on the missing band silently misses; re-band the affected " +
+        "docs")
   }
 
   /** Persist the (k, numPerm, bands) a durable band store was built
@@ -1189,41 +1231,25 @@ object Dedup {
                        numPerm: Int = 256, bands: Int = 64): Unit = {
     requireBandParams(spark, dir, k, numPerm, bands)
     val I = Incremental
-    // distinct band ids per id, counted as set bits of one OR-ed
-    // bitmask per 64 band ids: countDistinct would plan an extra
-    // (id, band) shuffle, one more stage and job per certification,
-    // where a bitwise OR is an ordinary partial aggregate. Band ids
-    // outside [0, bands) set no bit; the torn check refuses them.
-    val distinctBands = (0 until (bands + 63) / 64).map { w =>
-      bit_count(coalesce(bit_or(when(shiftright(col("band"), 6) === w,
-        call_function("shiftleft", lit(1L), col("band").bitwiseAND(63)))),
-        lit(0L)))
-    }.reduce(_ + _)
+    val st = bandStructure(bands)
     val perId = I.readStoreWithBatch(spark, dir)
-      .groupBy(col(idCol)).agg(
-        count(lit(1)).as("__n"), distinctBands.as("__bd"),
-        min("band").as("__blo"), max("band").as("__bhi"),
-        min("batch").as("__slo"), max("batch").as("__shi"))
+      .groupBy(col(idCol)).agg(st.head, st.tail ++ Seq(
+        min("batch").as("__slo"), max("batch").as("__shi")): _*)
     val mAgg = I.loadSnapshotStoreManifest(spark, dir)
       .groupBy(col(idCol)).agg(
         count(lit(1)).as("__mn"),
         min("batch").as("__mlo"), max("batch").as("__mhi"))
-    def cnt(c: Column) =
-      coalesce(sum(when(c, 1L).otherwise(0L)), lit(0L))
     val r = perId.join(mAgg, Seq(idCol), "full_outer")
       .agg(
-        cnt(col(idCol).isNull).as("nulls"),
-        cnt(col(idCol).isNotNull && col("__n").isNull).as("missing"),
-        cnt(col(idCol).isNotNull && col("__mn").isNull)
+        countWhere(col(idCol).isNull).as("nulls"),
+        countWhere(col(idCol).isNotNull && col("__n").isNull).as("missing"),
+        countWhere(col(idCol).isNotNull && col("__mn").isNull)
           .as("unclaimed"),
-        cnt(col("__n").isNotNull && col("__mn").isNotNull &&
+        countWhere(col("__n").isNotNull && col("__mn").isNotNull &&
           (col("__mn") =!= 1L || col("__slo") =!= col("__mlo") ||
             col("__shi") =!= col("__mhi"))).as("drifted"),
-        cnt(col("__n").isNotNull && (col("__n") =!= bands.toLong ||
-          col("__blo") =!= 0 || col("__bhi") =!= bands - 1))
-          .as("torn"),
-        cnt(col("__n").isNotNull && col("__bd") =!= bands.toLong)
-          .as("repeated")).head
+        countWhere(tornBands(bands)).as("torn"),
+        countWhere(repeatedBands(bands)).as("repeated")).head
     val (nulls, missing, unclaimed, drifted, torn, repeated) =
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5))
@@ -1246,17 +1272,7 @@ object Dedup {
         "manifest rows disagree with the store's batch layout " +
         "(duplicated manifest row or batch drift) - retraction " +
         "would mis-scope; compactSnapshotStore rebuilds it exactly")
-    require(torn == 0,
-      s"band table corrupt: $torn id(s) without exactly $bands " +
-        s"band rows spanning [0, ${bands - 1}] - a doc was banded " +
-        "twice, a band set is torn, or rows carry foreign LSH " +
-        "parameters; re-band the affected docs")
-    require(repeated == 0,
-      s"band table corrupt: $repeated id(s) repeat a band id - the " +
-        s"$bands rows span [0, ${bands - 1}] but one band was " +
-        "duplicated while another went missing, so a bucket probe " +
-        "on the missing band silently misses; re-band the affected " +
-        "docs")
+    requireBandStructure(torn, repeated, bands)
   }
 
   /** Ingest-time near-dup screen of an incoming batch against a

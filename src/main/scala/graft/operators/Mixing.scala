@@ -130,14 +130,12 @@ object Mixing {
     *
     * @return (idCol, n_tokens, score_micros, keep) */
   def dsirScores(docs: DataFrame, idCol: String, textCol: String,
-                 targetFilter: Column,
-                 materialize: Boolean = true): DataFrame = Pins.scope { p =>
+                 targetFilter: Column): DataFrame = Pins.scope { p =>
     def toks(c: Column) = filter(split(c, "\\s+"), t => t =!= "")
-    val base = docs
+    val postings = p(docs
       .select(col(idCol), coalesce(targetFilter.cast("int"), lit(0)).as("__tgt"),
         explode(toks(col(textCol))).as("__t"))
-      .groupBy(idCol, "__tgt", "__t").agg(count(lit(1)).as("__tf"))
-    val postings = if (materialize) p(base) else base
+      .groupBy(idCol, "__tgt", "__t").agg(count(lit(1)).as("__tf")))
     val terms = postings.groupBy("__t").agg(
       sum("__tf").as("__cs"),
       sum(col("__tgt") * col("__tf")).as("__ct"))
@@ -151,12 +149,12 @@ object Mixing {
         log((col("__cs") + 1L).cast("double") /
           (col("__ns") + col("__v")).cast("double"))) * 1e6)
         .cast("long").as("__wm"))
-    val out = postings.join(wm, Seq("__t"))
+    postings.join(wm, Seq("__t"))
       .groupBy(idCol)
       .agg(sum("__tf").as("n_tokens"),
         sum(col("__tf") * col("__wm")).as("score_micros"))
       .withColumn("keep", (col("score_micros") > 0).cast("int"))
-    if (materialize) out.localCheckpoint(true) else out
+      .localCheckpoint(true)
   }
 
   /** Weighted sampling WITHOUT replacement, Gumbel-key formulation

@@ -500,7 +500,12 @@ object Quantization {
     * MISLEADING missing-pairs/takedown-miss diagnosis — and
     * [[rebuildIvfPqNidManifest]] would then "repair" the manifest
     * while the codes stay corrupt. Vector dimension IS checked (a
-    * mismatch would corrupt silently). */
+    * mismatch would corrupt silently). Post-write sync CERTIFICATION
+    * is deliberately CALLER-DRIVEN: run [[validateIvfPqNidManifest]]
+    * at audit/recovery time, the fact stores' `validate = recovery`
+    * posture; the crash ordering (manifest appends BEFORE codes)
+    * keeps every uncertified window in the self-healing
+    * over-approximation direction, never the silent-miss one. */
   def ivfPqAddBatch(newEmb: DataFrame, idCol: String, vecCol: String,
                     dir: String): Unit = {
     val spark = newEmb.sparkSession
@@ -595,7 +600,12 @@ object Quantization {
     * directories are never rewritten; worst case (every cell
     * affected) degenerates to the retrain-shaped full rewrite, which
     * doubles as compaction. The barrier is required because the
-    * rewrite reads the same directories it overwrites. */
+    * rewrite reads the same directories it overwrites. As with
+    * [[ivfPqAddBatch]], manifest sync certification is CALLER-DRIVEN
+    * ([[validateIvfPqNidManifest]] at audit time): removals rewrite
+    * the manifest AFTER the codes, so a crash between the two leaves
+    * it over-approximating — later discoveries probe a few dead
+    * cells and self-heal, never skip a live one. */
   def ivfPqRemoveBatch(removeIds: DataFrame, idCol: String,
                        dir: String): Unit = {
     val spark = removeIds.sparkSession

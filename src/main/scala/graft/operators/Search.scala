@@ -232,11 +232,11 @@ object Search {
   def bm25TopKMaxScoreIndexed(tfAll: DataFrame, queries: DataFrame,
                               qidCol: String, qTextCol: String, k: Int,
                               m: Int = 64, k1: Double = 1.2,
-                              b: Double = 0.75, dfCap: Int = 0,
-                              materialize: Boolean = true)
+                              b: Double = 0.75, dfCap: Int = 0)
       : DataFrame = Pins.scope { pins =>
     maxScoreEmit(maxScorePartsFrom(pins, tfAll, queries, qidCol,
-      qTextCol, k, m, k1, b, dfCap, materialize), k, materialize)
+      qTextCol, k, m, k1, b, dfCap, materialize = true), k,
+      materialize = true)
   }
 
   /** Impact-ordered BM25 top-k (the max-score/WAND family, relational
@@ -318,17 +318,17 @@ object Search {
                                textCol: String, queries: DataFrame,
                                qidCol: String, qTextCol: String, k: Int,
                                m: Int = 64, k1: Double = 1.2,
-                               b: Double = 0.75, dfCap: Int = 0,
-                               materialize: Boolean = true)
+                               b: Double = 0.75, dfCap: Int = 0)
       : DataFrame = Pins.scope { pins =>
-    val tfAll = snapshotBarrier(pins, docs, idCol, textCol, materialize)
+    val tfAll = snapshotBarrier(pins, docs, idCol, textCol,
+      materialize = true)
     val p = maxScorePartsFrom(pins, tfAll, queries, qidCol, qTextCol,
-      k, m, k1, b, dfCap, materialize)
-    val out = p.qTerms.select("qid").distinct()
+      k, m, k1, b, dfCap, materialize = true)
+    p.qTerms.select("qid").distinct()
       .join(p.proof.withColumn("certified", lit(true)), Seq("qid"), "left")
       .select(col("qid"), coalesce(col("certified"), lit(false))
         .as("certified"))
-    seal(out, materialize)
+      .localCheckpoint(true)
   }
 
   /** Intermediates of the max-score pipeline (steps 1-4), shared by

@@ -272,10 +272,9 @@ object TextAnalysis {
     *
     * @return (idCol, n_bigrams, sum_logp_micros, mean_logp_micros) —
     *         docs with < 2 tokens don't appear. */
-  def knBigramScore(docs: DataFrame, idCol: String, textCol: String,
-                    materialize: Boolean = true): DataFrame = {
-    val out = knScoreFromSnapshot(knSnapshot(docs, idCol, textCol),
-      materialize)
+  def knBigramScore(docs: DataFrame, idCol: String,
+                    textCol: String): DataFrame = {
+    val out = knScoreFromSnapshot(knSnapshot(docs, idCol, textCol))
     if (idCol == "doc_id") out
     else out.withColumnRenamed("doc_id", idCol)
   }
@@ -408,27 +407,26 @@ object TextAnalysis {
     * with zero tokens don't appear (no tokens → no LM evidence).
     *
     * @return (idCol, n_tokens, sum_logp_micros, mean_logp_micros) */
-  def unigramLmScore(docs: DataFrame, idCol: String, textCol: String,
-                     materialize: Boolean = true): DataFrame = Pins.scope { p =>
-    val base = docs
-      .select(col(idCol), explode(wordTokens(col(textCol))).as("__t"))
-      .groupBy(idCol, "__t").agg(count(lit(1)).as("__tf"))
+  def unigramLmScore(docs: DataFrame, idCol: String,
+                     textCol: String): DataFrame = Pins.scope { p =>
     // postings feed both the vocabulary rollup and the scoring join —
     // materialize once (same discipline as Search.bm25TopK)
-    val postings = if (materialize) p(base) else base
+    val postings = p(docs
+      .select(col(idCol), explode(wordTokens(col(textCol))).as("__t"))
+      .groupBy(idCol, "__t").agg(count(lit(1)).as("__tf")))
     val termTotals = postings.groupBy("__t").agg(sum("__tf").as("__ct"))
     val total = broadcast(termTotals.agg(sum("__ct").as("__tot")))
     val lp = termTotals.crossJoin(total)
       .select(col("__t"),
         round(log(col("__ct").cast("double") / col("__tot").cast("double"))
           * 1e6).cast("long").as("__lpm"))
-    val out = postings.join(lp, Seq("__t"))
+    postings.join(lp, Seq("__t"))
       .groupBy(idCol)
       .agg(sum("__tf").as("n_tokens"),
         sum(col("__tf") * col("__lpm")).as("sum_logp_micros"))
       .withColumn("mean_logp_micros",
         col("sum_logp_micros").cast("double") / col("n_tokens"))
-    if (materialize) out.localCheckpoint(true) else out
+      .localCheckpoint(true)
   }
 
   /** Corpus-bigram LM score per document, Laplace-smoothed — the next
@@ -461,14 +459,14 @@ object TextAnalysis {
     * with < 2 tokens don't appear (no transition evidence).
     *
     * @return (idCol, n_bigrams, sum_logp_micros, mean_logp_micros) */
-  def bigramLmScore(docs: DataFrame, idCol: String, textCol: String,
-                    materialize: Boolean = true): DataFrame = Pins.scope { p =>
+  def bigramLmScore(docs: DataFrame, idCol: String,
+                    textCol: String): DataFrame = Pins.scope { p =>
     import graft.functions.NativeExpressions.{hashedNgrams, positionalNgramHashes}
     // th: per-token hashes (positions 0..n-1); bh: per-window bigram
     // hashes (positions 0..n-2). Zipping bh with th's strict prefix
     // pairs every bigram with its CONTEXT token's hash — lengths agree
     // by construction (n−1 each; < 2 tokens → both empty).
-    val base = docs
+    val postings = p(docs
       .select(col(idCol),
         positionalNgramHashes(col(textCol), 1).as("__th"),
         positionalNgramHashes(col(textCol), 2).as("__bh"))
@@ -478,8 +476,7 @@ object TextAnalysis {
           col("__bh"),
           (a, b) => struct(a.as("h1"), b.as("hb")))).as("__p"))
       .select(col(idCol), col("__p.h1").as("__h1"), col("__p.hb").as("__hb"))
-      .groupBy(idCol, "__h1", "__hb").agg(count(lit(1)).as("__bf"))
-    val postings = if (materialize) p(base) else base
+      .groupBy(idCol, "__h1", "__hb").agg(count(lit(1)).as("__bf")))
     val bigCounts = postings.groupBy("__h1", "__hb")
       .agg(sum("__bf").as("__bc"))
     val ctxCounts = bigCounts.groupBy("__h1").agg(sum("__bc").as("__cc"))
@@ -495,13 +492,13 @@ object TextAnalysis {
         round(log((col("__bc").cast("double") + 1d)
           / (col("__cc") + col("__vs")).cast("double")) * 1e6)
           .cast("long").as("__lpm"))
-    val out = postings.join(lp, Seq("__h1", "__hb"))
+    postings.join(lp, Seq("__h1", "__hb"))
       .groupBy(idCol)
       .agg(sum("__bf").as("n_bigrams"),
         sum(col("__bf") * col("__lpm")).as("sum_logp_micros"))
       .withColumn("mean_logp_micros",
         col("sum_logp_micros").cast("double") / col("n_bigrams"))
-    if (materialize) out.localCheckpoint(true) else out
+      .localCheckpoint(true)
   }
 
   /** CCNet-style per-language perplexity bucketing (Wenzek et al.
@@ -784,8 +781,8 @@ object TextAnalysis {
     * where three labels are kept, and IP-literal hosts (IPv4 dotted
     * quads, bracketed IPv6) which pass through whole — label rules
     * don't apply to addresses. Suffixes outside the embedded table
-    * still fall back to the two-label approximation; see
-    * [[graft.Graft]] facade scaladoc for the same caveat. */
+    * still collapse to two labels — an approximation of the full
+    * Mozilla public-suffix list. */
   def registeredDomain(u: Column): Column = {
     // a bracketed IPv6 host contains ':' — capture it whole (the
     // alternation tries the bracket form first) so the IP guard sees

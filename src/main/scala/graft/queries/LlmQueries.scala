@@ -372,17 +372,11 @@ object LlmQueries {
     // Dedup survivors: drop every clustered doc except the min-id
     // keeper; unclustered docs all survive. This is the table a
     // training pipeline actually feeds downstream.
-    "d12_dedup_survivors" -> ((s, d) => {
-      val pairs = Dedup.jaccardPairs(T.documents(s, d), "doc_id", "text",
+    "d12_dedup_survivors" -> ((s, d) =>
+      Dedup.nearDupSurvivors(T.documents(s, d), "doc_id", "text",
         k = 5, theta = 0.7)
-        .select(col("id_a").as("src"), col("id_b").as("dst"))
-      val clustered = GraphOps.connectedComponents(pairs)
-      val drop = clustered.filter(col("node") =!= col("comp"))
-        .select(col("node").as("doc_id"))
-      T.documents(s, d).join(drop, Seq("doc_id"), "left_anti")
         .select("doc_id", "lang", "source")
-        .orderBy("doc_id")
-    }),
+        .orderBy("doc_id")),
 
     // BPE-ish subword tokenization vs whitespace tokens (token-budget
     // accounting for training pipelines) — one RE2-safe regex, no

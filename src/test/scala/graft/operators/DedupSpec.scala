@@ -44,6 +44,18 @@ class DedupSpec extends SparkSpec {
     assert(math.abs(j12 - 7.0 / 9.0) < 1e-6)
   }
 
+  test("nearDupSurvivors keeps one canonical doc per near-dup cluster") {
+    val docs = Seq(
+      (1L, "the quick brown fox jumps over the lazy dog today"),
+      (2L, "the quick brown fox jumps over the lazy dog today"),
+      (3L, "a totally unrelated piece of text goes right here"))
+      .toDF("doc_id", "text")
+    val out = Dedup.nearDupSurvivors(docs, "doc_id", "text", k = 3,
+        theta = 0.7)
+      .select("doc_id").collect().map(_.getLong(0)).sorted
+    assert(out.toSeq == Seq(1L, 3L)) // 2 deduped against keeper 1
+  }
+
   test("prefixJaccardPairs == jaccardPairs across thresholds (lossless)") {
     for (theta <- Seq(0.3, 0.5, 0.7, 1.0)) {
       val full = Dedup.jaccardPairs(docs, "doc_id", "text", 3, theta)
@@ -670,6 +682,20 @@ class DedupSpec extends SparkSpec {
       Dedup.validateMinHashBands(torn, "doc_id")
     }
     assert(e2.getMessage.contains("band table corrupt"))
+    // the per-id band ids, not just the row count: a band id repeated
+    // while another went missing (64 rows, range intact) and a band
+    // id outside [0, 64) (64 rows, 64 distinct ids) both refuse
+    def retag(from: Int, to: Int) = bands.withColumn("band",
+      when(col("doc_id") === 1L && col("band") === from, to)
+        .otherwise(col("band")))
+    val eRepeated = intercept[IllegalArgumentException] {
+      Dedup.validateMinHashBands(retag(1, 0), "doc_id")
+    }
+    assert(eRepeated.getMessage.contains("repeat a band id"))
+    val eRange = intercept[IllegalArgumentException] {
+      Dedup.validateMinHashBands(retag(63, 64), "doc_id")
+    }
+    assert(eRange.getMessage.contains("spanning [0, 63]"))
     // a WHOLLY missing band set is invisible to the per-id count
     // (zero rows, nothing to aggregate) — the expected-roster check
     // closes that hole; the healthy roster still certifies

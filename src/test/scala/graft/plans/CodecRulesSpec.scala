@@ -28,6 +28,17 @@ class CodecRulesSpec extends SparkSpec {
     assert(r.getString(1) == "War and Peace")
   }
 
+  test("GraftExtensions.install registers SQL functions and the " +
+    "optimizer rule") {
+    GraftExtensions.install(spark)
+    val u = spark.sql(
+      "SELECT uuid5('6ba7b810-9dad-11d1-80b4-00c04fd430c8', 'python.org')")
+      .collect().head.getString(0)
+    assert(u == "886313e1-3b8a-5372-9b90-0c9aee199e5d")
+    assert(spark.experimental.extraOptimizations
+      .contains(CollapseRedundantArrayOps))
+  }
+
   test("GraftExtensions wires functions + rule into a builder hook") {
     // constructive smoke: applying the extensions class populates the
     // injection points without error (full builder wiring is a

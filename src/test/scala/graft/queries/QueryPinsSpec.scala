@@ -6,7 +6,8 @@ import graft.{SparkEntry, SparkSpec}
 
 /** Queries that pin intermediate state — a streaming twin's static
   * screen set or running fold, a prefix-cross index and its
-  * refreshed/retracted successor — free those checkpoints before they
+  * refreshed/retracted successor, a durable store lifecycle's
+  * survivors and band builds — free those checkpoints before they
   * return: after the query, no RDD it persisted is still registered.
   * Each query runs against a private copy of the sf0.001 tables, so
   * the per-(app, dataset) stream memo cannot skip the run because
@@ -31,6 +32,9 @@ class QueryPinsSpec extends SparkSpec {
     * checkpoint on a lucky GC and hide the leak. */
   private def leaves(name: String): Set[Int] = {
     val sc = spark.sparkContext
+    // the memoized shared fixtures (the IVF-PQ layout among them)
+    // live for the session by design: build them before the snapshot
+    LlmQueries.prebuildSharedFixtures(spark, fixture)
     val before = sc.getPersistentRDDs.keySet.toSet
     val held = new java.util.concurrent.ConcurrentHashMap[Int, AnyRef]()
     @volatile var polling = true
@@ -58,7 +62,9 @@ class QueryPinsSpec extends SparkSpec {
                    "st_inc_grouped_boiler", "st_inc_grams",
                    "st_decontam_stream", "st_cross_near", "st_inc_prefix",
                    "st_inc_lsh_store", "inc_prefix_refresh",
-                   "inc_prefix_remove")) {
+                   "inc_prefix_remove", "d12_dedup_survivors",
+                   "d89_takedown_sweep", "d90_crawl_commit",
+                   "d91_recrawl_update", "d92_store_ingest")) {
     test(s"$name frees its pinned state before it returns") {
       val leaked = leaves(name)
       assert(leaked.isEmpty, s"$name left ${leaked.size} persisted RDD(s)")
