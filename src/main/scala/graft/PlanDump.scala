@@ -2,16 +2,26 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Generates PLANS.md: formatted physical-plan digests for the
-  * flagship queries, so the "is this the plan you'd want at 100 TB"
-  * audit is a readable artifact instead of a scattering of
-  * `.explain` calls. PlanSpec ASSERTS the key properties (broadcast
-  * choices, pushdown, no nested loops); this file lets a reviewer see
-  * the full shape — every join strategy, every Exchange, the codegen
-  * span boundaries — per query.
+/** Physical-plan dumps, in two modes.
   *
-  * Usage: `sbt "runMain graft.PlanDump [sfDir]"` (defaults to
-  * sf0.001; plans are scale-independent apart from AQE thresholds).
+  * `sbt "runMain graft.PlanDump [sfDir]"` generates PLANS.md:
+  * formatted physical-plan digests for the flagship queries, so the
+  * "is this the plan you'd want at 100 TB" audit is a readable
+  * artifact instead of a scattering of `.explain` calls. PlanSpec
+  * ASSERTS the key properties (broadcast choices, pushdown, no nested
+  * loops); this file lets a reviewer see the full shape — every join
+  * strategy, every Exchange, the codegen span boundaries — per query.
+  * sfDir defaults to sf0.001; plans are scale-independent apart from
+  * AQE thresholds.
+  *
+  * `sbt "runMain graft.PlanDump <outDir> <suffix> q1,q2,..."` writes
+  * each named query's full `.explain("formatted")` to
+  * `<outDir>/<query>_<suffix>.txt` — the optimization-round evidence
+  * artifact (`plans/r<N>/<query>_{before,after}.txt`); sfDir comes
+  * from SPARK_GRAFT_SF_DIR (default sf0.001). Lifecycle queries that
+  * return an eager checkpoint show a checkpoint scan as their final
+  * plan; for those, the interesting plans are the operator fragments,
+  * which [[fragments]] registers under `frag_*` names.
   */
 object PlanDump {
 
@@ -694,20 +704,107 @@ object PlanDump {
         "(st_inc_lsh_store, st_inc_grouped_boiler, " +
         "st_inc_boiler_store)."))
 
+  /** Named plan FRAGMENTS for queries whose returned frame is an
+    * eager checkpoint (the final `explain` would show only an RDD
+    * scan): each entry builds the dominant lazy sub-plan of the
+    * query so the exchange/join shape is visible and diffable. */
+  private def fragments(s: SparkSession, d: String)
+      : Map[String, () => DataFrame] = {
+    import org.apache.spark.sql.functions._
+    val T = graft.core.Tables
+    Map(
+      "frag_bm25_serve" -> (() => {
+        // the serve plan inc_bm25_store / inc_store_levels run per
+        // phase: perPost derivation + probe join + top-k window over
+        // a tf snapshot (lazy here so the whole chain shows)
+        val docs = T.documents(s, d)
+        val tf = graft.operators.Search.tfSnapshot(docs, "doc_id", "text")
+        val q = docs.filter(col("doc_id") % 16 === 3)
+          .select(col("doc_id").as("qid"),
+            concat_ws(" ", slice(split(col("text"), "\\s+"), 1, 8))
+              .as("qtext"))
+        graft.operators.Search.bm25TopKIndexed(tf, q, "qid", "qtext",
+          k = 5, materialize = false)
+      }),
+      "frag_lsh_screen" -> (() => {
+        // the collision probe + candidate re-score of
+        // lshScreenAgainst, lazy (the operator checkpoints eagerly)
+        val docs = T.documents(s, d)
+        val existing = docs.filter(col("doc_id") % 5 =!= 0)
+        val incoming = docs.filter(col("doc_id") % 5 === 0)
+        val stored = graft.operators.Dedup.minHashBands(existing,
+          "doc_id", "text", k = 5)
+        val inB = graft.operators.Dedup.minHashBands(incoming,
+          "doc_id", "text", k = 5)
+        val cand = inB.as("a").join(stored.as("b"),
+            col("a.band") === col("b.band") &&
+              col("a.bh") === col("b.bh"))
+          .select(col("a.doc_id").as("in_id"),
+            col("b.doc_id").as("ex_id"))
+          .dropDuplicates("in_id", "ex_id")
+        val hs = (side: String, src: DataFrame) => src
+          .join(cand.select(side).distinct(),
+            col("doc_id") === col(side), "left_semi")
+          .select(col("doc_id").as(side),
+            graft.operators.Dedup.hashedShingles(col("text"), 5)
+              .as(s"hs_$side"))
+        cand.join(hs("in_id", incoming), Seq("in_id"))
+          .join(hs("ex_id", existing), Seq("ex_id"))
+          .withColumn("shared",
+            size(array_intersect(col("hs_in_id"), col("hs_ex_id"))))
+          .withColumn("jac", round(col("shared").cast("double")
+            / (size(col("hs_in_id")) + size(col("hs_ex_id"))
+              - col("shared")), 6))
+          .filter(col("jac") >= 0.7)
+          .select("in_id", "ex_id", "jac")
+      }),
+      "frag_minhash_bands" -> (() =>
+        graft.operators.Dedup.minHashBands(
+          T.documents(s, d).limit(0), "doc_id", "text", k = 5)))
+  }
+
+  private def explain(df: DataFrame): String =
+    df.queryExecution.explainString(
+      org.apache.spark.sql.execution.FormattedMode)
+
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
+    val snapshot = args.length >= 3
+    val sfDir = (if (snapshot) sys.env.get("SPARK_GRAFT_SF_DIR")
+      else args.headOption).getOrElse("/root/testdata/sf0.001")
     val spark = SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.codegen.maxFields", "1024")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    if (snapshot) snapshots(spark, sfDir, args(0), args(1), args(2))
+    else plansMd(spark, sfDir)
+    spark.stop()
+  }
 
+  private def snapshots(spark: SparkSession, sfDir: String,
+                        outDir: String, suffix: String,
+                        names: String): Unit = {
+    java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(outDir))
+    val frags = fragments(spark, sfDir)
+    names.split(",").map(_.trim).filter(_.nonEmpty).foreach { name =>
+      val df =
+        if (frags.contains(name)) frags(name)()
+        else SparkEntry.queries(name)(spark, sfDir)
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(s"$outDir/${name}_$suffix.txt"),
+        explain(df))
+      println(s"wrote $outDir/${name}_$suffix.txt")
+    }
+  }
+
+  private def plansMd(spark: SparkSession, sfDir: String): Unit = {
     def formatted(df: DataFrame): String = {
-      val s = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+      val s = explain(df)
       // keep the operator tree + the scan details (pushdown evidence);
       // drop the long per-operator field dumps for readability
       val i = s.indexOf("\n\n(1)")
@@ -736,6 +833,5 @@ object PlanDump {
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get("PLANS.md"), out.toString)
     println(s"wrote PLANS.md (${Flagships.size} queries)")
-    spark.stop()
   }
 }

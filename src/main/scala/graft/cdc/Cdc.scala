@@ -75,13 +75,6 @@ object Cdc {
     (changedRows, changelog)
   }
 
-  /** Change-detection mask: true when any of `cols` differs between the
-    * two sides of an already-joined frame (ref `any_horizontal` masks,
-    * `scripts/pipeline/06-...py:591-608`). Columns must be disambiguated
-    * by the caller (e.g. `__o_x` / `__n_x`). */
-  def anyChanged(pairs: Seq[(String, String)]): org.apache.spark.sql.Column =
-    pairs.map { case (o, n) => !(col(o) <=> col(n)) }.reduce(_ || _)
-
   /** M3: audit CDC for out-of-band (manual) edits. The reference uses a
     * SQLite AFTER UPDATE trigger (`tags2db.py:673-737`); Spark has no
     * triggers — the replacement is a snapshot diff against the last

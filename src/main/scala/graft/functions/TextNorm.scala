@@ -29,8 +29,4 @@ object TextNorm {
   /** CRLF/tab strip + whitespace collapse as a pure expression. */
   def cleanWs(c: Column): Column =
     trim(regexp_replace(regexp_replace(c, "[\\r\\n\\t]+", " "), " {2,}", " "))
-
-  /** Strip wrapping single/double quotes. */
-  def stripQuotes(c: Column): Column =
-    regexp_replace(c, "^[\"']+|[\"']+\\z", "")
 }

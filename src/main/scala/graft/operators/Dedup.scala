@@ -118,17 +118,25 @@ object Dedup {
     if (materialize) out.localCheckpoint(true) else out
   }
 
-  /** Near-dup survivors: [[jaccardPairs]] at `theta` clustered by
-    * [[GraphOps.connectedComponents]]; every clustered doc except its
-    * component's min-id keeper is dropped, and unclustered docs all
-    * survive. Output: `df`'s rows and columns, non-keepers removed. */
-  def nearDupSurvivors(df: DataFrame, idCol: String, textCol: String,
-                       k: Int, theta: Double): DataFrame = Pins.scope { p =>
+  /** Near-dup clusters: [[jaccardPairs]] at `theta` connected by
+    * [[GraphOps.connectedComponents]]. Output: one (node, comp) row
+    * per clustered doc, `comp` the component's min id; unclustered
+    * docs have no row. */
+  def nearDupClusters(df: DataFrame, idCol: String, textCol: String,
+                      k: Int, theta: Double): DataFrame = Pins.scope { p =>
     // the components are an eager checkpoint of their own, so the
     // pair checkpoint is freed once they are built
     val pairs = p.own(jaccardPairs(df, idCol, textCol, k, theta))
       .select(col("id_a").as("src"), col("id_b").as("dst"))
-    val drop = GraphOps.connectedComponents(pairs)
+    GraphOps.connectedComponents(pairs)
+  }
+
+  /** Near-dup survivors: every [[nearDupClusters]] member except its
+    * component's min-id keeper is dropped, and unclustered docs all
+    * survive. Output: `df`'s rows and columns, non-keepers removed. */
+  def nearDupSurvivors(df: DataFrame, idCol: String, textCol: String,
+                       k: Int, theta: Double): DataFrame = {
+    val drop = nearDupClusters(df, idCol, textCol, k, theta)
       .filter(col("node") =!= col("comp"))
       .select(col("node").as(idCol))
     df.join(drop, Seq(idCol), "left_anti")
@@ -1415,9 +1423,6 @@ object Dedup {
       .reduce((a, b) => a.bitwiseOR(b))
     votes.select(col("id"), simhash.as("simhash"))
   }
-
-  /** Hamming distance between two 64-bit simhashes. */
-  def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
   /** Engine-portable SimHash: identical bit votes from any engine with
     * md5 — the 64-bit token hash is the first 16 hex chars of

@@ -20,12 +20,6 @@ object TextAnalysis {
 
   def distinctTokenCount(c: Column): Column = size(array_distinct(wordTokens(c)))
 
-  /** BPE-ish subword count approximation: words + digit runs +
-    * punctuation marks each count as a token. */
-  def subwordCount(c: Column): Column =
-    size(filter(split(c, "(?=[^\\p{L}\\p{N}])|(?<=[^\\p{L}\\p{N}])"),
-      t => t =!= "" && t =!= " "))
-
   /** Count of tokens that appear in `stop` (a small broadcast-safe set). */
   def stopwordHits(c: Column, stop: Seq[String]): Column = {
     val arr = array(stop.map(lit): _*)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.{Pins, Snapshots, Tables => T}
 import graft.operators.{Clustering, Dedup, GraphOps, Mixing, Multimodal, QualityModel, Quantization, Search, Similarity, TextAnalysis}
+import graft.queries.MaintainedArtifacts.{Change, Corpus, audit, sweep, total}
 
 /** LLM training-data pipeline operators: dedup (exact / n-gram Jaccard /
   * MinHash-LSH / SimHash), ANN similarity search, text analysis,
@@ -361,13 +362,10 @@ object LlmQueries {
 
     // Near-dup endgame: connect Jaccard pairs into clusters (CC), one
     // row per clustered doc with its component id.
-    "d11_neardup_clusters" -> ((s, d) => {
-      val pairs = Dedup.jaccardPairs(T.documents(s, d), "doc_id", "text",
+    "d11_neardup_clusters" -> ((s, d) =>
+      Dedup.nearDupClusters(T.documents(s, d), "doc_id", "text",
         k = 5, theta = 0.7)
-        .select(col("id_a").as("src"), col("id_b").as("dst"))
-      GraphOps.connectedComponents(pairs)
-        .orderBy("node")
-    }),
+        .orderBy("node")),
 
     // Dedup survivors: drop every clustered doc except the min-id
     // keeper; unclustered docs all survive. This is the table a
@@ -2109,100 +2107,32 @@ object LlmQueries {
     // THE TAKEDOWN SWEEP — the retraction paths composed as ONE
     // compliance operation: a quarantined source (doc_id / vec_id %
     // 13 == 7) retracts from EVERY maintained artifact in a single
-    // query — the BM25 tf snapshot, the KN bigram snapshot, the
-    // boilerplate count table and its per-site variant, the
-    // prefix-cross near-dup index, the LSH band table (r16's 7th
-    // artifact), and the persisted IVF-PQ layout —
-    // each through its own gate-green remove path WITH its validator
-    // run, and one AUDIT row per artifact (physical rows + artifact
-    // mass, before and after) — the per-artifact trail a takedown
-    // request actually requires. Retracted state equals a fresh
-    // build on the survivors in every family (each family's own
+    // query, each through its own gate-green remove path WITH its
+    // validator run, and one AUDIT row per artifact (physical rows +
+    // artifact mass, before and after) — the per-artifact trail a
+    // takedown request actually requires. Retracted state equals a
+    // fresh build on the survivors in every family (each family's own
     // oracle row proves it); THIS oracle replays the audit counts
     // from both corpus states.
     "d89_takedown_sweep" -> ((s, d) => {
       val docs = T.documents(s, d)
-      val emb = T.embeddings(s, d)
       // ONE definition of the quarantined source - the doc and
       // vector slices are declared TOGETHER from one modulus so the
       // per-artifact retractions (and the audit) cannot drift
-      val quarantined = docs.filter(col("doc_id") % 13 === 7)
-      val quarantinedVecs = emb.filter(col("vec_id") % 13 === 7)
-      val docIds = quarantined.select("doc_id")
-      Pins.scope { p =>
-        // BEFORE-states checkpoint (multiple heavy consumers); the
-        // AFTER-states stay LAZY since r17 — each is one broadcast
-        // anti-join over its cached before-frame, and its two
-        // consumers (validator, audit) re-run that join for less
-        // than the cost of materializing a second corpus-scale copy
-        val tf = p(Search.tfSnapshot(docs, "doc_id", "text"))
-        val tfAfter = graft.operators.Incremental
-          .retractDocs(tf, docIds)
-        Search.validateTfSnapshot(tfAfter)
-        val kn = p(TextAnalysis.knSnapshot(docs, "doc_id", "text"))
-        val knAfter = graft.operators.Incremental
-          .retractDocs(kn, docIds)
-        TextAnalysis.validateKnSnapshot(knAfter)
-        val lc = p(Dedup.lineCountPartial(docs, "text"))
-        val lcAfter = p(Dedup.subtractLineCounts(lc,
-          Dedup.lineCountPartial(quarantined, "text")))
-        Dedup.validateLineCounts(lcAfter)
-        val glc = p(Dedup.groupedLineCountPartial(docs, "lang",
-          "text"))
-        val glcAfter = p(Dedup.subtractGroupedLineCounts(glc,
-          Dedup.groupedLineCountPartial(quarantined, "lang", "text")))
-        Dedup.validateLineCounts(glcAfter)
-        val pidx = Dedup.prefixCrossIndex(docs, "doc_id", "text",
-          k = 5, theta = 0.5)
-        pidx.frames.foreach(p.own)
-        val pret = Dedup.retractPrefixCrossIndex(pidx, docIds,
-          "doc_id")
-        pret.frames.foreach(p.own)
-        Dedup.validatePrefixCrossIndex(pret)
-        // the LSH band table (r16's 7th maintained artifact): the
-        // quarantined docs' band rows leave by the same anti-join,
-        // and the m-rows-per-id validator re-certifies the survivors
-        val bands = p.own(Dedup.minHashBands(docs, "doc_id", "text",
-          k = 5))
-        val bandsAfter = graft.operators.Incremental
-          .retractDocs(bands, docIds)
-        Dedup.validateMinHashBands(bandsAfter, "doc_id")
-        val dir = s"/tmp/graft_${s.sparkContext.applicationId}/" +
-          s"takedown89_${pathDigest(d)}"
-        Quantization.persistIvfPqIndex(sharedIvfPqIndex(s, d), dir)
-        val codesBefore = p(s.read.parquet(dir + "/codes")
-          .select("nid"))
-        Quantization.ivfPqRemoveBatch(
-          quarantinedVecs.select("vec_id"), "vec_id", dir)
-        Quantization.validateIvfPqCodes(s, dir)
-        val codesAfter = s.read.parquet(dir + "/codes").select("nid")
-        Seq(
-          audit("bm25_tf", tf, tfAfter,
-            coalesce(sum(col("tf")), lit(0L))),
-          audit("boiler_counts", lc, lcAfter,
-            coalesce(sum(col("cnt")), lit(0L))),
-          audit("grouped_counts", glc, glcAfter,
-            coalesce(sum(col("cnt")), lit(0L))),
-          audit("ivfpq_codes", codesBefore, codesAfter,
-            countDistinct(col("nid"))),
-          audit("kn_lm", kn, knAfter,
-            coalesce(sum(col("bf")), lit(0L))),
-          audit("lsh_bands", bands, bandsAfter,
-            countDistinct(col("doc_id"))),
-          audit("prefix_index", pidx.dfreq, pret.dfreq,
-            coalesce(sum(col("df")), lit(0L))))
-          .reduce(_ unionByName _).orderBy("artifact")
-          .localCheckpoint(true)
-      }
+      val takedown = Change(
+        removed = Some(docs.filter(col("doc_id") % 13 === 7)),
+        removedVecs = Some(T.embeddings(s, d)
+          .filter(col("vec_id") % 13 === 7)))
+      val corpus = Corpus(docs, sharedIvfPqIndex(s, d),
+        s"/tmp/graft_${s.sparkContext.applicationId}/" +
+          s"takedown89_${pathDigest(d)}")
+      Pins.scope(p => sweep(p, corpus, takedown).report())
     }),
 
     // THE CRAWL-COMMIT SWEEP — d89's add-side mirror: a newly
     // crawled batch (doc_id / vec_id % 10 >= 8) commits into EVERY
     // maintained artifact in one query, each through its gate-green
-    // merge/add path WITH its validator run — mergeTfSnapshots,
-    // mergeKnSnapshots, mergeLineCounts, mergeGroupedLineCounts,
-    // refreshPrefixCrossIndex, the band-table union (r16's 7th
-    // artifact), ivfPqAddBatch — and the same audit
+    // merge/add path WITH its validator run, and the same audit
     // schema (artifact, rows/mass before and after). The row that
     // makes a commit more than bookkeeping: 'delta_screen'
     // re-screens the INCOMING batch against the boilerplate table it
@@ -2226,88 +2156,29 @@ object LlmQueries {
             || col("doc_id") === 11,
           concat(col("text"), lit("\n" + banner)))
           .otherwise(col("text")).as("text"))
-      val existing = docs.filter(col("doc_id") % 10 < 8)
       val delta = docs.filter(col("doc_id") % 10 >= 8)
+      val commit = Change(added = Some(delta),
+        addedVecs = Some(T.embeddings(s, d)
+          .filter(col("vec_id") % 10 >= 8)))
+      // the layout before the crawl: the shared one minus the batch
+      val idx = sharedIvfPqIndex(s, d)
+      val corpus = Corpus(docs.filter(col("doc_id") % 10 < 8),
+        idx.copy(codes = idx.codes.filter(col("nid") % 10 < 8)),
+        s"/tmp/graft_${s.sparkContext.applicationId}/" +
+          s"crawl90_${pathDigest(d)}")
       Pins.scope { p =>
-        val tfA = p(Search.tfSnapshot(existing, "doc_id", "text"))
-        val tfM = p(Search.mergeTfSnapshots(Seq(tfA,
-          Search.tfSnapshot(delta, "doc_id", "text"))))
-        Search.validateTfSnapshot(tfM)
-        val knA = p(TextAnalysis.knSnapshot(existing, "doc_id",
-          "text"))
-        val knM = p(TextAnalysis.mergeKnSnapshots(Seq(knA,
-          TextAnalysis.knSnapshot(delta, "doc_id", "text"))))
-        TextAnalysis.validateKnSnapshot(knM)
-        val lcA = p(Dedup.lineCountPartial(existing, "text"))
-        val lcM = p(Dedup.mergeLineCounts(Seq(lcA,
-          Dedup.lineCountPartial(delta, "text"))))
-        Dedup.validateLineCounts(lcM)
-        val glcA = p(Dedup.groupedLineCountPartial(existing, "lang",
-          "text"))
-        val glcM = p(Dedup.mergeGroupedLineCounts(Seq(glcA,
-          Dedup.groupedLineCountPartial(delta, "lang", "text"))))
-        Dedup.validateLineCounts(glcM)
-        val pidx = Dedup.prefixCrossIndex(existing, "doc_id", "text",
-          k = 5, theta = 0.5)
-        pidx.frames.foreach(p.own)
-        val pref = Dedup.refreshPrefixCrossIndex(pidx, delta,
-          "doc_id", "text")
-        pref.frames.foreach(p.own)
-        Dedup.validatePrefixCrossIndex(pref)
-        // the LSH band table: the delta's bands union-merge (per-doc
-        // independence — merged == full build), validator re-certifies
-        val bandsA = p.own(Dedup.minHashBands(existing, "doc_id",
-          "text", k = 5))
-        val bandsD = p.own(Dedup.minHashBands(delta, "doc_id", "text",
-          k = 5))
-        // LAZY union of the two checkpointed era tables (r17): its
-        // consumers (validator, audit) re-scan cached blocks instead
-        // of paying a third full band-table materialization
-        val bandsM = bandsA.unionByName(bandsD)
-        Dedup.validateMinHashBands(bandsM, "doc_id")
-        val dir = s"/tmp/graft_${s.sparkContext.applicationId}/" +
-          s"crawl90_${pathDigest(d)}"
-        val idx = sharedIvfPqIndex(s, d)
-        Quantization.persistIvfPqIndex(
-          idx.copy(codes = idx.codes.filter(col("nid") % 10 < 8)),
-          dir)
-        val codesBefore = p(s.read.parquet(dir + "/codes")
-          .select("nid"))
-        Quantization.ivfPqAddBatch(
-          T.embeddings(s, d).filter(col("vec_id") % 10 >= 8),
-          "vec_id", "embedding", dir)
-        Quantization.validateIvfPqCodes(s, dir)
-        val codesAfter = s.read.parquet(dir + "/codes").select("nid")
+        val swept = sweep(p, corpus, commit)
+        val (lcA, lcM) = swept.frames("boiler_counts")
         // the committed screen applied to the batch that brought it:
         // kept nonblank lines (count + trimmed char mass) under the
         // pre-commit screen vs the just-merged one
-        def keptLines(screened: DataFrame) = screened
+        def keptLines(counts: DataFrame) = Dedup.lineDedupAgainst(delta,
+            Dedup.boilerplateFromCounts(counts), "doc_id", "text")
           .select(explode(split(col("text"), "\n")).as("ln"))
           .filter(trim(col("ln")) =!= "")
           .select(length(trim(col("ln"))).cast("long").as("n"))
-        val scrA = keptLines(Dedup.lineDedupAgainst(delta,
-          Dedup.boilerplateFromCounts(lcA), "doc_id", "text"))
-        val scrM = keptLines(Dedup.lineDedupAgainst(delta,
-          Dedup.boilerplateFromCounts(lcM), "doc_id", "text"))
-        Seq(
-          audit("bm25_tf", tfA, tfM,
-            coalesce(sum(col("tf")), lit(0L))),
-          audit("boiler_counts", lcA, lcM,
-            coalesce(sum(col("cnt")), lit(0L))),
-          audit("delta_screen", scrA, scrM,
-            coalesce(sum(col("n")), lit(0L))),
-          audit("grouped_counts", glcA, glcM,
-            coalesce(sum(col("cnt")), lit(0L))),
-          audit("ivfpq_codes", codesBefore, codesAfter,
-            countDistinct(col("nid"))),
-          audit("kn_lm", knA, knM,
-            coalesce(sum(col("bf")), lit(0L))),
-          audit("lsh_bands", bandsA, bandsM,
-            countDistinct(col("doc_id"))),
-          audit("prefix_index", pidx.dfreq, pref.dfreq,
-            coalesce(sum(col("df")), lit(0L))))
-          .reduce(_ unionByName _).orderBy("artifact")
-          .localCheckpoint(true)
+        swept.report(
+          audit("delta_screen", keptLines(lcA), keptLines(lcM), total("n")))
       }
     }),
 
@@ -2316,22 +2187,18 @@ object LlmQueries {
     // 10 == 4) comes back with CHANGED content and must supersede its
     // old rows in EVERY maintained artifact. No artifact has an
     // in-place update — an update IS retract-old + merge-new, each
-    // side through its gate-green path WITH its validator run: the
-    // anti-join retraction + partial merge for the tf and KN
-    // snapshots, subtract + merge for the count tables, retract +
-    // refresh for the prefix-cross index, anti-join + re-band for
-    // the LSH band table (r16), remove_ids + add for the
-    // persisted IVF-PQ layout (the re-fetched page embeds
-    // differently). The fixture plants a stale banner (rev93stale)
-    // on the slice's ORIGINAL text and a fresh one (rev94signal) on
-    // its re-crawled text, and two extra audit rows prove the update
-    // flows through the SERVED artifact in both directions:
-    // 'update_out' (the stale token's postings: N docs before, zero
-    // after) and 'update_in' (the fresh token's: zero before, N
-    // after). The oracle replays every (rows, mass) pair from TWO
-    // fresh builds — the original corpus and the updated one — so
-    // hash equality proves retract-then-merge == a rebuild that only
-    // ever saw the new content, per artifact.
+    // side through its gate-green path WITH its validator run (the
+    // re-fetched page also embeds differently, so its vectors are
+    // removed and re-added). The fixture plants a stale banner
+    // (rev93stale) on the slice's ORIGINAL text and a fresh one
+    // (rev94signal) on its re-crawled text, and two extra audit rows
+    // prove the update flows through the SERVED artifact in both
+    // directions: 'update_out' (the stale token's postings: N docs
+    // before, zero after) and 'update_in' (the fresh token's: zero
+    // before, N after). The oracle replays every (rows, mass) pair
+    // from TWO fresh builds — the original corpus and the updated
+    // one — so hash equality proves retract-then-merge == a rebuild
+    // that only ever saw the new content, per artifact.
     "d91_recrawl_update" -> ((s, d) => {
       val stale = "stale pricing notice rev93stale"
       val fresh = "fresh revision notice rev94signal"
@@ -2342,16 +2209,13 @@ object LlmQueries {
         when(col("doc_id") % 10 === 4,
           concat(col("text"), lit("\n" + stale)))
           .otherwise(col("text")).as("text"))
-      val slice0 = docs0.filter(col("doc_id") % 10 === 4)
       val updated = T.documents(s, d)
         .filter(col("doc_id") % 10 === 4)
         .select(col("doc_id"), col("lang"),
           concat(col("text"), lit("\n" + fresh)).as("text"))
-      val updIds = updated.select("doc_id")
-      val updVecs = T.embeddings(s, d)
-        .filter(col("vec_id") % 10 === 4)
-        .select(col("vec_id"), transform(col("embedding"),
-          x => x * lit(0.5f) + lit(1.0f)).as("embedding"))
+      val vecs0 = T.embeddings(s, d).filter(col("vec_id") % 10 === 4)
+      val updVecs = vecs0.select(col("vec_id"), transform(col("embedding"),
+        x => x * lit(0.5f) + lit(1.0f)).as("embedding"))
       // refuse an empty re-crawl loudly BEFORE any artifact mutates:
       // the doc-side paths would all degrade vacuously, but the
       // IVF-PQ encode would die mid-sweep on an empty batch with an
@@ -2360,94 +2224,21 @@ object LlmQueries {
         "d91_recrawl_update: no re-crawled vectors (vec_id % 10 == " +
           "4) in this dataset - an empty update sweep has nothing " +
           "to supersede")
+      val recrawl = Change(
+        removed = Some(docs0.filter(col("doc_id") % 10 === 4)),
+        added = Some(updated), removedVecs = Some(vecs0),
+        addedVecs = Some(updVecs))
+      val corpus = Corpus(docs0, sharedIvfPqIndex(s, d),
+        s"/tmp/graft_${s.sparkContext.applicationId}/" +
+          s"recrawl91_${pathDigest(d)}")
       Pins.scope { p =>
-        val tf0 = p(Search.tfSnapshot(docs0, "doc_id", "text"))
-        val tfU = p(Search.mergeTfSnapshots(Seq(
-          graft.operators.Incremental.retractDocs(tf0, updIds),
-          Search.tfSnapshot(updated, "doc_id", "text"))))
-        Search.validateTfSnapshot(tfU)
-        val kn0 = p(TextAnalysis.knSnapshot(docs0, "doc_id", "text"))
-        val knU = p(TextAnalysis.mergeKnSnapshots(Seq(
-          graft.operators.Incremental.retractDocs(kn0, updIds),
-          TextAnalysis.knSnapshot(updated, "doc_id", "text"))))
-        TextAnalysis.validateKnSnapshot(knU)
-        val lc0 = p(Dedup.lineCountPartial(docs0, "text"))
-        val lcU = p(Dedup.mergeLineCounts(Seq(
-          Dedup.subtractLineCounts(lc0,
-            Dedup.lineCountPartial(slice0, "text")),
-          Dedup.lineCountPartial(updated, "text"))))
-        Dedup.validateLineCounts(lcU)
-        val glc0 = p(Dedup.groupedLineCountPartial(docs0, "lang",
-          "text"))
-        val glcU = p(Dedup.mergeGroupedLineCounts(Seq(
-          Dedup.subtractGroupedLineCounts(glc0,
-            Dedup.groupedLineCountPartial(slice0, "lang", "text")),
-          Dedup.groupedLineCountPartial(updated, "lang", "text"))))
-        Dedup.validateLineCounts(glcU)
-        val pidx = Dedup.prefixCrossIndex(docs0, "doc_id", "text",
-          k = 5, theta = 0.5)
-        pidx.frames.foreach(p.own)
-        // ONE composed update derivation (r17): retract-then-refresh
-        // == updatePrefixCrossIndex by sum associativity, and the
-        // intermediate index's prefix postings — which nothing here
-        // ever read — are no longer derived and checkpointed
-        val pUpd = Dedup.updatePrefixCrossIndex(pidx, updIds, updated,
-          "doc_id", "text")
-        pUpd.frames.foreach(p.own)
-        Dedup.validatePrefixCrossIndex(pUpd)
-        // the LSH band table: update = retract-old + band-new, like
-        // every other artifact (the re-fetched text re-bands — the
-        // doc's 64 band hashes change hands while cardinality is
-        // invariant, which is what the audit row shows)
-        val bands0 = p.own(Dedup.minHashBands(docs0, "doc_id", "text",
-          k = 5))
-        val bandsNew = p.own(Dedup.minHashBands(updated, "doc_id",
-          "text", k = 5))
-        // LAZY retract+union over the two checkpointed band tables
-        // (r17): one broadcast anti-join its two consumers re-run,
-        // instead of a third full band-table materialization
-        val bandsU = graft.operators.Incremental
-          .retractDocs(bands0, updIds).unionByName(bandsNew)
-        Dedup.validateMinHashBands(bandsU, "doc_id")
-        val dir = s"/tmp/graft_${s.sparkContext.applicationId}/" +
-          s"recrawl91_${pathDigest(d)}"
-        // persist resets the layout, so re-invocation is idempotent
-        // (the d90 discipline); the add encodes the re-fetched
-        // vectors against the FROZEN codebooks — update does not
-        // retrain, drift is d80/d87's job
-        Quantization.persistIvfPqIndex(sharedIvfPqIndex(s, d), dir)
-        val codesBefore = p(s.read.parquet(dir + "/codes")
-          .select("nid"))
-        Quantization.ivfPqRemoveBatch(
-          T.embeddings(s, d).filter(col("vec_id") % 10 === 4)
-            .select("vec_id"), "vec_id", dir)
-        Quantization.ivfPqAddBatch(updVecs, "vec_id", "embedding",
-          dir)
-        Quantization.validateIvfPqCodes(s, dir)
-        val codesAfter = s.read.parquet(dir + "/codes").select("nid")
-        Seq(
-          audit("bm25_tf", tf0, tfU,
-            coalesce(sum(col("tf")), lit(0L))),
-          audit("boiler_counts", lc0, lcU,
-            coalesce(sum(col("cnt")), lit(0L))),
-          audit("grouped_counts", glc0, glcU,
-            coalesce(sum(col("cnt")), lit(0L))),
-          audit("ivfpq_codes", codesBefore, codesAfter,
-            countDistinct(col("nid"))),
-          audit("kn_lm", kn0, knU,
-            coalesce(sum(col("bf")), lit(0L))),
-          audit("lsh_bands", bands0, bandsU,
-            countDistinct(col("doc_id"))),
-          audit("prefix_index", pidx.dfreq, pUpd.dfreq,
-            coalesce(sum(col("df")), lit(0L))),
-          audit("update_in", tf0.filter(col("t") === "rev94signal"),
-            tfU.filter(col("t") === "rev94signal"),
-            coalesce(sum(col("tf")), lit(0L))),
-          audit("update_out", tf0.filter(col("t") === "rev93stale"),
-            tfU.filter(col("t") === "rev93stale"),
-            coalesce(sum(col("tf")), lit(0L))))
-          .reduce(_ unionByName _).orderBy("artifact")
-          .localCheckpoint(true)
+        val swept = sweep(p, corpus, recrawl)
+        val (tf0, tfU) = swept.frames("bm25_tf")
+        def postings(row: String, t: String) = audit(row,
+          tf0.filter(col("t") === t), tfU.filter(col("t") === t),
+          total("tf"))
+        swept.report(postings("update_in", "rev94signal"),
+          postings("update_out", "rev93stale"))
       }
     }),
 
@@ -2823,22 +2614,6 @@ object LlmQueries {
     * across re-invocations), run 1 = the curated survivors — one
     * query both curates and records the before/after health signal
     * a data lead watches ([[healthRunsDelta]] reads it back). */
-  /** One audit row shared by the two sweep flagships (d89 takedown /
-    * d90 crawl-commit — explicit mirrors with ONE row schema, so a
-    * schema change cannot drift between the add and remove sides):
-    * physical row count plus an artifact-mass aggregate, before and
-    * after, as one-row aggregates crossJoined onto each other. */
-  private def audit(name: String, before: DataFrame, after: DataFrame,
-                    massAgg: Column): DataFrame = {
-    def one(df: DataFrame, suf: String) =
-      df.agg(count(lit(1)).as("rows_" + suf),
-        massAgg.cast("long").as("mass_" + suf))
-    one(before, "before").crossJoin(one(after, "after"))
-      .select(lit(name).as("artifact"),
-        col("rows_before"), col("rows_after"),
-        col("mass_before"), col("mass_after"))
-  }
-
   private[queries] def curationDag(s: SparkSession, d: String,
       nearDup: Boolean,
       stageDir: Option[String] = None,

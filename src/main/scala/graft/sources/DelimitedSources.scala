@@ -51,11 +51,6 @@ object DelimitedSources {
   def writeCsvReport(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").option("header", "true").csv(path)
 
-  /** TSV sink matching the reference's TODO-list outputs. */
-  def writeTsvReport(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").option("header", "true")
-      .option("sep", "\t").csv(path)
-
   /** JSONL sink — the LLM-training interchange format (one JSON object
     * per line; WebDataset/HF-datasets ingest shape). Spark's json sink
     * IS line-delimited JSON, partitioned into one file per task — at

@@ -62,7 +62,8 @@ class QueryPinsSpec extends SparkSpec {
                    "st_inc_grouped_boiler", "st_inc_grams",
                    "st_decontam_stream", "st_cross_near", "st_inc_prefix",
                    "st_inc_lsh_store", "inc_prefix_refresh",
-                   "inc_prefix_remove", "d12_dedup_survivors",
+                   "inc_prefix_remove", "d11_neardup_clusters",
+                   "d12_dedup_survivors",
                    "d89_takedown_sweep", "d90_crawl_commit",
                    "d91_recrawl_update", "d92_store_ingest")) {
     test(s"$name frees its pinned state before it returns") {
