@@ -63,10 +63,10 @@ object PlanDump {
         "Round 9: each (band, hash) bucket is capped at 64 members " +
         "before the self-join (rank window on the same key the join " +
         "shuffles on — no extra exchange), bounding clone-group " +
-        "candidates at O(m·B) instead of O(m²); ScaleProbe measured " +
-        "the uncapped path diverging (1.7→8.9 s as one clone group " +
-        "grows 500→4000) while the capped path stays flat (~1.5 s) — " +
-        "BENCH_SF1_r9.json."),
+        "candidates at O(m·B) instead of O(m²); BENCH_SF1_r9.json " +
+        "records the uncapped path diverging (1.7→8.9 s as one clone " +
+        "group grows 500→4000) while the capped path stays flat " +
+        "(~1.5 s)."),
     "d18_decontaminate" ->
       ("Corpus side never shuffles: benchmark n-gram hashes broadcast, " +
         "matches filtered at the scan, only survivors aggregate."),

@@ -147,6 +147,7 @@ object Incremental {
     * long-literal pruning predicates would then cast the COLUMN,
     * defeating partition pruning on exactly the path built for it. */
   private def readStore(spark: SparkSession, dir: String): DataFrame = {
+    finishSwap(spark, dir)
     val inferred = spark.read.parquet(dir)
     val sch = StructType(inferred.schema.map(f =>
       if (f.name == "batch") f.copy(dataType = LongType) else f))
@@ -161,6 +162,25 @@ object Incremental {
     * partition (at 100 TB the difference between a manifest lookup
     * and a full-store column scan per retraction). */
   private def manifestPath(dir: String): String = dir + "__manifest"
+
+  /** Where a compaction lands its fold before [[swapIntoPlace]]. */
+  private def compactTmp(dir: String): String = dir + "__compact_tmp"
+
+  /** Complete a compaction swap that a crash cut between its delete
+    * and its rename, for the store and for its manifest: where the
+    * layout is absent and its tempdir holds a committed fold
+    * (`_SUCCESS`), rename the fold into place. Listing only, no Spark
+    * job. A fold without the marker was cut mid-write while the old
+    * layout still existed, so it is never renamed in. */
+  private def finishSwap(spark: SparkSession, dir: String): Unit =
+    Seq(dir, manifestPath(dir)).foreach { d =>
+      val (fs, target) = fsFor(spark, d)
+      val tmp = new org.apache.hadoop.fs.Path(compactTmp(d))
+      if (!fs.exists(target) &&
+          fs.exists(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS")))
+        require(fs.rename(tmp, target),
+          s"could not rename the completed compaction $tmp into $d")
+    }
 
   /** Validation TIERS for the store entry points. Every write path
     * keeps its REFUSALS at both levels (empty/duplicate/null-id
@@ -276,6 +296,12 @@ object Incremental {
         requireNoNullIds(ids, id, dir)
         ids
       }
+      // a leftover compaction fold goes before the reset touches the
+      // store: were the overwrite below cut with `dir` deleted,
+      // finishSwap would otherwise rename that stale fold in as the
+      // store
+      Seq(dir, manifestPath(dir)).foreach(d =>
+        deleteIfExists(pinned.sparkSession, compactTmp(d)))
       // neutralize FIRST (see scaladoc): no ordering of store and
       // manifest writes can otherwise keep a reset's crash windows
       // out of the silent-miss class
@@ -461,6 +487,7 @@ object Incremental {
     // mistyped) dir silently birth a partial store — the old
     // readStore probe failed loudly on PATH_NOT_FOUND and this keeps
     // that refusal (r17 advice)
+    finishSwap(spark, dir)
     val (fs, p) = fsFor(spark, dir)
     require(fs.exists(p),
       s"$dir does not exist - initSnapshotStore creates it; " +
@@ -588,7 +615,7 @@ object Incremental {
     * every id maps to batch 0), which doubles as the repair for any
     * crash-residue drift [[validateSnapshotStoreManifest]] reports. */
   def compactSnapshotStore(spark: SparkSession, dir: String): Unit = {
-    val tmp = dir + "__compact_tmp"
+    val tmp = compactTmp(dir)
     // NOT routed through initSnapshotStore: its pin-once checkpoint
     // would materialize a corpus-sized copy before the write — here
     // the fold is a pure scan→write stream into tmp (no
@@ -622,7 +649,7 @@ object Incremental {
       .partitionBy("batch").mode("overwrite").parquet(tmp)
     swapIntoPlace(spark, tmp, dir)
     manifestId.foreach { id =>
-      val mtmp = manifestPath(dir) + "__compact_tmp"
+      val mtmp = compactTmp(manifestPath(dir))
       // null-free by the pre-swap guard above — one derivation, one
       // write, sourced from the FOLDED store
       readStore(spark, dir).select(col(id)).distinct()
@@ -933,15 +960,16 @@ object Incremental {
     * still intact, and only then does the old layout delete and the
     * tempdir rename into place — a crash before the swap loses
     * nothing, and a crash between the delete and the rename leaves
-    * the complete folded store at the tempdir path (recover by
-    * renaming it to `dir`; the error path cannot silently lose
-    * landed state, unlike an in-place overwrite whose only copy of
-    * the fold would die with the JVM). A store whose partials have
-    * fully cancelled folds to zero rows and the init refuses —
-    * rebuild from source when everything is retracted. */
+    * the complete folded store at the tempdir path, which the next
+    * read or commit renames into place ([[finishSwap]]; the error
+    * path cannot silently lose landed state, unlike an in-place
+    * overwrite whose only copy of the fold would die with the JVM).
+    * A store whose partials have fully cancelled folds to zero rows
+    * and the init refuses — rebuild from source when everything is
+    * retracted. */
   def compactRollupStore(spark: SparkSession, dir: String,
                          keys: Seq[String], sums: Seq[String]): Unit = {
-    val tmp = dir + "__compact_tmp"
+    val tmp = compactTmp(dir)
     // the fold reads dir; the write targets tmp — no self-overwrite,
     // so no checkpoint barrier is needed (and a leftover tmp from a
     // crashed compaction is simply overwritten)
@@ -1010,10 +1038,10 @@ object Incremental {
     * layout, rename the already-landed fold into its place. A crash
     * before the delete loses nothing (the store is untouched); a
     * crash between the delete and the rename leaves the complete
-    * folded store at the tempdir path — recover by renaming it to
-    * `dir`. No failure point can silently lose landed state, unlike
-    * an in-place overwrite whose only copy of the fold would die
-    * with the JVM.
+    * folded store at the tempdir path, and the next [[readStore]] or
+    * commit renames it into place ([[finishSwap]]). No failure point
+    * can silently lose landed state, unlike an in-place overwrite
+    * whose only copy of the fold would die with the JVM.
     *
     * The guarantee is scoped to ATOMIC-RENAME filesystems (HDFS,
     * POSIX — where a directory rename is one metadata operation).
@@ -1034,6 +1062,7 @@ object Incremental {
         s"store is intact at $tmp")
     require(fs.rename(new org.apache.hadoop.fs.Path(tmp), target),
       s"compaction could not rename $tmp into $dir - the folded " +
-        s"store is intact at $tmp; rename it into place to recover")
+        s"store is intact at $tmp; the next read or commit renames " +
+        "it into place")
   }
 }

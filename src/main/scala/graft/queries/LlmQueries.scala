@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Pins, Snapshots, Tables => T}
+import graft.core.{Fixtures, Pins, Snapshots, Tables => T}
 import graft.operators.{Clustering, Dedup, GraphOps, Mixing, Multimodal, QualityModel, Quantization, Search, Similarity, TextAnalysis}
 import graft.queries.MaintainedArtifacts.{Change, Corpus, audit, sweep, total}
 
@@ -28,71 +28,57 @@ object LlmQueries {
   private val D8Planes: Array[Array[Float]] =
     Similarity.rademacherPlanes(nbits = 8, dim = 64, seed = 42L)
 
-  /** The d51-family IVF-PQ index (nlist=4, m=4, ksub=4, 2+2 Lloyd
-    * rounds over the embeddings fixture) trained ONCE per (session,
-    * fixture) and PERSISTED to the cell-partitioned layout; every
-    * family member (d51, d57, d65, d66, st_ann_probe) loads and
-    * serves from it — the train-once / serve-many production
-    * topology, and the streamMemo precedent applied to the batch
-    * side. Training is deterministic and the persisted round-trip is
-    * exact (QuantizationSpec), so sharing cannot change any result;
-    * backing the memo with the on-disk layout (not a checkpoint)
-    * keeps it valid across Verify's per-query unpersist sweeps. */
   /** d50/d59 both train the SAME deterministic 6-merge BPE table
     * (d59 encodes under the merges d50 learns); train once per
     * (session, fixture) and hold the config-sized rows driver-side —
     * the merge table IS a driver artifact (one collected row per
     * round) in the operator already. */
-  private val bpeMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[(Int, String, String, String, Long)]]()
   private def sharedBpeMerges(s: SparkSession, d: String)
       : Seq[(Int, String, String, String, Long)] =
-    bpeMemo.computeIfAbsent(s.sparkContext.applicationId + "|" + d, _ =>
+    Fixtures.get(s, d, "bpe") {
       TextAnalysis.bpeTrain(T.documents(s, d), "text", merges = 6)
         .orderBy("step").collect()
         .map(r => (r.getInt(0), r.getString(1), r.getString(2),
-          r.getString(3), r.getLong(4))).toSeq)
+          r.getString(3), r.getLong(4))).toSeq
+    }
 
   /** d54/d68 both train the SAME deterministic logistic model; the
     * scored table materializes to parquet once per (session, fixture)
-    * — on-disk like the index memo, so it survives the correctness
+    * — on-disk like the index fixture, so it survives the correctness
     * dump's per-query unpersist sweeps, and parquet round-trips
     * longs/strings exactly. */
-  private val lrMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def sharedLrScores(s: SparkSession, d: String): DataFrame = {
-    val dir = lrMemo.computeIfAbsent(
-      s.sparkContext.applicationId + "|" + d, _ => {
-        val out = s"/tmp/graft_${s.sparkContext.applicationId}/" +
-          s"lr54_${pathDigest(d)}"
-        QualityModel.lrQualityScores(T.documents(s, d), "doc_id",
-            "text", label = col("lang") === "en", dims = 64, steps = 2,
-            eta = 0.5)
-          .write.mode("overwrite").parquet(out)
-        out
-      })
-    s.read.parquet(dir)
-  }
+  private def sharedLrScores(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(Fixtures.get(s, d, "lr54") {
+      val out = Fixtures.dir(s, d, "lr54")
+      QualityModel.lrQualityScores(T.documents(s, d), "doc_id",
+          "text", label = col("lang") === "en", dims = 64, steps = 2,
+          eta = 0.5)
+        .write.mode("overwrite").parquet(out)
+      out
+    })
 
-  private val ivfPqMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** The d51-family IVF-PQ index (nlist=4, m=4, ksub=4, 2+2 Lloyd
+    * rounds over the embeddings fixture) trained ONCE per (session,
+    * fixture) and PERSISTED to the cell-partitioned layout; every
+    * family member (d51, d57, d65, d66, st_ann_probe) loads and
+    * serves from it — the train-once / serve-many production
+    * topology. Training is deterministic and the persisted round-trip
+    * is exact (QuantizationSpec), so sharing cannot change any result;
+    * backing the fixture with the on-disk layout (not a checkpoint)
+    * keeps it valid across Verify's per-query unpersist sweeps. */
   private[queries] def sharedIvfPqIndex(
-      s: SparkSession, d: String): Quantization.IvfPqIndex = {
-    val dir = ivfPqMemo.computeIfAbsent(
-      s.sparkContext.applicationId + "|" + d, _ => {
-        val out = s"/tmp/graft_${s.sparkContext.applicationId}/" +
-          s"ivfpq51_${pathDigest(d)}"
-        Pins.scope { p =>
-          val built = Quantization.ivfPqIndex(T.embeddings(s, d),
-            "vec_id", "embedding", nlist = 4, coarseIters = 2, m = 4,
-            ksub = 4, pqIters = 2)
-          p.own(built.codes)
-          Quantization.persistIvfPqIndex(built, out)
-        }
-        out
-      })
-    Quantization.loadIvfPqIndex(s, dir)
-  }
+      s: SparkSession, d: String): Quantization.IvfPqIndex =
+    Quantization.loadIvfPqIndex(s, Fixtures.get(s, d, "ivfpq51") {
+      val out = Fixtures.dir(s, d, "ivfpq51")
+      Pins.scope { p =>
+        val built = Quantization.ivfPqIndex(T.embeddings(s, d),
+          "vec_id", "embedding", nlist = 4, coarseIters = 2, m = 4,
+          ksub = 4, pqIters = 2)
+        p.own(built.codes)
+        Quantization.persistIvfPqIndex(built, out)
+      }
+      out
+    })
 
   /** Force-build every (session, fixture)-memoized shared fixture —
     * the IVF-PQ layout, the BPE merge table, the LR score table —
@@ -495,8 +481,7 @@ object LlmQueries {
     // store, run 1 appends.
     "rp_health_runs" -> ((s, d) => {
       val docs = T.documents(s, d)
-      val dir = s"/tmp/graft_${s.sparkContext.applicationId}/" +
-        s"healthruns_${pathDigest(d)}"
+      val dir = Fixtures.dir(s, d, "healthruns")
       Snapshots.appendRun(
         corpusHealth(docs.filter(col("doc_id") % 10 =!= 9)),
         "crawl_000", 0, dir, overwrite = true)
@@ -625,8 +610,7 @@ object LlmQueries {
     // oracle derives the same rollup from the global cumsum alone, so
     // the round-trip (placement + layout + payload) is what's gated.
     "s20_shard_write" -> ((s, d) => {
-      val dir = s"/tmp/graft_${s.sparkContext.applicationId}/shards_" +
-        pathDigest(d)
+      val dir = Fixtures.dir(s, d, "shards")
       Mixing.writeShards(
         T.documents(s, d).select("doc_id", "lang", "n_chars"),
         "doc_id", "n_chars", budget = 4096, seqsPerShard = 16, dir)
@@ -673,8 +657,7 @@ object LlmQueries {
             concat(col("doc_id").cast("string"), lit("#split"))),
           "__sid", Seq(("train", 9800), ("valid", 100), ("test", 100)))
         .filter(col("split") === "train").drop("split", "__sid")
-      val dir = s"/tmp/graft_${s.sparkContext.applicationId}/" +
-        s"recipeshards_${pathDigest(d)}"
+      val dir = Fixtures.dir(s, d, "recipeshards")
       Mixing.writeShards(train, "doc_id", "n_chars", budget = 4096,
         seqsPerShard = 16, dir)
       s.read.parquet(dir)
@@ -888,8 +871,7 @@ object LlmQueries {
       val existing = src.filter(col("doc_id") % 5 =!= 0)
       val incoming = src.filter(col("doc_id") % 5 === 0)
       val I = graft.operators.Incremental
-      val dir = s"/tmp/graft_${s.sparkContext.applicationId}/" +
-        s"boilstore_${pathDigest(d)}"
+      val dir = Fixtures.dir(s, d, "boilstore")
       Pins.scope { p =>
         // two crawl eras commit their count partials
         I.initSnapshotStore(Dedup.lineCountPartial(
@@ -953,8 +935,7 @@ object LlmQueries {
       val existing = src.filter(col("doc_id") % 5 =!= 0)
       val incoming = src.filter(col("doc_id") % 5 === 0)
       val I = graft.operators.Incremental
-      val dir = s"/tmp/graft_${s.sparkContext.applicationId}/" +
-        s"lshstore_${pathDigest(d)}"
+      val dir = Fixtures.dir(s, d, "lshstore")
       // two crawl eras commit their banded rows (manifested — the
       // takedown below discovers by probe); lazy band plans — the
       // store write pins them itself, so each era's band table
@@ -1220,8 +1201,7 @@ object LlmQueries {
     // same Scala constants the oracle interpolates.
     "d86_curation_e2e" -> ((s, d) =>
       curationDag(s, d, nearDup = false,
-        healthRunsDir = Some(s"/tmp/graft_${s.sparkContext.applicationId}/" +
-          s"curhealth86_${pathDigest(d)}"))),
+        healthRunsDir = Some(Fixtures.dir(s, d, "curhealth86")))),
 
     // The curation DAG with the MinHash NEAR-dedup stage every
     // published pipeline (Gopher, RefinedWeb, FineWeb) runs after
@@ -1538,8 +1518,7 @@ object LlmQueries {
     // is certified is what is on disk.
     "inc_bm25_store" -> ((s, d) => {
       val docs = T.documents(s, d)
-      val dir = s"/tmp/graft_${s.sparkContext.applicationId}/" +
-        s"tfstore_${pathDigest(d)}"
+      val dir = Fixtures.dir(s, d, "tfstore")
       // manifested: init and commit maintain the id→batch manifest,
       // so the retraction below discovers its touched partitions
       // from one doc-count-sized probe instead of scanning every
@@ -1616,8 +1595,7 @@ object LlmQueries {
     // validators certify the LOADED store.
     "inc_kn_store" -> ((s, d) => {
       val docs = T.documents(s, d)
-      val dir = s"/tmp/graft_${s.sparkContext.applicationId}/" +
-        s"knstore_${pathDigest(d)}"
+      val dir = Fixtures.dir(s, d, "knstore")
       // manifested, as inc_bm25_store: retraction discovery probes
       // the id→batch manifest, and each load re-certifies it
       graft.operators.Incremental.initSnapshotStore(
@@ -1674,8 +1652,7 @@ object LlmQueries {
         lazy val snapOdd = p(Search.tfSnapshot(
           docs.filter(col("doc_id") % 2 =!= 0), "doc_id", "text"))
         def lifecycle(level: String): String = {
-          val dir = s"/tmp/graft_${s.sparkContext.applicationId}/" +
-            s"tfstore_${level}_${pathDigest(d)}"
+          val dir = Fixtures.dir(s, d, s"tfstore_$level")
           I.initSnapshotStore(snapEven, dir,
             manifestIdCol = Some("doc_id"), validate = level)
           I.commitSnapshotBatch(snapOdd, dir, 1L,
@@ -1726,8 +1703,7 @@ object LlmQueries {
     "rp_store_stats" -> ((s, d) => {
       val docs = T.documents(s, d)
       val I = graft.operators.Incremental
-      val base = s"/tmp/graft_${s.sparkContext.applicationId}/" +
-        s"storestats_${pathDigest(d)}"
+      val base = Fixtures.dir(s, d, "storestats")
       val factDir = s"$base/fact"
       val rollDir = s"$base/roll"
       I.initSnapshotStore(
@@ -1770,8 +1746,7 @@ object LlmQueries {
     // survivor-only scoring.
     "inc_ivfpq_remove" -> ((s, d) => {
       val idx = sharedIvfPqIndex(s, d)
-      val dir = s"/tmp/graft_${s.sparkContext.applicationId}/" +
-        s"ivfpqrm_${pathDigest(d)}"
+      val dir = Fixtures.dir(s, d, "ivfpqrm")
       Quantization.persistIvfPqIndex(idx, dir)
       Quantization.ivfPqRemoveBatch(
         T.embeddings(s, d).filter(col("vec_id") % 10 === 3)
@@ -1797,8 +1772,7 @@ object LlmQueries {
     // hash match proves the probed path serves bit-identical results.
     "inc_ivfpq_manifest" -> ((s, d) => {
       val idx = sharedIvfPqIndex(s, d)
-      val dir = s"/tmp/graft_${s.sparkContext.applicationId}/" +
-        s"ivfpqman_${pathDigest(d)}"
+      val dir = Fixtures.dir(s, d, "ivfpqman")
       Quantization.persistIvfPqIndex(idx, dir, manifest = true)
       Quantization.ivfPqRemoveBatch(
         T.embeddings(s, d).filter(col("vec_id") % 10 === 3)
@@ -2027,8 +2001,7 @@ object LlmQueries {
     // appearing among neighbors.)
     "inc_ivfpq_add" -> ((s, d) => {
       val idx = sharedIvfPqIndex(s, d)
-      val dir = s"/tmp/graft_${s.sparkContext.applicationId}/" +
-        s"ivfpqadd_${pathDigest(d)}"
+      val dir = Fixtures.dir(s, d, "ivfpqadd")
       Quantization.persistIvfPqIndex(
         idx.copy(codes = idx.codes.filter(col("nid") % 10 =!= 3)), dir)
       Quantization.ivfPqAddBatch(
@@ -2076,8 +2049,7 @@ object LlmQueries {
           transform(col("embedding"), x => x * 0.1 + 2.0)
             .as("embedding"))
       val union = base.unionByName(drift)
-      val dir = s"/tmp/graft_${s.sparkContext.applicationId}/" +
-        s"ivfpq87_${pathDigest(d)}"
+      val dir = Fixtures.dir(s, d, "ivfpq87")
       Pins.scope { p =>
         val baseIdx = Quantization.ivfPqIndex(base, "vec_id",
           "embedding", nlist = 4, coarseIters = 2, m = 4, ksub = 4,
@@ -2124,8 +2096,7 @@ object LlmQueries {
         removedVecs = Some(T.embeddings(s, d)
           .filter(col("vec_id") % 13 === 7)))
       val corpus = Corpus(docs, sharedIvfPqIndex(s, d),
-        s"/tmp/graft_${s.sparkContext.applicationId}/" +
-          s"takedown89_${pathDigest(d)}")
+        Fixtures.dir(s, d, "takedown89"))
       Pins.scope(p => sweep(p, corpus, takedown).report())
     }),
 
@@ -2164,8 +2135,7 @@ object LlmQueries {
       val idx = sharedIvfPqIndex(s, d)
       val corpus = Corpus(docs.filter(col("doc_id") % 10 < 8),
         idx.copy(codes = idx.codes.filter(col("nid") % 10 < 8)),
-        s"/tmp/graft_${s.sparkContext.applicationId}/" +
-          s"crawl90_${pathDigest(d)}")
+        Fixtures.dir(s, d, "crawl90"))
       Pins.scope { p =>
         val swept = sweep(p, corpus, commit)
         val (lcA, lcM) = swept.frames("boiler_counts")
@@ -2229,8 +2199,7 @@ object LlmQueries {
         added = Some(updated), removedVecs = Some(vecs0),
         addedVecs = Some(updVecs))
       val corpus = Corpus(docs0, sharedIvfPqIndex(s, d),
-        s"/tmp/graft_${s.sparkContext.applicationId}/" +
-          s"recrawl91_${pathDigest(d)}")
+        Fixtures.dir(s, d, "recrawl91"))
       Pins.scope { p =>
         val swept = sweep(p, corpus, recrawl)
         val (tf0, tfU) = swept.frames("bm25_tf")
@@ -2277,8 +2246,7 @@ object LlmQueries {
       val incoming = src.filter(col("doc_id") % 5 === 0)
       val existing = src.filter(col("doc_id") % 5 =!= 0)
       val I = graft.operators.Incremental
-      val base = s"/tmp/graft_${s.sparkContext.applicationId}/" +
-        s"ingest92_${pathDigest(d)}"
+      val base = Fixtures.dir(s, d, "ingest92")
       val bdir = base + "/bands"
       val gdir = base + "/glc"
       // two crawl eras commit each store: manifested band FACTS
@@ -2736,8 +2704,7 @@ object LlmQueries {
         .filter(col("split") === "train").drop("split", "__sid"),
         "s8_sampled")
       val tag = if (nearDup) "curation88" else "curation86"
-      val dir = s"/tmp/graft_${s.sparkContext.applicationId}/" +
-        s"${tag}_${pathDigest(d)}"
+      val dir = Fixtures.dir(s, d, tag)
       Mixing.writeShards(s8, "doc_id", "n_chars", budget = 1024,
         seqsPerShard = 4, dir)
       val shards = s.read.parquet(dir)
@@ -3304,67 +3271,46 @@ object LlmQueries {
         md5(col("doc_id").cast("string").cast("binary")).as("__rk"))
       .orderBy(col("__rk"), col("qid")).limit(128).drop("__rk")
 
-  /** Collision-free scratch-path suffix for a dataset dir: SHA-1 hex of
-    * the path string. `String.hashCode` (the previous key) is 32-bit —
-    * two dataset dirs colliding in one application would silently share
-    * a scratch path, the second write clobbering the first dataset's
-    * table while its memo entry still points there. */
-  private[queries] def pathDigest(d: String): String =
-    java.security.MessageDigest.getInstance("SHA-1")
-      .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString
-
   /** Materialized co-occurrence edge table (weight ≥ 2), shared by the
-    * whole g-family: the first caller in this JVM runs the two-exchange
-    * edge build ONCE and writes the (small — one row per supplier pair)
-    * table to the session's /tmp scratch root; later callers read the
-    * parquet. g1 consumes it whole; g4 and the CC labels build
-    * ([[cooccurLabels]]) take the weight ≥ 3 subset by filter — the
-    * filter is a scan-side predicate on the materialized table, not a
-    * rebuild. A plain `.cache()` cannot carry this across bench entries
-    * (Bench sweeps persisted blocks between queries by design), and at
-    * 100 TB an edge table consumed by three downstream jobs would be
-    * exactly this: a materialized intermediate, not three
-    * recomputations. */
-  private val edgesMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def cooccurEdges(s: SparkSession, d: String): DataFrame = {
-    val path = edgesMemo.computeIfAbsent(
-      s.sparkContext.applicationId + "|" + d, _ => {
-        val out = s"/tmp/graft_${s.sparkContext.applicationId}/cc_edges_" +
-          pathDigest(d)
-        GraphOps.coOccurrenceEdges(T.lineitem(s, d), "l_orderkey",
-            "l_suppkey", minWeight = 2L)
-          .write.mode("overwrite").parquet(out)
-        out
-      })
-    s.read.parquet(path)
-  }
+    * whole g-family: the first caller in this application runs the
+    * two-exchange edge build ONCE and writes the (small — one row per
+    * supplier pair) table under the application's fixture root; later
+    * callers read the parquet. g1 consumes it whole; g4 and the CC
+    * labels build ([[cooccurLabels]]) take the weight ≥ 3 subset by
+    * filter — the filter is a scan-side predicate on the materialized
+    * table, not a rebuild. A plain `.cache()` cannot carry this across
+    * bench entries (Bench sweeps persisted blocks between queries by
+    * design), and at 100 TB an edge table consumed by three downstream
+    * jobs would be exactly this: a materialized intermediate, not
+    * three recomputations. */
+  private def cooccurEdges(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(Fixtures.get(s, d, "cc_edges") {
+      val out = Fixtures.dir(s, d, "cc_edges")
+      GraphOps.coOccurrenceEdges(T.lineitem(s, d), "l_orderkey",
+          "l_suppkey", minWeight = 2L)
+        .write.mode("overwrite").parquet(out)
+      out
+    })
 
   /** Materialized co-occurrence CC labels, shared by g2/g3: the first
-    * caller in this JVM runs the fixpoint (over the shared
+    * caller in this application runs the fixpoint (over the shared
     * [[cooccurEdges]] table) and writes the (tiny — one row per
-    * supplier) labels table to the session's /tmp scratch root; later
-    * callers read the parquet. Bench consequence, documented for
+    * supplier) labels table under the application's fixture root;
+    * later callers read the parquet. Bench consequence, documented for
     * anyone reading the numbers: g2's in-suite time is the EDGE-READ +
     * fixpoint + labels write on first call and a parquet read on later
     * calls — it is not a per-query CC timing. */
-  private val labelsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def cooccurLabels(s: SparkSession, d: String): DataFrame = {
-    val path = labelsMemo.computeIfAbsent(
-      s.sparkContext.applicationId + "|" + d, _ => {
-        val out = s"/tmp/graft_${s.sparkContext.applicationId}/cc_labels_" +
-          pathDigest(d)
-        // the fixpoint's final localCheckpoint is freed once on disk
-        Pins.scope { p =>
-          p.own(GraphOps.connectedComponents(
-              cooccurEdges(s, d).filter(col("weight") >= 3L)))
-            .write.mode("overwrite").parquet(out)
-        }
-        out
-      })
-    s.read.parquet(path)
-  }
+  private def cooccurLabels(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(Fixtures.get(s, d, "cc_labels") {
+      val out = Fixtures.dir(s, d, "cc_labels")
+      // the fixpoint's final localCheckpoint is freed once on disk
+      Pins.scope { p =>
+        p.own(GraphOps.connectedComponents(
+            cooccurEdges(s, d).filter(col("weight") >= 3L)))
+          .write.mode("overwrite").parquet(out)
+      }
+      out
+    })
 
   /** d7 oracle: exact brute-force cosine top-3 for the 10% probe set
     * — also the ground-truth side of d63's recall join. */

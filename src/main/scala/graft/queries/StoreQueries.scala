@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.cdc.Cdc
-import graft.core.{Tables => T}
+import graft.core.{Fixtures, Tables => T}
 import graft.sources.{AlibStore, DbBridge, DelimitedSources, FileScan}
 
 /** Store-lifecycle, source/sink, and CDC-maintenance operators as
@@ -20,57 +20,20 @@ import graft.sources.{AlibStore, DbBridge, DelimitedSources, FileScan}
 object StoreQueries {
   type Q = (SparkSession, String) => DataFrame
 
-  /** Per-session scratch directory for the round-trip queries. Keyed by
-    * applicationId so two concurrent processes (sbt test vs the driver's
-    * Verify, or two bench runs) never race on the same path — the fixed
-    * /tmp paths used previously let one process delete a directory the
-    * other was mid-read on. A JVM shutdown hook removes the session
-    * root, so repeated runs do not accumulate Derby/parquet/CSV scratch
-    * under /tmp. */
-  private val hooked =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  private def scratch(s: SparkSession, name: String): String = {
-    val root = s"/tmp/graft_${s.sparkContext.applicationId}"
-    if (hooked.add(root))
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        scala.util.Try {
-          import java.nio.file.{Files, Paths}
-          import scala.jdk.CollectionConverters._
-          val p = Paths.get(root)
-          if (Files.exists(p)) {
-            // snapshot-with-close, then delete deepest-first; per-file
-            // Try because Derby/Spark shutdown hooks may still write
-            // here concurrently (best-effort cleanup)
-            val st = Files.walk(p)
-            val paths = try st.iterator().asScala.toVector finally st.close()
-            paths.reverse.foreach(f =>
-              scala.util.Try(Files.deleteIfExists(f)))
-          }
-        }))
-    s"$root/$name"
-  }
-
   /** The year-partitioned orders copy for s18, written ONCE per
     * (application, dataset dir) and read thereafter: re-running the
     * query must time the partition-pruned READ, not a rewrite, and two
     * concurrent constructions in one app must not race on one
-    * overwrite path. Keyed like [[LlmQueries]]' memos; the path uses a
-    * SHA-1 digest of the dataset dir (collision-free, unlike
-    * String.hashCode). */
-  private val partMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    * overwrite path. */
   private def partitionedOrders(s: SparkSession, d: String): String =
-    partMemo.computeIfAbsent(s.sparkContext.applicationId + "|" + d, _ => {
-      val digest = java.security.MessageDigest.getInstance("SHA-1")
-        .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      val root = scratch(s, s"orders_part_$digest")
+    Fixtures.get(s, d, "orders_part") {
+      val root = Fixtures.dir(s, d, "orders_part")
       graft.sources.Bucketed.writePartitioned(
         T.orders(s, d).withColumn("o_year",
           year(col("o_orderdate").cast("date"))),
         root, Seq("o_year"))
       root
-    })
+    }
 
   val defs: Map[String, Q] = Map(
     // S5: INSERT OR REPLACE upsert — incoming (10% of docs, lang
@@ -137,7 +100,7 @@ object StoreQueries {
       val src = T.customer(s, d).select(col("c_custkey"), col("c_name"),
         when(col("c_custkey") % 7 === 0, lit(null))
           .otherwise(col("c_mktsegment")).as("seg"))
-      val dir = scratch(s, "s12_tsv")
+      val dir = Fixtures.dir(s, "s12_tsv")
       src.write.mode("overwrite").option("sep", "\t")
         .option("nullValue", "\\N").option("header", "false")
         .option("quote", "").csv(dir)
@@ -151,12 +114,9 @@ object StoreQueries {
     // round-trip (the decode itself is the documented stub).
     "s1_scan_parse" -> ((s, d) => {
       implicit val sp: SparkSession = s
-      val root = java.nio.file.Paths.get(scratch(s, "s1_files"))
-      if (java.nio.file.Files.exists(root)) {
-        java.nio.file.Files.walk(root)
-          .sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => java.nio.file.Files.delete(p))
-      }
+      val dir = Fixtures.dir(s, "s1_files")
+      Fixtures.deleteTree(dir)
+      val root = java.nio.file.Paths.get(dir)
       java.nio.file.Files.createDirectories(root)
       T.nation(s, d)
         .select(col("n_name"),
@@ -181,7 +141,7 @@ object StoreQueries {
         struct(col("n_name").as("en")).as("labels"),
         struct(when(col("n_nationkey") % 2 === 0,
           concat(lit("mbid-"), col("n_nationkey"))).as("P434")).as("claims"))
-      val dir = scratch(s, "s13_wd")
+      val dir = Fixtures.dir(s, "s13_wd")
       src.write.mode("overwrite").json(dir)
       DelimitedSources.readWikidataEntities(s, dir, Seq("P434"))
         .orderBy("entity_id")
@@ -191,7 +151,7 @@ object StoreQueries {
     // the way back in).
     "s15_csv_roundtrip" -> ((s, d) => {
       val rep = T.nation(s, d).select(col("n_nationkey"), col("n_name"))
-      val dir = scratch(s, "s15_csv")
+      val dir = Fixtures.dir(s, "s15_csv")
       DelimitedSources.writeCsvReport(rep, dir)
       s.read.option("header", "true").schema(rep.schema).csv(dir)
         .orderBy("n_nationkey")
@@ -205,7 +165,7 @@ object StoreQueries {
       val docs = T.documents(s, d)
         .select(col("doc_id"), col("text"), col("lang"),
           col("source"), col("n_chars"))
-      val dir = scratch(s, "s19_jsonl")
+      val dir = Fixtures.dir(s, "s19_jsonl")
       DelimitedSources.writeJsonl(docs, dir)
       DelimitedSources.readJsonl(s, dir, docs.schema)
         .orderBy("doc_id")
@@ -219,7 +179,7 @@ object StoreQueries {
     "s6_jdbc_roundtrip" -> ((s, d) => {
       val props = new java.util.Properties()
       props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
-      val url = s"jdbc:derby:${scratch(s, "s6_derby")};create=true"
+      val url = s"jdbc:derby:${Fixtures.dir(s, "s6_derby")};create=true"
       val src = T.nation(s, d).select(col("n_nationkey"), col("n_name"),
         col("n_regionkey"),
         when(col("n_nationkey") % 3 === 0, lit(null))
@@ -237,7 +197,7 @@ object StoreQueries {
     // manifests are read back as lines and verified against the
     // expected action stream.
     "s10_export_files" -> ((s, d) => {
-      val out = scratch(s, "s10_export")
+      val out = Fixtures.dir(s, "s10_export")
       val dir = concat(lit("/lib/"), col("c_mktsegment"))
       val rows = T.customer(s, d).select(
         dir.as("__dirpath"),
@@ -403,7 +363,7 @@ object StoreQueries {
           concat(col("c_name"), lit("|missing")))
           .otherwise(concat(col("c_name"), lit("|DR"),
             (col("c_custkey") % 15).cast("int"))).as("value"))
-      val dir = scratch(s, "s14_dr")
+      val dir = Fixtures.dir(s, "s14_dr")
       lines.write.mode("overwrite").text(dir)
       DelimitedSources.readDrScores(s, dir)
         .orderBy("raw")

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Exprs, Pins, Tables => T}
+import graft.core.{Exprs, Fixtures, Pins, Tables => T}
 
 /** Event-time windowed aggregation (§2.11). The reference is batch-only;
   * these are the batch equivalents of the Structured Streaming jobs in
@@ -19,75 +19,77 @@ object StreamQueries {
   /** Run an AvailableNow streaming query ONCE per (application,
     * dataset, name), append each micro-batch to a scratch parquet
     * sink, and return the sink path; later callers read the
-    * materialized result. The memo keeps bench iterations from
-    * re-running the stream (a checkpoint replay would process zero new
-    * files — correct but misleading to time) and keeps two concurrent
-    * constructions from racing on one checkpoint. */
-  // The whole build (stage file → AvailableNow run → parquet write)
-  // executes inside computeIfAbsent, holding that bin's lock for the
-  // stream's runtime; an unrelated key hashing to the same bin would
-  // block. Accepted for this harness (queries run sequentially); a
-  // contended caller should memoize a lazy holder instead.
-  private val streamMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  /** `transform` runs INSIDE foreachBatch on each micro-batch before
+    * materialized result. The catalog entry keeps bench iterations
+    * from re-running the stream (a checkpoint replay would process
+    * zero new files — correct but misleading to time) and keeps two
+    * concurrent constructions from racing on one checkpoint.
+    * `transform` runs INSIDE foreachBatch on each micro-batch before
     * the sink write — the place for logic Structured Streaming cannot
     * express on the stream itself (window functions, multi-stage
     * aggregation), legal whenever the per-batch result depends only on
-    * that batch's rows plus static frames. */
+    * that batch's rows plus static frames. `build` turns the staged
+    * input dir into the stream; by default a plain file stream under
+    * `srcFile`'s schema. */
   private def materializedStream(s: SparkSession, d: String, name: String,
       srcFile: String, mode: String = "append",
       transform: DataFrame => DataFrame = identity)(
-      build: String => DataFrame): String =
-    streamMemo.computeIfAbsent(
-      s.sparkContext.applicationId + "|" + d + "|" + name, _ => {
-        import java.nio.file.{Files, Paths}
-        val digest = java.security.MessageDigest.getInstance("SHA-1")
-          .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString
-        val base = s"/tmp/graft_${s.sparkContext.applicationId}/" +
-          s"stream_${name}_$digest"
-        // the file stream source lists a DIRECTORY; the fixture tables
-        // are single files — stage the arriving table into the scratch
-        // input dir (at scale this dir IS the landing zone new files
-        // drop into between AvailableNow catch-up runs)
-        val in = s"$base/in"
-        Files.createDirectories(Paths.get(in))
-        // REPLACE_EXISTING: a failed earlier build in this JVM leaves
-        // the staged file behind without a memo entry; the retry must
-        // not trip over it
-        Files.copy(Paths.get(s"$d/$srcFile"), Paths.get(s"$in/$srcFile"),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        // same retry hazard for the sink and checkpoint: foreachBatch
-        // is at-least-once, so resuming a half-written append sink from
-        // a leftover checkpoint can double-append a replayed micro-batch
-        // into `out` — and the memoized result would feed the oracle
-        // hash duplicated rows. No memo entry ⇒ this build owns the
-        // dirs; start them empty.
-        def rmTree(p: String): Unit = {
-          val root = Paths.get(p)
-          if (Files.exists(root))
-            Files.walk(root).sorted(java.util.Comparator.reverseOrder())
-              .forEach(f => Files.delete(f))
+      build: String => DataFrame = fileStream(s, d, srcFile)): String =
+    staged(s, d, name, srcFile) { (in, base) =>
+      // append sinks accumulate batches; a complete-mode sink holds
+      // the full result each batch, so the LAST overwrite wins
+      graft.streaming.EventStream.runAvailableNow(build(in), s"$base/ckpt",
+        mode) { (b, _) =>
+        Pins.scope { p =>
+          val out = transform(b)
+          // an operator that seals its output (a bare local
+          // checkpoint) leaves the sink the only handle to it: free
+          // it once the batch has landed
+          if (Pins.isCheckpoint(out)) p.own(out)
+          out.write
+            .mode(if (mode == "complete") "overwrite" else "append")
+            .parquet(s"$base/out")
         }
-        rmTree(s"$base/out")
-        rmTree(s"$base/ckpt")
-        // append sinks accumulate batches; a complete-mode sink holds
-        // the full result each batch, so the LAST overwrite wins
-        graft.streaming.EventStream.runAvailableNow(build(in), s"$base/ckpt",
-          mode) { (b, _) =>
-          Pins.scope { p =>
-            val out = transform(b)
-            // an operator that seals its output (a bare local
-            // checkpoint) leaves the sink the only handle to it: free
-            // it once the batch has landed
-            if (Pins.isCheckpoint(out)) p.own(out)
-            out.write
-              .mode(if (mode == "complete") "overwrite" else "append")
-              .parquet(s"$base/out")
-          }
-        }
-        s"$base/out"
-      })
+      }
+    }
+
+  /** A file stream over the staged input dir `in`, under the schema of
+    * the dataset's `srcFile`. The schema read is a Spark job, so it
+    * runs only when a stream actually builds. */
+  private def fileStream(s: SparkSession, d: String, srcFile: String)(
+      in: String): DataFrame =
+    s.readStream.schema(s.read.parquet(s"$d/$srcFile").schema).parquet(in)
+
+  /** The staging both stream runners share, once per (application,
+    * dataset, name): copy the dataset's `srcFile` into `<base>/in`,
+    * start `<base>/out` and `<base>/ckpt` empty, let `run` fill
+    * `<base>/out`, and return that path. */
+  private def staged(s: SparkSession, d: String, name: String,
+      srcFile: String)(run: (String, String) => Unit): String =
+    Fixtures.get(s, d, s"stream_$name") {
+      import java.nio.file.{Files, Paths}
+      val base = Fixtures.dir(s, d, s"stream_$name")
+      // the file stream source lists a DIRECTORY; the fixture tables
+      // are single files — stage the arriving table into the scratch
+      // input dir (at scale this dir IS the landing zone new files
+      // drop into between AvailableNow catch-up runs)
+      val in = s"$base/in"
+      Files.createDirectories(Paths.get(in))
+      // REPLACE_EXISTING: a failed earlier build in this JVM leaves
+      // the staged file behind without a catalog entry; the retry must
+      // not trip over it
+      Files.copy(Paths.get(s"$d/$srcFile"), Paths.get(s"$in/$srcFile"),
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      // same retry hazard for the sink and checkpoint: foreachBatch
+      // is at-least-once, so resuming a half-written append sink from
+      // a leftover checkpoint can double-append a replayed micro-batch
+      // into `out` — and the cached result would feed the oracle
+      // hash duplicated rows. No catalog entry ⇒ this build owns the
+      // dirs; start them empty.
+      Fixtures.deleteTree(s"$base/out")
+      Fixtures.deleteTree(s"$base/ckpt")
+      run(in, base)
+      s"$base/out"
+    }
 
   /** Shared body of the IVF-PQ lifecycle twins (st_inc_ivfpq_add /
     * st_inc_ivfpq_remove): persist a starting layout, serve era A's
@@ -107,8 +109,7 @@ object StreamQueries {
       startCodes: DataFrame => DataFrame,
       mutateBetweenRuns: String => Unit): DataFrame = {
     val Q = graft.operators.Quantization
-    val dir = s"/tmp/graft_${s.sparkContext.applicationId}/" +
-      s"st${scratch}_${LlmQueries.pathDigest(d)}"
+    val dir = Fixtures.dir(s, d, s"st$scratch")
     val idx0 = LlmQueries.sharedIvfPqIndex(s, d)
     Q.persistIvfPqIndex(idx0.copy(codes = startCodes(idx0.codes)), dir)
     lazy val idxA = Q.loadIvfPqIndex(s, dir)
@@ -118,16 +119,10 @@ object StreamQueries {
       Q.ivfPqSearch(batch.filter(col("vec_id") % 20 === era * 10),
         "vec_id", "embedding", idx, nprobe = 2, topK = 3)
     val run1 = materializedStream(s, d, scratch + "A",
-      "embeddings.parquet", transform = serve(idxA, 0)) { in =>
-      val schema = s.read.parquet(s"$d/embeddings.parquet").schema
-      s.readStream.schema(schema).parquet(in)
-    }
+      "embeddings.parquet", transform = serve(idxA, 0))()
     mutateBetweenRuns(dir)
     val run2 = materializedStream(s, d, scratch + "B",
-      "embeddings.parquet", transform = serve(idxB, 1)) { in =>
-      val schema = s.read.parquet(s"$d/embeddings.parquet").schema
-      s.readStream.schema(schema).parquet(in)
-    }
+      "embeddings.parquet", transform = serve(idxB, 1))()
     s.read.parquet(run1).unionByName(s.read.parquet(run2))
       .orderBy("qid", "rank")
   }
@@ -139,42 +134,23 @@ object StreamQueries {
     * across batches. */
   private def materializedFold(s: SparkSession, d: String, name: String,
       srcFile: String, step: (Option[DataFrame], DataFrame) => DataFrame)(
-      build: String => DataFrame): String =
-    streamMemo.computeIfAbsent(
-      s.sparkContext.applicationId + "|" + d + "|" + name, _ => {
-        import java.nio.file.{Files, Paths}
-        val digest = java.security.MessageDigest.getInstance("SHA-1")
-          .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString
-        val base = s"/tmp/graft_${s.sparkContext.applicationId}/" +
-          s"stream_${name}_$digest"
-        val in = s"$base/in"
-        Files.createDirectories(Paths.get(in))
-        Files.copy(Paths.get(s"$d/$srcFile"), Paths.get(s"$in/$srcFile"),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        def rmTree(p: String): Unit = {
-          val root = Paths.get(p)
-          if (Files.exists(root))
-            Files.walk(root).sorted(java.util.Comparator.reverseOrder())
-              .forEach(f => Files.delete(f))
+      build: String => DataFrame = fileStream(s, d, srcFile)): String =
+    staged(s, d, name, srcFile) { (in, base) =>
+      // the scope owns every fold state: each batch's checkpoint
+      // replaces (and releases) the previous one, and the final
+      // state is freed once it is on disk
+      Pins.scope { p =>
+        var state: Option[DataFrame] = None
+        graft.streaming.EventStream.runAvailableNow(build(in),
+          s"$base/ckpt", "append") { (b, _) =>
+          val next = p(step(state, b))
+          state.foreach(p.release)
+          state = Some(next)
         }
-        rmTree(s"$base/out")
-        rmTree(s"$base/ckpt")
-        // the scope owns every fold state: each batch's checkpoint
-        // replaces (and releases) the previous one, and the final
-        // state is freed once it is on disk
-        Pins.scope { p =>
-          var state: Option[DataFrame] = None
-          graft.streaming.EventStream.runAvailableNow(build(in),
-            s"$base/ckpt", "append") { (b, _) =>
-            val next = p(step(state, b))
-            state.foreach(p.release)
-            state = Some(next)
-          }
-          state.getOrElse(s.emptyDataFrame)
-            .write.mode("overwrite").parquet(s"$base/out")
-        }
-        s"$base/out"
-      })
+        state.getOrElse(s.emptyDataFrame)
+          .write.mode("overwrite").parquet(s"$base/out")
+      }
+    }
 
   val defs: Map[String, Q] = Map(
     // S7's streaming twin AS AN ORACLE ROW: the incremental new-rows
@@ -187,9 +163,8 @@ object StreamQueries {
     // driver's hash gate.
     "st_s7_new" -> ((s, d) => {
       val out = materializedStream(s, d, "s7", "part.parquet") { in =>
-        val schema = s.read.parquet(s"$d/part.parquet").schema
         graft.streaming.EventStream.newRowsAntiJoin(
-            s.readStream.schema(schema).parquet(in),
+            fileStream(s, d, "part.parquet")(in),
             T.lineitem(s, d).filter(col("l_quantity") > 45),
             "p_partkey", "l_partkey")
           .select("p_partkey")
@@ -271,10 +246,7 @@ object StreamQueries {
         transform = batch =>
           graft.operators.Dedup.crossDupSpansAgainst(
             batch.filter(col("doc_id") % 5 === 0), seen,
-            "doc_id", "text")) { in =>
-        val schema = s.read.parquet(s"$d/documents.parquet").schema
-        s.readStream.schema(schema).parquet(in)
-      }
+            "doc_id", "text"))()
       s.read.parquet(out).orderBy("doc_id", "span_start")
     }),
 
@@ -299,10 +271,7 @@ object StreamQueries {
         transform = batch =>
           graft.operators.Dedup.prefixCrossJaccardAgainst(
             batch.filter(col("doc_id") % 7 === 0), idx,
-            "doc_id", "text")) { in =>
-        val schema = s.read.parquet(s"$d/documents.parquet").schema
-        s.readStream.schema(schema).parquet(in)
-      }
+            "doc_id", "text"))()
       s.read.parquet(out).orderBy("in_id", "ex_id")
     }),
 
@@ -318,10 +287,7 @@ object StreamQueries {
       val out = materializedStream(s, d, "annprobe", "embeddings.parquet",
         transform = batch => graft.operators.Quantization.ivfPqSearch(
           batch.filter(col("vec_id") % 10 === 0), "vec_id", "embedding",
-          idx, nprobe = 2, topK = 3)) { in =>
-        val schema = s.read.parquet(s"$d/embeddings.parquet").schema
-        s.readStream.schema(schema).parquet(in)
-      }
+          idx, nprobe = 2, topK = 3))()
       s.read.parquet(out).orderBy("qid", "rank")
     }),
 
@@ -345,10 +311,7 @@ object StreamQueries {
         transform = batch =>
           graft.operators.Dedup.lineDedupAgainst(
             planted(batch.filter(col("doc_id") % 5 === 0)), set,
-            "doc_id", "text")) { in =>
-        val schema = s.read.parquet(s"$d/documents.parquet").schema
-        s.readStream.schema(schema).parquet(in)
-      }
+            "doc_id", "text"))()
       s.read.parquet(out).orderBy("doc_id")
     }),
 
@@ -385,15 +348,9 @@ object StreamQueries {
           planted(batch.filter(col("doc_id") % 5 === 0
             && col("doc_id") % 2 === era)), set, "doc_id", "text")
       val run1 = materializedStream(s, d, "incboilA", "documents.parquet",
-        transform = screen(setA, era = 0)) { in =>
-        val schema = s.read.parquet(s"$d/documents.parquet").schema
-        s.readStream.schema(schema).parquet(in)
-      }
+        transform = screen(setA, era = 0))()
       val run2 = materializedStream(s, d, "incboilB", "documents.parquet",
-        transform = screen(setAB, era = 1)) { in =>
-        val schema = s.read.parquet(s"$d/documents.parquet").schema
-        s.readStream.schema(schema).parquet(in)
-      }
+        transform = screen(setAB, era = 1))()
       s.read.parquet(run1).unionByName(s.read.parquet(run2))
         .orderBy("doc_id")
     }),
@@ -448,15 +405,9 @@ object StreamQueries {
             planted(batch.filter(col("doc_id") % 5 === 0
               && col("doc_id") % 2 === era)), set, "doc_id", "text")
         val run1 = materializedStream(s, d, "boilrmA",
-          "documents.parquet", transform = screen(setFull, 0)) { in =>
-          val schema = s.read.parquet(s"$d/documents.parquet").schema
-          s.readStream.schema(schema).parquet(in)
-        }
+          "documents.parquet", transform = screen(setFull, 0))()
         val run2 = materializedStream(s, d, "boilrmB",
-          "documents.parquet", transform = screen(setRet, 1)) { in =>
-          val schema = s.read.parquet(s"$d/documents.parquet").schema
-          s.readStream.schema(schema).parquet(in)
-        }
+          "documents.parquet", transform = screen(setRet, 1))()
         s.read.parquet(run1).unionByName(s.read.parquet(run2))
           .orderBy("doc_id")
       }
@@ -494,8 +445,7 @@ object StreamQueries {
             lit("\n" + banner)).otherwise(lit(""))).as("text"))
       def existing = planted(T.documents(s, d)
         .filter(col("doc_id") % 5 =!= 0))
-      val dir = s"/tmp/graft_${s.sparkContext.applicationId}/" +
-        s"st_boilstore_${LlmQueries.pathDigest(d)}"
+      val dir = Fixtures.dir(s, d, "st_boilstore")
       Pins.scope { p =>
         // store mutations run UNCONDITIONALLY, outside the lazy serve
         // state (the st_inc_bm25_store discipline): memoized streams
@@ -524,10 +474,7 @@ object StreamQueries {
             planted(batch.filter(col("doc_id") % 5 === 0
               && col("doc_id") % 2 === era)), set, "doc_id", "text")
         val run1 = materializedStream(s, d, "boilstA",
-          "documents.parquet", transform = screen(setFull, 0)) { in =>
-          val schema = s.read.parquet(s"$d/documents.parquet").schema
-          s.readStream.schema(schema).parquet(in)
-        }
+          "documents.parquet", transform = screen(setFull, 0))()
         // the takedown lands BETWEEN the runs as a tombstone append
         // (after run1's serves — setFull is forced, or run1 was
         // memoized and never reads the store again), and the store
@@ -538,10 +485,7 @@ object StreamQueries {
           dir, Seq("key"), Seq("cnt"), batch = 2L)
         I.compactRollupStore(s, dir, Seq("key"), Seq("cnt"))
         val run2 = materializedStream(s, d, "boilstB",
-          "documents.parquet", transform = screen(setRet, 1)) { in =>
-          val schema = s.read.parquet(s"$d/documents.parquet").schema
-          s.readStream.schema(schema).parquet(in)
-        }
+          "documents.parquet", transform = screen(setRet, 1))()
         s.read.parquet(run1).unionByName(s.read.parquet(run2))
           .orderBy("doc_id")
       }
@@ -570,8 +514,7 @@ object StreamQueries {
       def planted(df: DataFrame) = LlmQueries.lshPlanted(df)
       def existing = planted(T.documents(s, d)
         .filter(col("doc_id") % 5 =!= 0))
-      val dir = s"/tmp/graft_${s.sparkContext.applicationId}/" +
-        s"st_lshstore_${LlmQueries.pathDigest(d)}"
+      val dir = Fixtures.dir(s, d, "st_lshstore")
       // lazy band plans: the store writes pin them, so each era's
       // band table materializes once (r17) — the signature barrier
       // frees after the write lands
@@ -616,10 +559,7 @@ object StreamQueries {
             bands, existing, "doc_id", "text", k = 5, theta = 0.7,
             storedCertified = true)
         val run1 = materializedStream(s, d, "lshstA",
-          "documents.parquet", transform = screen(bandsA, 0)) { in =>
-          val schema = s.read.parquet(s"$d/documents.parquet").schema
-          s.readStream.schema(schema).parquet(in)
-        }
+          "documents.parquet", transform = screen(bandsA, 0))()
         // the takedown + compaction land BETWEEN the runs (after run1
         // served — bandsA is pinned, or run1 was memoized and never
         // reads the store again)
@@ -627,10 +567,7 @@ object StreamQueries {
           existing.filter(col("doc_id") % 3 === 1).select("doc_id"))
         I.compactSnapshotStore(s, dir)
         val run2 = materializedStream(s, d, "lshstB",
-          "documents.parquet", transform = screen(bandsB, 1)) { in =>
-          val schema = s.read.parquet(s"$d/documents.parquet").schema
-          s.readStream.schema(schema).parquet(in)
-        }
+          "documents.parquet", transform = screen(bandsB, 1))()
         s.read.parquet(run1).unionByName(s.read.parquet(run2))
           .orderBy("in_id", "ex_id")
       }
@@ -663,15 +600,9 @@ object StreamQueries {
             .select("doc_id")
             .join(scores, Seq("doc_id"))
         val run1 = materializedStream(s, d, "knrmA",
-          "documents.parquet", transform = serve(scoresFull, 0)) { in =>
-          val schema = s.read.parquet(s"$d/documents.parquet").schema
-          s.readStream.schema(schema).parquet(in)
-        }
+          "documents.parquet", transform = serve(scoresFull, 0))()
         val run2 = materializedStream(s, d, "knrmB",
-          "documents.parquet", transform = serve(scoresRet, 1)) { in =>
-          val schema = s.read.parquet(s"$d/documents.parquet").schema
-          s.readStream.schema(schema).parquet(in)
-        }
+          "documents.parquet", transform = serve(scoresRet, 1))()
         s.read.parquet(run1).unionByName(s.read.parquet(run2))
           .orderBy("doc_id")
       }
@@ -704,15 +635,9 @@ object StreamQueries {
                 LlmQueries.bm25Qtext(col("text")).as("qtext")),
             "qid", "qtext", k = 5, materialize = false)
         val run1 = materializedStream(s, d, "bm25rmA",
-          "documents.parquet", transform = serve(tfFull, 0)) { in =>
-          val schema = s.read.parquet(s"$d/documents.parquet").schema
-          s.readStream.schema(schema).parquet(in)
-        }
+          "documents.parquet", transform = serve(tfFull, 0))()
         val run2 = materializedStream(s, d, "bm25rmB",
-          "documents.parquet", transform = serve(tfRet, 1)) { in =>
-          val schema = s.read.parquet(s"$d/documents.parquet").schema
-          s.readStream.schema(schema).parquet(in)
-        }
+          "documents.parquet", transform = serve(tfRet, 1))()
         s.read.parquet(run1).unionByName(s.read.parquet(run2))
           .orderBy("qid", "rank")
       }
@@ -752,15 +677,9 @@ object StreamQueries {
               LlmQueries.bm25Qtext(col("text")).as("qtext")),
           "qid", "qtext", k = 5, materialize = false)
       val run1 = materializedStream(s, d, "incbm25A",
-        "documents.parquet", transform = serve(tfA, 0)) { in =>
-        val schema = s.read.parquet(s"$d/documents.parquet").schema
-        s.readStream.schema(schema).parquet(in)
-      }
+        "documents.parquet", transform = serve(tfA, 0))()
       val run2 = materializedStream(s, d, "incbm25B",
-        "documents.parquet", transform = serve(tfAB, 1)) { in =>
-        val schema = s.read.parquet(s"$d/documents.parquet").schema
-        s.readStream.schema(schema).parquet(in)
-      }
+        "documents.parquet", transform = serve(tfAB, 1))()
       s.read.parquet(run1).unionByName(s.read.parquet(run2))
         .orderBy("qid", "rank")
     }),
@@ -782,8 +701,7 @@ object StreamQueries {
       val S = graft.operators.Search
       val I = graft.operators.Incremental
       Pins.scope { p =>
-        val dir = s"/tmp/graft_${s.sparkContext.applicationId}/" +
-          s"st_tfstore_${LlmQueries.pathDigest(d)}"
+        val dir = Fixtures.dir(s, d, "st_tfstore")
         // the store mutations run UNCONDITIONALLY, outside the lazy
         // serve state (the ivfPqLifecycleTwin discipline): the streams
         // MEMOIZE, so a retried invocation may skip run1 entirely — a
@@ -821,10 +739,7 @@ object StreamQueries {
                 LlmQueries.bm25Qtext(col("text")).as("qtext")),
             "qid", "qtext", k = 5, materialize = false)
         val run1 = materializedStream(s, d, "incbm25storeA",
-          "documents.parquet", transform = serve(tfA, 0)) { in =>
-          val schema = s.read.parquet(s"$d/documents.parquet").schema
-          s.readStream.schema(schema).parquet(in)
-        }
+          "documents.parquet", transform = serve(tfA, 0))()
         // era B's partial file-commits BETWEEN the runs, also
         // unconditionally — after run1's serves (tfA is forced, or
         // run1 was memoized and never reads the store again)
@@ -838,10 +753,7 @@ object StreamQueries {
         // layout and still hash-matches the st_inc_bm25 oracle
         I.compactSnapshotStore(s, dir)
         val run2 = materializedStream(s, d, "incbm25storeB",
-          "documents.parquet", transform = serve(tfAB, 1)) { in =>
-          val schema = s.read.parquet(s"$d/documents.parquet").schema
-          s.readStream.schema(schema).parquet(in)
-        }
+          "documents.parquet", transform = serve(tfAB, 1))()
         s.read.parquet(run1).unionByName(s.read.parquet(run2))
           .orderBy("qid", "rank")
       }
@@ -860,13 +772,9 @@ object StreamQueries {
       def ingest(name: String, pred: org.apache.spark.sql.Column) =
         materializedStream(s, d, name, "documents.parquet",
           transform = _.filter(pred)
-            .select("doc_id", "text", "lang")) { in =>
-          val schema = s.read.parquet(s"$d/documents.parquet").schema
-          s.readStream.schema(schema).parquet(in)
-        }
+            .select("doc_id", "text", "lang"))()
       val runA = ingest("healthA", col("doc_id") % 10 =!= 9)
-      val dir = s"/tmp/graft_${s.sparkContext.applicationId}/" +
-        s"healthruns_st_${LlmQueries.pathDigest(d)}"
+      val dir = Fixtures.dir(s, d, "healthruns_st")
       graft.core.Snapshots.appendRun(
         LlmQueries.corpusHealth(s.read.parquet(runA)),
         "crawl_000", 0, dir, overwrite = true)
@@ -916,15 +824,9 @@ object StreamQueries {
             .select("doc_id")
             .join(scores, Seq("doc_id"))
         val run1 = materializedStream(s, d, "incknA",
-          "documents.parquet", transform = serve(scoresA, 0)) { in =>
-          val schema = s.read.parquet(s"$d/documents.parquet").schema
-          s.readStream.schema(schema).parquet(in)
-        }
+          "documents.parquet", transform = serve(scoresA, 0))()
         val run2 = materializedStream(s, d, "incknB",
-          "documents.parquet", transform = serve(scoresAB, 1)) { in =>
-          val schema = s.read.parquet(s"$d/documents.parquet").schema
-          s.readStream.schema(schema).parquet(in)
-        }
+          "documents.parquet", transform = serve(scoresAB, 1))()
         s.read.parquet(run1).unionByName(s.read.parquet(run2))
           .orderBy("doc_id")
       }
@@ -941,8 +843,7 @@ object StreamQueries {
       val TA = graft.operators.TextAnalysis
       val I = graft.operators.Incremental
       Pins.scope { p =>
-        val dir = s"/tmp/graft_${s.sparkContext.applicationId}/" +
-          s"st_knstore_${LlmQueries.pathDigest(d)}"
+        val dir = Fixtures.dir(s, d, "st_knstore")
         // store mutations run UNCONDITIONALLY outside the lazy serve
         // state (the ivfPqLifecycleTwin discipline, as in
         // st_inc_bm25_store): memoized streams may skip a run on
@@ -968,18 +869,12 @@ object StreamQueries {
             .select("doc_id")
             .join(scores, Seq("doc_id"))
         val run1 = materializedStream(s, d, "incknstoreA",
-          "documents.parquet", transform = serve(scoresA, 0)) { in =>
-          val schema = s.read.parquet(s"$d/documents.parquet").schema
-          s.readStream.schema(schema).parquet(in)
-        }
+          "documents.parquet", transform = serve(scoresA, 0))()
         I.commitSnapshotBatch(TA.knSnapshot(
           T.documents(s, d).filter(col("doc_id") % 2 =!= 0),
           "doc_id", "text"), dir, 1L, manifestIdCol = Some("doc_id"))
         val run2 = materializedStream(s, d, "incknstoreB",
-          "documents.parquet", transform = serve(scoresAB, 1)) { in =>
-          val schema = s.read.parquet(s"$d/documents.parquet").schema
-          s.readStream.schema(schema).parquet(in)
-        }
+          "documents.parquet", transform = serve(scoresAB, 1))()
         s.read.parquet(run1).unionByName(s.read.parquet(run2))
           .orderBy("doc_id")
       }
@@ -1017,15 +912,9 @@ object StreamQueries {
             && col("doc_id") % 2 === era)), set, "doc_id", "lang",
           "text")
       val run1 = materializedStream(s, d, "incgboilA",
-        "documents.parquet", transform = screen(setA, era = 0)) { in =>
-        val schema = s.read.parquet(s"$d/documents.parquet").schema
-        s.readStream.schema(schema).parquet(in)
-      }
+        "documents.parquet", transform = screen(setA, era = 0))()
       val run2 = materializedStream(s, d, "incgboilB",
-        "documents.parquet", transform = screen(setAB, era = 1)) { in =>
-        val schema = s.read.parquet(s"$d/documents.parquet").schema
-        s.readStream.schema(schema).parquet(in)
-      }
+        "documents.parquet", transform = screen(setAB, era = 1))()
       s.read.parquet(run1).unionByName(s.read.parquet(run2))
         .orderBy("doc_id")
     }),
@@ -1048,15 +937,9 @@ object StreamQueries {
           batch.filter(col("doc_id") % 5 === 0
             && col("doc_id") % 2 === era), set, "doc_id", "text")
       val run1 = materializedStream(s, d, "incgramA", "documents.parquet",
-        transform = screen(setA, era = 0)) { in =>
-        val schema = s.read.parquet(s"$d/documents.parquet").schema
-        s.readStream.schema(schema).parquet(in)
-      }
+        transform = screen(setA, era = 0))()
       val run2 = materializedStream(s, d, "incgramB", "documents.parquet",
-        transform = screen(setM, era = 1)) { in =>
-        val schema = s.read.parquet(s"$d/documents.parquet").schema
-        s.readStream.schema(schema).parquet(in)
-      }
+        transform = screen(setM, era = 1))()
       s.read.parquet(run1).unionByName(s.read.parquet(run2))
         .orderBy("doc_id", "span_start")
     }),
@@ -1083,15 +966,9 @@ object StreamQueries {
           batch.filter(col("doc_id") % 7 === 0
             && col("doc_id") % 2 === era), idx, "doc_id", "text")
       val run1 = materializedStream(s, d, "incprefA", "documents.parquet",
-        transform = screen(idxA, era = 0)) { in =>
-        val schema = s.read.parquet(s"$d/documents.parquet").schema
-        s.readStream.schema(schema).parquet(in)
-      }
+        transform = screen(idxA, era = 0))()
       val run2 = materializedStream(s, d, "incprefB", "documents.parquet",
-        transform = screen(idxM, era = 1)) { in =>
-        val schema = s.read.parquet(s"$d/documents.parquet").schema
-        s.readStream.schema(schema).parquet(in)
-      }
+        transform = screen(idxM, era = 1))()
       s.read.parquet(run1).unionByName(s.read.parquet(run2))
         .orderBy("in_id", "ex_id")
     }),
@@ -1158,10 +1035,7 @@ object StreamQueries {
       val out = materializedStream(s, d, "decontam", "documents.parquet",
         transform = batch =>
           graft.operators.Dedup.decontaminate(
-            batch, "doc_id", "text", bench, "btext")) { in =>
-        val schema = s.read.parquet(s"$d/documents.parquet").schema
-        s.readStream.schema(schema).parquet(in)
-      }
+            batch, "doc_id", "text", bench, "btext"))()
       s.read.parquet(out).orderBy("doc_id")
     }),
 
@@ -1169,9 +1043,8 @@ object StreamQueries {
     // on the modified-rows condition, same contract as st_s7_new.
     "st_s8_modified" -> ((s, d) => {
       val out = materializedStream(s, d, "s8", "orders.parquet") { in =>
-        val schema = s.read.parquet(s"$d/orders.parquet").schema
         graft.streaming.EventStream.modifiedSemiJoin(
-            s.readStream.schema(schema).parquet(in),
+            fileStream(s, d, "orders.parquet")(in),
             T.lineitem(s, d),
             col("o_orderkey") === col("l_orderkey")
               && datediff(col("l_shipdate").cast("date"),
@@ -1240,10 +1113,7 @@ object StreamQueries {
         step = (st, b) => st match {
           case None => topn(b)
           case Some(prev) => topn(prev.unionByName(topn(b)))
-        }) { in =>
-        val schema = s.read.parquet(s"$d/documents.parquet").schema
-        s.readStream.schema(schema).parquet(in)
-      }
+        })()
       s.read.parquet(out).orderBy("doc_id")
     }),
 

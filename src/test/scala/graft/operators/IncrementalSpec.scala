@@ -540,6 +540,69 @@ class IncrementalSpec extends SparkSpec {
     assert(ex.getMessage.contains("empty"))
   }
 
+  /** The state a crash leaves between a compaction's delete and its
+    * rename: no store at `dir`, the complete fold at the tempdir. */
+  private def cutSwap(dir: String): Unit =
+    java.nio.file.Files.move(java.nio.file.Paths.get(dir),
+      java.nio.file.Paths.get(dir + "__compact_tmp"))
+
+  test("snapshot store: a compaction cut between its delete and its " +
+    "rename is finished by the next load or commit") {
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_swapgap").toString + "/s"
+    def tf(df: org.apache.spark.sql.DataFrame) =
+      Search.tfSnapshot(df, "doc_id", "text")
+    val man = Some("doc_id")
+    Incremental.initSnapshotStore(tf(storeDocs.filter(col("doc_id") <= 2)),
+      dir, manifestIdCol = man)
+    Incremental.commitSnapshotBatch(tf(storeDocs.filter(col("doc_id") > 2)),
+      dir, batch = 1L, manifestIdCol = man)
+    Incremental.compactSnapshotStore(spark, dir)
+    val before = rowSet(Incremental.loadSnapshotStore(spark, dir))
+    cutSwap(dir)
+    assert(rowSet(Incremental.loadSnapshotStore(spark, dir)) == before)
+    assert(!new java.io.File(dir + "__compact_tmp").exists())
+    // the same gap met first by a commit: the guards finish the swap
+    // and the batch lands on the folded store
+    Incremental.compactSnapshotStore(spark, dir)
+    cutSwap(dir)
+    Incremental.commitSnapshotBatch(
+      tf(Seq((9L, "zeta zeta")).toDF("doc_id", "text")), dir,
+      batch = 1L, manifestIdCol = man)
+    val after = Incremental.loadSnapshotStore(spark, dir)
+    assert(rowSet(after.filter(col("doc_id") =!= 9L)) == before)
+    assert(after.filter(col("doc_id") === 9L).count() == 2)
+    Incremental.validateSnapshotStoreManifest(spark, dir)
+    // a re-init deletes a leftover fold: no later read may rename a
+    // stale store in over the reset one
+    Incremental.compactSnapshotStore(spark, dir)
+    cutSwap(dir)
+    val fresh = tf(storeDocs.filter(col("doc_id") === 5L))
+    Incremental.initSnapshotStore(fresh, dir, manifestIdCol = man)
+    assert(!new java.io.File(dir + "__compact_tmp").exists())
+    assert(rowSet(Incremental.loadSnapshotStore(spark, dir)) ==
+      rowSet(fresh))
+  }
+
+  test("rollup store: a compaction cut between its delete and its " +
+    "rename is finished by the next load") {
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_rollgap").toString + "/s"
+    def counts(df: org.apache.spark.sql.DataFrame) = Dedup.lineCountPartial(
+      df.select(regexp_replace(col("text"), " ", "\n").as("text")), "text")
+    Incremental.initSnapshotStore(counts(storeDocs.filter(col("doc_id") <= 2)),
+      dir)
+    Incremental.commitSnapshotBatch(counts(storeDocs.filter(col("doc_id") > 2)),
+      dir, batch = 1L)
+    def fold() = rowSet(Incremental.loadRollupStore(spark, dir,
+      Seq("key"), Seq("cnt")))
+    Incremental.compactRollupStore(spark, dir, Seq("key"), Seq("cnt"))
+    val before = fold()
+    cutSwap(dir)
+    assert(fold() == before)
+    assert(!new java.io.File(dir + "__compact_tmp").exists())
+  }
+
   test("subtractRollups preserves a poisoned null cell instead of " +
     "laundering it to zero, while join nulls still mean absence") {
     // key 20 carries the corruption marker loadRollupStore emits (a

@@ -10,8 +10,9 @@ import graft.{SparkEntry, SparkSpec}
   * survivors and band builds — free those checkpoints before they
   * return: after the query, no RDD it persisted is still registered.
   * Each query runs against a private copy of the sf0.001 tables, so
-  * the per-(app, dataset) stream memo cannot skip the run because
-  * another suite in this JVM already served the same twin. */
+  * the fixture catalog's per-(app, dataset) streams cannot skip the
+  * run because another suite in this JVM already served the same
+  * twin. */
 class QueryPinsSpec extends SparkSpec {
 
   private lazy val fixture: String = {
@@ -65,7 +66,12 @@ class QueryPinsSpec extends SparkSpec {
                    "inc_prefix_remove", "d11_neardup_clusters",
                    "d12_dedup_survivors",
                    "d89_takedown_sweep", "d90_crawl_commit",
-                   "d91_recrawl_update", "d92_store_ingest")) {
+                   "d91_recrawl_update", "d92_store_ingest",
+                   "inc_boiler_store", "inc_lsh_store", "inc_bm25_store",
+                   "inc_kn_store", "inc_store_levels",
+                   "st_inc_boiler_store", "st_inc_bm25_store",
+                   "st_inc_kn_store", "st_dedup_stream",
+                   "st_inc_ivfpq_add", "st_inc_ivfpq_remove")) {
     test(s"$name frees its pinned state before it returns") {
       val leaked = leaves(name)
       assert(leaked.isEmpty, s"$name left ${leaked.size} persisted RDD(s)")
