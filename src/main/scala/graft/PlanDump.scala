@@ -388,9 +388,8 @@ object PlanDump {
         "comparisons against BENCH_QUERIES_r13.json's 13.4 s must " +
         "attribute the delta to the captures, not the DAG: solo warm " +
         "r14 is 13.14 s (BENCH_SOLO_r14.json) vs the r13 in-suite " +
-        "13.4 s. Round 14 also adds a durable parquet staging mode " +
-        "(stageDir) and the d88 near-dup variant; this entry's plan " +
-        "is the default checkpoint-staged exact-dedup shape."),
+        "13.4 s. Round 14 also adds the d88 near-dup variant; this " +
+        "entry's plan is the checkpoint-staged exact-dedup shape."),
     "d89_takedown_sweep" ->
       ("The retraction surface composed as ONE compliance operation: " +
         "a quarantined source leaves every maintained artifact in a " +

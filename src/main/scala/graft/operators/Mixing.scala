@@ -22,10 +22,6 @@ object Mixing {
     pmod(conv(substring(md5(id.cast("string")), 1, 8), 16, 10)
       .cast("long"), lit(10000L))
 
-  /** Keep a deterministic `rateBp`/10000 fraction of rows. */
-  def hashSample(df: DataFrame, idCol: String, rateBp: Int): DataFrame =
-    df.filter(bucket(col(idCol)) < rateBp)
-
   /** Stratified mixing: per-stratum keep rates in basis points (the
     * mixing-weights table of a corpus recipe), `defaultBp` for strata
     * not listed. One scan-side filter — no shuffle, no RNG. */
@@ -116,7 +112,7 @@ object Mixing {
     * estimated from the rows matching `targetFilter`, the source LM
     * from the whole corpus. Positive score ⇒ more target-like than
     * corpus-average; `keep` selects those rows (resampling = feed
-    * `keep` into [[hashSample]]-style thinning downstream).
+    * `keep` into [[bucket]]-threshold thinning downstream).
     *
     * Engine-exact by the d28 discipline: each term's log-ratio rounds
     * to integer MICROS before the per-doc sum, so document scores are

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.{Fixtures, Pins, Snapshots, Tables => T}
 import graft.operators.{Clustering, Dedup, GraphOps, Mixing, Multimodal, QualityModel, Quantization, Search, Similarity, TextAnalysis}
-import graft.queries.MaintainedArtifacts.{Change, Corpus, audit, sweep, total}
+import graft.queries.MaintainedArtifacts.{Change, Corpus, Lsh, audit, sweep, total}
 
 /** LLM training-data pipeline operators: dedup (exact / n-gram Jaccard /
   * MinHash-LSH / SimHash), ANN similarity search, text analysis,
@@ -764,11 +764,7 @@ object LlmQueries {
     // line on every 4th doc, so both sides carry it — the existing
     // side holds the canonical copies, incoming occurrences all drop).
     "d64_cross_line_dedup" -> ((s, d) => {
-      val boiler = "subscribe to our newsletter for updates today"
-      val src = T.documents(s, d).select(col("doc_id"),
-        when(col("doc_id") % 4 === 0,
-          concat(col("text"), lit("\n" + boiler)))
-          .otherwise(col("text")).as("text"))
+      val src = boilerPlanted(T.documents(s, d))
       val set = Dedup.boilerplateLineSet(
         src.filter(col("doc_id") % 5 =!= 0), "text", minCount = 3)
       Dedup.lineDedupAgainst(src.filter(col("doc_id") % 5 === 0), set,
@@ -782,11 +778,7 @@ object LlmQueries {
     // must equal d64's single-pass set — sum associativity is the
     // claim, the d64 oracle verbatim is the check.
     "inc_boilerplate" -> ((s, d) => {
-      val boiler = "subscribe to our newsletter for updates today"
-      val src = T.documents(s, d).select(col("doc_id"),
-        when(col("doc_id") % 4 === 0,
-          concat(col("text"), lit("\n" + boiler)))
-          .otherwise(col("text")).as("text"))
+      val src = boilerPlanted(T.documents(s, d))
       val existing = src.filter(col("doc_id") % 5 =!= 0)
       val partials = (0 to 2).map(b =>
         Dedup.lineCountPartial(
@@ -810,18 +802,7 @@ object LlmQueries {
     // incoming docs KEEP it — a takedown must also un-learn what the
     // taken-down docs taught the screen.
     "inc_boiler_remove" -> ((s, d) => {
-      val boiler = "subscribe to our newsletter for updates today"
-      val banner =
-        "temporary campaign banner from the quarantined source"
-      val plant = col("doc_id") % 7 === 1 || col("doc_id") === 2 ||
-        col("doc_id") === 9 || col("doc_id") % 10 === 0
-      val src = T.documents(s, d).select(col("doc_id"),
-        concat(
-          when(col("doc_id") % 4 === 0,
-            concat(col("text"), lit("\n" + boiler)))
-            .otherwise(col("text")),
-          when(plant, lit("\n" + banner)).otherwise(lit("")))
-          .as("text"))
+      val src = bannerPlanted(T.documents(s, d), col("doc_id") % 10 === 0)
       val existing = src.filter(col("doc_id") % 5 =!= 0)
       // no barrier: the count table is skinny (16-byte rows over the
       // distinct repeated lines), so the validator's pass and the
@@ -856,50 +837,30 @@ object LlmQueries {
     // it); 'compacted' — the fold-to-one-batch changes nothing a
     // reader can see (same replay, verbatim, twice).
     "inc_boiler_store" -> ((s, d) => {
-      val boiler = "subscribe to our newsletter for updates today"
-      val banner =
-        "temporary campaign banner from the quarantined source"
-      val plant = col("doc_id") % 7 === 1 || col("doc_id") === 2 ||
-        col("doc_id") === 9 || col("doc_id") % 10 === 0
-      val src = T.documents(s, d).select(col("doc_id"),
-        concat(
-          when(col("doc_id") % 4 === 0,
-            concat(col("text"), lit("\n" + boiler)))
-            .otherwise(col("text")),
-          when(plant, lit("\n" + banner)).otherwise(lit("")))
-          .as("text"))
+      val src = bannerPlanted(T.documents(s, d), col("doc_id") % 10 === 0)
       val existing = src.filter(col("doc_id") % 5 =!= 0)
       val incoming = src.filter(col("doc_id") % 5 === 0)
-      val I = graft.operators.Incremental
-      val dir = Fixtures.dir(s, d, "boilstore")
+      val store = MaintainedArtifacts.boilerStore(s,
+        Fixtures.dir(s, d, "boilstore"))
       Pins.scope { p =>
         // two crawl eras commit their count partials
-        I.initSnapshotStore(Dedup.lineCountPartial(
-          existing.filter(col("doc_id") % 2 === 0), "text"), dir)
-        I.commitSnapshotBatch(Dedup.lineCountPartial(
-          existing.filter(col("doc_id") % 2 =!= 0), "text"), dir, 1L)
+        store.eras(existing)
         // each phase folds the store, validates the MERGED table
         // (tombstone partials legitimately hold negative rows; the
         // fold must not), screens, and checkpoints EAGERLY — the
         // next phase mutates the store this plan read
-        def screen(phase: String): DataFrame = {
-          val counts = I.loadRollupStore(s, dir, Seq("key"),
-            Seq("cnt"))
-          Dedup.validateLineCounts(counts)
+        def screen(phase: String): DataFrame =
           p(Dedup.lineDedupAgainst(incoming,
-              Dedup.boilerplateFromCounts(counts, minCount = 3),
+              Dedup.boilerplateFromCounts(store.load(), minCount = 3),
               "doc_id", "text")
             .select(lit(phase).as("phase"), col("doc_id"),
               col("text"), col("n_removed")))
-        }
         val committed = screen("committed")
         // the takedown lands as an APPEND: the quarantined slice's
         // partial, negated — no landed partition is touched
-        I.retractFromRollupStore(Dedup.lineCountPartial(
-            existing.filter(col("doc_id") % 7 === 1), "text"),
-          dir, Seq("key"), Seq("cnt"), batch = 2L)
+        store.retract(existing.filter(col("doc_id") % 7 === 1))
         val retracted = screen("retracted")
-        I.compactRollupStore(s, dir, Seq("key"), Seq("cnt"))
+        store.compact()
         val compacted = screen("compacted")
         committed.unionByName(retracted).unionByName(compacted)
           .orderBy("phase", "doc_id")
@@ -934,28 +895,11 @@ object LlmQueries {
       val src = lshPlanted(T.documents(s, d))
       val existing = src.filter(col("doc_id") % 5 =!= 0)
       val incoming = src.filter(col("doc_id") % 5 === 0)
-      val I = graft.operators.Incremental
-      val dir = Fixtures.dir(s, d, "lshstore")
+      val store = MaintainedArtifacts.bandStore(s,
+        Fixtures.dir(s, d, "lshstore"))
       // two crawl eras commit their banded rows (manifested — the
-      // takedown below discovers by probe); lazy band plans — the
-      // store write pins them itself, so each era's band table
-      // materializes once (r17), with the signature barrier freed
-      // after the write lands
-      Pins.scope { p =>
-        I.initSnapshotStore(Dedup.minHashBandsLazy(p,
-            existing.filter(col("doc_id") % 2 === 0), "doc_id", "text",
-            k = 5),
-          dir, manifestIdCol = Some("doc_id"))
-        // the store declares its LSH parameters (the sidecar every
-        // durable band store must carry — see requireBandParams)
-        Dedup.writeBandParams(s, dir, k = 5, numPerm = 256, bands = 64)
-      }
-      Pins.scope { p =>
-        I.commitSnapshotBatch(Dedup.minHashBandsLazy(p,
-            existing.filter(col("doc_id") % 2 =!= 0), "doc_id", "text",
-            k = 5),
-          dir, 1L, manifestIdCol = Some("doc_id"))
-      }
+      // takedown below discovers by probe)
+      store.eras(existing)
       // each phase serves from what is ON DISK and re-certifies the
       // manifest; the screen output checkpoints eagerly inside the
       // operator, so the retraction between phases cannot invalidate
@@ -966,33 +910,25 @@ object LlmQueries {
         // band it once and let every screen probe the shared table
         // (r17: three identical bandings collapsed to one)
         val inB = p.own(Dedup.minHashBands(incoming, "doc_id", "text",
-          k = 5))
+          Lsh.k, Lsh.numPerm, Lsh.bands))
         def screen(phase: String): DataFrame = {
-          // full certification, ONE job (r18): params sidecar, manifest
-          // sync, roster completeness (a doc whose band rows were ALL
-          // lost refuses here), and per-id structure (exactly 64 rows
-          // spanning [0,64)) all fold into certifyBandStore's single
-          // store scan — the same refusals the old four-job sequence
-          // made, each with its distinct diagnosis, at a third of the
-          // certification scans per phase
-          Dedup.certifyBandStore(s, dir, "doc_id", k = 5,
-            numPerm = 256, bands = 64)
-          val stored = I.loadSnapshotStore(s, dir)
-          val out = p.own(Dedup.lshScreenAgainst(incoming, stored,
-            existing, "doc_id", "text", k = 5, theta = 0.7,
-            incomingBands = Some(inB), storedCertified = true))
+          // the load runs the full one-job certification (params
+          // sidecar, manifest sync, roster completeness, per-id band
+          // structure), so the screen skips its own band-range check
+          val out = p.own(Dedup.lshScreenAgainst(incoming, store.load(),
+            existing, "doc_id", "text", Lsh.k, theta = 0.7, Lsh.numPerm,
+            Lsh.bands, incomingBands = Some(inB), storedCertified = true))
           out.select(lit(phase).as("phase"), col("in_id"),
             col("ex_id"), col("jac"))
         }
         val committed = screen("committed")
-        I.retractFromSnapshotStore(s, dir,
-          existing.filter(col("doc_id") % 3 === 1).select("doc_id"))
+        store.retract(existing.filter(col("doc_id") % 3 === 1))
         val retracted = screen("retracted")
         // third phase: fold the band partitions to a single batch-0
         // layout (+ exact manifest rebuild) — compaction must be
         // result-invisible, so its serve replays the retracted
         // oracle VERBATIM (the inc_boiler_store discipline)
-        I.compactSnapshotStore(s, dir)
+        store.compact()
         val compacted = screen("compacted")
         committed.unionByName(retracted).unionByName(compacted)
           .orderBy("phase", "in_id", "ex_id")
@@ -1518,67 +1454,39 @@ object LlmQueries {
     // is certified is what is on disk.
     "inc_bm25_store" -> ((s, d) => {
       val docs = T.documents(s, d)
-      val dir = Fixtures.dir(s, d, "tfstore")
-      // manifested: init and commit maintain the id→batch manifest,
-      // so the retraction below discovers its touched partitions
-      // from one doc-count-sized probe instead of scanning every
-      // partition's id column; each validator pass below also
-      // certifies the manifest against the store on disk
-      graft.operators.Incremental.initSnapshotStore(
-        Search.tfSnapshot(docs.filter(col("doc_id") % 2 === 0),
-          "doc_id", "text"), dir, manifestIdCol = Some("doc_id"))
-      graft.operators.Incremental.commitSnapshotBatch(
-        Search.tfSnapshot(docs.filter(col("doc_id") % 2 =!= 0),
-          "doc_id", "text"), dir, 1L,
-        manifestIdCol = Some("doc_id"))
+      // manifested: the retraction below discovers its touched
+      // partitions from one doc-count-sized probe instead of scanning
+      // every partition's id column, and each load also certifies the
+      // manifest against the store on disk
+      val store = MaintainedArtifacts.tfStore(s,
+        Fixtures.dir(s, d, "tfstore"))
+      store.eras(docs)
       // each loaded snapshot pins ONCE before serving (the
       // inc_bm25_refresh caller discipline, blessed by the
       // tfSnapshot scaladoc): perPostFrom derives postings, dl, df
       // and the corpus scalars from the snapshot in separate
       // subplans, and an unpinned store scan would re-read the
-      // parquet for each; both serve results are themselves
-      // checkpointed (materialize=true), so the pins free on exit
+      // parquet for each
       Pins.scope { p =>
-        val full = p(graft.operators.Incremental
-          .loadSnapshotStore(s, dir))
-        Search.validateTfSnapshot(full)
-        graft.operators.Incremental.validateSnapshotStoreManifest(
-          s, dir)
-        // materialize=false: both phases stay lazy plans over their
-        // PINNED snapshots (checkpoint blocks survive the store
-        // rewrite below), and the one eager checkpoint on the final
+        // materialize=false: every phase stays a lazy plan over its
+        // PINNED snapshot (checkpoint blocks survive the store
+        // rewrites below), and the one eager checkpoint on the final
         // union — inside the scope — materializes everything before
         // the scope frees the pins; a per-phase output checkpoint
-        // would just leak two blocks past the return
-        val committed = Search.bm25TopKIndexed(full,
-            bm25QueryBatch(docs), "qid", "qtext", k = 5,
-            materialize = false)
-          .select(lit("committed").as("phase"), col("qid"),
-            col("rank"), col("doc_id"), col("score_micros"))
-        graft.operators.Incremental.retractFromSnapshotStore(s, dir,
-          docs.filter(col("doc_id") % 10 === 3).select("doc_id"))
-        val after = p(graft.operators.Incremental
-          .loadSnapshotStore(s, dir))
-        Search.validateTfSnapshot(after)
-        graft.operators.Incremental.validateSnapshotStoreManifest(
-          s, dir)
+        // would just leak blocks past the return
+        def serve(phase: String, probe: DataFrame): DataFrame =
+          Search.bm25TopKIndexed(p(store.load()), probe, "qid", "qtext",
+              k = 5, materialize = false)
+            .select(lit(phase).as("phase"), col("qid"),
+              col("rank"), col("doc_id"), col("score_micros"))
+        val committed = serve("committed", bm25QueryBatch(docs))
+        store.retract(docs.filter(col("doc_id") % 10 === 3))
         val probe16 = docs.filter(col("doc_id") % 16 === 3)
           .select(col("doc_id").as("qid"),
             bm25Qtext(col("text")).as("qtext"))
-        val retracted = Search.bm25TopKIndexed(after, probe16,
-            "qid", "qtext", k = 5, materialize = false)
-          .select(lit("retracted").as("phase"), col("qid"),
-            col("rank"), col("doc_id"), col("score_micros"))
-        graft.operators.Incremental.compactSnapshotStore(s, dir)
-        val folded = p(graft.operators.Incremental
-          .loadSnapshotStore(s, dir))
-        Search.validateTfSnapshot(folded)
-        graft.operators.Incremental.validateSnapshotStoreManifest(
-          s, dir)
-        val compacted = Search.bm25TopKIndexed(folded, probe16,
-            "qid", "qtext", k = 5, materialize = false)
-          .select(lit("compacted").as("phase"), col("qid"),
-            col("rank"), col("doc_id"), col("score_micros"))
+        val retracted = serve("retracted", probe16)
+        store.compact()
+        val compacted = serve("compacted", probe16)
         committed.unionByName(retracted).unionByName(compacted)
           .orderBy("phase", "qid", "rank")
           .localCheckpoint(true)
@@ -1595,34 +1503,22 @@ object LlmQueries {
     // validators certify the LOADED store.
     "inc_kn_store" -> ((s, d) => {
       val docs = T.documents(s, d)
-      val dir = Fixtures.dir(s, d, "knstore")
       // manifested, as inc_bm25_store: retraction discovery probes
       // the id→batch manifest, and each load re-certifies it
-      graft.operators.Incremental.initSnapshotStore(
-        TextAnalysis.knSnapshot(docs.filter(col("doc_id") % 2 === 0),
-          "doc_id", "text"), dir, manifestIdCol = Some("doc_id"))
-      graft.operators.Incremental.commitSnapshotBatch(
-        TextAnalysis.knSnapshot(docs.filter(col("doc_id") % 2 =!= 0),
-          "doc_id", "text"), dir, 1L,
-        manifestIdCol = Some("doc_id"))
-      val full = graft.operators.Incremental.loadSnapshotStore(s, dir)
-      TextAnalysis.validateKnSnapshot(full)
-      graft.operators.Incremental.validateSnapshotStoreManifest(s, dir)
-      // materialize=true checkpoints the committed scores before the
-      // retraction rewrites the directories they were scanned from
-      val committed = TextAnalysis.knScoreFromSnapshot(full)
-        .select(lit("committed").as("phase"), col("doc_id"),
-          col("n_bigrams"), col("sum_logp_micros"),
-          col("mean_logp_micros"))
-      graft.operators.Incremental.retractFromSnapshotStore(s, dir,
-        docs.filter(col("doc_id") % 5 === 4).select("doc_id"))
-      val after = graft.operators.Incremental.loadSnapshotStore(s, dir)
-      TextAnalysis.validateKnSnapshot(after)
-      graft.operators.Incremental.validateSnapshotStoreManifest(s, dir)
-      val retracted = TextAnalysis.knScoreFromSnapshot(after)
-        .select(lit("retracted").as("phase"), col("doc_id"),
-          col("n_bigrams"), col("sum_logp_micros"),
-          col("mean_logp_micros"))
+      val store = MaintainedArtifacts.knStore(s,
+        Fixtures.dir(s, d, "knstore"))
+      store.eras(docs)
+      def scored(phase: String): DataFrame =
+        TextAnalysis.knScoreFromSnapshot(store.load())
+          .select(lit(phase).as("phase"), col("doc_id"),
+            col("n_bigrams"), col("sum_logp_micros"),
+            col("mean_logp_micros"))
+      // knScoreFromSnapshot checkpoints (materialize=true), so the
+      // committed scores survive the retraction rewriting the
+      // directories they were scanned from
+      val committed = scored("committed")
+      store.retract(docs.filter(col("doc_id") % 5 === 4))
+      val retracted = scored("retracted")
       committed.unionByName(retracted).orderBy("phase", "doc_id")
     }),
 
@@ -2245,32 +2141,15 @@ object LlmQueries {
       val src = d92Planted(T.documents(s, d))
       val incoming = src.filter(col("doc_id") % 5 === 0)
       val existing = src.filter(col("doc_id") % 5 =!= 0)
-      val I = graft.operators.Incremental
       val base = Fixtures.dir(s, d, "ingest92")
-      val bdir = base + "/bands"
-      val gdir = base + "/glc"
+      val bandStore = MaintainedArtifacts.bandStore(s, base + "/bands")
+      val countStore = MaintainedArtifacts.groupedStore(s, base + "/glc")
       // two crawl eras commit each store: manifested band FACTS
       // (id-keyed file-level retraction), append-only grouped count
       // PARTIALS (tombstone retraction). init resets both stores, so
       // the query is idempotent across re-invocations.
-      Pins.scope { p =>
-        I.initSnapshotStore(Dedup.minHashBandsLazy(p,
-            existing.filter(col("doc_id") % 2 === 0), "doc_id", "text",
-            k = 5),
-          bdir, manifestIdCol = Some("doc_id"))
-        Dedup.writeBandParams(s, bdir, k = 5, numPerm = 256, bands = 64)
-      }
-      Pins.scope { p =>
-        I.commitSnapshotBatch(Dedup.minHashBandsLazy(p,
-            existing.filter(col("doc_id") % 2 =!= 0), "doc_id", "text",
-            k = 5),
-          bdir, 1L, manifestIdCol = Some("doc_id"))
-      }
-      I.initSnapshotStore(Dedup.groupedLineCountPartial(
-        existing.filter(col("doc_id") % 2 === 0), "lang", "text"), gdir)
-      I.commitSnapshotBatch(Dedup.groupedLineCountPartial(
-        existing.filter(col("doc_id") % 2 =!= 0), "lang", "text"),
-        gdir, 1L)
+      bandStore.eras(existing)
+      countStore.eras(existing)
       Pins.scope { p =>
         def funnelAgg(df: DataFrame) =
           df.agg(count(lit(1)).as("n_docs"),
@@ -2298,7 +2177,7 @@ object LlmQueries {
             .select(col("keeper").as("doc_id")),
           Seq("doc_id")))
         lazy val s1Bands = p.own(Dedup.minHashBands(s1Shared, "doc_id",
-          "text", k = 5))
+          "text", Lsh.k, Lsh.numPerm, Lsh.bands))
         // ...and so are the stage-0/1 funnel aggregates (one row each):
         // both phases emit the SAME numbers under different labels, so
         // the corpus scan behind '0_incoming' and the s1 pass behind
@@ -2310,21 +2189,17 @@ object LlmQueries {
         // phases mutates the stores these plans read
         def ingest(phase: String, survivors: DataFrame): DataFrame = {
           // re-certify EVERY touched store before serving from it:
-          // the band store's params + manifest sync + roster
-          // completeness + per-id structure fold into
-          // certifyBandStore's ONE store scan (r18 — was four jobs
-          // and three full band-table scans per phase), and the
-          // rollup fold keeps its non-negativity validator
-          Dedup.certifyBandStore(s, bdir, "doc_id", k = 5,
-            numPerm = 256, bands = 64)
-          val bands = I.loadSnapshotStore(s, bdir)
-          val counts = I.loadRollupStore(s, gdir, Seq("grp", "key"),
-            Seq("cnt"))
-          Dedup.validateLineCounts(counts)
+          // the band store's load certifies in ONE store scan (params
+          // + manifest sync + roster completeness + per-id
+          // structure), and the rollup fold keeps its non-negativity
+          // validator
+          val bands = bandStore.load()
+          val counts = countStore.load()
           val s1 = s1Shared
           val flagged = p.own(Dedup.lshScreenAgainst(s1, bands,
-            survivors, "doc_id", "text", k = 5, theta = 0.7,
-            incomingBands = Some(s1Bands), storedCertified = true))
+            survivors, "doc_id", "text", Lsh.k, theta = 0.7, Lsh.numPerm,
+            Lsh.bands, incomingBands = Some(s1Bands),
+            storedCertified = true))
           // s2 stays LAZY (the d89-d91 r17 treatment): one broadcast
           // anti-join over the pinned s1 and the checkpointed flagged
           // set, re-run by its two consumers (the screen, its funnel
@@ -2363,11 +2238,8 @@ object LlmQueries {
         // facts (manifested discovery), a negated-partial tombstone
         // append on the rollup counts
         val quarantined = existing.filter(col("doc_id") % 3 === 1)
-        I.retractFromSnapshotStore(s, bdir,
-          quarantined.select("doc_id"))
-        I.retractFromRollupStore(
-          Dedup.groupedLineCountPartial(quarantined, "lang", "text"),
-          gdir, Seq("grp", "key"), Seq("cnt"), batch = 2L)
+        bandStore.retract(quarantined)
+        countStore.retract(quarantined)
         val retracted = ingest("retracted",
           existing.filter(col("doc_id") % 3 =!= 1))
         committed.unionByName(retracted)
@@ -2554,25 +2426,12 @@ object LlmQueries {
     * files. Every stage is the gate-green kernel itself (shared
     * defs, not copies).
     *
-    * Staging: by default each stage output `localCheckpoint(true)`s
-    * once (freed on exit) — the single-machine shape: the funnel
-    * aggregation reads checkpoint blocks instead of re-deriving the
-    * chain N times, and downstream stages scan flat lineage. At
-    * CLUSTER scale executor-local checkpoint blocks die with their
-    * executor and Spark cannot recompute truncated lineage, so a
-    * lost executor mid-DAG kills the run — pass `stageDir` and each
-    * stage instead writes job-dir parquet and reads it back (the
-    * pattern the shard stage already uses), at the cost of one disk
-    * round-trip per stage. Scope of the durable mode: every STAGE
-    * BOUNDARY is durable (downstream scans and the funnel read
-    * job-dir parquet, and a production restart can resume from the
-    * last landed stage directory), while work IN FLIGHT inside a
-    * stage still recomputes from the previous stage's parquet on
-    * executor loss — with one caveat: the near-dup stage's candidate
-    * kernel ([[graft.operators.Dedup.minHashLshPairs]]) keeps its
-    * own internal checkpoint barriers, so that single stage retains
-    * the executor-loss exposure until its output parquet lands.
-    * Same rows either way (spec-asserted in both DAG shapes).
+    * Staging: each stage output `localCheckpoint(true)`s once (freed
+    * on exit) — the single-machine shape: the funnel aggregation
+    * reads checkpoint blocks instead of re-deriving the chain N
+    * times, and downstream stages scan flat lineage. Checkpoint
+    * blocks die with their executor, so at cluster scale a lost
+    * executor mid-DAG kills the run.
     *
     * `healthRunsDir`: when set, the flagship's last act APPENDS two
     * aggregate-only [[corpusHealth]] captures to the run-keyed
@@ -2584,15 +2443,8 @@ object LlmQueries {
     * a data lead watches ([[healthRunsDelta]] reads it back). */
   private[queries] def curationDag(s: SparkSession, d: String,
       nearDup: Boolean,
-      stageDir: Option[String] = None,
       healthRunsDir: Option[String] = None): DataFrame = {
     Pins.scope { p =>
-      def stage(df: DataFrame, name: String): DataFrame = stageDir match {
-        case Some(dir) =>
-          df.write.mode("overwrite").parquet(s"$dir/$name")
-          s.read.parquet(s"$dir/$name")
-        case None => p(df)
-      }
       val raw = T.documents(s, d)
       val ws = TextAnalysis.wordTokens(col("text"))
       val nChunks = greatest(ceil(size(ws) / lit(12.0)).cast("int"),
@@ -2637,26 +2489,24 @@ object LlmQueries {
           when(col("doc_id") % 68 === 2, canonText)
             .when(col("doc_id") % 68 === 36, nearText)
         else when(col("doc_id") % 34 === 2, canonText)
-      val s0 = stage(raw.select(col("doc_id"), col("lang"),
-        planted.otherwise(array_join(pageLines, "\n")).as("text")),
-        "s0_raw")
-      val s1 = stage(s0.select(col("doc_id"), col("lang"),
-        TextAnalysis.stripMarkupKeepLines(col("text")).as("text")),
-        "s1_markup")
+      val s0 = p(raw.select(col("doc_id"), col("lang"),
+        planted.otherwise(array_join(pageLines, "\n")).as("text")))
+      val s1 = p(s0.select(col("doc_id"), col("lang"),
+        TextAnalysis.stripMarkupKeepLines(col("text")).as("text")))
       // lang rides THROUGH the stage operators (r18): c4LineRules and
       // the line screen below are per-doc projections/rebuilds, so the
       // column passes for free — the old shape re-joined each stage
       // onto its predecessor just to recover it (two
       // BroadcastHashJoins per DAG, gone from the stage plans)
-      val s2 = stage(TextAnalysis.c4LineRules(s1, "doc_id", "text",
+      val s2 = p(TextAnalysis.c4LineRules(s1, "doc_id", "text",
           passThrough = Seq("lang"))
         .filter(col("page_kept"))
-        .select(col("doc_id"), col("lang"), col("text")), "s2_c4")
-      val s3 = stage(s2.join(
+        .select(col("doc_id"), col("lang"), col("text")))
+      val s3 = p(s2.join(
         gopherFullGate(s2).filter(col("full_pass")).select("doc_id"),
-        Seq("doc_id")), "s3_gopher")
-      val s4 = stage(s3.select(col("doc_id"), col("lang"),
-        TextAnalysis.piiRedact(col("text")).as("text")), "s4_pii")
+        Seq("doc_id")))
+      val s4 = p(s3.select(col("doc_id"), col("lang"),
+        TextAnalysis.piiRedact(col("text")).as("text")))
       val keepers = Dedup.priorityDedup(
         s4.withColumn("src",
           when(col("doc_id") % 3 === 0, lit("cc"))
@@ -2665,27 +2515,26 @@ object LlmQueries {
         "doc_id", "text", "src",
         Map("curated" -> 0, "books" -> 1, "cc" -> 2))
         .select(col("keeper").as("doc_id"))
-      val s5 = stage(s4.join(keepers, Seq("doc_id")), "s5_dedup")
+      val s5 = p(s4.join(keepers, Seq("doc_id")))
       val s5n = if (!nearDup) s5 else {
         // the gate-green d5 kernel on the stage-5 survivors; drop
         // every doc with a >= theta near-dup of smaller id (id_a <
         // id_b by construction, so the drop set is the id_b side)
         val pairs = p.own(Dedup.minHashLshPairs(s5, "doc_id", "text",
           k = 5, theta = 0.7))
-        stage(s5.join(pairs.select(col("id_b").as("doc_id")).distinct(),
-          Seq("doc_id"), "left_anti"), "s6_neardup")
+        p(s5.join(pairs.select(col("id_b").as("doc_id")).distinct(),
+          Seq("doc_id"), "left_anti"))
       }
       val screen = Dedup.boilerplateLineSet(s5n, "text", minCount = 3)
-      val s6 = stage(Dedup.lineDedupAgainst(s5n, screen, "doc_id", "text",
+      val s6 = p(Dedup.lineDedupAgainst(s5n, screen, "doc_id", "text",
           passThrough = Seq("lang"))
-        .select(col("doc_id"), col("lang"), col("text")), "s6_screen")
+        .select(col("doc_id"), col("lang"), col("text")))
       val bench = s6.filter(col("doc_id") % 37 === 0)
         .select(concat_ws(" ",
           slice(split(col("text"), "\\s+"), 1, 15)).as("btext"))
       val hits = Dedup.decontaminate(s6, "doc_id", "text", bench,
         "btext").select("doc_id")
-      val s7 = stage(s6.join(hits, Seq("doc_id"), "left_anti"),
-        "s7_decontam")
+      val s7 = p(s6.join(hits, Seq("doc_id"), "left_anti"))
       val withN = s7.withColumn("n_chars",
         length(col("text")).cast("long"))
       val ratesBp = Mixing.boostKeepRatesBp(
@@ -2697,12 +2546,11 @@ object LlmQueries {
       val sampled = Mixing.stratifiedSample(
         withN.select("doc_id", "lang", "n_chars"),
         "doc_id", "lang", ratesBp, defaultBp = 0)
-      val s8 = stage(Mixing.assignSplit(
+      val s8 = p(Mixing.assignSplit(
           sampled.withColumn("__sid",
             concat(col("doc_id").cast("string"), lit("#split"))),
           "__sid", Seq(("train", 9800), ("valid", 100), ("test", 100)))
-        .filter(col("split") === "train").drop("split", "__sid"),
-        "s8_sampled")
+        .filter(col("split") === "train").drop("split", "__sid"))
       val tag = if (nearDup) "curation88" else "curation86"
       val dir = Fixtures.dir(s, d, tag)
       Mixing.writeShards(s8, "doc_id", "n_chars", budget = 1024,
@@ -2746,9 +2594,7 @@ object LlmQueries {
               col("n_docs"), col("n_chars"), col("id_checksum"),
               col("n_shards"))))
         .reduce(_ unionByName _).orderBy("stage_idx")
-      // durable mode keeps even the returned funnel off executor-local
-      // blocks: its branches scan the landed stage parquet directly
-      if (stageDir.isDefined) funnel else funnel.localCheckpoint(true)
+      funnel.localCheckpoint(true)
     }
   }
 
@@ -3499,6 +3345,33 @@ object LlmQueries {
     pairwiseCrossSql("SELECT doc_id, text FROM documents",
       "a.doc_id % 7 = 0", "b.doc_id % 7 <> 0", "0.5") +
       "\nORDER BY in_id, ex_id"
+
+  /** The line-screen planted corpus (d64, inc_boilerplate,
+    * inc_bloom_screen and their stream twins): one shared boilerplate
+    * line appended to every 4th doc, so the existing and the incoming
+    * side both carry it. */
+  private[queries] def boilerPlanted(df: DataFrame): DataFrame =
+    df.select(col("doc_id"), boilerText.as("text"))
+
+  private def boilerText: Column =
+    when(col("doc_id") % 4 === 0,
+      concat(col("text"),
+        lit("\nsubscribe to our newsletter for updates today")))
+      .otherwise(col("text"))
+
+  /** The quarantined-source corpus (inc_boiler_remove, inc_boiler_store
+    * and their stream twins): [[boilerPlanted]] plus a banner line on
+    * the to-be-retracted %7==1 docs, two innocents (2 and 9) and the
+    * incoming docs `probe` selects. Before the takedown the banner
+    * counts ≥ 3 and screens; after it, it falls to 2 and the probes
+    * keep it. */
+  private[queries] def bannerPlanted(df: DataFrame,
+                                     probe: Column): DataFrame =
+    df.select(col("doc_id"), concat(boilerText,
+      when(col("doc_id") % 7 === 1 || col("doc_id") === 2 ||
+          col("doc_id") === 9 || probe,
+        lit("\ntemporary campaign banner from the quarantined source"))
+        .otherwise(lit(""))).as("text"))
 
   /** The inc_lsh_store / st_inc_lsh_store planted corpus — ONE
     * definition so the batch query, the streaming twin and the

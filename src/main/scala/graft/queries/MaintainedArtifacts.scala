@@ -19,7 +19,12 @@ import graft.operators.{Dedup, Incremental, Quantization, Search, TextAnalysis}
   * several consumers read them. A snapshot or band after-state that is
   * one anti-join or union over pinned frames stays LAZY: its two
   * consumers (validator, audit) re-run it for less than a second
-  * corpus-scale copy costs. Count-table after-states are pinned. */
+  * corpus-scale copy costs. Count-table after-states are pinned.
+  *
+  * The five artifacts with a durable [[Incremental]] store also have a
+  * [[Store]] handle, built from the same row function as their
+  * registry entry; the lifecycle queries drive their stores only
+  * through it. */
 private[queries] object MaintainedArtifacts {
 
   /** What the artifacts are built from: the documents (doc_id, lang,
@@ -60,6 +65,32 @@ private[queries] object MaintainedArtifacts {
   }
 
   def total(c: String): Column = coalesce(sum(col(c)), lit(0L))
+
+  // how documents become each artifact's rows: one definition, shared
+  // by the registry entry and the artifact's durable store
+  private val tfRows: DataFrame => DataFrame =
+    Search.tfSnapshot(_, "doc_id", "text")
+  private val knRows: DataFrame => DataFrame =
+    TextAnalysis.knSnapshot(_, "doc_id", "text")
+  private val lineRows: DataFrame => DataFrame =
+    Dedup.lineCountPartial(_, "text")
+  private val groupedRows: DataFrame => DataFrame =
+    Dedup.groupedLineCountPartial(_, "lang", "text")
+
+  /** The LSH parameters of the band artifact, its durable store and
+    * every screen served from that store. */
+  private[queries] object Lsh {
+    val k = 5
+    val numPerm = 256
+    val bands = 64
+  }
+
+  /** The band store's rows: [[Dedup.minHashBands]]' lazy plan, whose
+    * signature checkpoint belongs to `p`, so `p` must outlive the
+    * plan's materialization. */
+  private def bandRows(p: Pins, docs: DataFrame): DataFrame =
+    Dedup.minHashBandsLazy(p, docs, "doc_id", "text", Lsh.k,
+      Lsh.numPerm, Lsh.bands)
 
   /** A per-doc snapshot (tf cells, KN bigram counts): every corpus
     * rollup derives downstream, so a retraction is one anti-join, and
@@ -122,7 +153,8 @@ private[queries] object MaintainedArtifacts {
     * and an add unions the batch's own bands (merged == full build). */
   private val lshBands = new Frame("lsh_bands", countDistinct(col("doc_id"))) {
     private def bands(p: Pins, docs: DataFrame) =
-      p.own(Dedup.minHashBands(docs, "doc_id", "text", k = 5))
+      p.own(Dedup.minHashBands(docs, "doc_id", "text", Lsh.k, Lsh.numPerm,
+        Lsh.bands))
     def build(p: Pins, c: Corpus) = bands(p, c.docs)
     def apply(p: Pins, before: DataFrame, ch: Change) = {
       val kept = ch.removedIds.fold(before)(
@@ -164,14 +196,14 @@ private[queries] object MaintainedArtifacts {
 
   /** In sweep order. */
   val registry: Seq[Artifact[_]] = Seq(
-    snapshot("bm25_tf", "tf", Search.tfSnapshot(_, "doc_id", "text"),
-      Search.mergeTfSnapshots, Search.validateTfSnapshot),
-    snapshot("kn_lm", "bf", TextAnalysis.knSnapshot(_, "doc_id", "text"),
-      TextAnalysis.mergeKnSnapshots, TextAnalysis.validateKnSnapshot),
-    counts("boiler_counts", Dedup.lineCountPartial(_, "text"),
-      Dedup.subtractLineCounts, Dedup.mergeLineCounts),
-    counts("grouped_counts", Dedup.groupedLineCountPartial(_, "lang", "text"),
-      Dedup.subtractGroupedLineCounts, Dedup.mergeGroupedLineCounts),
+    snapshot("bm25_tf", "tf", tfRows, Search.mergeTfSnapshots,
+      Search.validateTfSnapshot),
+    snapshot("kn_lm", "bf", knRows, TextAnalysis.mergeKnSnapshots,
+      TextAnalysis.validateKnSnapshot),
+    counts("boiler_counts", lineRows, Dedup.subtractLineCounts,
+      Dedup.mergeLineCounts),
+    counts("grouped_counts", groupedRows, Dedup.subtractGroupedLineCounts,
+      Dedup.mergeGroupedLineCounts),
     prefixIndex, lshBands, ivfPqCodes)
 
   /** One audit row: physical row count plus an artifact-mass
@@ -211,4 +243,127 @@ private[queries] object MaintainedArtifacts {
     Swept(steps.map { case (n, b, a, _) => n -> (b, a) }.toMap,
       steps.map { case (n, b, a, m) => audit(n, b, a, m) })
   }
+
+  /** A maintained artifact's durable [[Incremental]] store, bound to
+    * `dir`. Callers pass documents; the handle decides the rows, the
+    * store kind, the id manifest or the rollup keys, certification and
+    * batch ids. Batch 0 lands at [[init]], each later commit (and a
+    * rollup's tombstone) takes the next fresh id, and [[compact]]
+    * folds the store to batch 0, so numbering restarts at 1. */
+  private[queries] sealed abstract class Store(val dir: String) {
+    private var next = 1L
+    protected def nextBatch(): Long = { val b = next; next += 1; b }
+    protected def restartNumbering(): Unit = next = 1L
+
+    /** Reset the store to `docs`' rows as batch 0. */
+    def init(docs: DataFrame): Unit
+    /** Append `docs`' rows as the next batch. */
+    def commit(docs: DataFrame): Unit
+    /** Remove `docs` (full rows; a fact store reads only doc_id). */
+    def retract(docs: DataFrame): Unit
+    /** Fold every batch into batch 0; invisible to [[load]]. */
+    def compact(): Unit
+    /** The current state, certified: a store that fails its checks
+      * refuses here, before anything serves from it. */
+    def load(): DataFrame
+
+    /** The two crawl eras of `existing`: even docs init the store, odd
+      * docs commit as batch 1. */
+    def eras(existing: DataFrame): Unit = {
+      init(existing.filter(col("doc_id") % 2 === 0))
+      commit(existing.filter(col("doc_id") % 2 =!= 0))
+    }
+  }
+
+  private val ManifestId = Some("doc_id")
+
+  /** A manifested per-doc fact store: id-keyed retraction rewrites the
+    * touched partitions. `rows` may pin into the scope it is given,
+    * which closes once the write has landed; `declare` writes what the
+    * store carries beside its rows, after each init. */
+  private class FactStore(s: SparkSession, dir: String,
+                          rows: (Pins, DataFrame) => DataFrame,
+                          certify: DataFrame => Unit,
+                          declare: () => Unit = () => ())
+      extends Store(dir) {
+    def init(docs: DataFrame): Unit = {
+      Pins.scope(p => Incremental.initSnapshotStore(rows(p, docs), dir,
+        manifestIdCol = ManifestId))
+      declare()
+      restartNumbering()
+    }
+    def commit(docs: DataFrame): Unit = Pins.scope(p =>
+      Incremental.commitSnapshotBatch(rows(p, docs), dir, nextBatch(),
+        manifestIdCol = ManifestId))
+    def retract(docs: DataFrame): Unit =
+      Incremental.retractFromSnapshotStore(s, dir, docs.select("doc_id"))
+    def compact(): Unit = {
+      Incremental.compactSnapshotStore(s, dir)
+      restartNumbering()
+    }
+    def load(): DataFrame = {
+      val st = Incremental.loadSnapshotStore(s, dir)
+      certify(st)
+      st
+    }
+  }
+
+  /** An append-only rollup store of `cnt` partials keyed by `keys`: a
+    * retraction appends the slice's partial negated (a tombstone). */
+  private class RollupStore(s: SparkSession, dir: String,
+                            rows: DataFrame => DataFrame,
+                            keys: Seq[String]) extends Store(dir) {
+    private val sums = Seq("cnt")
+    def init(docs: DataFrame): Unit = {
+      Incremental.initSnapshotStore(rows(docs), dir)
+      restartNumbering()
+    }
+    def commit(docs: DataFrame): Unit =
+      Incremental.commitSnapshotBatch(rows(docs), dir, nextBatch())
+    def retract(docs: DataFrame): Unit =
+      Incremental.retractFromRollupStore(rows(docs), dir, keys, sums,
+        nextBatch())
+    def compact(): Unit = {
+      Incremental.compactRollupStore(s, dir, keys, sums)
+      restartNumbering()
+    }
+    def load(): DataFrame = {
+      val counts = Incremental.loadRollupStore(s, dir, keys, sums)
+      Dedup.validateLineCounts(counts)
+      counts
+    }
+  }
+
+  /** A tf or KN snapshot store: the snapshot's own validator, then the
+    * manifest checked against the store on disk. */
+  private def snapshotStore(s: SparkSession, dir: String,
+                            rows: DataFrame => DataFrame,
+                            check: DataFrame => Unit): Store =
+    new FactStore(s, dir, (_, docs) => rows(docs), { st =>
+      check(st)
+      Incremental.validateSnapshotStoreManifest(s, dir)
+    })
+
+  def tfStore(s: SparkSession, dir: String): Store =
+    snapshotStore(s, dir, tfRows, Search.validateTfSnapshot)
+
+  def knStore(s: SparkSession, dir: String): Store =
+    snapshotStore(s, dir, knRows, TextAnalysis.validateKnSnapshot)
+
+  /** The LSH band store: its [[Lsh]] parameters are declared beside it
+    * at init, and [[Store.load]] runs the one-scan
+    * [[Dedup.certifyBandStore]] (parameters, manifest sync, roster
+    * completeness, per-id band structure), so screens may serve it
+    * with `storedCertified = true`. */
+  def bandStore(s: SparkSession, dir: String): Store =
+    new FactStore(s, dir, bandRows,
+      _ => Dedup.certifyBandStore(s, dir, "doc_id", Lsh.k, Lsh.numPerm,
+        Lsh.bands),
+      () => Dedup.writeBandParams(s, dir, Lsh.k, Lsh.numPerm, Lsh.bands))
+
+  def boilerStore(s: SparkSession, dir: String): Store =
+    new RollupStore(s, dir, lineRows, Seq("key"))
+
+  def groupedStore(s: SparkSession, dir: String): Store =
+    new RollupStore(s, dir, groupedRows, Seq("grp", "key"))
 }

@@ -91,19 +91,42 @@ object StreamQueries {
       s"$base/out"
     }
 
+  /** The two-run shape of the lifecycle twins: era A's AvailableNow
+    * run over `srcFile` (stream `<name>A`), then `between` (the
+    * lifecycle mutation), then era B's run (stream `<name>B`); returns
+    * both runs' rows. Each era's transform is taken by name and built
+    * only when its run starts, so era B's state is first read after
+    * the mutation.
+    *
+    * `between` runs after run A has served and UNCONDITIONALLY, never
+    * inside a lazy serve state: the streams memoize, so a retried
+    * invocation may skip both runs, and a mutation hidden in era B's
+    * lazy initializer would then never land, or (a commit against a
+    * store a failed attempt already committed to) refuse forever in
+    * this JVM. Callers that mutate a store reset it before run A, so
+    * every invocation lands the mutation exactly once. */
+  private def twoRuns(s: SparkSession, d: String, name: String,
+      eraA: => DataFrame => DataFrame, eraB: => DataFrame => DataFrame,
+      between: => Unit = (),
+      srcFile: String = "documents.parquet"): DataFrame = {
+    val run1 = materializedStream(s, d, name + "A", srcFile,
+      transform = eraA)()
+    between
+    val run2 = materializedStream(s, d, name + "B", srcFile,
+      transform = eraB)()
+    s.read.parquet(run1).unionByName(s.read.parquet(run2))
+  }
+
   /** Shared body of the IVF-PQ lifecycle twins (st_inc_ivfpq_add /
     * st_inc_ivfpq_remove): persist a starting layout, serve era A's
-    * query slice (every 20th vector) from it via an AvailableNow
-    * run, apply the lifecycle mutation (add / remove) between the
-    * runs, then serve era B (every 20th + 10) from the mutated
-    * layout. One index load per ERA, not per micro-batch (the
-    * codebook collects and the file listing snapshots at load time);
-    * idxB is first forced inside run2's transform — AFTER the
-    * mutation. The starting layout persists UNCONDITIONALLY before
-    * run1, so a prior invocation's mutated state resets and the
-    * mutation lands exactly once — idempotent even though the
-    * streams memoize. Per-query work is index-static, so micro-batch
-    * splits cannot change results. */
+    * query slice (every 20th vector) from it, apply the lifecycle
+    * mutation (add / remove) between the runs, then serve era B
+    * (every 20th + 10) from the mutated layout. One index load per
+    * ERA, not per micro-batch (the codebook collects and the file
+    * listing snapshots at load time). The starting layout persists
+    * before run A, so a prior invocation's mutated state resets.
+    * Per-query work is index-static, so micro-batch splits cannot
+    * change results. */
   private def ivfPqLifecycleTwin(s: SparkSession, d: String,
       scratch: String,
       startCodes: DataFrame => DataFrame,
@@ -118,12 +141,8 @@ object StreamQueries {
               era: Int)(batch: DataFrame): DataFrame =
       Q.ivfPqSearch(batch.filter(col("vec_id") % 20 === era * 10),
         "vec_id", "embedding", idx, nprobe = 2, topK = 3)
-    val run1 = materializedStream(s, d, scratch + "A",
-      "embeddings.parquet", transform = serve(idxA, 0))()
-    mutateBetweenRuns(dir)
-    val run2 = materializedStream(s, d, scratch + "B",
-      "embeddings.parquet", transform = serve(idxB, 1))()
-    s.read.parquet(run1).unionByName(s.read.parquet(run2))
+    twoRuns(s, d, scratch, serve(idxA, 0), serve(idxB, 1),
+        between = mutateBetweenRuns(dir), srcFile = "embeddings.parquet")
       .orderBy("qid", "rank")
   }
 
@@ -299,11 +318,7 @@ object StreamQueries {
     // batch splits cannot change results. Hashed against the BATCH
     // d64 oracle verbatim.
     "st_line_dedup" -> ((s, d) => Pins.scope { p =>
-      val boiler = "subscribe to our newsletter for updates today"
-      def planted(df: DataFrame) = df.select(col("doc_id"),
-        when(col("doc_id") % 4 === 0,
-          concat(col("text"), lit("\n" + boiler)))
-          .otherwise(col("text")).as("text"))
+      def planted(df: DataFrame) = LlmQueries.boilerPlanted(df)
       lazy val set = p(graft.operators.Dedup.boilerplateLineSet(
         planted(T.documents(s, d)).filter(col("doc_id") % 5 =!= 0),
         "text", minCount = 3))
@@ -325,11 +340,7 @@ object StreamQueries {
     // era's set (doc_id parity), so the composite is deterministic
     // and the oracle states both sets explicitly.
     "st_inc_boiler" -> ((s, d) => Pins.scope { p =>
-      val boiler = "subscribe to our newsletter for updates today"
-      def planted(df: DataFrame) = df.select(col("doc_id"),
-        when(col("doc_id") % 4 === 0,
-          concat(col("text"), lit("\n" + boiler)))
-          .otherwise(col("text")).as("text"))
+      def planted(df: DataFrame) = LlmQueries.boilerPlanted(df)
       lazy val partA = p(graft.operators.Dedup.lineCountPartial(
         planted(T.documents(s, d)
           .filter(col("doc_id") % 5 =!= 0 && col("doc_id") % 2 === 0)),
@@ -347,11 +358,7 @@ object StreamQueries {
         graft.operators.Dedup.lineDedupAgainst(
           planted(batch.filter(col("doc_id") % 5 === 0
             && col("doc_id") % 2 === era)), set, "doc_id", "text")
-      val run1 = materializedStream(s, d, "incboilA", "documents.parquet",
-        transform = screen(setA, era = 0))()
-      val run2 = materializedStream(s, d, "incboilB", "documents.parquet",
-        transform = screen(setAB, era = 1))()
-      s.read.parquet(run1).unionByName(s.read.parquet(run2))
+      twoRuns(s, d, "incboil", screen(setA, era = 0), screen(setAB, era = 1))
         .orderBy("doc_id")
     }),
 
@@ -367,17 +374,8 @@ object StreamQueries {
     // depends only on (own doc, static era set).
     "st_inc_boiler_remove" -> ((s, d) => {
       val D = graft.operators.Dedup
-      val boiler = "subscribe to our newsletter for updates today"
-      val banner =
-        "temporary campaign banner from the quarantined source"
-      def planted(df: DataFrame) = df.select(col("doc_id"),
-        concat(
-          when(col("doc_id") % 4 === 0,
-            concat(col("text"), lit("\n" + boiler)))
-            .otherwise(col("text")),
-          when(col("doc_id") % 7 === 1 || col("doc_id") === 2 ||
-            col("doc_id") === 9 || col("doc_id") % 5 === 0,
-            lit("\n" + banner)).otherwise(lit(""))).as("text"))
+      def planted(df: DataFrame) =
+        LlmQueries.bannerPlanted(df, col("doc_id") % 5 === 0)
       // checkpoints are pinned as they materialize, so a run that
       // fails early frees only what actually exists (the st_inc_kn
       // cleanup discipline)
@@ -404,11 +402,7 @@ object StreamQueries {
           D.lineDedupAgainst(
             planted(batch.filter(col("doc_id") % 5 === 0
               && col("doc_id") % 2 === era)), set, "doc_id", "text")
-        val run1 = materializedStream(s, d, "boilrmA",
-          "documents.parquet", transform = screen(setFull, 0))()
-        val run2 = materializedStream(s, d, "boilrmB",
-          "documents.parquet", transform = screen(setRet, 1))()
-        s.read.parquet(run1).unionByName(s.read.parquet(run2))
+        twoRuns(s, d, "boilrm", screen(setFull, 0), screen(setRet, 1))
           .orderBy("doc_id")
       }
     }),
@@ -431,62 +425,34 @@ object StreamQueries {
     // compaction are result-invisible under micro-batch splits too.
     "st_inc_boiler_store" -> ((s, d) => {
       val D = graft.operators.Dedup
-      val I = graft.operators.Incremental
-      val boiler = "subscribe to our newsletter for updates today"
-      val banner =
-        "temporary campaign banner from the quarantined source"
-      def planted(df: DataFrame) = df.select(col("doc_id"),
-        concat(
-          when(col("doc_id") % 4 === 0,
-            concat(col("text"), lit("\n" + boiler)))
-            .otherwise(col("text")),
-          when(col("doc_id") % 7 === 1 || col("doc_id") === 2 ||
-            col("doc_id") === 9 || col("doc_id") % 5 === 0,
-            lit("\n" + banner)).otherwise(lit(""))).as("text"))
+      def planted(df: DataFrame) =
+        LlmQueries.bannerPlanted(df, col("doc_id") % 5 === 0)
       def existing = planted(T.documents(s, d)
         .filter(col("doc_id") % 5 =!= 0))
-      val dir = Fixtures.dir(s, d, "st_boilstore")
+      val store = MaintainedArtifacts.boilerStore(s,
+        Fixtures.dir(s, d, "st_boilstore"))
       Pins.scope { p =>
-        // store mutations run UNCONDITIONALLY, outside the lazy serve
-        // state (the st_inc_bm25_store discipline): memoized streams
-        // may skip a run entirely on a retried invocation, and a
-        // commit hidden inside a lazy initializer against a store a
-        // failed attempt already committed to would refuse forever in
-        // this JVM. Init resets the layout, so everything lands fresh.
-        I.initSnapshotStore(D.lineCountPartial(
-          existing.filter(col("doc_id") % 2 === 0), "text"), dir)
-        I.commitSnapshotBatch(D.lineCountPartial(
-          existing.filter(col("doc_id") % 2 =!= 0), "text"), dir, 1L)
+        // init resets the layout, so everything lands fresh
+        store.eras(existing)
         // each era's screen set folds the ON-DISK store once, is
         // validated, and pins (every micro-batch probes it)
-        lazy val setFull = {
-          val counts = I.loadRollupStore(s, dir, Seq("key"), Seq("cnt"))
-          D.validateLineCounts(counts)
-          p(D.boilerplateFromCounts(counts, minCount = 3))
-        }
-        lazy val setRet = {
-          val counts = I.loadRollupStore(s, dir, Seq("key"), Seq("cnt"))
-          D.validateLineCounts(counts)
-          p(D.boilerplateFromCounts(counts, minCount = 3))
-        }
+        lazy val setFull =
+          p(D.boilerplateFromCounts(store.load(), minCount = 3))
+        lazy val setRet =
+          p(D.boilerplateFromCounts(store.load(), minCount = 3))
         def screen(set: => DataFrame, era: Int)(batch: DataFrame) =
           D.lineDedupAgainst(
             planted(batch.filter(col("doc_id") % 5 === 0
               && col("doc_id") % 2 === era)), set, "doc_id", "text")
-        val run1 = materializedStream(s, d, "boilstA",
-          "documents.parquet", transform = screen(setFull, 0))()
-        // the takedown lands BETWEEN the runs as a tombstone append
-        // (after run1's serves — setFull is forced, or run1 was
-        // memoized and never reads the store again), and the store
-        // compacts before era B serves: both must be invisible next
-        // to the in-memory subtraction the oracle replays
-        I.retractFromRollupStore(D.lineCountPartial(
-            existing.filter(col("doc_id") % 7 === 1), "text"),
-          dir, Seq("key"), Seq("cnt"), batch = 2L)
-        I.compactRollupStore(s, dir, Seq("key"), Seq("cnt"))
-        val run2 = materializedStream(s, d, "boilstB",
-          "documents.parquet", transform = screen(setRet, 1))()
-        s.read.parquet(run1).unionByName(s.read.parquet(run2))
+        // the takedown lands BETWEEN the runs as a tombstone append,
+        // and the store compacts before era B serves: both must be
+        // invisible next to the in-memory subtraction the oracle
+        // replays
+        twoRuns(s, d, "boilst", screen(setFull, 0), screen(setRet, 1),
+            between = {
+              store.retract(existing.filter(col("doc_id") % 7 === 1))
+              store.compact()
+            })
           .orderBy("doc_id")
       }
     }),
@@ -505,50 +471,25 @@ object StreamQueries {
     // partners keep flagging. Per-batch work is (batch rows + static
     // store + static corpus texts) only, so micro-batch splits
     // cannot change a row; the result must hash-match the
-    // era-parameterized inc_lsh_store replays VERBATIM. Store
-    // mutations run unconditionally, OUTSIDE the memoized stream
-    // lazies (the retry discipline).
+    // era-parameterized inc_lsh_store replays VERBATIM.
     "st_inc_lsh_store" -> ((s, d) => {
+      import MaintainedArtifacts.Lsh
       val D = graft.operators.Dedup
-      val I = graft.operators.Incremental
       def planted(df: DataFrame) = LlmQueries.lshPlanted(df)
       def existing = planted(T.documents(s, d)
         .filter(col("doc_id") % 5 =!= 0))
-      val dir = Fixtures.dir(s, d, "st_lshstore")
-      // lazy band plans: the store writes pin them, so each era's
-      // band table materializes once (r17) — the signature barrier
-      // frees after the write lands
-      Pins.scope { p =>
-        I.initSnapshotStore(D.minHashBandsLazy(p,
-            existing.filter(col("doc_id") % 2 === 0), "doc_id", "text",
-            k = 5),
-          dir, manifestIdCol = Some("doc_id"))
-        D.writeBandParams(s, dir, k = 5, numPerm = 256, bands = 64)
-      }
-      Pins.scope { p =>
-        I.commitSnapshotBatch(D.minHashBandsLazy(p,
-            existing.filter(col("doc_id") % 2 =!= 0), "doc_id", "text",
-            k = 5),
-          dir, 1L, manifestIdCol = Some("doc_id"))
-      }
+      val store = MaintainedArtifacts.bandStore(s,
+        Fixtures.dir(s, d, "st_lshstore"))
+      store.eras(existing)
       Pins.scope { p =>
         // each era certifies then PINS the on-disk band table once (a
         // checkpoint: era A's screen must keep reading pre-retraction
-        // bands even as micro-batches interleave with nothing — and
-        // the pin keeps per-batch probes off repeated parquet reads)
-        def loadPinned(): DataFrame = {
-          // one-job certification (r18): params + manifest sync +
-          // roster completeness + per-id structure in a single store
-          // scan (certifyBandStore), strictly stronger than the old
-          // manifest-sync-only probe — and it licenses the screens
-          // below to skip their per-MICRO-BATCH band-range job
-          // (storedCertified: the pinned table is immutable per era)
-          D.certifyBandStore(s, dir, "doc_id", k = 5, numPerm = 256,
-            bands = 64)
-          p(I.loadSnapshotStore(s, dir))
-        }
-        lazy val bandsA = loadPinned()
-        lazy val bandsB = loadPinned()
+        // bands, and the pin keeps per-batch probes off repeated
+        // parquet reads); the load's one-job certification licenses
+        // the screens below to skip their per-MICRO-BATCH band-range
+        // job (storedCertified: the pinned table is immutable per era)
+        lazy val bandsA = p(store.load())
+        lazy val bandsB = p(store.load())
         // per micro-batch the operator checkpoints its candidates and
         // output; it frees the candidates itself, and the sink frees
         // the sealed output once the batch has landed
@@ -556,19 +497,14 @@ object StreamQueries {
           D.lshScreenAgainst(
             planted(batch.filter(col("doc_id") % 5 === 0
               && col("doc_id") % 2 === era)),
-            bands, existing, "doc_id", "text", k = 5, theta = 0.7,
-            storedCertified = true)
-        val run1 = materializedStream(s, d, "lshstA",
-          "documents.parquet", transform = screen(bandsA, 0))()
-        // the takedown + compaction land BETWEEN the runs (after run1
-        // served — bandsA is pinned, or run1 was memoized and never
-        // reads the store again)
-        I.retractFromSnapshotStore(s, dir,
-          existing.filter(col("doc_id") % 3 === 1).select("doc_id"))
-        I.compactSnapshotStore(s, dir)
-        val run2 = materializedStream(s, d, "lshstB",
-          "documents.parquet", transform = screen(bandsB, 1))()
-        s.read.parquet(run1).unionByName(s.read.parquet(run2))
+            bands, existing, "doc_id", "text", Lsh.k, theta = 0.7,
+            Lsh.numPerm, Lsh.bands, storedCertified = true)
+        // the takedown + compaction land BETWEEN the runs
+        twoRuns(s, d, "lshst", screen(bandsA, 0), screen(bandsB, 1),
+            between = {
+              store.retract(existing.filter(col("doc_id") % 3 === 1))
+              store.compact()
+            })
           .orderBy("in_id", "ex_id")
       }
     }),
@@ -599,11 +535,7 @@ object StreamQueries {
           batch.filter(col("doc_id") % 16 === era * 8)
             .select("doc_id")
             .join(scores, Seq("doc_id"))
-        val run1 = materializedStream(s, d, "knrmA",
-          "documents.parquet", transform = serve(scoresFull, 0))()
-        val run2 = materializedStream(s, d, "knrmB",
-          "documents.parquet", transform = serve(scoresRet, 1))()
-        s.read.parquet(run1).unionByName(s.read.parquet(run2))
+        twoRuns(s, d, "knrm", serve(scoresFull, 0), serve(scoresRet, 1))
           .orderBy("doc_id")
       }
     }),
@@ -634,11 +566,7 @@ object StreamQueries {
               .select(col("doc_id").as("qid"),
                 LlmQueries.bm25Qtext(col("text")).as("qtext")),
             "qid", "qtext", k = 5, materialize = false)
-        val run1 = materializedStream(s, d, "bm25rmA",
-          "documents.parquet", transform = serve(tfFull, 0))()
-        val run2 = materializedStream(s, d, "bm25rmB",
-          "documents.parquet", transform = serve(tfRet, 1))()
-        s.read.parquet(run1).unionByName(s.read.parquet(run2))
+        twoRuns(s, d, "bm25rm", serve(tfFull, 0), serve(tfRet, 1))
           .orderBy("qid", "rank")
       }
     }),
@@ -676,11 +604,7 @@ object StreamQueries {
             .select(col("doc_id").as("qid"),
               LlmQueries.bm25Qtext(col("text")).as("qtext")),
           "qid", "qtext", k = 5, materialize = false)
-      val run1 = materializedStream(s, d, "incbm25A",
-        "documents.parquet", transform = serve(tfA, 0))()
-      val run2 = materializedStream(s, d, "incbm25B",
-        "documents.parquet", transform = serve(tfAB, 1))()
-      s.read.parquet(run1).unionByName(s.read.parquet(run2))
+      twoRuns(s, d, "incbm25", serve(tfA, 0), serve(tfAB, 1))
         .orderBy("qid", "rank")
     }),
 
@@ -699,37 +623,19 @@ object StreamQueries {
     // micro-batch splits too.
     "st_inc_bm25_store" -> ((s, d) => {
       val S = graft.operators.Search
-      val I = graft.operators.Incremental
+      val store = MaintainedArtifacts.tfStore(s,
+        Fixtures.dir(s, d, "st_tfstore"))
       Pins.scope { p =>
-        val dir = Fixtures.dir(s, d, "st_tfstore")
-        // the store mutations run UNCONDITIONALLY, outside the lazy
-        // serve state (the ivfPqLifecycleTwin discipline): the streams
-        // MEMOIZE, so a retried invocation may skip run1 entirely — a
-        // commit hidden inside run2's lazy initializer against a store
-        // that a failed attempt already committed to would then refuse
-        // ('batch 1 already committed') forever in this JVM. Init
-        // resets the layout first, so the commit below always lands
-        // fresh and the query stays idempotent.
-        I.initSnapshotStore(S.tfSnapshot(
-          T.documents(s, d).filter(col("doc_id") % 2 === 0),
-          "doc_id", "text"), dir, manifestIdCol = Some("doc_id"))
+        // init resets the layout, so the commit between the runs
+        // always lands fresh and the query stays idempotent
+        store.init(T.documents(s, d).filter(col("doc_id") % 2 === 0))
         // each era's loaded store pins ONCE (the st_inc_bm25 snapshot-
         // checkpoint discipline): every micro-batch's serve derives
         // postings/dl/df/scalars from the snapshot, and an unpinned
         // load would re-read the store parquet for each subplan of
         // each micro-batch
-        lazy val tfA = {
-          val t = p(I.loadSnapshotStore(s, dir))
-          S.validateTfSnapshot(t)
-          I.validateSnapshotStoreManifest(s, dir)
-          t
-        }
-        lazy val tfAB = {
-          val t = p(I.loadSnapshotStore(s, dir))
-          S.validateTfSnapshot(t)
-          I.validateSnapshotStoreManifest(s, dir)
-          t
-        }
+        lazy val tfA = p(store.load())
+        lazy val tfAB = p(store.load())
         // materialize = false, as in st_inc_bm25: the sink write
         // consumes each micro-batch's result once
         def serve(tf: => DataFrame, era: Int)(batch: DataFrame) =
@@ -738,23 +644,18 @@ object StreamQueries {
               .select(col("doc_id").as("qid"),
                 LlmQueries.bm25Qtext(col("text")).as("qtext")),
             "qid", "qtext", k = 5, materialize = false)
-        val run1 = materializedStream(s, d, "incbm25storeA",
-          "documents.parquet", transform = serve(tfA, 0))()
-        // era B's partial file-commits BETWEEN the runs, also
-        // unconditionally — after run1's serves (tfA is forced, or
-        // run1 was memoized and never reads the store again)
-        I.commitSnapshotBatch(S.tfSnapshot(
-          T.documents(s, d).filter(col("doc_id") % 2 =!= 0),
-          "doc_id", "text"), dir, 1L, manifestIdCol = Some("doc_id"))
-        // ...and the store COMPACTS before era B serves: the
-        // production ingest loop folds accumulated crawl partitions
-        // on a cadence, and the fold must be invisible to the next
-        // era's probes — era B serves the folded single-partition
-        // layout and still hash-matches the st_inc_bm25 oracle
-        I.compactSnapshotStore(s, dir)
-        val run2 = materializedStream(s, d, "incbm25storeB",
-          "documents.parquet", transform = serve(tfAB, 1))()
-        s.read.parquet(run1).unionByName(s.read.parquet(run2))
+        // era B's partial file-commits BETWEEN the runs, and the
+        // store COMPACTS before era B serves: the production ingest
+        // loop folds accumulated crawl partitions on a cadence, and
+        // the fold must be invisible to the next era's probes — era
+        // B serves the folded single-partition layout and still
+        // hash-matches the st_inc_bm25 oracle
+        twoRuns(s, d, "incbm25store", serve(tfA, 0), serve(tfAB, 1),
+            between = {
+              store.commit(
+                T.documents(s, d).filter(col("doc_id") % 2 =!= 0))
+              store.compact()
+            })
           .orderBy("qid", "rank")
       }
     }),
@@ -823,11 +724,7 @@ object StreamQueries {
           batch.filter(col("doc_id") % 16 === era * 5)
             .select("doc_id")
             .join(scores, Seq("doc_id"))
-        val run1 = materializedStream(s, d, "incknA",
-          "documents.parquet", transform = serve(scoresA, 0))()
-        val run2 = materializedStream(s, d, "incknB",
-          "documents.parquet", transform = serve(scoresAB, 1))()
-        s.read.parquet(run1).unionByName(s.read.parquet(run2))
+        twoRuns(s, d, "inckn", serve(scoresA, 0), serve(scoresAB, 1))
           .orderBy("doc_id")
       }
     }),
@@ -841,41 +738,19 @@ object StreamQueries {
     // state; must hash-match the st_inc_kn oracle VERBATIM.
     "st_inc_kn_store" -> ((s, d) => {
       val TA = graft.operators.TextAnalysis
-      val I = graft.operators.Incremental
+      val store = MaintainedArtifacts.knStore(s,
+        Fixtures.dir(s, d, "st_knstore"))
       Pins.scope { p =>
-        val dir = Fixtures.dir(s, d, "st_knstore")
-        // store mutations run UNCONDITIONALLY outside the lazy serve
-        // state (the ivfPqLifecycleTwin discipline, as in
-        // st_inc_bm25_store): memoized streams may skip a run on
-        // retry, and a commit hidden in a lazy initializer would then
-        // refuse against the leftover store forever in this JVM
-        I.initSnapshotStore(TA.knSnapshot(
-          T.documents(s, d).filter(col("doc_id") % 2 === 0),
-          "doc_id", "text"), dir, manifestIdCol = Some("doc_id"))
-        lazy val scoresA = {
-          val t = I.loadSnapshotStore(s, dir)
-          TA.validateKnSnapshot(t)
-          I.validateSnapshotStoreManifest(s, dir)
-          p.own(TA.knScoreFromSnapshot(t))
-        }
-        lazy val scoresAB = {
-          val t = I.loadSnapshotStore(s, dir)
-          TA.validateKnSnapshot(t)
-          I.validateSnapshotStoreManifest(s, dir)
-          p.own(TA.knScoreFromSnapshot(t))
-        }
+        store.init(T.documents(s, d).filter(col("doc_id") % 2 === 0))
+        lazy val scoresA = p.own(TA.knScoreFromSnapshot(store.load()))
+        lazy val scoresAB = p.own(TA.knScoreFromSnapshot(store.load()))
         def serve(scores: => DataFrame, era: Int)(batch: DataFrame) =
           batch.filter(col("doc_id") % 16 === era * 5)
             .select("doc_id")
             .join(scores, Seq("doc_id"))
-        val run1 = materializedStream(s, d, "incknstoreA",
-          "documents.parquet", transform = serve(scoresA, 0))()
-        I.commitSnapshotBatch(TA.knSnapshot(
-          T.documents(s, d).filter(col("doc_id") % 2 =!= 0),
-          "doc_id", "text"), dir, 1L, manifestIdCol = Some("doc_id"))
-        val run2 = materializedStream(s, d, "incknstoreB",
-          "documents.parquet", transform = serve(scoresAB, 1))()
-        s.read.parquet(run1).unionByName(s.read.parquet(run2))
+        twoRuns(s, d, "incknstore", serve(scoresA, 0), serve(scoresAB, 1),
+            between = store.commit(
+              T.documents(s, d).filter(col("doc_id") % 2 =!= 0)))
           .orderBy("doc_id")
       }
     }),
@@ -911,11 +786,8 @@ object StreamQueries {
           planted(batch.filter(col("doc_id") % 5 === 0
             && col("doc_id") % 2 === era)), set, "doc_id", "lang",
           "text")
-      val run1 = materializedStream(s, d, "incgboilA",
-        "documents.parquet", transform = screen(setA, era = 0))()
-      val run2 = materializedStream(s, d, "incgboilB",
-        "documents.parquet", transform = screen(setAB, era = 1))()
-      s.read.parquet(run1).unionByName(s.read.parquet(run2))
+      twoRuns(s, d, "incgboil", screen(setA, era = 0),
+          screen(setAB, era = 1))
         .orderBy("doc_id")
     }),
 
@@ -936,11 +808,7 @@ object StreamQueries {
         graft.operators.Dedup.crossDupSpansAgainst(
           batch.filter(col("doc_id") % 5 === 0
             && col("doc_id") % 2 === era), set, "doc_id", "text")
-      val run1 = materializedStream(s, d, "incgramA", "documents.parquet",
-        transform = screen(setA, era = 0))()
-      val run2 = materializedStream(s, d, "incgramB", "documents.parquet",
-        transform = screen(setM, era = 1))()
-      s.read.parquet(run1).unionByName(s.read.parquet(run2))
+      twoRuns(s, d, "incgram", screen(setA, era = 0), screen(setM, era = 1))
         .orderBy("doc_id", "span_start")
     }),
 
@@ -965,11 +833,7 @@ object StreamQueries {
         graft.operators.Dedup.prefixCrossJaccardAgainst(
           batch.filter(col("doc_id") % 7 === 0
             && col("doc_id") % 2 === era), idx, "doc_id", "text")
-      val run1 = materializedStream(s, d, "incprefA", "documents.parquet",
-        transform = screen(idxA, era = 0))()
-      val run2 = materializedStream(s, d, "incprefB", "documents.parquet",
-        transform = screen(idxM, era = 1))()
-      s.read.parquet(run1).unionByName(s.read.parquet(run2))
+      twoRuns(s, d, "incpref", screen(idxA, era = 0), screen(idxM, era = 1))
         .orderBy("in_id", "ex_id")
     }),
 

@@ -5,35 +5,18 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** The curation-flagship harness around what the DuckDB oracle gate
-  * cannot see: staging-mode equivalence (durable parquet staging must
-  * be a pure execution-strategy choice, never a result change), the
-  * near-dup stage's planted-cluster cut, and the health run-store
-  * side channel (captures, idempotent re-invocation). */
+  * cannot see: the near-dup stage's planted-cluster cut, and the
+  * health run-store side channel (captures, idempotent
+  * re-invocation). */
 class CurationDagSpec extends SparkSpec {
 
   private lazy val tmp = java.nio.file.Files
     .createTempDirectory("graft_curation").toString
 
-  test("curation DAG: durable parquet staging == checkpoint staging") {
-    val ck = LlmQueries.curationDag(spark, sf0001, nearDup = false)
-      .collect().toSeq
-    val durable = LlmQueries.curationDag(spark, sf0001, nearDup = false,
-      stageDir = Some(s"$tmp/stages")).collect().toSeq
-    assert(ck == durable)
-    // the durable run really staged through the job dir
-    assert(new java.io.File(s"$tmp/stages/s5_dedup").exists())
-  }
-
   test("curation DAG: the near-dup stage cuts survivors exact dedup " +
-    "cannot (and stages durably the same)") {
+    "cannot") {
     val funnel = LlmQueries.curationDag(spark, sf0001, nearDup = true)
       .collect()
-    // the near branch mixes the two staging regimes (the LSH kernel's
-    // internal checkpoints alongside parquet stage writes) - assert
-    // the durable form of THIS shape too, not just the exact-only DAG
-    val durable = LlmQueries.curationDag(spark, sf0001, nearDup = true,
-      stageDir = Some(s"$tmp/stages88")).collect()
-    assert(funnel.toSeq == durable.toSeq)
     val byStage = funnel.map(r =>
       r.getAs[String]("stage") -> r.getAs[Long]("n_docs")).toMap
     // the variant members carry DISTINCT fingerprints, so they ride

@@ -71,7 +71,9 @@ class QueryPinsSpec extends SparkSpec {
                    "inc_kn_store", "inc_store_levels",
                    "st_inc_boiler_store", "st_inc_bm25_store",
                    "st_inc_kn_store", "st_dedup_stream",
-                   "st_inc_ivfpq_add", "st_inc_ivfpq_remove")) {
+                   "st_inc_ivfpq_add", "st_inc_ivfpq_remove",
+                   "st_inc_boiler_remove", "st_inc_kn_remove",
+                   "st_inc_bm25_remove", "st_inc_kn")) {
     test(s"$name frees its pinned state before it returns") {
       val leaked = leaves(name)
       assert(leaked.isEmpty, s"$name left ${leaked.size} persisted RDD(s)")
