@@ -1,8 +1,13 @@
 package graft.core
 
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions.{col, lit, unix_micros}
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructField, StructType, TimestampNTZType, TimestampType}
 
 /** Test-table readers for the driver-generated parquet under the
   * sf0.001 / sf0.01 / sf0.1 testdata dirs (see TESTDATA.md). Column
@@ -12,7 +17,61 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * PushDownPredicate). */
 object Tables {
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
+
+  /** `spark.read.parquet(path)` without its schema-inference job: the
+    * schema comes from one data file's footer, read on the Spark driver and
+    * converted by the session's own parquet converter, exactly as
+    * inference would (the first data file in path order; a Spark-
+    * written footer's stored schema wins over the converted one).
+    * `partitions` are the layout's partition columns, appended with
+    * the given types where inference would append its guesses (a
+    * store pins `batch` to LONG). A path with no data file, or one
+    * partitioned by other columns, takes the inferring read, so it
+    * fails with that read's error. */
+  def parquet(spark: SparkSession, path: String,
+              partitions: StructField*): DataFrame =
+    footerSchema(spark, path, partitions.map(_.name)) match {
+      case Some(data) =>
+        spark.read.schema(StructType(data.fields ++ partitions))
+          .parquet(path)
+      case None =>
+        val inferred = spark.read.parquet(path).schema
+        spark.read.schema(StructType(inferred.map(f =>
+          partitions.find(_.name == f.name).getOrElse(f)))).parquet(path)
+    }
+
+  /** The data schema of `path`'s first data file, when the file sits
+    * under exactly the `partitions` directories. Hidden names (`_`,
+    * `.`) are skipped as the file index skips them. */
+  private def footerSchema(spark: SparkSession, path: String,
+                           partitions: Seq[String]): Option[StructType] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    def visible(st: FileStatus) = {
+      val n = st.getPath.getName
+      !(n.startsWith("_") && !n.contains("=")) && !n.startsWith(".")
+    }
+    def first(st: FileStatus, dirs: Seq[String])
+        : Option[(FileStatus, Seq[String])] =
+      if (st.isFile) Some(st -> dirs)
+      else fs.listStatus(st.getPath).filter(visible)
+        .sortBy(_.getPath.toString).iterator
+        .flatMap(c => first(c,
+          if (c.isDirectory) dirs :+ c.getPath.getName.takeWhile(_ != '=')
+          else dirs))
+        .nextOption()
+    if (!fs.exists(root)) None
+    else first(fs.getFileStatus(root), Nil).collect {
+      case (f, dirs) if dirs == partitions =>
+        val footer = new Footer(f.getPath, ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(f, conf),
+          ParquetMetadataConverter.NO_FILTER))
+        ParquetFileFormat.readSchemaFromFooter(footer,
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    }
+  }
 
   def lineitem(s: SparkSession, d: String): DataFrame = t(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame = t(s, d, "orders")

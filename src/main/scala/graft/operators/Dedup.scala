@@ -348,11 +348,20 @@ object Dedup {
     * on a null operand and silently fall to the clean branch, which
     * is exactly the externally-assembled-state hole the validators
     * exist to close. */
-  private def countBadRows(df: DataFrame, c: Column,
-                           bad: Column): Long =
-    df.agg(coalesce(
-      sum(when(bad || c.isNull, 1L).otherwise(0L)), lit(0L))).head
-      .getLong(0)
+  private def badRows(c: Column, bad: Column): Column =
+    coalesce(sum(when(bad || c.isNull, 1L).otherwise(0L)), lit(0L))
+
+  /** The rows [[validateLineCounts]] refuses (negative or null
+    * `cnt`), as one aggregate — for a caller that counts them with
+    * `Dataset.observe` during an action it already runs. */
+  def badLineCounts: Column = badRows(col("cnt"), col("cnt") < 0L)
+
+  /** [[validateLineCounts]]' refusal, given the count of
+    * [[badLineCounts]]. */
+  def requireLineCounts(bad: Long): Unit =
+    require(bad == 0L,
+      s"line-count table corrupt: $bad negative counts - a batch " +
+        "was retracted twice or was never merged in")
 
   /** Assert a (subtracted) line-count table is well-formed: no
     * negative (or null) counts — the loud detector for the
@@ -361,19 +370,15 @@ object Dedup {
     * twice, or retracting a batch that was never merged in, drives
     * counts negative). One skinny aggregation, the
     * validateTfSnapshot discipline. */
-  def validateLineCounts(counts: DataFrame): Unit = {
-    val bad = countBadRows(counts, col("cnt"), col("cnt") < 0L)
-    require(bad == 0L,
-      s"line-count table corrupt: $bad negative counts - a batch " +
-        "was retracted twice or was never merged in")
-  }
+  def validateLineCounts(counts: DataFrame): Unit =
+    requireLineCounts(counts.agg(badLineCounts).head.getLong(0))
 
   /** Null-safe group key shared by the grouped screen tables and
     * [[groupedLineDedupAgainst]] — the [[lineDedupImpl]] struct
     * idiom: a plain equi-join would never match null groups,
     * silently keeping every line of a null-group doc unscreened; the
     * (isNull, value) struct is exact and collision-free. */
-  private def lineGroupKey(groupCol: String): Column =
+  private[graft] def lineGroupKey(groupCol: String): Column =
     struct(col(groupCol).isNull.as("n"),
       coalesce(col(groupCol).cast("string"), lit("")).as("v"))
 
@@ -821,7 +826,8 @@ object Dedup {
     * — the validateLineCounts discipline on the shingle axis). One
     * skinny aggregation over the config-shaped df table. */
   def validatePrefixCrossIndex(idx: PrefixCrossIndex): Unit = {
-    val bad = countBadRows(idx.dfreq, col("df"), col("df") <= 0L)
+    val bad = idx.dfreq.agg(badRows(col("df"), col("df") <= 0L)).head
+      .getLong(0)
     require(bad == 0L,
       s"prefix-cross index corrupt: $bad non-positive (or null) dfs " +
         "- df state was subtracted twice or assembled from " +

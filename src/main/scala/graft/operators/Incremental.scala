@@ -3,9 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructType}
+import org.apache.spark.sql.types.{LongType, StructField}
 
-import graft.core.Pins
+import graft.core.{Observed, Pins}
 
 /** Incremental aggregate maintenance — the pattern that keeps a
   * 100 TB pipeline's rollups fresh WITHOUT rescanning the corpus:
@@ -145,13 +145,12 @@ object Incremental {
   /** Read a store with the batch partition column pinned to LONG:
     * partition-value inference would type small batch ids as INT and
     * long-literal pruning predicates would then cast the COLUMN,
-    * defeating partition pruning on exactly the path built for it. */
+    * defeating partition pruning on exactly the path built for it.
+    * The data schema comes from a footer ([[graft.core.Tables.parquet]]),
+    * so the read starts no Spark job. */
   private def readStore(spark: SparkSession, dir: String): DataFrame = {
     finishSwap(spark, dir)
-    val inferred = spark.read.parquet(dir)
-    val sch = StructType(inferred.schema.map(f =>
-      if (f.name == "batch") f.copy(dataType = LongType) else f))
-    spark.read.schema(sch).parquet(dir)
+    graft.core.Tables.parquet(spark, dir, StructField("batch", LongType))
   }
 
   /** The optional id→batch MANIFEST living beside a fact store: one
@@ -250,7 +249,11 @@ object Incremental {
     * snapshot must be nonempty: a zero-partition parquet layout is
     * unreadable, the same refusal [[graft.operators.Quantization
     * .ivfPqRemoveBatch]] makes for its layout. The input pins once —
-    * the emptiness probe and the write share one materialization.
+    * the emptiness check is a row count observed during that same
+    * checkpoint, so it starts no job of its own and still refuses
+    * before anything is deleted or overwritten. The one refusal here
+    * that keeps a job of its own is a manifested init's null-id check
+    * ([[requireNoNullIds]]), which must also fire before the deletes.
     *
     * @param manifestIdCol when set, also create the id→batch
     *   manifest from this column's distinct values — the opt-in for
@@ -282,8 +285,9 @@ object Incremental {
     // destroyed store. Append-only commits keep the recomputable
     // persist (they never delete what their input may read).
     Pins.scope { p =>
-      val pinned = p(snap)
-      require(!pinned.isEmpty,
+      val (counted, rows) = Observed(snap, count(lit(1)))
+      val pinned = p(counted)
+      require(rows() > 0,
         s"refusing to init $dir from an empty snapshot - a " +
           "zero-partition layout is unreadable")
       // EVERY refusal must fire before anything destructive: a
@@ -398,8 +402,20 @@ object Incremental {
     * markers and counts (the exact corruption
     * [[graft.operators.Search.validateTfSnapshot]] detects), so the
     * store refuses loudly; the check reads partition VALUES only
-    * (directory listing, no data scan). */
-  /** @param manifestIdCol must be set iff the store maintains a
+    * (directory listing, no data scan). An EMPTY snapshot refuses
+    * too: it would write no partition, and the batch id would
+    * silently never land.
+    *
+    * An unmanifested commit has one consumer, the append, so nothing
+    * is pinned: the append counts its own rows, and an empty one —
+    * which, partitioned by batch, writes no data file — refuses at
+    * the landed-partition check after it. A manifested commit keeps
+    * its pin, since two writes consume it, and so keeps its emptiness
+    * probe as a job of its own, run before the manifest write; its
+    * null-id check ([[requireNoNullIds]]) and, for a retried batch id,
+    * the manifest residue probe keep their own jobs too.
+    *
+    * @param manifestIdCol must be set iff the store maintains a
     *   manifest (the guard below): a manifest missing one batch's
     *   ids would silently scope every future retraction PAST that
     *   batch — retracted rows would keep serving, the exact failure
@@ -415,27 +431,27 @@ object Incremental {
     // directory listing, not after paying the dominant-cost snapshot
     // aggregation
     commitGuards(spark, dir, batch, manifestIdCol)
-    // pin once: the emptiness probe and the write(s) share one
-    // materialization (withPinned: lineage kept, caller caches
-    // respected)
-    withPinned(snap) { pinned =>
-      // an empty partial would write NO partition directory: the
-      // batch id would silently never land, the duplicate-id refusal
-      // above could never fire for it, and the store's per-crawl
-      // provenance would silently lose the era — refuse loudly,
-      // mirroring initSnapshotStore's empty guard
-      require(!pinned.isEmpty,
-        s"refusing to commit an empty snapshot partial as batch " +
-          s"$batch of $dir - it would write no partition and the " +
-          "batch id would silently never land")
-      // ...and the guards run AGAIN right before the write: the
-      // early check ran before the dominant-cost build, which would
-      // otherwise leave a replay window as wide as the whole
-      // materialization — re-listing shrinks it back to the write
-      // itself (this is a window, not a lock: concurrent commits of
-      // the same batch id were never supported)
-      commitGuards(spark, dir, batch, manifestIdCol)
-      writeCommit(pinned, dir, batch, manifestIdCol)
+    val empty = s"refusing to commit an empty snapshot partial as " +
+      s"batch $batch of $dir - it would write no partition and the " +
+      "batch id would silently never land"
+    if (manifestIdCol.isEmpty) writeCommit(snap, dir, batch, None,
+      onEmpty = Some(empty))
+    else {
+      // pin once: the emptiness probe and both writes share one
+      // materialization (withPinned: lineage kept, caller caches
+      // respected)
+      withPinned(snap) { pinned =>
+        require(!pinned.isEmpty, empty)
+        // ...and the guards run AGAIN right before the writes: the
+        // early check ran before the dominant-cost build, which
+        // would otherwise leave a replay window as wide as the whole
+        // materialization — re-listing shrinks it back to the write
+        // itself (this is a window, not a lock: concurrent commits
+        // of the same batch id were never supported)
+        commitGuards(spark, dir, batch, manifestIdCol)
+        writeCommit(pinned, dir, batch, manifestIdCol,
+          onEmpty = Some(recomputedEmpty(batch, dir)))
+      }
     }
     // outside the pin (see initSnapshotStore): the sync probe reads
     // only what landed on disk — the corpus-scale pin's last real
@@ -508,9 +524,11 @@ object Incremental {
   }
 
   /** The write tail shared by [[commitSnapshotBatch]] and
-    * [[retractFromRollupStore]] — the input is already materialized
-    * by the caller, so the tombstone path does not pay a second
-    * full copy. MANIFEST first, store second — the crash-direction
+    * [[retractFromRollupStore]]. The store append counts its rows as
+    * it writes; `onEmpty` is the refusal for a zero-row append (which,
+    * partitioned by batch, writes no data file), or None where a
+    * zero-row append is a legitimate no-op (a vacuous tombstone).
+    * MANIFEST first, store second — the crash-direction
     * choice: dying between the two leaves the manifest claiming a
     * batch the store never landed, which fails LOUD downstream (a
     * retraction touching those ids refuses on the missing
@@ -518,10 +536,11 @@ object Incremental {
     * repairs). The reverse order would leave the manifest MISSING a
     * landed batch's ids, and a future retraction would silently
     * scope past them — retracted rows kept serving. */
-  private def writeCommit(pinned: DataFrame,
+  private def writeCommit(snap: DataFrame,
                           dir: String, batch: Long,
-                          manifestIdCol: Option[String]): Unit = {
-    val spark = pinned.sparkSession
+                          manifestIdCol: Option[String],
+                          onEmpty: Option[String]): Unit = {
+    val spark = snap.sparkSession
     manifestIdCol.foreach { id =>
       val residuePath = s"${manifestPath(dir)}/batch=$batch"
       val (fs, residue) = fsFor(spark, residuePath)
@@ -554,27 +573,35 @@ object Incremental {
         // wrong (non-determinism) diagnosis
         deleteIfExists(spark, residuePath)
       }
-      val ids = pinned.select(col(id)).distinct()
+      val ids = snap.select(col(id)).distinct()
       requireNoNullIds(ids, id, dir)
       ids.withColumn("batch", lit(batch))
         .write.partitionBy("batch").mode("append")
         .parquet(manifestPath(dir))
     }
-    pinned.withColumn("batch", lit(batch))
+    val (counted, rows) = Observed(snap, count(lit(1)))
+    counted.withColumn("batch", lit(batch))
       .write.partitionBy("batch").mode("append").parquet(dir)
-    // the landed-partition check, for UNMANIFESTED stores too: a
-    // cache block lost after the emptiness probe can recompute a
-    // non-deterministic plan EMPTY, and an empty append writes no
-    // partition directory — the batch id would silently never land
-    // (manifested stores additionally get verifyBatchSync). One
-    // directory existence test.
-    val (sfs, sdir) = fsFor(spark, s"$dir/batch=$batch")
-    require(sfs.exists(sdir),
-      s"batch $batch of $dir wrote no partition directory - the " +
-        "snapshot plan recomputed empty after its emptiness probe " +
-        "(non-deterministic plan + lost cache block?); retry the " +
-        "commit with a deterministic plan")
+    // the landed-partition check: an empty append writes no
+    // partition directory, so the batch id would silently never land
+    // (manifested stores additionally get verifyBatchSync). The row
+    // count came with the append; the rest is one directory
+    // existence test.
+    if (rows() == 0) require(onEmpty.isEmpty, onEmpty.get)
+    else {
+      val (sfs, sdir) = fsFor(spark, s"$dir/batch=$batch")
+      require(sfs.exists(sdir), recomputedEmpty(batch, dir))
+    }
   }
+
+  /** A pinned commit whose append wrote no partition: a cache block
+    * lost after the emptiness probe can recompute a non-deterministic
+    * plan EMPTY. */
+  private def recomputedEmpty(batch: Long, dir: String): String =
+    s"batch $batch of $dir wrote no partition directory - the " +
+      "snapshot plan recomputed empty after its emptiness probe " +
+      "(non-deterministic plan + lost cache block?); retry the " +
+      "commit with a deterministic plan"
 
   /** Null ids are refused at every manifested WRITE: the retraction
     * machinery discovers touched partitions and rewrites survivors
@@ -916,40 +943,28 @@ object Incremental {
     * rows that cancel key-wise at [[loadRollupStore]] time. An EMPTY
     * slice lands no batch (the [[retractDocs]] /
     * [[retractFromSnapshotStore]] convention — a quarantined source
-    * whose docs carried no countable lines writes nothing), and the
-    * probe shares the negation's materialization. The caller
-    * contract is [[subtractRollups]]'s (the slice must be a
-    * sub-multiset of what the store counted; violating it drives
-    * merged sums negative for the validator to catch), plus the
-    * store's fresh-batch-id rule — checked by listing BEFORE the
-    * slice materializes, so a replayed retraction refuses cheaply
-    * and even a vacuous one refuses under a duplicate id (the id
-    * namespace stays honest either way). */
+    * whose docs carried no countable lines writes nothing): its
+    * append, partitioned by batch, writes no data file, and the row
+    * count observed during that append tells the landed-partition
+    * check not to refuse. The caller contract is
+    * [[subtractRollups]]'s (the slice must be a sub-multiset of what
+    * the store counted; violating it drives merged sums negative for
+    * the validator to catch), plus the store's fresh-batch-id rule —
+    * checked by listing BEFORE the slice materializes, so a replayed
+    * retraction refuses cheaply and even a vacuous one refuses under
+    * a duplicate id (the id namespace stays honest either way). */
   def retractFromRollupStore(removedPartial: DataFrame, dir: String,
                              keys: Seq[String], sums: Seq[String],
                              batch: Long): Unit = {
     require(sums.nonEmpty, "need at least one sum column")
-    val spark = removedPartial.sparkSession
-    // the listing-only guards run BEFORE the partial materializes
-    // (the commitSnapshotBatch ordering): a replayed retraction with
-    // an already-landed batch id refuses by listing, not after
-    // paying the partial's shuffle — which makes a VACUOUS retract
-    // under a duplicate id refuse too, deliberately: the batch-id
-    // namespace stays honest whether or not the slice was empty
-    commitGuards(spark, dir, batch, None)
-    // one pin serves the vacuous-empty probe AND the write tail
-    // directly (routing through the public commit would pin twice)
-    withPinned(removedPartial.select(keys.map(col) ++
-        sums.map(c => (-col(c)).as(c)): _*)) { negated =>
-      if (!negated.isEmpty) {
-        // re-guard right before the write, as in commitSnapshotBatch:
-        // the early listing ran before the negation's dominant
-        // shuffle, which would otherwise leave a replay window as
-        // wide as the whole materialization
-        commitGuards(spark, dir, batch, None)
-        writeCommit(negated, dir, batch, None)
-      }
-    }
+    // the listing-only guards run right before the append, the one
+    // action that materializes the partial: a replayed retraction
+    // with an already-landed batch id refuses by listing, vacuous or
+    // not
+    commitGuards(removedPartial.sparkSession, dir, batch, None)
+    writeCommit(removedPartial.select(keys.map(col) ++
+        sums.map(c => (-col(c)).as(c)): _*), dir, batch, None,
+      onEmpty = None)
   }
 
   /** Fold all partials into a single batch-0 layout — bounds the

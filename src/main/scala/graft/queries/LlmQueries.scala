@@ -847,22 +847,32 @@ object LlmQueries {
         store.eras(existing)
         // each phase folds the store, validates the MERGED table
         // (tombstone partials legitimately hold negative rows; the
-        // fold must not), screens, and checkpoints EAGERLY — the
-        // next phase mutates the store this plan read
-        def screen(phase: String): DataFrame =
-          p(Dedup.lineDedupAgainst(incoming,
-              Dedup.boilerplateFromCounts(store.load(), minCount = 3),
-              "doc_id", "text")
-            .select(lit(phase).as("phase"), col("doc_id"),
-              col("text"), col("n_removed")))
-        val committed = screen("committed")
+        // fold must not) and pins its boilerplate set — the next
+        // phase mutates the store this fold read
+        def set(phase: String): DataFrame =
+          store.boilerplate(p, minCount = 3)
+            .withColumn("phase", lit(phase))
+            .select(Dedup.lineGroupKey("phase").as("grp"), col("key"))
+        val committed = set("committed")
         // the takedown lands as an APPEND: the quarantined slice's
         // partial, negated — no landed partition is touched
         store.retract(existing.filter(col("doc_id") % 7 === 1))
-        val retracted = screen("retracted")
+        val retracted = set("retracted")
         store.compact()
-        val compacted = screen("compacted")
-        committed.unionByName(retracted).unionByName(compacted)
+        val compacted = set("compacted")
+        // one screen of incoming × phase against its own phase's set.
+        // Not broadcast: a broadcast (grp, key) relation holds a whole
+        // Tungsten page (32 MB at 4 GB and 4 cores) on the Spark
+        // driver until the broadcast is cleaned; a shuffled hash join
+        // frees its per-task table with the task
+        val phases = array(lit("committed"), lit("retracted"),
+          lit("compacted"))
+        Dedup.groupedLineDedupAgainst(
+            incoming.withColumn("phase", explode(phases)),
+            committed.unionByName(retracted).unionByName(compacted)
+              .hint("shuffle_hash"),
+            "doc_id", "phase", "text")
+          .select("phase", "doc_id", "text", "n_removed")
           .orderBy("phase", "doc_id")
           .localCheckpoint(true)
       }
@@ -915,7 +925,7 @@ object LlmQueries {
           // the load runs the full one-job certification (params
           // sidecar, manifest sync, roster completeness, per-id band
           // structure), so the screen skips its own band-range check
-          val out = p.own(Dedup.lshScreenAgainst(incoming, store.load(),
+          val out = p.own(Dedup.lshScreenAgainst(incoming, store.load(p),
             existing, "doc_id", "text", Lsh.k, theta = 0.7, Lsh.numPerm,
             Lsh.bands, incomingBands = Some(inB), storedCertified = true))
           out.select(lit(phase).as("phase"), col("in_id"),
@@ -1475,7 +1485,7 @@ object LlmQueries {
         // the scope frees the pins; a per-phase output checkpoint
         // would just leak blocks past the return
         def serve(phase: String, probe: DataFrame): DataFrame =
-          Search.bm25TopKIndexed(p(store.load()), probe, "qid", "qtext",
+          Search.bm25TopKIndexed(p(store.load(p)), probe, "qid", "qtext",
               k = 5, materialize = false)
             .select(lit(phase).as("phase"), col("qid"),
               col("rank"), col("doc_id"), col("score_micros"))
@@ -1509,7 +1519,7 @@ object LlmQueries {
         Fixtures.dir(s, d, "knstore"))
       store.eras(docs)
       def scored(phase: String): DataFrame =
-        TextAnalysis.knScoreFromSnapshot(store.load())
+        Pins.scope(p => TextAnalysis.knScoreFromSnapshot(store.load(p)))
           .select(lit(phase).as("phase"), col("doc_id"),
             col("n_bigrams"), col("sum_logp_micros"),
             col("mean_logp_micros"))
@@ -2191,10 +2201,10 @@ object LlmQueries {
           // re-certify EVERY touched store before serving from it:
           // the band store's load certifies in ONE store scan (params
           // + manifest sync + roster completeness + per-id
-          // structure), and the rollup fold keeps its non-negativity
-          // validator
-          val bands = bandStore.load()
-          val counts = countStore.load()
+          // structure), and the rollup fold's non-negativity
+          // validator counts during the pin of its screen set
+          val bands = bandStore.load(p)
+          val boiler = countStore.boilerplate(p, minCount = 3)
           val s1 = s1Shared
           val flagged = p.own(Dedup.lshScreenAgainst(s1, bands,
             survivors, "doc_id", "text", Lsh.k, theta = 0.7, Lsh.numPerm,
@@ -2209,8 +2219,7 @@ object LlmQueries {
             Seq("doc_id"), "left_anti")
           // s3 keeps its checkpoint: the screen's explode + collect_list
           // shuffle is the one recompute not worth paying twice
-          val s3 = p(Dedup.groupedLineDedupAgainst(s2,
-              Dedup.groupedBoilerplateFromCounts(counts, minCount = 3),
+          val s3 = p(Dedup.groupedLineDedupAgainst(s2, boiler,
               "doc_id", "lang", "text")
             .select("doc_id", "lang", "text"))
           // quality gate = the d15 floor (token count + language-ID

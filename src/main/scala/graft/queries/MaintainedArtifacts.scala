@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Pins
+import graft.core.{Observed, Pins}
 import graft.operators.{Dedup, Incremental, Quantization, Search, TextAnalysis}
 
 /** The seven maintained artifacts behind one interface: the BM25 tf
@@ -264,8 +264,10 @@ private[queries] object MaintainedArtifacts {
     /** Fold every batch into batch 0; invisible to [[load]]. */
     def compact(): Unit
     /** The current state, certified: a store that fails its checks
-      * refuses here, before anything serves from it. */
-    def load(): DataFrame
+      * refuses here, before anything serves from it. Whatever the load
+      * pins belongs to `p`, which must outlive every use of the
+      * returned frame. */
+    def load(p: Pins): DataFrame
 
     /** The two crawl eras of `existing`: even docs init the store, odd
       * docs commit as batch 1. */
@@ -301,7 +303,7 @@ private[queries] object MaintainedArtifacts {
       Incremental.compactSnapshotStore(s, dir)
       restartNumbering()
     }
-    def load(): DataFrame = {
+    def load(p: Pins): DataFrame = {
       val st = Incremental.loadSnapshotStore(s, dir)
       certify(st)
       st
@@ -309,10 +311,16 @@ private[queries] object MaintainedArtifacts {
   }
 
   /** An append-only rollup store of `cnt` partials keyed by `keys`: a
-    * retraction appends the slice's partial negated (a tombstone). */
-  private class RollupStore(s: SparkSession, dir: String,
-                            rows: DataFrame => DataFrame,
-                            keys: Seq[String]) extends Store(dir) {
+    * retraction appends the slice's partial negated (a tombstone).
+    * Every read folds the store once, pins what it returns and counts
+    * the fold's bad rows (negative or null `cnt`,
+    * [[Dedup.validateLineCounts]]' refusal and message) during that
+    * same checkpoint, so certifying adds no Spark job. */
+  private[queries] class RollupStore(s: SparkSession, dir: String,
+                                     rows: DataFrame => DataFrame,
+                                     keys: Seq[String],
+                                     threshold: (DataFrame, Int) => DataFrame)
+      extends Store(dir) {
     private val sums = Seq("cnt")
     def init(docs: DataFrame): Unit = {
       Incremental.initSnapshotStore(rows(docs), dir)
@@ -327,10 +335,20 @@ private[queries] object MaintainedArtifacts {
       Incremental.compactRollupStore(s, dir, keys, sums)
       restartNumbering()
     }
-    def load(): DataFrame = {
-      val counts = Incremental.loadRollupStore(s, dir, keys, sums)
-      Dedup.validateLineCounts(counts)
-      counts
+    def load(p: Pins): DataFrame = certified(p, identity)
+
+    /** The screen set: the keys whose folded count reaches
+      * `minCount`. Only the set is pinned; the whole fold is still
+      * certified. */
+    def boilerplate(p: Pins, minCount: Int): DataFrame =
+      certified(p, threshold(_, minCount))
+
+    private def certified(p: Pins, view: DataFrame => DataFrame) = {
+      val (fold, bad) = Observed(
+        Incremental.loadRollupStore(s, dir, keys, sums), Dedup.badLineCounts)
+      val pinned = p(view(fold))
+      Dedup.requireLineCounts(bad())
+      pinned
     }
   }
 
@@ -361,9 +379,11 @@ private[queries] object MaintainedArtifacts {
         Lsh.bands),
       () => Dedup.writeBandParams(s, dir, Lsh.k, Lsh.numPerm, Lsh.bands))
 
-  def boilerStore(s: SparkSession, dir: String): Store =
-    new RollupStore(s, dir, lineRows, Seq("key"))
+  def boilerStore(s: SparkSession, dir: String): RollupStore =
+    new RollupStore(s, dir, lineRows, Seq("key"),
+      Dedup.boilerplateFromCounts)
 
-  def groupedStore(s: SparkSession, dir: String): Store =
-    new RollupStore(s, dir, groupedRows, Seq("grp", "key"))
+  def groupedStore(s: SparkSession, dir: String): RollupStore =
+    new RollupStore(s, dir, groupedRows, Seq("grp", "key"),
+      Dedup.groupedBoilerplateFromCounts)
 }

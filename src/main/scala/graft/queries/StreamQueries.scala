@@ -53,11 +53,10 @@ object StreamQueries {
     }
 
   /** A file stream over the staged input dir `in`, under the schema of
-    * the dataset's `srcFile`. The schema read is a Spark job, so it
-    * runs only when a stream actually builds. */
+    * the dataset's `srcFile` (read from its footer, no Spark job). */
   private def fileStream(s: SparkSession, d: String, srcFile: String)(
       in: String): DataFrame =
-    s.readStream.schema(s.read.parquet(s"$d/$srcFile").schema).parquet(in)
+    s.readStream.schema(T.parquet(s, s"$d/$srcFile").schema).parquet(in)
 
   /** The staging both stream runners share, once per (application,
     * dataset, name): copy the dataset's `srcFile` into `<base>/in`,
@@ -114,7 +113,7 @@ object StreamQueries {
     between
     val run2 = materializedStream(s, d, name + "B", srcFile,
       transform = eraB)()
-    s.read.parquet(run1).unionByName(s.read.parquet(run2))
+    T.parquet(s, run1).unionByName(T.parquet(s, run2))
   }
 
   /** Shared body of the IVF-PQ lifecycle twins (st_inc_ivfpq_add /
@@ -188,7 +187,7 @@ object StreamQueries {
             "p_partkey", "l_partkey")
           .select("p_partkey")
       }
-      s.read.parquet(out).orderBy("p_partkey")
+      T.parquet(s, out).orderBy("p_partkey")
     }),
 
     // The watermarked hourly-window aggregation as an oracle row: the
@@ -202,7 +201,7 @@ object StreamQueries {
         graft.streaming.EventStream.hourlyAgg(
           graft.streaming.EventStream.readEvents(s, in))
       }
-      s.read.parquet(out).orderBy("hour_start", "event_type")
+      T.parquet(s, out).orderBy("hour_start", "event_type")
     }),
 
     // Custom stateful sessionization (flatMapGroupsWithState) as an
@@ -217,7 +216,7 @@ object StreamQueries {
             graft.streaming.EventStream.readEvents(s, in),
             gapNanos = 1800000000000L).toDF()
       }
-      s.read.parquet(out).orderBy("user_id")
+      T.parquet(s, out).orderBy("user_id")
     }),
 
     // The stream-stream attribution join as an oracle row: two
@@ -229,7 +228,7 @@ object StreamQueries {
         graft.streaming.EventStream.attributeJoin(
           graft.streaming.EventStream.readEvents(s, in))
       }
-      s.read.parquet(out).orderBy("purchase_id", "click_id")
+      T.parquet(s, out).orderBy("purchase_id", "click_id")
     }),
 
     // The DETERMINISTIC streaming dedup as an oracle row: per-key
@@ -244,7 +243,7 @@ object StreamQueries {
         graft.streaming.EventStream.dedupPinned(
           graft.streaming.EventStream.readEvents(s, in)).toDF()
       }
-      s.read.parquet(out).orderBy("user_id", "event_type")
+      T.parquet(s, out).orderBy("user_id", "event_type")
     }),
 
     // Cross-corpus duplicate-span detection as a streaming twin — the
@@ -266,7 +265,7 @@ object StreamQueries {
           graft.operators.Dedup.crossDupSpansAgainst(
             batch.filter(col("doc_id") % 5 === 0), seen,
             "doc_id", "text"))()
-      s.read.parquet(out).orderBy("doc_id", "span_start")
+      T.parquet(s, out).orderBy("doc_id", "span_start")
     }),
 
     // Cross-corpus NEAR-dup (prefix-filtered exact Jaccard) as a
@@ -291,7 +290,7 @@ object StreamQueries {
           graft.operators.Dedup.prefixCrossJaccardAgainst(
             batch.filter(col("doc_id") % 7 === 0), idx,
             "doc_id", "text"))()
-      s.read.parquet(out).orderBy("in_id", "ex_id")
+      T.parquet(s, out).orderBy("in_id", "ex_id")
     }),
 
     // ANN SERVING as a streaming run: the IVF-PQ index builds ONCE
@@ -307,7 +306,7 @@ object StreamQueries {
         transform = batch => graft.operators.Quantization.ivfPqSearch(
           batch.filter(col("vec_id") % 10 === 0), "vec_id", "embedding",
           idx, nprobe = 2, topK = 3))()
-      s.read.parquet(out).orderBy("qid", "rank")
+      T.parquet(s, out).orderBy("qid", "rank")
     }),
 
     // Cross-corpus LINE dedup as a streaming twin — the fourth ingest
@@ -327,7 +326,7 @@ object StreamQueries {
           graft.operators.Dedup.lineDedupAgainst(
             planted(batch.filter(col("doc_id") % 5 === 0)), set,
             "doc_id", "text"))()
-      s.read.parquet(out).orderBy("doc_id")
+      T.parquet(s, out).orderBy("doc_id")
     }),
 
     // The boilerplate screen with the set REFRESHED BETWEEN
@@ -435,11 +434,9 @@ object StreamQueries {
         // init resets the layout, so everything lands fresh
         store.eras(existing)
         // each era's screen set folds the ON-DISK store once, is
-        // validated, and pins (every micro-batch probes it)
-        lazy val setFull =
-          p(D.boilerplateFromCounts(store.load(), minCount = 3))
-        lazy val setRet =
-          p(D.boilerplateFromCounts(store.load(), minCount = 3))
+        // validated during its pin, and every micro-batch probes it
+        lazy val setFull = store.boilerplate(p, minCount = 3)
+        lazy val setRet = store.boilerplate(p, minCount = 3)
         def screen(set: => DataFrame, era: Int)(batch: DataFrame) =
           D.lineDedupAgainst(
             planted(batch.filter(col("doc_id") % 5 === 0
@@ -488,8 +485,8 @@ object StreamQueries {
         // parquet reads); the load's one-job certification licenses
         // the screens below to skip their per-MICRO-BATCH band-range
         // job (storedCertified: the pinned table is immutable per era)
-        lazy val bandsA = p(store.load())
-        lazy val bandsB = p(store.load())
+        lazy val bandsA = p(store.load(p))
+        lazy val bandsB = p(store.load(p))
         // per micro-batch the operator checkpoints its candidates and
         // output; it frees the candidates itself, and the sink frees
         // the sealed output once the batch has landed
@@ -634,8 +631,8 @@ object StreamQueries {
         // postings/dl/df/scalars from the snapshot, and an unpinned
         // load would re-read the store parquet for each subplan of
         // each micro-batch
-        lazy val tfA = p(store.load())
-        lazy val tfAB = p(store.load())
+        lazy val tfA = p(store.load(p))
+        lazy val tfAB = p(store.load(p))
         // materialize = false, as in st_inc_bm25: the sink write
         // consumes each micro-batch's result once
         def serve(tf: => DataFrame, era: Int)(batch: DataFrame) =
@@ -677,12 +674,12 @@ object StreamQueries {
       val runA = ingest("healthA", col("doc_id") % 10 =!= 9)
       val dir = Fixtures.dir(s, d, "healthruns_st")
       graft.core.Snapshots.appendRun(
-        LlmQueries.corpusHealth(s.read.parquet(runA)),
+        LlmQueries.corpusHealth(T.parquet(s, runA)),
         "crawl_000", 0, dir, overwrite = true)
       val runB = ingest("healthB", col("doc_id") % 10 === 9)
       graft.core.Snapshots.appendRun(
         LlmQueries.corpusHealth(
-          s.read.parquet(runA).unionByName(s.read.parquet(runB))),
+          T.parquet(s, runA).unionByName(T.parquet(s, runB))),
         "crawl_001", 1, dir)
       LlmQueries.healthRunsDelta(
         graft.core.Snapshots.loadRunStore(s, dir))
@@ -742,8 +739,8 @@ object StreamQueries {
         Fixtures.dir(s, d, "st_knstore"))
       Pins.scope { p =>
         store.init(T.documents(s, d).filter(col("doc_id") % 2 === 0))
-        lazy val scoresA = p.own(TA.knScoreFromSnapshot(store.load()))
-        lazy val scoresAB = p.own(TA.knScoreFromSnapshot(store.load()))
+        lazy val scoresA = p.own(TA.knScoreFromSnapshot(store.load(p)))
+        lazy val scoresAB = p.own(TA.knScoreFromSnapshot(store.load(p)))
         def serve(scores: => DataFrame, era: Int)(batch: DataFrame) =
           batch.filter(col("doc_id") % 16 === era * 5)
             .select("doc_id")
@@ -900,7 +897,7 @@ object StreamQueries {
         transform = batch =>
           graft.operators.Dedup.decontaminate(
             batch, "doc_id", "text", bench, "btext"))()
-      s.read.parquet(out).orderBy("doc_id")
+      T.parquet(s, out).orderBy("doc_id")
     }),
 
     // S8's streaming twin as an oracle row — stream-static left-semi
@@ -915,7 +912,7 @@ object StreamQueries {
                 col("o_orderdate").cast("date")) > 100)
           .select("o_orderkey")
       }
-      s.read.parquet(out).orderBy("o_orderkey")
+      T.parquet(s, out).orderBy("o_orderkey")
     }),
     // Incremental aggregate maintenance: two disjoint batch partials
     // (event_id mod 10 split) merged key-wise must equal the full
@@ -962,7 +959,7 @@ object StreamQueries {
         // readEvents normalizes ts to long epoch nanos on the stream
         graft.streaming.EventStream.readEvents(s, in)
       }
-      s.read.parquet(out).orderBy("user_id", "event_type")
+      T.parquet(s, out).orderBy("user_id", "event_type")
     }),
 
     // Fixed-N-per-stratum sampling as a folded streaming run: keeping
@@ -978,7 +975,7 @@ object StreamQueries {
           case None => topn(b)
           case Some(prev) => topn(prev.unionByName(topn(b)))
         })()
-      s.read.parquet(out).orderBy("doc_id")
+      T.parquet(s, out).orderBy("doc_id")
     }),
 
     // Mergeable DISTINCT-COUNT maintenance via HLL sketches (the

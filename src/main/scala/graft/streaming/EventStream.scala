@@ -16,14 +16,15 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateT
 object EventStream {
 
   /** Streaming read over a parquet directory with the events schema
-    * taken from a batch peek (file streams need an explicit schema).
+    * taken from a footer (file streams need an explicit schema;
+    * [[graft.core.Tables.parquet]] reads it without a Spark job).
     * `ts` is normalized to long epoch nanos exactly as the batch
     * chokepoint does ([[graft.core.Tables.normalizeEventTs]] — the
     * fixture's physical timestamp precision has varied across
     * generations), so streaming and batch twins stay expression-
     * identical downstream. */
   def readEvents(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(dir).schema
+    val schema = graft.core.Tables.parquet(spark, dir).schema
     graft.core.Tables.normalizeEventTs(
       spark.readStream.schema(schema).parquet(dir))
   }

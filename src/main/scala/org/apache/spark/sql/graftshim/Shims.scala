@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graftshim
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -27,4 +28,10 @@ object Shims {
       case l: LogicalRDD => l.rdd.unpersist(blocking = false)
       case _ => ()
     }
+
+  /** Block until every event posted so far has reached the
+    * listeners: listener events arrive asynchronously, and the bus is
+    * `private[spark]`. */
+  def drainListenerBus(sc: SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

@@ -1,11 +1,14 @@
 package graft.queries
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.JobCounter
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 
 import graft.SparkSpec
-import graft.core.Fixtures
+import graft.core.{Fixtures, Pins}
 import graft.operators.{Dedup, Incremental, Search, TextAnalysis}
 import graft.queries.MaintainedArtifacts.Store
 
@@ -84,9 +87,11 @@ class DurableStoresSpec extends SparkSpec with BeforeAndAfterAll {
       st.eras(docs)
       st.retract(gone)
       if (compacts) st.compact()
-      val served = st.load()
-      assert(rows(served) ==
-        rows(expected().select(served.columns.map(col).toSeq: _*)))
+      Pins.scope { p =>
+        val served = st.load(p)
+        assert(rows(served) ==
+          rows(expected().select(served.columns.map(col).toSeq: _*)))
+      }
     }
 
   test("a fact store whose manifest lost a batch refuses at load") {
@@ -95,7 +100,8 @@ class DurableStoresSpec extends SparkSpec with BeforeAndAfterAll {
     val lost = s"${st.dir}__manifest/batch=1"
     if (!new java.io.File(lost).isDirectory) st.eras(docs)
     Fixtures.deleteTree(lost)
-    val e = intercept[IllegalArgumentException](st.load())
+    val e = intercept[IllegalArgumentException](
+      Pins.scope(p => st.load(p)))
     assert(e.getMessage.contains(s"manifest out of sync with ${st.dir}"))
   }
 
@@ -104,7 +110,78 @@ class DurableStoresSpec extends SparkSpec with BeforeAndAfterAll {
     val st = MaintainedArtifacts.boilerStore(spark, s"$tmp/boiler_refuse")
     st.init(docs.filter(col("doc_id") % 2 === 0))
     st.retract(docs.filter(col("doc_id") % 2 =!= 0))
-    val e = intercept[IllegalArgumentException](st.load())
+    val e = intercept[IllegalArgumentException](
+      Pins.scope(p => st.load(p)))
     assert(e.getMessage.contains("line-count table corrupt"))
+  }
+
+  /** Every data file under `dir` with its size and modification time
+    * (markers and checksums skipped). */
+  private def dataFiles(dir: String): Set[(String, Long, Long)] = {
+    val root = java.nio.file.Paths.get(dir)
+    java.nio.file.Files.walk(root).iterator.asScala
+      .map(_.toFile)
+      .filter(f => f.isFile && !f.getName.startsWith("_") &&
+        !f.getName.startsWith("."))
+      .map(f => (root.relativize(f.toPath).toString, f.length,
+        f.lastModified))
+      .toSet
+  }
+
+  /** The refusal `call` throws; the store's data files are the same
+    * before and after it. */
+  private def refusal(st: Store)(call: => Any): String = {
+    val before = dataFiles(st.dir)
+    val e = intercept[IllegalArgumentException](call)
+    assert(dataFiles(st.dir) == before)
+    e.getMessage
+  }
+
+  test("rollup store refusals keep their messages and leave the store " +
+    "unchanged; a vacuous retract lands no batch") {
+    val st = MaintainedArtifacts.boilerStore(spark, s"$tmp/boiler_guards")
+    st.eras(docs)
+    val none = docs.filter(lit(false))
+    assert(refusal(st)(st.init(none)).contains(
+      s"refusing to init ${st.dir} from an empty snapshot"))
+    assert(refusal(st)(st.commit(none)).contains(
+      "refusing to commit an empty snapshot partial as batch 2 of " +
+        st.dir))
+    val landed = dataFiles(st.dir)
+    st.retract(none)
+    assert(dataFiles(st.dir) == landed)
+    assert(!new java.io.File(s"${st.dir}/batch=3").exists)
+    // a slice never committed drives its counts negative
+    st.retract(docs.filter(quarantined))
+    st.retract(docs.filter(quarantined))
+    assert(refusal(st)(Pins.scope(p => st.load(p))).contains(
+      "line-count table corrupt"))
+    // the screen set certifies the whole fold, not only the rows it
+    // keeps
+    assert(refusal(st)(Pins.scope(p => st.boilerplate(p, 3))).contains(
+      "line-count table corrupt"))
+  }
+
+  test("a null-poisoned rollup fold refuses at load") {
+    val st = MaintainedArtifacts.boilerStore(spark, s"$tmp/boiler_null")
+    st.init(docs)
+    val s = spark
+    import s.implicits._
+    Incremental.commitSnapshotBatch(
+      Seq((42L, Option.empty[Long])).toDF("key", "cnt"), st.dir, 7L)
+    assert(refusal(st)(Pins.scope(p => st.load(p))).contains(
+      "line-count table corrupt: 1 negative counts"))
+  }
+
+  test("the boiler handle's eras, retract, compact and load cycle runs " +
+    "a fixed number of Spark jobs") {
+    val st = MaintainedArtifacts.boilerStore(spark, s"$tmp/boiler_budget")
+    val (_, jobs) = JobCounter(spark.sparkContext) {
+      st.eras(docs)
+      st.retract(gone)
+      st.compact()
+      Pins.scope { p => st.load(p); () }
+    }
+    assert(jobs == 12)
   }
 }

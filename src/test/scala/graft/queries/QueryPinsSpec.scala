@@ -73,7 +73,8 @@ class QueryPinsSpec extends SparkSpec {
                    "st_inc_kn_store", "st_dedup_stream",
                    "st_inc_ivfpq_add", "st_inc_ivfpq_remove",
                    "st_inc_boiler_remove", "st_inc_kn_remove",
-                   "st_inc_bm25_remove", "st_inc_kn")) {
+                   "st_inc_bm25_remove", "st_inc_kn",
+                   "inc_boiler_remove")) {
     test(s"$name frees its pinned state before it returns") {
       val leaked = leaves(name)
       assert(leaked.isEmpty, s"$name left ${leaked.size} persisted RDD(s)")
