@@ -3,7 +3,7 @@ package graft.core
 import scala.concurrent.Await
 import scala.concurrent.duration._
 
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 
 /** A long aggregate over a plan, computed by the action that already
   * runs it (an eager checkpoint, a write) instead of by a job of its
@@ -24,8 +24,14 @@ object Observed {
   private val patience = 10.minutes
 
   def apply(df: DataFrame, metric: Column): (DataFrame, () => Long) = {
+    val (observed, value) = row(df, metric)
+    (observed, () => value().getLong(0))
+  }
+
+  /** The same for an aggregate of any type: a one-field row. */
+  def row(df: DataFrame, metric: Column): (DataFrame, () => Row) = {
     val obs = Observation()
     (df.observe(obs, metric.as("value")),
-      () => Await.result(obs.future, patience).getLong(0))
+      () => Await.result(obs.future, patience))
   }
 }

@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.FileStatus
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -46,9 +46,7 @@ object Tables {
     * `.`) are skipped as the file index skips them. */
   private def footerSchema(spark: SparkSession, path: String,
                            partitions: Seq[String]): Option[StructType] = {
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new Path(path)
-    val fs = root.getFileSystem(conf)
+    val (fs, root) = Manifested.fs(spark, path)
     def visible(st: FileStatus) = {
       val n = st.getPath.getName
       !(n.startsWith("_") && !n.contains("=")) && !n.startsWith(".")
@@ -66,7 +64,7 @@ object Tables {
     else first(fs.getFileStatus(root), Nil).collect {
       case (f, dirs) if dirs == partitions =>
         val footer = new Footer(f.getPath, ParquetFooterReader.readFooter(
-          HadoopInputFile.fromStatus(f, conf),
+          HadoopInputFile.fromStatus(f, fs.getConf),
           ParquetMetadataConverter.NO_FILTER))
         ParquetFileFormat.readSchemaFromFooter(footer,
           new ParquetToSparkSchemaConverter(spark.sessionState.conf))

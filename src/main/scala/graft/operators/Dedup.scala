@@ -429,16 +429,20 @@ object Dedup {
     * on (group, line-hash), so group cardinality only widens the key
     * space — same single skinny shuffle as [[lineDedupAgainst]], and
     * the same per-row-independence argument makes it micro-batch-
-    * split-safe. The set is corpus-derived/unbounded → no broadcast
-    * hint (AQE decides), as in the global screen.
+    * split-safe. The set is corpus-derived/unbounded, and the join
+    * is a shuffled hash join, never a broadcast: a broadcast
+    * multi-column (grp, key) relation holds a whole Tungsten page
+    * (32 MB at 4 GB and 4 cores) on the Spark driver until the
+    * broadcast is cleaned, where a shuffled hash join frees its
+    * per-task table with the task.
     *
     * @return (idCol, groupCol, text, n_removed). */
   def groupedLineDedupAgainst(incoming: DataFrame,
                               boilerplate: DataFrame, idCol: String,
                               groupCol: String,
                               textCol: String): DataFrame =
-    lineDedupAgainstImpl(incoming, boilerplate, idCol, Some(groupCol),
-      textCol)
+    lineDedupAgainstImpl(incoming, boilerplate.hint("shuffle_hash"), idCol,
+      Some(groupCol), textCol)
 
   /** Cut every line of `incoming` that appears in the existing
     * corpus's [[boilerplateLineSet]] — the ingest-time form of
@@ -1189,13 +1193,11 @@ object Dedup {
                         dir: String, k: Int, numPerm: Int,
                         bands: Int): Unit = {
     val path = dir + "__band_params"
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(p),
+    require(graft.core.Manifested.exists(spark, path),
       s"band store $dir declares no LSH parameters ($path missing) " +
         "- a parameter-mismatched probe silently misses every " +
         "bucket; writeBandParams once with the store's build values")
-    val r = spark.read.parquet(path)
+    val r = graft.core.Tables.parquet(spark, path)
       .select("k", "num_perm", "bands").head()
     val (sk, sp, sb) = (r.getInt(0), r.getInt(1), r.getInt(2))
     require(sk == k && sp == numPerm && sb == bands,

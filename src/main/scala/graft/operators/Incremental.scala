@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField}
 
-import graft.core.{Observed, Pins}
+import graft.core.{Manifested, Observed, Pins}
 
 /** Incremental aggregate maintenance — the pattern that keeps a
   * 100 TB pipeline's rollups fresh WITHOUT rescanning the corpus:
@@ -150,16 +150,16 @@ object Incremental {
     * so the read starts no Spark job. */
   private def readStore(spark: SparkSession, dir: String): DataFrame = {
     finishSwap(spark, dir)
-    graft.core.Tables.parquet(spark, dir, StructField("batch", LongType))
+    layout(dir).read(spark)
   }
 
-  /** The optional id→batch MANIFEST living beside a fact store: one
-    * skinny (id, batch) row per doc per batch, the refinement
-    * [[retractFromSnapshotStore]]'s discovery scales on — with it, a
-    * takedown finds its touched partitions by probing a table that is
-    * doc-count-sized instead of reading the id column of EVERY store
-    * partition (at 100 TB the difference between a manifest lookup
-    * and a full-store column scan per retraction). */
+  /** The store as a [[graft.core.Manifested]] layout, with its optional
+    * id→batch MANIFEST beside it: one skinny (id, batch) row per doc
+    * per batch, the refinement [[retractFromSnapshotStore]]'s discovery
+    * scales on. */
+  private def layout(dir: String): Manifested.Layout =
+    Manifested.Layout(dir, manifestPath(dir), StructField("batch", LongType))
+
   private def manifestPath(dir: String): String = dir + "__manifest"
 
   /** Where a compaction lands its fold before [[swapIntoPlace]]. */
@@ -173,12 +173,11 @@ object Incremental {
     * layout still existed, so it is never renamed in. */
   private def finishSwap(spark: SparkSession, dir: String): Unit =
     Seq(dir, manifestPath(dir)).foreach { d =>
-      val (fs, target) = fsFor(spark, d)
-      val tmp = new org.apache.hadoop.fs.Path(compactTmp(d))
-      if (!fs.exists(target) &&
-          fs.exists(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS")))
-        require(fs.rename(tmp, target),
-          s"could not rename the completed compaction $tmp into $d")
+      if (!Manifested.exists(spark, d) &&
+          Manifested.committed(spark, compactTmp(d)))
+        Manifested.rename(spark, compactTmp(d), d,
+          s"could not rename the completed compaction ${compactTmp(d)} " +
+            s"into $d")
     }
 
   /** Validation TIERS for the store entry points. Every write path
@@ -204,41 +203,6 @@ object Incremental {
       s"unknown validation level '$validate' - use 'full' (certify " +
         "per operation) or 'recovery' (defer certification to " +
         "crash-recovery/audit time)")
-
-  private def fsFor(spark: SparkSession, path: String)
-      : (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
-  }
-
-  /** A manifest EXISTS only when its last write job committed — the
-    * `_SUCCESS` marker, not bare directory existence: a crash during
-    * the manifest write leaves the directory created (job setup)
-    * but unmarked, and counting that half-written state as a
-    * manifest would let the next commit pass the guard and seed a
-    * manifest missing every earlier batch's ids — the silent
-    * retraction miss. Unmarked ⇒ manifest-less: retraction falls
-    * back to the full scan and a manifested commit refuses loudly
-    * until the init is retried. (A deployment that disables success
-    * markers fails loud the same way — every manifested commit
-    * refuses — never silent.) */
-  private def hasManifest(spark: SparkSession, dir: String): Boolean = {
-    val (fs, p) = fsFor(spark, manifestPath(dir))
-    fs.exists(p) && fs.exists(
-      new org.apache.hadoop.fs.Path(p, "_SUCCESS"))
-  }
-
-  /** Delete-or-die: the callers' delete is load-bearing (a stale
-    * manifest surviving a reset under-approximates silently), and
-    * Hadoop filesystems report failure by RETURN VALUE as well as by
-    * exception — swallowing a false here would be the silent miss.
-    * [[swapIntoPlace]] makes the same requirement of its delete. */
-  private def deleteIfExists(spark: SparkSession, path: String): Unit = {
-    val (fs, p) = fsFor(spark, path)
-    if (fs.exists(p)) require(fs.delete(p, true),
-      s"could not delete $path - refusing to continue past a stale " +
-        "layout that would silently survive")
-  }
 
   /** Initialize (or RESET) a snapshot store with the first batch as
     * partition 0. The overwrite mode is PINNED static per-write:
@@ -305,20 +269,14 @@ object Incremental {
       // finishSwap would otherwise rename that stale fold in as the
       // store
       Seq(dir, manifestPath(dir)).foreach(d =>
-        deleteIfExists(pinned.sparkSession, compactTmp(d)))
+        Manifested.deleteIfExists(pinned.sparkSession, compactTmp(d)))
       // neutralize FIRST (see scaladoc): no ordering of store and
       // manifest writes can otherwise keep a reset's crash windows
       // out of the silent-miss class
-      deleteIfExists(pinned.sparkSession, manifestPath(dir))
-      pinned.withColumn("batch", lit(0L))
-        .write.option("partitionOverwriteMode", "static")
-        .partitionBy("batch").mode("overwrite").parquet(dir)
-      manifestIds.foreach { ids =>
-        ids.withColumn("batch", lit(0L))
-          .write.option("partitionOverwriteMode", "static")
-          .partitionBy("batch").mode("overwrite")
-          .parquet(manifestPath(dir))
-      }
+      Manifested.deleteIfExists(pinned.sparkSession, manifestPath(dir))
+      layout(dir).overwrite(pinned.withColumn("batch", lit(0L)), dir)
+      manifestIds.foreach(ids => layout(dir).overwrite(
+        ids.withColumn("batch", lit(0L)), manifestPath(dir)))
     }
     // post-write sync check (see verifyBatchSync), OUTSIDE the pin:
     // the probe deliberately reads what landed on DISK, so holding
@@ -359,17 +317,13 @@ object Incremental {
     * block lost between them recomputes from lineage — for a
     * non-deterministic snapshot plan the two writes could land
     * DIFFERENT id sets, store rows the manifest never recorded, the
-    * silent retraction miss. One [[symmetricDiffCount]] job over
-    * only the new partition's two id projections (not the whole
-    * store) turns that into a loud failure at the commit that
-    * caused it. */
+    * silent retraction miss. One sync job
+    * ([[graft.core.Manifested.Layout.sync]]) over only the new
+    * partition of each side (not the whole store) turns that into a
+    * loud failure at the commit that caused it. */
   private def verifyBatchSync(spark: SparkSession, dir: String,
                               batch: Long, id: String): Unit = {
-    val s = spark.read.parquet(s"$dir/batch=$batch")
-      .select(col(id)).distinct()
-    val m = spark.read
-      .parquet(s"${manifestPath(dir)}/batch=$batch").select(col(id))
-    val bad = symmetricDiffCount(s, m)
+    val bad = layout(dir).sync(spark, id, Some(Seq(batch))).differ
     require(bad == 0,
       s"batch $batch of $dir landed with $bad id(s) differing " +
         "between store and manifest - a cache block lost mid-commit " +
@@ -377,23 +331,6 @@ object Incremental {
         s"across the two writes; delete both batch=$batch " +
         "partitions and retry (or compactSnapshotStore to rebuild " +
         "the manifest)")
-  }
-
-  /** Count of keys whose multiplicities differ between two frames
-    * with the same columns — ONE job (union with +1/-1 weights,
-    * group by the row, any nonzero sum is a divergence), zero iff
-    * the multisets are equal. Null-safe by grouping semantics (a
-    * null groups with itself), where an equi-join would never match
-    * a null against itself and report byte-identical layouts as
-    * diverged; and one scan of each side, where a two-directional
-    * exceptAll would scan both twice. */
-  private def symmetricDiffCount(a: DataFrame, b: DataFrame): Long = {
-    val cols = a.columns.toSeq
-    a.withColumn("__graft_w", lit(1L))
-      .unionByName(b.withColumn("__graft_w", lit(-1L)))
-      .groupBy(cols.map(col): _*)
-      .agg(sum(col("__graft_w")).as("__graft_w"))
-      .filter(col("__graft_w") =!= 0L).count()
   }
 
   /** Append a crawl batch's snapshot partial as its own partition
@@ -473,7 +410,7 @@ object Incremental {
     * compute what a metadata probe already knows). */
   private def landedBatches(spark: SparkSession,
                             dir: String): Set[Long] = {
-    val (fs, p) = fsFor(spark, dir)
+    val (fs, p) = Manifested.fs(spark, dir)
     if (!fs.exists(p)) Set.empty
     else fs.listStatus(p).iterator
       .filter(_.isDirectory)
@@ -504,11 +441,10 @@ object Incremental {
     // readStore probe failed loudly on PATH_NOT_FOUND and this keeps
     // that refusal (r17 advice)
     finishSwap(spark, dir)
-    val (fs, p) = fsFor(spark, dir)
-    require(fs.exists(p),
+    require(Manifested.exists(spark, dir),
       s"$dir does not exist - initSnapshotStore creates it; " +
         "refusing to commit into a store that was never initialized")
-    val manifested = hasManifest(spark, dir)
+    val manifested = layout(dir).manifested(spark)
     require(manifested == manifestIdCol.isDefined,
       if (manifested)
         s"$dir maintains an id manifest - pass manifestIdCol so " +
@@ -541,10 +477,9 @@ object Incremental {
                           manifestIdCol: Option[String],
                           onEmpty: Option[String]): Unit = {
     val spark = snap.sparkSession
-    manifestIdCol.foreach { id =>
+    val pairs = manifestIdCol.map { id =>
       val residuePath = s"${manifestPath(dir)}/batch=$batch"
-      val (fs, residue) = fsFor(spark, residuePath)
-      if (fs.exists(residue)) {
+      if (Manifested.exists(spark, residuePath)) {
         // the residue probe is the one guard that still needs the
         // store's DATA (served ids), so the reader constructs only
         // on this rare branch — the hot path stays listing-only
@@ -560,38 +495,32 @@ object Incremental {
         // over-approximation into the silent retraction miss —
         // refuse and point at the rebuild. The probe short-
         // circuits on the first served id.
-        val claimed = spark.read.parquet(residuePath)
-          .select(col(id))
+        val claimed = layout(dir).readManifest(spark)
+          .filter(col("batch") === batch).select(col(id))
         require(store.select(col(id))
           .join(claimed, Seq(id), "left_semi").isEmpty,
           s"manifest batch $batch of $dir holds ids the store " +
             "already serves - not a crashed-commit residue; " +
             "compactSnapshotStore rebuilds the manifest exactly")
-        // delete-or-die (the deleteIfExists invariant): a false
-        // return would let the append land NEW ids beside the
-        // residue, and the sync check would then fail with the
-        // wrong (non-determinism) diagnosis
-        deleteIfExists(spark, residuePath)
+        // delete-or-die: a false return would let the append land
+        // NEW ids beside the residue, and the sync check would then
+        // fail with the wrong (non-determinism) diagnosis
+        Manifested.deleteIfExists(spark, residuePath)
       }
       val ids = snap.select(col(id)).distinct()
       requireNoNullIds(ids, id, dir)
       ids.withColumn("batch", lit(batch))
-        .write.partitionBy("batch").mode("append")
-        .parquet(manifestPath(dir))
     }
     val (counted, rows) = Observed(snap, count(lit(1)))
-    counted.withColumn("batch", lit(batch))
-      .write.partitionBy("batch").mode("append").parquet(dir)
+    layout(dir).append(pairs, counted.withColumn("batch", lit(batch)))
     // the landed-partition check: an empty append writes no
     // partition directory, so the batch id would silently never land
     // (manifested stores additionally get verifyBatchSync). The row
     // count came with the append; the rest is one directory
     // existence test.
     if (rows() == 0) require(onEmpty.isEmpty, onEmpty.get)
-    else {
-      val (sfs, sdir) = fsFor(spark, s"$dir/batch=$batch")
-      require(sfs.exists(sdir), recomputedEmpty(batch, dir))
-    }
+    else require(Manifested.exists(spark, s"$dir/batch=$batch"),
+      recomputedEmpty(batch, dir))
   }
 
   /** A pinned commit whose append wrote no partition: a cache block
@@ -612,7 +541,7 @@ object Incremental {
     * retract by whole-corpus recount or rebuild.) */
   private def requireNoNullIds(ids: DataFrame, id: String,
                                dir: String): Unit =
-    require(ids.filter(col(id).isNull).isEmpty,
+    Manifested.requireNoNullIds(ids, id,
       s"refusing to write a null $id into the manifest of $dir - a " +
         "null id can never be retracted by id (equi-join discovery " +
         "cannot match it); scrub null-id rows before the commit")
@@ -655,10 +584,10 @@ object Incremental {
     require(!cur.isEmpty,
       s"refusing to compact $dir - the store folded to zero rows " +
         "and a zero-partition layout is unreadable")
-    val manifested = hasManifest(spark, dir)
+    val manifested = layout(dir).manifested(spark)
     val manifestId: Option[String] =
       if (manifested)
-        Some(readStore(spark, manifestPath(dir)).columns
+        Some(layout(dir).readManifest(spark).columns
           .filterNot(_ == "batch").head)
       else None
     // EVERY refusal fires before anything destructive (the init
@@ -671,18 +600,14 @@ object Incremental {
     // recommended repair a non-converging loop
     manifestId.foreach(id =>
       requireNoNullIds(cur.select(col(id)), id, dir))
-    cur.withColumn("batch", lit(0L))
-      .write.option("partitionOverwriteMode", "static")
-      .partitionBy("batch").mode("overwrite").parquet(tmp)
+    layout(dir).overwrite(cur.withColumn("batch", lit(0L)), tmp)
     swapIntoPlace(spark, tmp, dir)
     manifestId.foreach { id =>
       val mtmp = compactTmp(manifestPath(dir))
       // null-free by the pre-swap guard above — one derivation, one
       // write, sourced from the FOLDED store
-      readStore(spark, dir).select(col(id)).distinct()
-        .withColumn("batch", lit(0L))
-        .write.option("partitionOverwriteMode", "static")
-        .partitionBy("batch").mode("overwrite").parquet(mtmp)
+      layout(dir).overwrite(readStore(spark, dir).select(col(id))
+        .distinct().withColumn("batch", lit(0L)), mtmp)
       swapIntoPlace(spark, mtmp, manifestPath(dir))
     }
   }
@@ -721,58 +646,32 @@ object Incremental {
     requireLevel(validate)
     val cur = readStore(spark, dir)
     val ids = removeIds.select(col(idCol))
-    val manifested = hasManifest(spark, dir)
-    // ONE discovery chain over whichever source scopes it — the two
-    // branches differing only in the frame keeps a future fix to
-    // the join or the collect from drifting between them
-    val discoverFrom =
-      if (manifested) readStore(spark, manifestPath(dir)) else cur
-    val touched = discoverFrom.join(ids, Seq(idCol), "left_semi")
-      .select("batch").distinct().collect().map(_.getLong(0))
+    val store = layout(dir)
+    val manifested = store.manifested(spark)
+    val touched = store.touched(spark, cur, ids, idCol, manifested)
     if (touched.isEmpty) return
-    Pins.scope { p =>
-      val survivors = p(cur.filter(col("batch").isin(touched: _*))
-        .join(ids, Seq(idCol), "left_anti"))
-      val remaining = survivors.select("batch").distinct().count()
-      require(remaining == touched.length,
-        s"retraction would empty ${touched.length - remaining} batch " +
+    store.rewrite(spark, cur, touched, ids, idCol, manifested) { emptied =>
+      require(emptied.isEmpty,
+        s"retraction would empty ${emptied.size} batch " +
           s"partition(s) of $dir - dynamic overwrite cannot delete " +
           "them; rebuild the store without the batch instead")
-      survivors.write.option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch").mode("overwrite").parquet(dir)
-      if (manifested) {
-        Pins.scope { pm =>
-          pm(readStore(spark, manifestPath(dir))
-              .filter(col("batch").isin(touched: _*))
-              .join(ids, Seq(idCol), "left_anti"))
-            .write.option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch").mode("overwrite")
-            .parquet(manifestPath(dir))
-        }
-        // post-rewrite sync check, SCOPED to the touched partitions
-        // (the verifyBatchSync discipline applied to retraction):
-        // the store and manifest rewrites anti-join two SEPARATE
-        // reads against the caller's id frame, and a
-        // non-deterministic removeIds plan recomputed between the
-        // two barriers could land DIFFERENT survivor sets — rows
-        // the manifest no longer claims, the silent-miss class.
-        // Tiers with `validate`: recovery defers to audit time.
-        if (validate == "full") {
-          val sp = readStore(spark, dir)
-            .filter(col("batch").isin(touched: _*))
-            .select(col(idCol), col("batch")).distinct()
-          val mp = readStore(spark, manifestPath(dir))
-            .filter(col("batch").isin(touched: _*))
-            .select(col(idCol), col("batch"))
-          val bad = symmetricDiffCount(sp, mp)
-          require(bad == 0,
-            s"retraction left $bad (id, batch) pair(s) differing " +
-              s"between store and manifest in the touched " +
-              s"partitions of $dir - a non-deterministic removeIds " +
-              "plan recomputed differently across the two rewrites; " +
-              "compactSnapshotStore rebuilds the manifest exactly")
-        }
-      }
+    }
+    // post-rewrite sync check, SCOPED to the touched partitions (the
+    // verifyBatchSync discipline applied to retraction): the store and
+    // manifest rewrites anti-join two SEPARATE reads against the
+    // caller's id frame, and a non-deterministic removeIds plan
+    // recomputed between the two barriers could land DIFFERENT
+    // survivor sets — rows the manifest no longer claims, the
+    // silent-miss class. Tiers with `validate`: recovery defers to
+    // audit time.
+    if (manifested && validate == "full") {
+      val bad = store.sync(spark, idCol, Some(touched.toSeq)).differ
+      require(bad == 0,
+        s"retraction left $bad (id, batch) pair(s) differing " +
+          s"between store and manifest in the touched " +
+          s"partitions of $dir - a non-deterministic removeIds " +
+          "plan recomputed differently across the two rewrites; " +
+          "compactSnapshotStore rebuilds the manifest exactly")
     }
   }
 
@@ -798,10 +697,11 @@ object Incremental {
     * [[validateSnapshotStoreManifest]]). */
   def loadSnapshotStoreManifest(spark: SparkSession,
                                 dir: String): DataFrame = {
-    require(hasManifest(spark, dir),
+    finishSwap(spark, dir)
+    require(layout(dir).manifested(spark),
       s"$dir has no id manifest to load - initSnapshotStore " +
         "with manifestIdCol creates one")
-    readStore(spark, manifestPath(dir))
+    layout(dir).readManifest(spark)
   }
 
   /** Assert a manifested store's id→batch manifest is exactly in
@@ -811,8 +711,9 @@ object Incremental {
     * retracted rows would keep serving while the takedown reports
     * success. Also refuses null ids outright — the id-keyed
     * retraction machinery can never target them (see the write-side
-    * guard). One [[symmetricDiffCount]] job over the two skinny
-    * (id, batch) projections; run it after any crash-recovery and
+    * guard). One job ([[graft.core.Manifested.Layout.sync]]) over the
+    * two skinny (id, batch) projections counts the differing pairs and
+    * both sides' null ids; run it after any crash-recovery and
     * before trusting a long-lived store's retraction path. Repair
     * is [[compactSnapshotStore]], whose manifest rebuild is exact
     * by construction.
@@ -823,47 +724,42 @@ object Incremental {
     *         twice per certification point. */
   def validateSnapshotStoreManifest(spark: SparkSession,
                                     dir: String): DataFrame = {
-    require(hasManifest(spark, dir),
+    finishSwap(spark, dir)
+    require(layout(dir).manifested(spark),
       s"$dir has no id manifest to validate - initSnapshotStore " +
         "with manifestIdCol creates one")
-    val m = readStore(spark, manifestPath(dir))
+    val m = layout(dir).readManifest(spark)
     val idCol = m.columns.filterNot(_ == "batch") match {
       case Array(one) => one
       case other => throw new IllegalArgumentException(
         s"manifest of $dir must hold exactly (id, batch) - found " +
           other.mkString(", "))
     }
+    val sync = layout(dir).sync(spark, idCol)
     // a null id is refused OUTRIGHT, not validated as in-sync: the
     // retraction machinery discovers and rewrites by EQUI-join on
     // the id, which never matches null — a null-id row in a
     // manifested store is permanently un-retractable by id, the
     // silent-miss class itself, so it must fail loud here and at
     // every manifested write
-    require(m.filter(col(idCol).isNull).isEmpty,
+    require(sync.manifestNulls == 0,
       s"manifest of $dir holds null ids - a null id can never be " +
         "retracted by id (equi-join discovery cannot match it); " +
         "scrub the null-id rows and rebuild the store")
-    val sp = readStore(spark, dir).select(col(idCol), col("batch"))
-      .distinct()
-    val mp = m.select(col(idCol), col("batch"))
-    val bad = symmetricDiffCount(sp, mp)
-    if (bad != 0) {
-      // pick the tailored diagnosis ONLY on the failure path — on a
-      // clean pass the manifest is null-free (checked above) and the
-      // multisets are equal, so the store is provably null-free too
-      // and the extra store scan would be pure waste. A store-side
-      // null needs its own message: the generic pointer at the
-      // compaction rebuild would recommend a repair that (correctly)
-      // refuses the same nulls.
-      require(sp.filter(col(idCol).isNull).isEmpty,
+    if (sync.differ != 0) {
+      // a store-side null needs its own message: the generic pointer
+      // at the compaction rebuild would recommend a repair that
+      // (correctly) refuses the same nulls
+      require(sync.dataNulls == 0,
         s"store $dir holds null-id rows - un-retractable by id and " +
           "not repairable by compaction (the rebuild refuses the " +
           "same nulls); scrub the null-id rows and rebuild the store")
       throw new IllegalArgumentException(
-        s"requirement failed: manifest out of sync with $dir: $bad " +
-          "(id, batch) pair(s) differ - a manifest missing ids lets " +
-          "future retractions MISS their partitions (retracted rows " +
-          "keep serving); compactSnapshotStore rebuilds it exactly")
+        s"requirement failed: manifest out of sync with $dir: " +
+          s"${sync.differ} (id, batch) pair(s) differ - a manifest " +
+          "missing ids lets future retractions MISS their partitions " +
+          "(retracted rows keep serving); compactSnapshotStore " +
+          "rebuilds it exactly")
     }
     m
   }
@@ -1068,14 +964,10 @@ object Incremental {
     * directory rename. */
   private def swapIntoPlace(spark: SparkSession, tmp: String,
                             dir: String): Unit = {
-    // fsFor resolves the filesystem FROM the path (a FileSystem.get
-    // on the default scheme would hit the wrong FS for qualified
-    // paths)
-    val (fs, target) = fsFor(spark, dir)
-    require(fs.delete(target, true),
+    Manifested.deleteIfExists(spark, dir,
       s"compaction could not delete $dir for the swap - the folded " +
         s"store is intact at $tmp")
-    require(fs.rename(new org.apache.hadoop.fs.Path(tmp), target),
+    Manifested.rename(spark, tmp, dir,
       s"compaction could not rename $tmp into $dir - the folded " +
         s"store is intact at $tmp; the next read or commit renames " +
         "it into place")

@@ -1,10 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField}
 
-import graft.core.Pins
+import graft.core.{Manifested, Pins, Tables}
 import graft.operators.Similarity
 
 /** Product quantization (Jégou, Douze, Schmid 2011, "Product
@@ -276,8 +277,8 @@ object Quantization {
 
   /** Persist a trained [[IvfPqIndex]] as the production serving
     * layout: the corpus-sized code table lands HIVE-PARTITIONED BY
-    * CELL (one directory per coarse cell — [[graft.sources.Bucketed
-    * .writePartitioned]]'s layer), and the config-table-sized
+    * CELL (one directory per coarse cell; a static reset, so no cell
+    * of a previous generation survives), and the config-table-sized
     * codebooks + metadata land as tiny parquet tables beside it. A
     * [[ivfPqSearch]] over the [[loadIvfPqIndex]]ed table is then
     * cell-PRUNED and shuffle-free on the corpus side: the probe LUT
@@ -298,9 +299,8 @@ object Quantization {
     // the silent retraction miss — so every crash window of a
     // re-persist leaves a manifest-LESS layout whose discovery falls
     // back to the exact full scan
-    deleteQuietly(spark, nidManifestPath(dir))
-    graft.sources.Bucketed.writePartitioned(idx.codes, s"$dir/codes",
-      Seq("cell"))
+    Manifested.deleteIfExists(spark, layout(dir).manifest)
+    layout(dir).overwrite(idx.codes, layout(dir).data)
     idx.cells.map { case (c, cv) => (c, cv.toSeq) }
       .toDF("cell", "cv").coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/cells")
@@ -314,59 +314,31 @@ object Quantization {
   }
 
   // ------------------------------------------------------------------
-  // Opt-in nid→cell MANIFEST for the persisted layout — the
-  // Incremental id→batch manifest discipline ported to the ANN index:
+  // Opt-in nid→cell MANIFEST for the persisted layout: the code table
+  // is a [[graft.core.Manifested]] layout partitioned by cell, so
   // [[ivfPqRemoveBatch]]'s discovery probes one skinny doc-count-sized
   // (nid, cell) table instead of reading the nid column of EVERY cell
-  // directory (at production nlist-in-the-thousands the difference
-  // between a manifest lookup and a full-layout column scan per
-  // takedown). Same crash-ordering rules: existence is
-  // `_SUCCESS`-gated (a half-written manifest must read as
-  // manifest-less, falling back to the exact scan — never a silent
-  // under-approximation); adds append to the manifest BEFORE the
-  // codes (a crash between the two leaves the manifest
-  // over-claiming, the safe direction — a later retraction rewrites
-  // a cell needlessly and self-heals; the reverse order would leave
-  // landed codes the manifest never saw, silently scoping future
-  // retractions past them); removals rewrite the manifest AFTER the
-  // codes (same over-approximation direction). Null nids are REFUSED
-  // at every manifested write — equi-join discovery can never match
-  // them (the requireNoNullIds discipline).
+  // directory, under the fact store's crash rules (`_SUCCESS`-gated
+  // existence, manifest appended BEFORE the codes and rewritten AFTER
+  // them, null nids refused at every manifested write).
   // ------------------------------------------------------------------
 
-  private def nidManifestPath(dir: String): String =
-    s"$dir/nid_manifest"
+  /** The code table at `dir/codes` with its manifest at
+    * `dir/nid_manifest`; `cell` reads as INT, the type inference
+    * gives it. */
+  private def layout(dir: String): Manifested.Layout =
+    Manifested.Layout(s"$dir/codes", s"$dir/nid_manifest",
+      StructField("cell", IntegerType))
 
-  private def fsAt(spark: org.apache.spark.sql.SparkSession,
-                   path: String)
-      : (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
-  }
+  /** The persisted code table, a lazy cell-partitioned scan. */
+  def ivfPqCodes(spark: SparkSession, dir: String): DataFrame =
+    layout(dir).read(spark)
 
-  /** Delete-or-die when present (the Incremental.deleteIfExists
-    * invariant): Hadoop filesystems report failure by return value
-    * too, and a stale manifest silently surviving a reset is the
-    * under-approximation class. */
-  private def deleteQuietly(spark: org.apache.spark.sql.SparkSession,
-                            path: String): Unit = {
-    val (fs, p) = fsAt(spark, path)
-    if (fs.exists(p)) require(fs.delete(p, true),
-      s"could not delete $path - refusing to continue past a stale " +
-        "manifest that would silently survive")
-  }
-
-  /** A manifest EXISTS only when its last write job committed — the
-    * `_SUCCESS` gate (bare directory existence counts half-written
-    * crash residue, whose missing ids would be the silent
-    * retraction miss; unmarked ⇒ manifest-less ⇒ exact full-scan
-    * fallback). */
-  def hasIvfPqNidManifest(spark: org.apache.spark.sql.SparkSession,
-                          dir: String): Boolean = {
-    val (fs, p) = fsAt(spark, nidManifestPath(dir))
-    fs.exists(p) &&
-      fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS"))
-  }
+  /** Whether the layout carries a committed manifest
+    * ([[graft.core.Manifested.committed]]; a half-written one reads as
+    * manifest-less, so discovery falls back to the exact scan). */
+  def hasIvfPqNidManifest(spark: SparkSession, dir: String): Boolean =
+    layout(dir).manifested(spark)
 
   /** (Re)build the nid→cell manifest from the layout's own codes —
     * exact by construction, so it doubles as the repair for any
@@ -374,40 +346,28 @@ object Quantization {
     * compactSnapshotStore-rebuild role). Cell-partitioned like the
     * codes themselves, so retraction rewrites touch only affected
     * manifest directories. */
-  def rebuildIvfPqNidManifest(spark: org.apache.spark.sql.SparkSession,
-                              dir: String): Unit = {
-    val pairs = spark.read.parquet(s"$dir/codes")
+  def rebuildIvfPqNidManifest(spark: SparkSession, dir: String): Unit = {
+    val pairs = ivfPqCodes(spark, dir)
       .select(col("nid"), col("cell")).distinct()
-    require(pairs.filter(col("nid").isNull).isEmpty,
+    Manifested.requireNoNullIds(pairs, "nid",
       s"layout $dir holds null nids - un-retractable by id " +
         "(equi-join discovery cannot match them); scrub and rebuild " +
         "before manifesting")
-    pairs.write.option("partitionOverwriteMode", "static")
-      .partitionBy("cell").mode("overwrite")
-      .parquet(nidManifestPath(dir))
+    layout(dir).overwrite(pairs, layout(dir).manifest)
   }
 
   /** Assert the manifest is exactly in sync with the codes — the
     * loud detector for the one silent corruption it can carry (a
     * MISSING (nid, cell) pair scopes future takedowns past that
     * cell: removed vectors keep serving while the takedown reports
-    * success). One weighted-union symmetric-diff job over the two
-    * skinny (nid, cell) projections; repair is
+    * success). One sync job over the two skinny (nid, cell)
+    * projections ([[graft.core.Manifested.Layout.sync]]); repair is
     * [[rebuildIvfPqNidManifest]]. */
-  def validateIvfPqNidManifest(spark: org.apache.spark.sql.SparkSession,
-                               dir: String): Unit = {
+  def validateIvfPqNidManifest(spark: SparkSession, dir: String): Unit = {
     require(hasIvfPqNidManifest(spark, dir),
       s"$dir has no nid manifest to validate - persistIvfPqIndex " +
         "with manifest=true (or rebuildIvfPqNidManifest) creates one")
-    val c = spark.read.parquet(s"$dir/codes")
-      .select(col("nid"), col("cell")).distinct()
-      .withColumn("__graft_w", lit(1L))
-    val m = spark.read.parquet(nidManifestPath(dir))
-      .select(col("nid"), col("cell"))
-      .withColumn("__graft_w", lit(-1L))
-    val bad = c.unionByName(m).groupBy("nid", "cell")
-      .agg(sum(col("__graft_w")).as("__graft_w"))
-      .filter(col("__graft_w") =!= 0L).count()
+    val bad = layout(dir).sync(spark, "nid").differ
     require(bad == 0,
       s"nid manifest out of sync with $dir/codes: $bad (nid, cell) " +
         "pair(s) differ - a manifest missing pairs lets future " +
@@ -415,39 +375,22 @@ object Quantization {
         "rebuildIvfPqNidManifest repairs it exactly")
   }
 
-  /** Retraction DISCOVERY — the cells holding any of the remove ids:
-    * one probe of the doc-count-sized manifest when the layout
-    * carries one, else the fallback scan of every cell's skinny
-    * (nid, cell) projection. Result-identical by the manifest sync
-    * invariant; only the source table differs. */
-  private def affectedCells(spark: org.apache.spark.sql.SparkSession,
-                            dir: String, codes: DataFrame,
-                            ids: DataFrame): Array[Any] = {
-    val from =
-      if (hasIvfPqNidManifest(spark, dir))
-        spark.read.parquet(nidManifestPath(dir))
-      else codes.select("nid", "cell")
-    from.join(ids, Seq("nid"), "left_semi")
-      .select("cell").distinct().collect().map(_.get(0))
-  }
-
   /** Load a [[persistIvfPqIndex]] layout: codebooks collect to the
     * driver (k×d rows — the MLlib-shape exception), the code table
     * stays a lazy partitioned scan so [[ivfPqSearch]] keeps its
     * cell-pruning. */
-  def loadIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-                     dir: String): IvfPqIndex = {
-    val cells = spark.read.parquet(s"$dir/cells").collect()
+  def loadIvfPqIndex(spark: SparkSession, dir: String): IvfPqIndex = {
+    val cells = Tables.parquet(spark, s"$dir/cells").collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
       .sortBy(_._1).toSeq
-    val pqRows = spark.read.parquet(s"$dir/pq").collect()
+    val pqRows = Tables.parquet(spark, s"$dir/pq").collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
-    val meta = spark.read.parquet(s"$dir/meta").collect()(0)
+    val meta = Tables.parquet(spark, s"$dir/meta").collect()(0)
     val (m, pqDsub, dsub) = (meta.getInt(0), meta.getInt(1), meta.getInt(2))
     val cents = (0 until m).map(s => pqRows.filter(_._1 == s)
       .map { case (_, c, cv) => (c, cv) }.sortBy(_._1).toSeq)
-    IvfPqIndex(cells, PqModel(m, pqDsub, cents),
-      spark.read.parquet(s"$dir/codes"), dsub)
+    IvfPqIndex(cells, PqModel(m, pqDsub, cents), ivfPqCodes(spark, dir),
+      dsub)
   }
 
   /** Encode (id, vec) rows against the FROZEN codebooks of an
@@ -519,7 +462,7 @@ object Quantization {
       // validateIvfPqNidManifest exists to catch
       val pinned = pins(codes)
       val pairs = pinned.select(col("nid"), col("cell")).distinct()
-      require(pairs.filter(col("nid").isNull).isEmpty,
+      Manifested.requireNoNullIds(pairs, "nid",
         s"refusing to add null nids to the manifested layout $dir " +
           "- a null id can never be retracted by id; scrub the " +
           "batch first")
@@ -529,7 +472,7 @@ object Quantization {
       // later with the wrong diagnosis — refuse now, before either
       // append, while the cause is still on the stack
       val dupCount = pairs.join(
-          spark.read.parquet(nidManifestPath(dir)).select("nid"),
+          layout(dir).readManifest(spark).select("nid"),
           Seq("nid"), "left_semi")
         .select("nid").distinct().count()
       require(dupCount == 0L,
@@ -554,18 +497,8 @@ object Quantization {
           "double-counts in every ADC sum and the (nid, cell)-" +
           "distinct sync validator would certify the corruption; " +
           "dedupe the batch first")
-      // manifest FIRST (the writeCommit crash direction): dying
-      // between the appends leaves the manifest over-claiming ids
-      // the codes never landed — a later takedown rewrites those
-      // cells needlessly and self-heals; the reverse order would
-      // leave landed codes invisible to discovery, the silent miss
-      pairs.write.mode("append").partitionBy("cell")
-        .parquet(nidManifestPath(dir))
-      pinned.write.mode("append").partitionBy("cell")
-        .parquet(s"$dir/codes")
-    } else
-      codes.write.mode("append").partitionBy("cell")
-        .parquet(s"$dir/codes")
+      layout(dir).append(Some(pairs), pinned)
+    } else layout(dir).append(None, codes)
   }
 
   /** FAISS-style `remove_ids` for a [[persistIvfPqIndex]] layout:
@@ -609,7 +542,7 @@ object Quantization {
   def ivfPqRemoveBatch(removeIds: DataFrame, idCol: String,
                        dir: String): Unit = {
     val spark = removeIds.sparkSession
-    val codes = spark.read.parquet(s"$dir/codes")
+    val codes = ivfPqCodes(spark, dir)
     // align the remove ids to the LAYOUT's own id type — a blind
     // cast (or none) would make a type mismatch silently match
     // nothing, and a takedown that reports success while the rows
@@ -621,89 +554,40 @@ object Quantization {
     // uncastable value casts to null, and null never matches the
     // semi/anti joins below — the takedown would retract nothing for
     // that id while reporting success. A null INPUT id is equally
-    // un-retractable (equi-join discovery cannot match it, the
-    // Incremental.requireNoNullIds discipline). One cheap job over
-    // the takedown-batch-sized id set refuses both loudly.
-    require(ids.filter(col("nid").isNull).isEmpty,
+    // un-retractable. One cheap job over the takedown-batch-sized id
+    // set refuses both loudly.
+    Manifested.requireNoNullIds(ids, "nid",
       "remove-id batch holds null ids (or values uncastable to the " +
         "layout's nid type) - an equi-join can never match them, so " +
         "the takedown would silently retract nothing for those ids; " +
         "scrub or re-type the batch")
-    val affected = affectedCells(spark, dir, codes, ids)
+    val codeLayout = layout(dir)
+    val manifested = codeLayout.manifested(spark)
+    val affected = codeLayout.touched(spark, codes.select("nid", "cell"),
+      ids, "nid", manifested)
     if (affected.isEmpty) return
-    Pins.scope { pins =>
-      val survivors = pins(codes
-        .filter(col("cell").isin(affected: _*))
-        .join(ids, Seq("nid"), "left_anti"))
-      // a layout emptied to zero rows is unrepresentable (a hive
-      // table with no partitions has no schema to read) — that state
-      // means the index is gone, which is a rebuild, not a remove
-      require(codes.filter(!col("cell").isin(affected: _*)).limit(1)
-          .count() > 0 || survivors.limit(1).count() > 0,
-        "removing every remaining vector would empty the layout - " +
-          "rebuild it (persistIvfPqIndex of a fresh build) instead")
-      // EMPTIED cells delete BEFORE the overwrite (safe because the
-      // survivors are already frozen bytes — the checkpoint above —
-      // so no deleted file is still an input), and delete-or-die:
-      // dynamic overwrite writes nothing for a cell with no
-      // surviving rows, so the old order (delete after the rewrite)
-      // left a window — a crash between the write and the delete
-      // loop, or a false fs.delete return — where the emptied cell's
-      // stale files kept SERVING the removed vectors while the
-      // operation had already (or silently) reported success: the
-      // exact retraction-miss class this operator exists to prevent,
-      // and one validateIvfPqCodes cannot see (it checks shape, not
-      // membership). With deletes first, every crash direction is
-      // loud: a crash here leaves non-emptied cells unrewritten and
-      // the takedown FAILED — the retry re-discovers them (the
-      // already-deleted cells hold no rows and drop out) and
-      // converges.
-      val still = survivors.select("cell").distinct().collect()
-        .map(_.get(0)).toSet
-      val codesPath = new org.apache.hadoop.fs.Path(s"$dir/codes")
-      val fs = codesPath.getFileSystem(
-        spark.sparkContext.hadoopConfiguration)
-      (affected.toSet -- still).foreach { c =>
-        // existence-guarded: an over-approximating manifest (the
-        // documented safe crash direction) can name a cell the codes
-        // no longer hold — nothing to delete there is fine; a
-        // PRESENT dir failing to delete is not
-        val p = new org.apache.hadoop.fs.Path(codesPath, s"cell=$c")
-        if (fs.exists(p)) require(fs.delete(p, true),
+    codeLayout.rewrite(spark, codes, affected, ids, "nid", manifested) {
+      emptied =>
+        // a layout emptied to zero rows is unrepresentable (a hive
+        // table with no partitions has no schema to read) — that
+        // state means the index is gone, which is a rebuild, not a
+        // remove
+        require(emptied.size < affected.length ||
+            codes.filter(!col("cell").isin(affected: _*)).limit(1)
+              .count() > 0,
+          "removing every remaining vector would empty the layout - " +
+            "rebuild it (persistIvfPqIndex of a fresh build) instead")
+        // emptied cells delete BEFORE the overwrite (the survivors
+        // are frozen bytes, so no deleted file is still an input):
+        // deleted after it, a crash between the two (or a false
+        // delete) would leave their stale files SERVING the removed
+        // vectors, a miss validateIvfPqCodes cannot see. Deleted
+        // first, a crash leaves the takedown FAILED, and the retry
+        // re-discovers the unrewritten cells and converges.
+        codeLayout.deleteEmptied(spark, codeLayout.data, emptied, c =>
           s"could not delete emptied cell directory cell=$c of " +
             s"$dir/codes - its stale files would keep serving the " +
             "removed vectors; refusing to report success")
-      }
-      survivors.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cell").parquet(s"$dir/codes")
-      // the manifest rewrites AFTER the codes (the
-      // retractFromSnapshotStore crash direction): a crash between
-      // the two leaves the manifest OVER-approximating — a later
-      // takedown of those ids rewrites their cells needlessly and
-      // the stale pairs self-heal out; never the silent miss. Same
-      // mechanics as the codes rewrite: survivors frozen first,
-      // emptied manifest cell directories deleted (delete-or-die)
-      // before the dynamic overwrite that cannot delete them.
-      if (hasIvfPqNidManifest(spark, dir)) {
-        val mPath = nidManifestPath(dir)
-        val mSurvivors = pins(spark.read.parquet(mPath)
-          .filter(col("cell").isin(affected: _*))
-          .join(ids, Seq("nid"), "left_anti"))
-        val mStill = mSurvivors.select("cell").distinct().collect()
-          .map(_.get(0)).toSet
-        val (mfs, mRoot) = fsAt(spark, mPath)
-        (affected.toSet -- mStill).foreach { c =>
-          val p = new org.apache.hadoop.fs.Path(mRoot, s"cell=$c")
-          if (mfs.exists(p)) require(mfs.delete(p, true),
-            s"could not delete emptied manifest cell cell=$c of " +
-              s"$mPath - its stale pairs would drive needless " +
-              "rewrites forever; refusing to report success")
-        }
-        mSurvivors.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("cell").parquet(mPath)
-      }
     }
   }
 
@@ -770,11 +654,10 @@ object Quantization {
     * applied to the ANN index). One skinny three-count aggregation
     * over the codes projection turns that into a loud failure; run
     * it after adds whose batch provenance isn't airtight. */
-  def validateIvfPqCodes(spark: org.apache.spark.sql.SparkSession,
-                         dir: String): Unit = {
-    val m = spark.read.parquet(s"$dir/meta").collect()(0)
+  def validateIvfPqCodes(spark: SparkSession, dir: String): Unit = {
+    val m = Tables.parquet(spark, s"$dir/meta").collect()(0)
       .getInt(0).toLong
-    val r = spark.read.parquet(s"$dir/codes").agg(
+    val r = ivfPqCodes(spark, dir).agg(
       count(lit(1)).as("rows"),
       countDistinct(col("nid")).as("ids"),
       countDistinct(col("nid"), col("s")).as("id_subs")).head

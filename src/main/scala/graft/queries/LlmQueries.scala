@@ -2,8 +2,9 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField}
 
-import graft.core.{Fixtures, Pins, Snapshots, Tables => T}
+import graft.core.{Fixtures, Observed, Pins, Snapshots, Tables => T}
 import graft.operators.{Clustering, Dedup, GraphOps, Mixing, Multimodal, QualityModel, Quantization, Search, Similarity, TextAnalysis}
 import graft.queries.MaintainedArtifacts.{Change, Corpus, Lsh, audit, sweep, total}
 
@@ -42,13 +43,17 @@ object LlmQueries {
           r.getString(3), r.getLong(4))).toSeq
     }
 
+  /** [[Mixing.writeShards]]' partition column, typed INT as inference
+    * types it. */
+  private val shardPartition = StructField("shard", IntegerType)
+
   /** d54/d68 both train the SAME deterministic logistic model; the
     * scored table materializes to parquet once per (session, fixture)
     * — on-disk like the index fixture, so it survives the correctness
     * dump's per-query unpersist sweeps, and parquet round-trips
     * longs/strings exactly. */
   private def sharedLrScores(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(Fixtures.get(s, d, "lr54") {
+    T.parquet(s, Fixtures.get(s, d, "lr54") {
       val out = Fixtures.dir(s, d, "lr54")
       QualityModel.lrQualityScores(T.documents(s, d), "doc_id",
           "text", label = col("lang") === "en", dims = 64, steps = 2,
@@ -614,7 +619,7 @@ object LlmQueries {
       Mixing.writeShards(
         T.documents(s, d).select("doc_id", "lang", "n_chars"),
         "doc_id", "n_chars", budget = 4096, seqsPerShard = 16, dir)
-      s.read.parquet(dir)
+      T.parquet(s, dir, shardPartition)
         .groupBy(col("shard").cast("long").as("shard"))
         .agg(count(lit(1)).as("n_docs"),
           sum("n_chars").as("sum_tokens"),
@@ -660,7 +665,7 @@ object LlmQueries {
       val dir = Fixtures.dir(s, d, "recipeshards")
       Mixing.writeShards(train, "doc_id", "n_chars", budget = 4096,
         seqsPerShard = 16, dir)
-      s.read.parquet(dir)
+      T.parquet(s, dir, shardPartition)
         .groupBy(col("shard").cast("long").as("shard"))
         .agg(count(lit(1)).as("n_docs"),
           sum("n_chars").as("sum_tokens"),
@@ -804,20 +809,24 @@ object LlmQueries {
     "inc_boiler_remove" -> ((s, d) => {
       val src = bannerPlanted(T.documents(s, d), col("doc_id") % 10 === 0)
       val existing = src.filter(col("doc_id") % 5 =!= 0)
-      // no barrier: the count table is skinny (16-byte rows over the
-      // distinct repeated lines), so the validator's pass and the
-      // screen's pass just recompute it - a checkpoint freed at scope
-      // exit would vanish under the RETURNED lazy plan before the
-      // caller materializes it (Pins.scope refuses that return)
-      val counts = Dedup.subtractLineCounts(
-        Dedup.lineCountPartial(existing, "text"),
-        Dedup.lineCountPartial(
-          existing.filter(col("doc_id") % 7 === 1), "text"))
-      Dedup.validateLineCounts(counts)
-      Dedup.lineDedupAgainst(src.filter(col("doc_id") % 5 === 0),
-          Dedup.boilerplateFromCounts(counts, minCount = 3),
-          "doc_id", "text")
-        .orderBy("doc_id")
+      // the subtraction computes once: the count table pins and that
+      // checkpoint counts its bad rows on the way, so the validator
+      // starts no job and the screen reads the pin; the screen seals
+      // before the scope frees it
+      Pins.scope { p =>
+        val (counts, bad) = Observed(Dedup.subtractLineCounts(
+          Dedup.lineCountPartial(existing, "text"),
+          Dedup.lineCountPartial(
+            existing.filter(col("doc_id") % 7 === 1), "text")),
+          Dedup.badLineCounts)
+        val pinned = p(counts)
+        Dedup.requireLineCounts(bad())
+        Dedup.lineDedupAgainst(src.filter(col("doc_id") % 5 === 0),
+            Dedup.boilerplateFromCounts(pinned, minCount = 3),
+            "doc_id", "text")
+          .orderBy("doc_id")
+          .localCheckpoint(true)
+      }
     }),
 
     // APPEND-ONLY ROLLUP STORE for the boilerplate screen — the
@@ -860,17 +869,12 @@ object LlmQueries {
         val retracted = set("retracted")
         store.compact()
         val compacted = set("compacted")
-        // one screen of incoming × phase against its own phase's set.
-        // Not broadcast: a broadcast (grp, key) relation holds a whole
-        // Tungsten page (32 MB at 4 GB and 4 cores) on the Spark
-        // driver until the broadcast is cleaned; a shuffled hash join
-        // frees its per-task table with the task
+        // one screen of incoming × phase against its own phase's set
         val phases = array(lit("committed"), lit("retracted"),
           lit("compacted"))
         Dedup.groupedLineDedupAgainst(
             incoming.withColumn("phase", explode(phases)),
-            committed.unionByName(retracted).unionByName(compacted)
-              .hint("shuffle_hash"),
+            committed.unionByName(retracted).unionByName(compacted),
             "doc_id", "phase", "text")
           .select("phase", "doc_id", "text", "n_removed")
           .orderBy("phase", "doc_id")
@@ -991,15 +995,23 @@ object LlmQueries {
           when(plant, lit("\n" + banner)).otherwise(lit("")))
           .as("text"))
       val existing = src.filter(col("doc_id") % 5 =!= 0)
-      val counts = Dedup.subtractGroupedLineCounts(
-        Dedup.groupedLineCountPartial(existing, "lang", "text"),
-        Dedup.groupedLineCountPartial(
-          existing.filter(col("doc_id") % 7 === 1), "lang", "text"))
-      Dedup.validateLineCounts(counts)
-      Dedup.groupedLineDedupAgainst(src.filter(col("doc_id") % 5 === 0),
-          Dedup.groupedBoilerplateFromCounts(counts, minCount = 3),
-          "doc_id", "lang", "text")
-        .orderBy("doc_id")
+      // inc_boiler_remove's pin; the set stays a filter of it (the
+      // screen's shuffled join reads it in its own scan, so pinning
+      // the set would add a job)
+      Pins.scope { p =>
+        val (counts, bad) = Observed(Dedup.subtractGroupedLineCounts(
+          Dedup.groupedLineCountPartial(existing, "lang", "text"),
+          Dedup.groupedLineCountPartial(
+            existing.filter(col("doc_id") % 7 === 1), "lang", "text")),
+          Dedup.badLineCounts)
+        val pinned = p(counts)
+        Dedup.requireLineCounts(bad())
+        Dedup.groupedLineDedupAgainst(src.filter(col("doc_id") % 5 === 0),
+            Dedup.groupedBoilerplateFromCounts(pinned, minCount = 3),
+            "doc_id", "lang", "text")
+          .orderBy("doc_id")
+          .localCheckpoint(true)
+      }
     }),
 
     // RETRACTION for the prefix-cross near-dup index — the removal
@@ -2564,7 +2576,7 @@ object LlmQueries {
       val dir = Fixtures.dir(s, d, tag)
       Mixing.writeShards(s8, "doc_id", "n_chars", budget = 1024,
         seqsPerShard = 4, dir)
-      val shards = s.read.parquet(dir)
+      val shards = T.parquet(s, dir, shardPartition)
       healthRunsDir.foreach { hdir =>
         Snapshots.appendRun(corpusHealth(s0), "raw", 0, hdir,
           overwrite = true)
@@ -3139,7 +3151,7 @@ object LlmQueries {
     * jobs would be exactly this: a materialized intermediate, not
     * three recomputations. */
   private def cooccurEdges(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(Fixtures.get(s, d, "cc_edges") {
+    T.parquet(s, Fixtures.get(s, d, "cc_edges") {
       val out = Fixtures.dir(s, d, "cc_edges")
       GraphOps.coOccurrenceEdges(T.lineitem(s, d), "l_orderkey",
           "l_suppkey", minWeight = 2L)
@@ -3156,7 +3168,7 @@ object LlmQueries {
     * fixpoint + labels write on first call and a parquet read on later
     * calls — it is not a per-query CC timing. */
   private def cooccurLabels(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(Fixtures.get(s, d, "cc_labels") {
+    T.parquet(s, Fixtures.get(s, d, "cc_labels") {
       val out = Fixtures.dir(s, d, "cc_labels")
       // the fixpoint's final localCheckpoint is freed once on disk
       Pins.scope { p =>

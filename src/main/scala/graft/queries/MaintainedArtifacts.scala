@@ -168,7 +168,7 @@ private[queries] object MaintainedArtifacts {
   private final case class Layout(dir: String, nids: DataFrame)
 
   private def nids(s: SparkSession, dir: String) =
-    s.read.parquet(dir + "/codes").select("nid")
+    Quantization.ivfPqCodes(s, dir).select("nid")
 
   /** The persisted layout and its codes' nids. Persisting resets the
     * layout, so re-invocation is idempotent; an update removes then

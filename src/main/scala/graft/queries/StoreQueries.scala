@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField}
 
 import graft.cdc.Cdc
 import graft.core.{Fixtures, Tables => T}
@@ -337,7 +338,8 @@ object StoreQueries {
     // [[partitionedOrders]]; re-invocations (bench iterations,
     // concurrent constructions) read, never racing on an overwrite.
     "s18_partition_prune" -> ((s, d) =>
-      s.read.parquet(partitionedOrders(s, d))
+      T.parquet(s, partitionedOrders(s, d),
+          StructField("o_year", IntegerType))
         .filter(col("o_year") === 1995)
         .groupBy("o_orderpriority")
         .agg(count(lit(1)).as("n"),

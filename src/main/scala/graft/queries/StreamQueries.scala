@@ -772,12 +772,15 @@ object StreamQueries {
         planted(T.documents(s, d)
           .filter(col("doc_id") % 5 =!= 0 && col("doc_id") % 2 =!= 0)),
         "lang", "text"))
-      lazy val setA = p(graft.operators.Dedup
-        .groupedBoilerplateFromCounts(partA, minCount = 3))
-      lazy val setAB = p(graft.operators.Dedup
+      // the sets are not pinned: the screen's shuffled join reads each
+      // in its own scan (setAB's merge shuffle included), so a pin
+      // would add a job
+      lazy val setA = graft.operators.Dedup
+        .groupedBoilerplateFromCounts(partA, minCount = 3)
+      lazy val setAB = graft.operators.Dedup
         .groupedBoilerplateFromCounts(
           graft.operators.Dedup.mergeGroupedLineCounts(
-            Seq(partA, partB)), minCount = 3))
+            Seq(partA, partB)), minCount = 3)
       def screen(set: => DataFrame, era: Int)(batch: DataFrame) =
         graft.operators.Dedup.groupedLineDedupAgainst(
           planted(batch.filter(col("doc_id") % 5 === 0

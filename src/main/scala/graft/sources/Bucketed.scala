@@ -29,10 +29,9 @@ object Bucketed {
                     buckets: Int, sortCols: Seq[String] = Nil): Unit = {
     val spark = df.sparkSession
     spark.sql(s"DROP TABLE IF EXISTS `$table`")
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), table.toLowerCase)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) fs.delete(loc, true)
+    graft.core.Manifested.deleteIfExists(spark, new org.apache.hadoop.fs
+      .Path(spark.conf.get("spark.sql.warehouse.dir"), table.toLowerCase)
+      .toString)
     val w = df.write.mode("overwrite").format("parquet")
       .bucketBy(buckets, key)
     (if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*)

@@ -236,13 +236,13 @@ object EventStream {
 
     /** The foreachBatch sink. */
     def sink(batch: DataFrame, id: Long): Unit = synchronized {
-      val cur = spark.read.parquet(s"$dir/v$v")
+      val cur = graft.core.Tables.parquet(spark, s"$dir/v$v")
       graft.sources.AlibStore.upsert(cur, batch, key, tieBreak)
         .write.mode("overwrite").parquet(s"$dir/v${v + 1}")
       v += 1
     }
 
     /** Store state after the last completed fold. */
-    def current: DataFrame = spark.read.parquet(s"$dir/v$v")
+    def current: DataFrame = graft.core.Tables.parquet(spark, s"$dir/v$v")
   }
 }

@@ -5,10 +5,10 @@ import scala.util.Try
 import org.apache.spark.JobCounter
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 import graft.SparkSpec
-import graft.operators.Incremental
+import graft.operators.{Dedup, Incremental, Quantization}
 
 /** The footer schema reader: the schema `spark.read.parquet` infers,
   * without the inference job. */
@@ -59,5 +59,50 @@ class TablesSpec extends SparkSpec {
     }.flatten
     assert(filters.exists(_.references.exists(_.name == "batch")))
     assert(one.select("doc_id").as[Long].collect().toSeq == Seq(3L))
+  }
+
+  test("the durable layouts and their sidecars read with the inferred " +
+    "schema, the partition column typed as the layout reads it, and " +
+    "start no Spark job") {
+    val s = spark
+    import s.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_layouts")
+      .toString
+    val store = s"$root/store"
+    Incremental.initSnapshotStore(
+      Seq((1L, "a"), (2L, "b")).toDF("doc_id", "text"), store,
+      manifestIdCol = Some("doc_id"))
+    Incremental.commitSnapshotBatch(Seq((3L, "c")).toDF("doc_id", "text"),
+      store, 1L, manifestIdCol = Some("doc_id"))
+    Dedup.writeBandParams(spark, store, k = 5, numPerm = 64, bands = 16)
+    val vecs = Seq(
+      (0L, Array(1f, 0f, 1f, 0f)), (1L, Array(0f, 1f, 0f, 1f)),
+      (2L, Array(1f, 0.2f, 1f, 0f)), (3L, Array(0.2f, 1f, 0f, 1f)))
+      .toDF("vec_id", "embedding")
+    val idx = Quantization.ivfPqIndex(vecs, "vec_id", "embedding",
+      nlist = 2, coarseIters = 2, m = 2, ksub = 2, pqIters = 2)
+    val ivf = s"$root/ivf"
+    try Quantization.persistIvfPqIndex(idx, ivf, manifest = true)
+    finally org.apache.spark.sql.graftshim.Shims
+      .unpersistLocalCheckpoint(idx.codes)
+    val batch = StructField("batch", LongType)
+    val cell = StructField("cell", IntegerType)
+    val layouts = Seq(store -> Some(batch),
+      s"${store}__manifest" -> Some(batch),
+      s"${store}__band_params" -> None,
+      s"$ivf/codes" -> Some(cell), s"$ivf/nid_manifest" -> Some(cell),
+      s"$ivf/cells" -> None, s"$ivf/pq" -> None, s"$ivf/meta" -> None)
+    val (footer, jobs) = JobCounter(spark.sparkContext)(
+      layouts.map { case (path, part) =>
+        Tables.parquet(spark, path, part.toSeq: _*).schema })
+    assert(jobs == 0)
+    layouts.zip(footer).foreach { case ((path, part), sch) =>
+      val inferred = spark.read.parquet(path).schema
+      // inference types the small batch ids INT; stores read it LONG
+      assert(sch == StructType(inferred.map(f =>
+        if (f.name == "batch") batch else f)), path)
+      part.foreach(f => assert(sch.last == f, path))
+    }
+    assert(spark.read.parquet(s"$ivf/codes").schema("cell") == cell)
   }
 }

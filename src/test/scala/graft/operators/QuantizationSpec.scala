@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.JobCounter
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -593,6 +594,31 @@ class QuantizationSpec extends SparkSpec {
       org.apache.spark.sql.graftshim.Shims
         .unpersistLocalCheckpoint(built.codes)
       rmTree(dirM); rmTree(dirS)
+    }
+  }
+
+  test("a manifested layout's persist, add, remove, validate and load " +
+    "cycle runs a fixed number of Spark jobs") {
+    val built = Quantization.ivfPqIndex(vecs, "vec_id", "embedding",
+      nlist = 2, coarseIters = 2, m = 2, ksub = 2, pqIters = 2)
+    val dir = java.nio.file.Files
+      .createTempDirectory("ivfpq_budget").toString
+    try {
+      val add = Seq((100L, v(0.9f, 0f, 0.9f, 0.1f)))
+        .toDF("vec_id", "embedding")
+      val (_, jobs) = JobCounter(spark.sparkContext) {
+        Quantization.persistIvfPqIndex(built, dir, manifest = true)
+        Quantization.ivfPqAddBatch(add, "vec_id", "embedding", dir)
+        Quantization.ivfPqRemoveBatch(Seq(2L).toDF("vec_id"), "vec_id",
+          dir)
+        Quantization.validateIvfPqNidManifest(spark, dir)
+        Quantization.loadIvfPqIndex(spark, dir)
+      }
+      assert(jobs == 36)
+    } finally {
+      org.apache.spark.sql.graftshim.Shims
+        .unpersistLocalCheckpoint(built.codes)
+      rmTree(dir)
     }
   }
 }
