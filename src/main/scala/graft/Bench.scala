@@ -14,12 +14,19 @@ object Bench {
   def main(args: Array[String]): Unit =
     if (args.contains("--solo")) solo() else suite()
 
-  private def sessionBuilder(cpus: String): SparkSession.Builder =
+  /** The session settings of every main that runs queries — this
+    * bench, [[Verify]]'s oracle dump and counts file, and [[PlanDump]]'s
+    * plans — so their results, counts and plans describe one
+    * configuration. */
+  private[graft] def sessionBuilder(cpus: String): SparkSession.Builder =
     SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // historical fixtures carried TIMESTAMP(NANOS), which Spark 4
+      // rejects without this flag; current fixtures are µs. Either way
+      // Tables.normalizeEventTs presents `ts` as long epoch nanos.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.codegen.maxFields", "1024")
 

@@ -735,27 +735,9 @@ object PlanDump {
           "doc_id", "text", k = 5)
         val inB = graft.operators.Dedup.minHashBands(incoming,
           "doc_id", "text", k = 5)
-        val cand = inB.as("a").join(stored.as("b"),
-            col("a.band") === col("b.band") &&
-              col("a.bh") === col("b.bh"))
-          .select(col("a.doc_id").as("in_id"),
-            col("b.doc_id").as("ex_id"))
-          .dropDuplicates("in_id", "ex_id")
-        val hs = (side: String, src: DataFrame) => src
-          .join(cand.select(side).distinct(),
-            col("doc_id") === col(side), "left_semi")
-          .select(col("doc_id").as(side),
-            graft.operators.Dedup.hashedShingles(col("text"), 5)
-              .as(s"hs_$side"))
-        cand.join(hs("in_id", incoming), Seq("in_id"))
-          .join(hs("ex_id", existing), Seq("ex_id"))
-          .withColumn("shared",
-            size(array_intersect(col("hs_in_id"), col("hs_ex_id"))))
-          .withColumn("jac", round(col("shared").cast("double")
-            / (size(col("hs_in_id")) + size(col("hs_ex_id"))
-              - col("shared")), 6))
-          .filter(col("jac") >= 0.7)
-          .select("in_id", "ex_id", "jac")
+        graft.operators.Dedup.lshVerify(
+          graft.operators.Dedup.lshCandidates(inB, stored, "doc_id"),
+          incoming, existing, "doc_id", "text", k = 5, theta = 0.7)
       }),
       "frag_minhash_bands" -> (() =>
         graft.operators.Dedup.minHashBands(
@@ -770,14 +752,7 @@ object PlanDump {
     val snapshot = args.length >= 3
     val sfDir = (if (snapshot) sys.env.get("SPARK_GRAFT_SF_DIR")
       else args.headOption).getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.maxFields", "1024")
-      .getOrCreate()
+    val spark = Bench.sessionBuilder("4").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     if (snapshot) snapshots(spark, sfDir, args(0), args(1), args(2))
     else plansMd(spark, sfDir)

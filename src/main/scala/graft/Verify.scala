@@ -2,7 +2,6 @@ package graft
 import java.util.concurrent.atomic.AtomicLongArray
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted, SparkListenerTaskStart}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graftshim.Shims
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -31,16 +30,7 @@ object Verify {
     // aid; the driver always runs the full set)
     val only = args.drop(2).headOption.map(_.split(",").map(_.trim).toSet)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // historical fixtures carried TIMESTAMP(NANOS), which Spark 4
-      // rejects without this flag; current fixtures are µs. Either way
-      // Tables.normalizeEventTs presents `ts` as long epoch nanos.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Bench.sessionBuilder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     val sc = spark.sparkContext

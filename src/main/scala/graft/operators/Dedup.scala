@@ -105,8 +105,7 @@ object Dedup {
                    materialize: Boolean = true): DataFrame = Pins.scope { p =>
     // materialize the hashed shingle sets once — the postings explode
     // would otherwise re-run the tokenize+hash lineage.
-    val shBase = df
-      .select(col(idCol).as("id"), hashedShingles(col(textCol), k).as("hs"))
+    val shBase = shingleSets(df, idCol, textCol, k)
     val sh = if (materialize) p(shBase) else shBase.cache()
     val posting = postings(sh, dfCap)
     val out = scoredJaccardPairs(posting, posting,
@@ -142,30 +141,113 @@ object Dedup {
     df.join(drop, Seq(idCol), "left_anti")
   }
 
-  /** (id, n, s) posting rows from a shingled frame — the doc's set
-    * size rides every posting (8 bytes/row) so the pair aggregation
-    * needs no per-side size-lookup joins (two whole shuffles saved). */
-  private def postings(sh: DataFrame, dfCap: Int): DataFrame =
+  // ---- the filter-and-verify steps of the shingle similarity joins.
+  // Every near-dup operator below is the same two-step join (Chaudhuri
+  // et al., ICDE'06): a FILTER step generates candidate pairs (shared
+  // shingle postings, prefix postings, or LSH band buckets) and a
+  // VERIFY step scores them exactly. Each step has one implementation
+  // here; the operators differ only in which filter they compose and
+  // where they pin. The oracle SQL of every consumer restates this
+  // arithmetic — keep them in lock-step.
+
+  /** The (id, hs) shingle-set frame every near-dup operator starts
+    * from: each doc's distinct hashed word k-shingles. */
+  private def shingleSets(df: DataFrame, idCol: String, textCol: String,
+                          k: Int): DataFrame =
+    df.select(col(idCol).as("id"), hashedShingles(col(textCol), k).as("hs"))
+
+  /** (id, n, s) posting rows from a shingle-set frame, stop-shingles
+    * above `dfCap` dropped (0: none) — the doc's set size rides every
+    * posting (8 bytes/row) so the pair aggregation needs no per-side
+    * size-lookup joins (two whole shuffles saved). */
+  private def postings(sh: DataFrame, dfCap: Int = 0): DataFrame =
     Fuzzy.capPostings(
       sh.select(col("id"), size(col("hs")).as("n"),
         explode(col("hs")).as("s")),
       "s", dfCap)
 
-  /** Shared pair-scoring tail of [[jaccardPairs]]/[[crossDedupNear]]:
-    * shingle equi-join under `cond`, shared-count aggregation, exact
-    * round-6 Jaccard, theta filter. The oracle SQL of every consumer
-    * restates exactly this arithmetic — keep them in lock-step. */
-  private def scoredJaccardPairs(postA: DataFrame, postB: DataFrame,
-                                 cond: Column, theta: Double,
-                                 outA: String, outB: String): DataFrame =
+  /** Shingle document frequency (s, df) of a frame with an `s` column. */
+  private def shingleDf(post: DataFrame): DataFrame =
+    post.groupBy("s").agg(count(lit(1)).as("df"))
+
+  /** Refuse a threshold outside (0, 1]. */
+  private def requireTheta(theta: Double): Unit =
+    require(theta > 0 && theta <= 1, s"theta must be in (0, 1], got $theta")
+
+  /** Posting equi-join under `cond` with the shared-shingle count per
+    * pair: (outA, outB, na, nb, shared). The full-postings filter of
+    * [[jaccardPairs]], [[crossDedupNear]] and [[containmentPairs]];
+    * the count is already exact, so no re-score follows. */
+  private def sharedCounts(postA: DataFrame, postB: DataFrame,
+                           cond: Column, outA: String,
+                           outB: String): DataFrame =
     postA.as("a")
       .join(postB.as("b"), col("a.s") === col("b.s") && cond)
       .groupBy(col("a.id").as(outA), col("b.id").as(outB),
         col("a.n").as("na"), col("b.n").as("nb"))
       .agg(count(lit(1)).as("shared"))
+
+  /** [[sharedCounts]] scored as round-6 Jaccard, filtered at theta. */
+  private def scoredJaccardPairs(postA: DataFrame, postB: DataFrame,
+                                 cond: Column, theta: Double,
+                                 outA: String, outB: String): DataFrame =
+    sharedCounts(postA, postB, cond, outA, outB)
       .withColumn("jac",
         round(col("shared").cast("double")
           / (col("na") + col("nb") - col("shared")), 6))
+      .filter(col("jac") >= theta)
+      .select(outA, outB, "jac")
+
+  /** The prefix lemma (see [[prefixJaccardPairs]]): rank each id's
+    * (id, n, s, `dfCol`) postings rarest-first (df, then shingle hash)
+    * and keep the first n − ⌈θ·n⌉ + 1.
+    *
+    * The ⌈θ·n⌉ ceiling is taken after subtracting 1e-9: binary doubles
+    * overshoot products like 0.3 × 10 (= 3.0000000000000004), and an
+    * overshot ceiling would SHORTEN the prefix — the lossy direction.
+    * The epsilon can only lengthen a prefix by one slot (more
+    * candidates, never fewer). [[prefixJoin]]'s length filter carries
+    * the same slack. */
+  private def keepPrefix(ranked: DataFrame, dfCol: String,
+                         theta: Double): DataFrame = {
+    val minOverlap = ceil(lit(theta) * col("n") - lit(1e-9)).cast("int")
+    ranked
+      .withColumn("__rk", row_number()
+        .over(Window.partitionBy("id").orderBy(dfCol, "s")))
+      .filter(col("__rk") <= col("n") - minOverlap + 1)
+      .select("id", "n", "s")
+  }
+
+  /** Candidate pairs of two prefix-posting tables: a shared prefix
+    * shingle under `cond`, sizes within the J ≥ θ length filter
+    * (θ·na ≤ nb ≤ na/θ, widened by the 1e-9 slack of
+    * [[keepPrefix]]), one row per pair: (outA, outB). */
+  private def prefixJoin(prefA: DataFrame, prefB: DataFrame, cond: Column,
+                         theta: Double, outA: String,
+                         outB: String): DataFrame =
+    prefA.as("a")
+      .join(prefB.as("b"),
+        col("a.s") === col("b.s") && cond
+          && col("b.n").cast("double") >= lit(theta) * col("a.n") - lit(1e-9)
+          && col("a.n").cast("double") >= lit(theta) * col("b.n") - lit(1e-9))
+      .select(col("a.id").as(outA), col("b.id").as(outB))
+      .dropDuplicates(outA, outB)
+
+  /** The verify step: exact round-6 Jaccard of candidate (outA, outB)
+    * pairs on their (id, hs) shingle sets `shA` and `shB` (long
+    * compares over hashed shingles), filtered at theta. `hsA`/`hsB`
+    * name the joined set columns. Output: (outA, outB, jac). */
+  private[graft] def verifyJaccard(cand: DataFrame, shA: DataFrame,
+                                   shB: DataFrame, outA: String,
+                                   outB: String, theta: Double,
+                                   hsA: String = "hs_a",
+                                   hsB: String = "hs_b"): DataFrame =
+    cand
+      .join(shA.select(col("id").as(outA), col("hs").as(hsA)), Seq(outA))
+      .join(shB.select(col("id").as(outB), col("hs").as(hsB)), Seq(outB))
+      .withColumn("shared", size(array_intersect(col(hsA), col(hsB))))
+      .withColumn("jac", round(col("shared").cast("double")
+        / (size(col(hsA)) + size(col(hsB)) - col("shared")), 6))
       .filter(col("jac") >= theta)
       .select(outA, outB, "jac")
 
@@ -186,16 +268,9 @@ object Dedup {
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
                        k: Int, theta: Double,
                        dfCap: Int = 0): DataFrame = Pins.scope { p =>
-    require(theta > 0 && theta <= 1, s"theta must be in (0, 1], got $theta")
-    val sh = p(df.select(col(idCol).as("id"),
-        hashedShingles(col(textCol), k).as("hs")))
-    val posting = postings(sh, dfCap)
-    posting.as("a")
-      .join(posting.as("b"),
-        col("a.s") === col("b.s") && col("a.id") < col("b.id"))
-      .groupBy(col("a.id").as("ia"), col("b.id").as("ib"),
-        col("a.n").as("na"), col("b.n").as("nb"))
-      .agg(count(lit(1)).as("shared"))
+    requireTheta(theta)
+    val posting = postings(p(shingleSets(df, idCol, textCol, k)), dfCap)
+    sharedCounts(posting, posting, col("a.id") < col("b.id"), "ia", "ib")
       .select(explode(array(
         struct(col("ia").as("src_id"), col("ib").as("dst_id"),
           round(col("shared").cast("double") / col("na"), 6)
@@ -528,9 +603,8 @@ object Dedup {
     *         libm), ascending. */
   def shingleDfStats(df: DataFrame, idCol: String, textCol: String,
                      k: Int): DataFrame = {
-    val dfreq = df
-      .select(explode(hashedShingles(col(textCol), k)).as("s"))
-      .groupBy("s").agg(count(lit(1)).as("df"))
+    val dfreq = shingleDf(
+      df.select(explode(hashedShingles(col(textCol), k)).as("s")))
     val tot = broadcast(dfreq.agg(sum("df").as("__tot")))
     dfreq
       .groupBy((length(bin(col("df"))) - 1).cast("int").as("df_bucket"))
@@ -559,8 +633,7 @@ object Dedup {
                      k: Int, theta: Double, dfCap: Int = 0,
                      materialize: Boolean = true): DataFrame = Pins.scope { p =>
     def shingled(df: DataFrame) = {
-      val base = df.select(col(idCol).as("id"),
-        hashedShingles(col(textCol), k).as("hs"))
+      val base = shingleSets(df, idCol, textCol, k)
       if (materialize) p(base) else base.cache()
     }
     val shIn = shingled(incoming)
@@ -616,57 +689,18 @@ object Dedup {
     * @return (id_a, id_b, jac) with id_a < id_b, jac ≥ theta. */
   def prefixJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                          k: Int, theta: Double): DataFrame = Pins.scope { p =>
-    require(theta > 0 && theta <= 1, s"theta must be in (0, 1], got $theta")
-    val sh = p(df
-      .select(col(idCol).as("id"), hashedShingles(col(textCol), k).as("hs")))
-    prefixCandidates(sh, theta)
-      .join(sh.select(col("id").as("id_a"), col("hs").as("hs_a")), Seq("id_a"))
-      .join(sh.select(col("id").as("id_b"), col("hs").as("hs_b")), Seq("id_b"))
-      .withColumn("shared", size(array_intersect(col("hs_a"), col("hs_b"))))
-      .withColumn("jac", round(col("shared").cast("double")
-        / (size(col("hs_a")) + size(col("hs_b")) - col("shared")), 6))
-      .filter(col("jac") >= theta)
-      .select("id_a", "id_b", "jac")
+    requireTheta(theta)
+    val sh = p(shingleSets(df, idCol, textCol, k))
+    verifyJaccard(prefixCandidates(sh, theta), sh, sh, "id_a", "id_b", theta)
       .localCheckpoint(true)
   }
 
-  /** Cross-corpus prefix-filtered exact Jaccard — [[prefixJaccardPairs]]'s
-    * lemma applied to the incremental-ingest path ([[crossDedupNear]]'s
-    * semantics, identical output at the same (k, theta)): incoming and
-    * existing prefixes are built under ONE shared total order — ascending
-    * document frequency over the EXISTING corpus, shingle-hash
-    * tie-break — and only prefixes join. The per-side prefix lengths
-    * n − ⌈θ·n⌉ + 1 are lossless because J ≥ θ bounds the overlap by
-    * ⌈θ·n⌉ on EACH side, and the cross-prefix lemma's WLOG lands on
-    * whichever side's last prefix element ranks earlier — either way
-    * the shared-order argument closes (see [[prefixJaccardPairs]]).
-    *
-    * Keying the order on existing-side df is the operational choice: a
-    * shingle the existing corpus has never seen has df 0 — rarest,
-    * prefix-resident — which is exactly right for ingest (novel content
-    * must generate candidates); boilerplate the corpus already holds in
-    * bulk ranks last and falls out of both sides' prefixes. The df
-    * table is also reusable across ingest batches, where
-    * [[crossDedupNear]]'s only defense (dfCap) re-prices every batch.
-    *
-    * @return (in_id, ex_id, jac) with jac ≥ theta. */
-  /** (id, n, s) posting rows from a (id, hs) shingle-set frame. */
-  private def crossPost(sh: DataFrame): DataFrame =
-    sh.select(col("id"), size(col("hs")).as("n"),
-      explode(col("hs")).as("s"))
-
-  /** Rarest-first (1−θ)·n+1 prefix of each id's postings, ranked by
-    * the EXISTING side's df (novel shingles rank rarest). */
-  private def crossPrefix(p: DataFrame, dfreq: DataFrame,
-                          theta: Double): DataFrame = {
-    val minOverlap = ceil(lit(theta) * col("n") - lit(1e-9)).cast("int")
-    p.join(dfreq, Seq("s"), "left")
-      .withColumn("__df", coalesce(col("df"), lit(0L)))
-      .withColumn("__rk", row_number()
-        .over(Window.partitionBy("id").orderBy("__df", "s")))
-      .filter(col("__rk") <= col("n") - minOverlap + 1)
-      .select("id", "n", "s")
-  }
+  /** Rarest-first prefix postings of a (id, hs) frame, ranked by the
+    * EXISTING side's df table (novel shingles have df 0: rarest). */
+  private def crossPrefix(sh: DataFrame, dfreq: DataFrame,
+                          theta: Double): DataFrame =
+    keepPrefix(postings(sh).join(dfreq, Seq("s"), "left")
+      .withColumn("__df", coalesce(col("df"), lit(0L))), "__df", theta)
 
   /** The EXISTING side of [[prefixCrossJaccard]], materialized once so
     * a continuous ingest pipeline can probe it per catch-up batch
@@ -683,18 +717,22 @@ object Dedup {
     def frames: Seq[DataFrame] = Seq(shEx, dfreq, prefEx)
   }
 
+  /** The index over checkpointed shingle sets and df table: derives
+    * and checkpoints the prefix postings, the one step every index
+    * verb re-runs (prefix membership depends on the GLOBAL df order). */
+  private def crossIndex(shEx: DataFrame, dfreq: DataFrame, k: Int,
+                         theta: Double): PrefixCrossIndex =
+    PrefixCrossIndex(shEx, dfreq,
+      crossPrefix(shEx, dfreq, theta).localCheckpoint(true), k, theta)
+
   def prefixCrossIndex(existing: DataFrame, idCol: String,
                        textCol: String, k: Int,
                        theta: Double): PrefixCrossIndex = {
-    require(theta > 0 && theta <= 1, s"theta must be in (0, 1], got $theta")
-    val shEx = existing.select(col(idCol).as("id"),
-        hashedShingles(col(textCol), k).as("hs"))
+    requireTheta(theta)
+    val shEx = shingleSets(existing, idCol, textCol, k)
       .localCheckpoint(true)
-    val dfreq = crossPost(shEx).groupBy("s")
-      .agg(count(lit(1)).as("df")).localCheckpoint(true)
-    val prefEx = crossPrefix(crossPost(shEx), dfreq, theta)
-      .localCheckpoint(true)
-    PrefixCrossIndex(shEx, dfreq, prefEx, k, theta)
+    crossIndex(shEx, shingleDf(postings(shEx)).localCheckpoint(true), k,
+      theta)
   }
 
   /** Refresh a [[PrefixCrossIndex]] with a newly committed batch
@@ -716,18 +754,26 @@ object Dedup {
     // block set per refresh cycle on a long-running driver. The
     // SUPERSEDED index (idx.shEx/dfreq/prefEx) stays the caller's to
     // free: it may still be serving queries.
-    val shNew = p(batch.select(col(idCol).as("id"),
-        hashedShingles(col(textCol), idx.k).as("hs")))
+    val shNew = p(shingleSets(batch, idCol, textCol, idx.k))
     val shEx = idx.shEx.unionByName(shNew).localCheckpoint(true)
-    val dfNew = crossPost(shNew).groupBy("s")
-      .agg(count(lit(1)).as("df"))
-    val dfreq = Incremental.mergeRollups(Seq(idx.dfreq, dfNew),
+    val dfreq = Incremental.mergeRollups(
+        Seq(idx.dfreq, shingleDf(postings(shNew))),
         Seq("s"), Seq("df" -> "sum"))
       .localCheckpoint(true)
-    val prefEx = crossPrefix(crossPost(shEx), dfreq, idx.theta)
-      .localCheckpoint(true)
-    PrefixCrossIndex(shEx, dfreq, prefEx, idx.k, idx.theta)
+    crossIndex(shEx, dfreq, idx.k, idx.theta)
   }
+
+  /** Cross-corpus candidate join and re-score of [[prefixCrossJaccard]]
+    * and [[prefixCrossJaccardAgainst]]: incoming prefixes (ranked by
+    * `dfreq`) join the existing prefix postings `prefEx`, and the
+    * candidates are verified on the two shingle-set frames. */
+  private def prefixCrossPairs(shIn: DataFrame, dfreq: DataFrame,
+                               prefEx: DataFrame, shEx: DataFrame,
+                               theta: Double): DataFrame =
+    verifyJaccard(prefixJoin(crossPrefix(shIn, dfreq, theta), prefEx,
+        lit(true), theta, "in_id", "ex_id"),
+      shIn, shEx, "in_id", "ex_id", theta)
+      .localCheckpoint(true)
 
   /** [[prefixCrossJaccard]] against a pre-built [[prefixCrossIndex]].
     * Per-incoming-row work depends only on that row's shingles and the
@@ -737,27 +783,8 @@ object Dedup {
   def prefixCrossJaccardAgainst(incoming: DataFrame,
                                 idx: PrefixCrossIndex, idCol: String,
                                 textCol: String): DataFrame = Pins.scope { p =>
-    val theta = idx.theta
-    val shIn = p(incoming.select(col(idCol).as("id"),
-        hashedShingles(col(textCol), idx.k).as("hs")))
-    val cand = crossPrefix(crossPost(shIn), idx.dfreq, theta).as("a")
-      .join(idx.prefEx.as("b"),
-        col("a.s") === col("b.s")
-          && col("b.n").cast("double") >= lit(theta) * col("a.n") - lit(1e-9)
-          && col("a.n").cast("double") >= lit(theta) * col("b.n") - lit(1e-9))
-      .select(col("a.id").as("in_id"), col("b.id").as("ex_id"))
-      .dropDuplicates("in_id", "ex_id")
-    cand
-      .join(shIn.select(col("id").as("in_id"), col("hs").as("hs_a")),
-        Seq("in_id"))
-      .join(idx.shEx.select(col("id").as("ex_id"), col("hs").as("hs_b")),
-        Seq("ex_id"))
-      .withColumn("shared", size(array_intersect(col("hs_a"), col("hs_b"))))
-      .withColumn("jac", round(col("shared").cast("double")
-        / (size(col("hs_a")) + size(col("hs_b")) - col("shared")), 6))
-      .filter(col("jac") >= theta)
-      .select("in_id", "ex_id", "jac")
-      .localCheckpoint(true)
+    val shIn = p(shingleSets(incoming, idCol, textCol, idx.k))
+    prefixCrossPairs(shIn, idx.dfreq, idx.prefEx, idx.shEx, idx.theta)
   }
 
   /** Retract documents from a [[PrefixCrossIndex]] WITHOUT rescanning
@@ -781,12 +808,9 @@ object Dedup {
     val shEx = idx.shEx.join(ids, Seq("id"), "left_anti")
       .localCheckpoint(true)
     val dfreq = Incremental.subtractRollups(idx.dfreq,
-        crossPost(shRm).groupBy("s").agg(count(lit(1)).as("df")),
-        Seq("s"), Seq("df"))
+        shingleDf(postings(shRm)), Seq("s"), Seq("df"))
       .localCheckpoint(true)
-    val prefEx = crossPrefix(crossPost(shEx), dfreq, idx.theta)
-      .localCheckpoint(true)
-    PrefixCrossIndex(shEx, dfreq, prefEx, idx.k, idx.theta)
+    crossIndex(shEx, dfreq, idx.k, idx.theta)
   }
 
   /** Retract + refresh in ONE derivation — the UPDATE verb (a
@@ -807,19 +831,15 @@ object Dedup {
                              textCol: String): PrefixCrossIndex = Pins.scope { p =>
     val ids = removeIds.select(col(idCol).as("id"))
     val shRm = idx.shEx.join(ids, Seq("id"), "left_semi")
-    val shNew = p(batch.select(col(idCol).as("id"),
-        hashedShingles(col(textCol), idx.k).as("hs")))
+    val shNew = p(shingleSets(batch, idCol, textCol, idx.k))
     val shEx = idx.shEx.join(ids, Seq("id"), "left_anti")
       .unionByName(shNew).localCheckpoint(true)
     val dfreq = Incremental.mergeRollups(Seq(
-        Incremental.subtractRollups(idx.dfreq,
-          crossPost(shRm).groupBy("s").agg(count(lit(1)).as("df")),
+        Incremental.subtractRollups(idx.dfreq, shingleDf(postings(shRm)),
           Seq("s"), Seq("df")),
-        crossPost(shNew).groupBy("s").agg(count(lit(1)).as("df"))),
+        shingleDf(postings(shNew))),
       Seq("s"), Seq("df" -> "sum")).localCheckpoint(true)
-    val prefEx = crossPrefix(crossPost(shEx), dfreq, idx.theta)
-      .localCheckpoint(true)
-    PrefixCrossIndex(shEx, dfreq, prefEx, idx.k, idx.theta)
+    crossIndex(shEx, dfreq, idx.k, idx.theta)
   }
 
   /** Assert a [[PrefixCrossIndex]]'s df table is well-formed: no
@@ -838,65 +858,51 @@ object Dedup {
         "overlapping partials")
   }
 
+  /** Cross-corpus prefix-filtered exact Jaccard — [[prefixJaccardPairs]]'s
+    * lemma applied to the incremental-ingest path ([[crossDedupNear]]'s
+    * semantics, identical output at the same (k, theta)): incoming and
+    * existing prefixes are built under ONE shared total order — ascending
+    * document frequency over the EXISTING corpus, shingle-hash
+    * tie-break — and only prefixes join. The per-side prefix lengths
+    * n − ⌈θ·n⌉ + 1 are lossless because J ≥ θ bounds the overlap by
+    * ⌈θ·n⌉ on EACH side, and the cross-prefix lemma's WLOG lands on
+    * whichever side's last prefix element ranks earlier — either way
+    * the shared-order argument closes (see [[prefixJaccardPairs]]).
+    *
+    * Keying the order on existing-side df is the operational choice: a
+    * shingle the existing corpus has never seen has df 0 — rarest,
+    * prefix-resident — which is exactly right for ingest (novel content
+    * must generate candidates); boilerplate the corpus already holds in
+    * bulk ranks last and falls out of both sides' prefixes. The df
+    * table is also reusable across ingest batches, where
+    * [[crossDedupNear]]'s only defense (dfCap) re-prices every batch.
+    * One-shot form: the two shingle-set frames are pinned, the df table
+    * and the existing prefixes stay lazy ([[prefixCrossIndex]] pins
+    * all three for repeated probes).
+    *
+    * @return (in_id, ex_id, jac) with jac ≥ theta. */
   def prefixCrossJaccard(incoming: DataFrame, existing: DataFrame,
                          idCol: String, textCol: String,
                          k: Int, theta: Double): DataFrame = Pins.scope { p =>
-    require(theta > 0 && theta <= 1, s"theta must be in (0, 1], got $theta")
-    def shingled(df: DataFrame) = p(df.select(col(idCol).as("id"),
-      hashedShingles(col(textCol), k).as("hs")))
-    val shIn = shingled(incoming)
-    val shEx = shingled(existing)
-    val dfreq = crossPost(shEx).groupBy("s").agg(count(lit(1)).as("df"))
-    def prefix(p: DataFrame) = crossPrefix(p, dfreq, theta)
-    val cand = prefix(crossPost(shIn)).as("a")
-      .join(prefix(crossPost(shEx)).as("b"),
-        col("a.s") === col("b.s")
-          && col("b.n").cast("double") >= lit(theta) * col("a.n") - lit(1e-9)
-          && col("a.n").cast("double") >= lit(theta) * col("b.n") - lit(1e-9))
-      .select(col("a.id").as("in_id"), col("b.id").as("ex_id"))
-      .dropDuplicates("in_id", "ex_id")
-    cand
-      .join(shIn.select(col("id").as("in_id"), col("hs").as("hs_a")),
-        Seq("in_id"))
-      .join(shEx.select(col("id").as("ex_id"), col("hs").as("hs_b")),
-        Seq("ex_id"))
-      .withColumn("shared", size(array_intersect(col("hs_a"), col("hs_b"))))
-      .withColumn("jac", round(col("shared").cast("double")
-        / (size(col("hs_a")) + size(col("hs_b")) - col("shared")), 6))
-      .filter(col("jac") >= theta)
-      .select("in_id", "ex_id", "jac")
-      .localCheckpoint(true)
+    requireTheta(theta)
+    val shIn = p(shingleSets(incoming, idCol, textCol, k))
+    val shEx = p(shingleSets(existing, idCol, textCol, k))
+    val dfreq = shingleDf(postings(shEx))
+    prefixCrossPairs(shIn, dfreq, crossPrefix(shEx, dfreq, theta), shEx,
+      theta)
   }
 
   /** Candidate (id_a, id_b) pairs of [[prefixJaccardPairs]] — exposed
     * within the package so the spec can assert the candidate-volume
     * reduction vs full inverted-index blocking, not just end-result
-    * equality. `sh` is the (id, hs) shingle-set frame.
-    *
-    * The ⌈θ·n⌉ ceiling is taken after subtracting 1e-9: binary doubles
-    * overshoot products like 0.3 × 10 (= 3.0000000000000004), and an
-    * overshot ceiling would SHORTEN the prefix — the lossy direction.
-    * The epsilon can only lengthen a prefix by one slot (more
-    * candidates, never fewer). The same slack widens the length filter
-    * bounds. */
+    * equality. `sh` is the (id, hs) shingle-set frame; every shingle
+    * has df ≥ 1 here, so the df lookup is an inner join. */
   private[graft] def prefixCandidates(sh: DataFrame,
                                       theta: Double): DataFrame = {
-    val post = sh.select(col("id"), size(col("hs")).as("n"),
-      explode(col("hs")).as("s"))
-    val dfreq = post.groupBy("s").agg(count(lit(1)).as("df"))
-    val minOverlap = ceil(lit(theta) * col("n") - lit(1e-9)).cast("int")
-    val rk = row_number().over(Window.partitionBy("id").orderBy("df", "s"))
-    val prefix = post.join(dfreq, "s")
-      .withColumn("__rk", rk)
-      .filter(col("__rk") <= col("n") - minOverlap + 1)
-      .select("id", "n", "s")
-    prefix.as("a")
-      .join(prefix.as("b"),
-        col("a.s") === col("b.s") && col("a.id") < col("b.id")
-          && col("b.n").cast("double") >= lit(theta) * col("a.n") - lit(1e-9)
-          && col("a.n").cast("double") >= lit(theta) * col("b.n") - lit(1e-9))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .dropDuplicates("id_a", "id_b")
+    val post = postings(sh)
+    val prefix = keepPrefix(post.join(shingleDf(post), "s"), "df", theta)
+    prefixJoin(prefix, prefix, col("a.id") < col("b.id"), theta,
+      "id_a", "id_b")
   }
 
   /** MinHash signature: array of `numPerm` 64-bit min-hashes over a
@@ -964,8 +970,7 @@ object Dedup {
     // materialize the hashed shingle sets once: every perm reads `hs`,
     // and without a barrier CollapseProject would re-inline the
     // shingle hashing into all numPerm expressions
-    val sh = barrier(df.select(col(idCol).as("id"),
-        hashedShingles(col(textCol), k).as("hs"))
+    val sh = barrier(shingleSets(df, idCol, textCol, k)
       .filter(size(col("hs")) > 0))
     // signature as ONE fused expression pass — no explode, no shuffle,
     // no 256-way aggregation buffers (the previous explode + 256
@@ -999,16 +1004,7 @@ object Dedup {
           && col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .dropDuplicates("id_a", "id_b")
-    // exact re-score on the hashed shingle sets (long compares, not
-    // string compares; same counts w.h.p. as above)
-    val out = cand
-      .join(sh.select(col("id").as("id_a"), col("hs").as("hs_a")), Seq("id_a"))
-      .join(sh.select(col("id").as("id_b"), col("hs").as("hs_b")), Seq("id_b"))
-      .withColumn("shared", size(array_intersect(col("hs_a"), col("hs_b"))))
-      .withColumn("jac", round(col("shared").cast("double")
-        / (size(col("hs_a")) + size(col("hs_b")) - col("shared")), 6))
-      .filter(col("jac") >= theta)
-      .select("id_a", "id_b", "jac")
+    val out = verifyJaccard(cand, sh, sh, "id_a", "id_b", theta)
     // materialize the (small) output; the scope then frees the
     // shingle-set and signature blocks (see jaccardPairs)
     if (materialize) out.localCheckpoint(true) else out
@@ -1384,32 +1380,36 @@ object Dedup {
     }
     val inBands = incomingBands.getOrElse(
       p.own(minHashBands(incoming, idCol, textCol, k, numPerm, bands)))
-    // collision probe: skinny (id, band, bh) vs skinny stored rows —
-    // candidates deduplicate before any text is touched
-    val cand = p(inBands.as("a")
+    lshVerify(p(lshCandidates(inBands, storedBands, idCol)), incoming,
+        existing, idCol, textCol, k, theta)
+      .localCheckpoint(true)
+  }
+
+  /** The filter step of [[lshScreenAgainst]]: the collision probe of
+    * skinny (id, band, bh) incoming rows against the stored rows —
+    * candidates deduplicate before any text is touched. Output:
+    * (in_id, ex_id). */
+  private[graft] def lshCandidates(inBands: DataFrame,
+                                   storedBands: DataFrame,
+                                   idCol: String): DataFrame =
+    inBands.as("a")
       .join(storedBands.as("b"),
         col("a.band") === col("b.band") && col("a.bh") === col("b.bh"))
       .select(col(s"a.$idCol").as("in_id"), col(s"b.$idCol").as("ex_id"))
-      .dropDuplicates("in_id", "ex_id"))
-    // exact re-score on the hashed shingle sets of the CANDIDATES
-    // only: both text reads are semi-join-scoped to candidate ids
-    def shingleSets(src: DataFrame, side: String, ids: DataFrame) =
-      src.join(ids, col(idCol) === col(side), "left_semi")
-        .select(col(idCol).as(side),
-          hashedShingles(col(textCol), k).as(s"hs_$side"))
-    cand
-      .join(shingleSets(incoming, "in_id",
-        cand.select("in_id").distinct()), Seq("in_id"))
-      .join(shingleSets(existing, "ex_id",
-        cand.select("ex_id").distinct()), Seq("ex_id"))
-      .withColumn("shared",
-        size(array_intersect(col("hs_in_id"), col("hs_ex_id"))))
-      .withColumn("jac", round(col("shared").cast("double")
-        / (size(col("hs_in_id")) + size(col("hs_ex_id"))
-          - col("shared")), 6))
-      .filter(col("jac") >= theta)
-      .select("in_id", "ex_id", "jac")
-      .localCheckpoint(true)
+      .dropDuplicates("in_id", "ex_id")
+
+  /** The verify step of [[lshScreenAgainst]]: [[verifyJaccard]] of the
+    * candidates on the shingle sets of the CANDIDATES only — both text
+    * reads are semi-join-scoped to candidate ids. */
+  private[graft] def lshVerify(cand: DataFrame, incoming: DataFrame,
+                               existing: DataFrame, idCol: String,
+                               textCol: String, k: Int,
+                               theta: Double): DataFrame = {
+    def side(src: DataFrame, id: String) = shingleSets(
+      src.join(cand.select(id).distinct(), col(idCol) === col(id),
+        "left_semi"), idCol, textCol, k)
+    verifyJaccard(cand, side(incoming, "in_id"), side(existing, "ex_id"),
+      "in_id", "ex_id", theta, "hs_in_id", "hs_ex_id")
   }
 
   /** 64-bit SimHash of word tokens: per-token xxhash64, bitwise majority

@@ -100,27 +100,13 @@ object EntityResolution {
                 right: DataFrame, rightId: String, rightName: String,
                 n: Int = 3, theta: Double = 0.5,
                 dfCap: Int = 0): DataFrame = {
-    def tf(df: DataFrame, id: String, name: String): DataFrame = df
-      .select(col(id), lower(trim(col(name))).as("__nm"))
-      .filter(col("__nm").isNotNull && col("__nm") =!= "")
-      .select(col(id), explode(Fuzzy.charNgrams(col("__nm"), n)).as("g"))
-      .groupBy(id, "g").agg(count(lit(1)).as("tf"))
-    def norm(t: DataFrame, id: String, as: String): DataFrame =
-      t.groupBy(id)
-        .agg(sqrt(sum(col("tf") * col("tf")).cast("double")).as(as))
-    val ltf = tf(left, leftId, leftName)
-    val rtf = tf(right, rightId, rightName)
-    val dots = Fuzzy.capPostings(ltf, "g", dfCap).as("a")
-      .join(Fuzzy.capPostings(rtf, "g", dfCap).as("b"),
-        col("a.g") === col("b.g"))
-      .groupBy(col(s"a.$leftId").as(leftId), col(s"b.$rightId").as(rightId))
-      .agg(sum(col("a.tf") * col("b.tf")).as("__dot"))
-    dots
-      .join(norm(ltf, leftId, "__na"), Seq(leftId))
-      .join(norm(rtf, rightId, "__nb"), Seq(rightId))
-      .withColumn("score",
-        round(col("__dot").cast("double") / (col("__na") * col("__nb")), 6))
-      .filter(col("score") >= theta)
+    def tf(df: DataFrame, id: String, name: String): DataFrame =
+      Fuzzy.gramTf(df.select(col(id), lower(trim(col(name))).as("__nm"))
+        .filter(col("__nm").isNotNull && col("__nm") =!= ""),
+        col(id), col("__nm"), n)
+    Fuzzy.gramCosine(tf(left, leftId, leftName), leftId, leftId,
+        tf(right, rightId, rightName), rightId, rightId, "tf", lit(true),
+        dfCap, theta, "score", "__")
       .withColumn("__rk", row_number().over(
         Window.partitionBy(col(leftId))
           .orderBy(col("score").desc, col(rightId))))

@@ -44,36 +44,65 @@ object Fuzzy {
       transform(sequence(lit(1), length(s) - (n - 1)),
         i => s.substr(i, lit(n))))
 
-  private def grams(s: Column, n: Int): Column = charNgrams(s, n)
+  /** Raw term frequencies (key, g, tf) of the char n-grams of `name`,
+    * keyed by `key`. */
+  private[operators] def gramTf(df: DataFrame, key: Column, name: Column,
+                                n: Int): DataFrame =
+    df.select(key, explode(charNgrams(name, n)).as("g"))
+      .groupBy(key, col("g")).agg(count(lit(1)).as("tf"))
+
+  /** The cosine step of every char-gram matcher. `a` and `b` hold
+    * (key, g, `weight`) gram weights keyed by `keyA` / `keyB`: dot
+    * products sum `weight` products over shared grams of the df-capped
+    * postings under `cond`, each side's l2 norm (over its UNCAPPED
+    * vector) joins on the output key, and `round(dot / (na·nb), 6)`
+    * is the cosine, filtered at theta. The working columns are
+    * `tmp`-prefixed dot, na and nb.
+    *
+    * @return (outA, outB, tmp·dot, tmp·na, tmp·nb, score). */
+  private[operators] def gramCosine(a: DataFrame, keyA: String,
+                                    outA: String, b: DataFrame,
+                                    keyB: String, outB: String,
+                                    weight: String, cond: Column,
+                                    dfCap: Int, theta: Double,
+                                    score: String,
+                                    tmp: String): DataFrame = {
+    val (dot, na, nb) = (tmp + "dot", tmp + "na", tmp + "nb")
+    def norms(t: DataFrame, key: String, out: String, as: String) =
+      t.groupBy(col(key).as(out))
+        .agg(sqrt(sum(col(weight) * col(weight)).cast("double")).as(as))
+    capPostings(a, "g", dfCap).as("a")
+      .join(capPostings(b, "g", dfCap).as("b"),
+        col("a.g") === col("b.g") && cond)
+      .groupBy(col(s"a.$keyA").as(outA), col(s"b.$keyB").as(outB))
+      .agg(sum(col(s"a.$weight") * col(s"b.$weight")).as(dot))
+      .join(norms(a, keyA, outA, na), Seq(outA))
+      .join(norms(b, keyB, outB, nb), Seq(outB))
+      .withColumn(score,
+        round(col(dot).cast("double") / (col(na) * col(nb)), 6))
+      .filter(col(score) >= theta)
+  }
+
+  /** Distinct trimmed, lower-cased, non-empty names of `nameCol`. */
+  private def distinctNames(df: DataFrame, nameCol: String): DataFrame =
+    df.select(lower(trim(col(nameCol))).as("name"))
+      .filter(col("name") =!= "").distinct()
+
+  /** [[gramCosine]] of a name-weight table against itself, one row per
+    * unordered pair. Output: (name_a, name_b, cos). */
+  private def namePairs(w: DataFrame, weight: String, dfCap: Int,
+                        theta: Double): DataFrame =
+    gramCosine(w, "name", "name_a", w, "name", "name_b", weight,
+        col("a.name") < col("b.name"), dfCap, theta, "cos", "")
+      .select("name_a", "name_b", "cos")
 
   /** Raw-TF cosine pairs ≥ `theta` between distinct values of `nameCol`.
     * Integer dot products + deterministic sqrt/division → results are
     * engine-exact (oracle-comparable). Output: (name_a, name_b, cos). */
   def tfCosinePairs(df: DataFrame, nameCol: String, n: Int,
-                    theta: Double, dfCap: Int = 0): DataFrame = {
-    val names = df.select(lower(trim(col(nameCol))).as("name"))
-      .filter(col("name") =!= "").distinct()
-    val tf = names
-      .select(col("name"), explode(grams(col("name"), n)).as("g"))
-      .groupBy("name", "g").agg(count(lit(1)).as("tf"))
-    val norms = tf.groupBy("name")
-      .agg(sqrt(sum(col("tf") * col("tf")).cast("double")).as("nrm"))
-    val posting = capPostings(tf, "g", dfCap)
-    val dots = posting.as("a")
-      .join(posting.as("b"), col("a.g") === col("b.g")
-        && col("a.name") < col("b.name"))
-      .groupBy(col("a.name").as("name_a"), col("b.name").as("name_b"))
-      .agg(sum(col("a.tf") * col("b.tf")).as("dot"))
-    dots
-      .join(norms.select(col("name").as("name_a"), col("nrm").as("na")),
-        Seq("name_a"))
-      .join(norms.select(col("name").as("name_b"), col("nrm").as("nb")),
-        Seq("name_b"))
-      .withColumn("cos",
-        round(col("dot").cast("double") / (col("na") * col("nb")), 6))
-      .filter(col("cos") >= theta)
-      .select("name_a", "name_b", "cos")
-  }
+                    theta: Double, dfCap: Int = 0): DataFrame =
+    namePairs(gramTf(distinctNames(df, nameCol), col("name"), col("name"), n),
+      "tf", dfCap, theta)
 
   /** TF-IDF-weighted variant (sklearn-style smooth idf:
     * ln((1+N)/(1+df)) + 1, l2-normalized) — closer to string_grouper's
@@ -82,37 +111,19 @@ object Fuzzy {
     * ~1e-15 level, and rounding makes the output oracle-exact. */
   def tfidfCosinePairs(df: DataFrame, nameCol: String, n: Int,
                        theta: Double, dfCap: Int = 0): DataFrame = {
-    val names = df.select(lower(trim(col(nameCol))).as("name"))
-      .filter(col("name") =!= "").distinct()
+    val names = distinctNames(df, nameCol)
     // N for the idf term rides the plan as a one-row broadcast scalar
     // (the bm25TopK pattern) — a driver-side names.count() here was
     // the last blocking action on a hot analytical path (round-6
     // verdict): an extra job per call for one long.
     val nNames = broadcast(names.agg(count(lit(1)).as("n_names")))
-    val tf = names
-      .select(col("name"), explode(grams(col("name"), n)).as("g"))
-      .groupBy("name", "g").agg(count(lit(1)).as("tf"))
+    val tf = gramTf(names, col("name"), col("name"), n)
     val idf = tf.groupBy("g").agg(count(lit(1)).as("df"))
       .crossJoin(nNames)
       .withColumn("idf",
         log((lit(1.0) + col("n_names")) / (lit(1.0) + col("df"))) + 1.0)
     val w = tf.join(idf.select("g", "idf"), Seq("g"))
       .withColumn("w", col("tf") * col("idf"))
-    val norms = w.groupBy("name")
-      .agg(sqrt(sum(col("w") * col("w"))).as("nrm"))
-    val posting = capPostings(w, "g", dfCap)
-    val dots = posting.as("a")
-      .join(posting.as("b"), col("a.g") === col("b.g")
-        && col("a.name") < col("b.name"))
-      .groupBy(col("a.name").as("name_a"), col("b.name").as("name_b"))
-      .agg(sum(col("a.w") * col("b.w")).as("dot"))
-    dots
-      .join(norms.select(col("name").as("name_a"), col("nrm").as("na")),
-        Seq("name_a"))
-      .join(norms.select(col("name").as("name_b"), col("nrm").as("nb")),
-        Seq("name_b"))
-      .withColumn("cos", round(col("dot") / (col("na") * col("nb")), 6))
-      .filter(col("cos") >= theta)
-      .select("name_a", "name_b", "cos")
+    namePairs(w, "w", dfCap, theta)
   }
 }

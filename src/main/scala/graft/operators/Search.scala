@@ -199,15 +199,9 @@ object Search {
                k: Int, k1: Double = 1.2, b: Double = 0.75,
                dfCap: Int = 0,
                materialize: Boolean = true): DataFrame = Pins.scope { pins =>
-    val tfAll = snapshotBarrier(pins, docs, idCol, textCol, materialize)
-    // the inverted-index probe: query terms equi-join the postings on
-    // the term, never the documents
-    val scored = qTermsFrom(queries, qidCol, qTextCol)
-      .join(perPostFrom(tfAll, k1, b, dfCap), Seq("t"))
-      .groupBy("qid", "doc_id")
-      .agg(sum("s_micros").as("score_micros"))
-    // materialize the (small) top-k; the scope then frees the postings
-    seal(rankTopK(scored, k), materialize)
+    // the top-k is sealed inside the scope, which then frees the postings
+    bm25TopKIndexed(snapshotBarrier(pins, docs, idCol, textCol, materialize),
+      queries, qidCol, qTextCol, k, k1, b, dfCap, materialize)
   }
 
   /** [[bm25TopK]] against a pre-materialized [[tfSnapshot]] — the
@@ -220,6 +214,8 @@ object Search {
                       k1: Double = 1.2, b: Double = 0.75,
                       dfCap: Int = 0,
                       materialize: Boolean = true): DataFrame = {
+    // the inverted-index probe: query terms equi-join the postings on
+    // the term, never the documents
     val scored = qTermsFrom(queries, qidCol, qTextCol)
       .join(perPostFrom(tfAll, k1, b, dfCap), Seq("t"))
       .groupBy("qid", "doc_id")

@@ -42,23 +42,26 @@ class TablesSpec extends SparkSpec {
 
   test("a store read keeps batch LONG and prunes batch = 1 as a " +
     "partition filter") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_tables")
-      .toString + "/store"
-    val s = spark
-    import s.implicits._
-    val rows = Seq((1L, "a"), (2L, "b")).toDF("doc_id", "text")
-    Incremental.initSnapshotStore(rows, dir, manifestIdCol = Some("doc_id"))
-    Incremental.commitSnapshotBatch(Seq((3L, "c")).toDF("doc_id", "text"),
-      dir, 1L, manifestIdCol = Some("doc_id"))
-    // the manifest is read through the store reader, batch included
-    val m = Incremental.loadSnapshotStoreManifest(spark, dir)
-    assert(m.schema("batch").dataType == LongType)
-    val one = m.filter(col("batch") === 1L)
-    val filters = one.queryExecution.sparkPlan.collect {
-      case scan: FileSourceScanExec => scan.partitionFilters
-    }.flatten
-    assert(filters.exists(_.references.exists(_.name == "batch")))
-    assert(one.select("doc_id").as[Long].collect().toSeq == Seq(3L))
+    val root = java.nio.file.Files.createTempDirectory("graft_tables")
+      .toString
+    try {
+      val dir = s"$root/store"
+      val s = spark
+      import s.implicits._
+      val rows = Seq((1L, "a"), (2L, "b")).toDF("doc_id", "text")
+      Incremental.initSnapshotStore(rows, dir, manifestIdCol = Some("doc_id"))
+      Incremental.commitSnapshotBatch(Seq((3L, "c")).toDF("doc_id", "text"),
+        dir, 1L, manifestIdCol = Some("doc_id"))
+      // the manifest is read through the store reader, batch included
+      val m = Incremental.loadSnapshotStoreManifest(spark, dir)
+      assert(m.schema("batch").dataType == LongType)
+      val one = m.filter(col("batch") === 1L)
+      val filters = one.queryExecution.sparkPlan.collect {
+        case scan: FileSourceScanExec => scan.partitionFilters
+      }.flatten
+      assert(filters.exists(_.references.exists(_.name == "batch")))
+      assert(one.select("doc_id").as[Long].collect().toSeq == Seq(3L))
+    } finally rmTree(root)
   }
 
   test("the durable layouts and their sidecars read with the inferred " +
@@ -68,41 +71,51 @@ class TablesSpec extends SparkSpec {
     import s.implicits._
     val root = java.nio.file.Files.createTempDirectory("graft_layouts")
       .toString
-    val store = s"$root/store"
-    Incremental.initSnapshotStore(
-      Seq((1L, "a"), (2L, "b")).toDF("doc_id", "text"), store,
-      manifestIdCol = Some("doc_id"))
-    Incremental.commitSnapshotBatch(Seq((3L, "c")).toDF("doc_id", "text"),
-      store, 1L, manifestIdCol = Some("doc_id"))
-    Dedup.writeBandParams(spark, store, k = 5, numPerm = 64, bands = 16)
-    val vecs = Seq(
-      (0L, Array(1f, 0f, 1f, 0f)), (1L, Array(0f, 1f, 0f, 1f)),
-      (2L, Array(1f, 0.2f, 1f, 0f)), (3L, Array(0.2f, 1f, 0f, 1f)))
-      .toDF("vec_id", "embedding")
-    val idx = Quantization.ivfPqIndex(vecs, "vec_id", "embedding",
-      nlist = 2, coarseIters = 2, m = 2, ksub = 2, pqIters = 2)
-    val ivf = s"$root/ivf"
-    try Quantization.persistIvfPqIndex(idx, ivf, manifest = true)
-    finally org.apache.spark.sql.graftshim.Shims
-      .unpersistLocalCheckpoint(idx.codes)
-    val batch = StructField("batch", LongType)
-    val cell = StructField("cell", IntegerType)
-    val layouts = Seq(store -> Some(batch),
-      s"${store}__manifest" -> Some(batch),
-      s"${store}__band_params" -> None,
-      s"$ivf/codes" -> Some(cell), s"$ivf/nid_manifest" -> Some(cell),
-      s"$ivf/cells" -> None, s"$ivf/pq" -> None, s"$ivf/meta" -> None)
-    val (footer, jobs) = JobCounter(spark.sparkContext)(
-      layouts.map { case (path, part) =>
-        Tables.parquet(spark, path, part.toSeq: _*).schema })
-    assert(jobs == 0)
-    layouts.zip(footer).foreach { case ((path, part), sch) =>
-      val inferred = spark.read.parquet(path).schema
-      // inference types the small batch ids INT; stores read it LONG
-      assert(sch == StructType(inferred.map(f =>
-        if (f.name == "batch") batch else f)), path)
-      part.foreach(f => assert(sch.last == f, path))
-    }
-    assert(spark.read.parquet(s"$ivf/codes").schema("cell") == cell)
+    try {
+      val store = s"$root/store"
+      Incremental.initSnapshotStore(
+        Seq((1L, "a"), (2L, "b")).toDF("doc_id", "text"), store,
+        manifestIdCol = Some("doc_id"))
+      Incremental.commitSnapshotBatch(Seq((3L, "c")).toDF("doc_id", "text"),
+        store, 1L, manifestIdCol = Some("doc_id"))
+      Dedup.writeBandParams(spark, store, k = 5, numPerm = 64, bands = 16)
+      val vecs = Seq(
+        (0L, Array(1f, 0f, 1f, 0f)), (1L, Array(0f, 1f, 0f, 1f)),
+        (2L, Array(1f, 0.2f, 1f, 0f)), (3L, Array(0.2f, 1f, 0f, 1f)))
+        .toDF("vec_id", "embedding")
+      val idx = Quantization.ivfPqIndex(vecs, "vec_id", "embedding",
+        nlist = 2, coarseIters = 2, m = 2, ksub = 2, pqIters = 2)
+      val ivf = s"$root/ivf"
+      try Quantization.persistIvfPqIndex(idx, ivf, manifest = true)
+      finally org.apache.spark.sql.graftshim.Shims
+        .unpersistLocalCheckpoint(idx.codes)
+      val batch = StructField("batch", LongType)
+      val cell = StructField("cell", IntegerType)
+      val layouts = Seq(store -> Some(batch),
+        s"${store}__manifest" -> Some(batch),
+        s"${store}__band_params" -> None,
+        s"$ivf/codes" -> Some(cell), s"$ivf/nid_manifest" -> Some(cell),
+        s"$ivf/cells" -> None, s"$ivf/pq" -> None, s"$ivf/meta" -> None)
+      val (footer, jobs) = JobCounter(spark.sparkContext)(
+        layouts.map { case (path, part) =>
+          Tables.parquet(spark, path, part.toSeq: _*).schema })
+      assert(jobs == 0)
+      layouts.zip(footer).foreach { case ((path, part), sch) =>
+        val inferred = spark.read.parquet(path).schema
+        // inference types the small batch ids INT; stores read it LONG
+        assert(sch == StructType(inferred.map(f =>
+          if (f.name == "batch") batch else f)), path)
+        part.foreach(f => assert(sch.last == f, path))
+      }
+      assert(spark.read.parquet(s"$ivf/codes").schema("cell") == cell)
+    } finally rmTree(root)
+  }
+
+  private def rmTree(dir: String): Unit = {
+    val root = java.nio.file.Paths.get(dir)
+    if (java.nio.file.Files.exists(root))
+      java.nio.file.Files.walk(root)
+        .sorted(java.util.Comparator.reverseOrder())
+        .forEach(f => java.nio.file.Files.delete(f))
   }
 }

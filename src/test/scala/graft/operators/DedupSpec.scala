@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -80,6 +81,29 @@ class DedupSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(full.nonEmpty, "fixture must produce a boundary pair")
     assert(pref == full)
+  }
+
+  test("prefixCrossJaccard and a prefixCrossIndex probe survive the " +
+    "0.3×10 float-ceiling boundary") {
+    // the CROSS path's prefixes, ranked by the existing side's df, at
+    // the boundary of the self-join test above: 10-shingle docs,
+    // θ·n = 0.3×10 = 3.0000000000000004 in doubles, J = 5/15 ≈ 0.333
+    val a = "alpha beta gamma delta epsilon zeta eta ones twos three fours fives"
+    val b = "alpha beta gamma delta epsilon zeta eta seven eight nines tens elevens"
+    val ex = Seq((1L, a)).toDF("doc_id", "text")
+    val in = Seq((2L, b)).toDF("doc_id", "text")
+    def rows(df: DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val full = rows(Dedup.crossDedupNear(in, ex, "doc_id", "text", 3, 0.3))
+    assert(full.nonEmpty, "fixture must produce a boundary pair")
+    assert(rows(Dedup.prefixCrossJaccard(in, ex, "doc_id", "text", 3, 0.3))
+      == full)
+    Pins.scope { p =>
+      val idx = Dedup.prefixCrossIndex(ex, "doc_id", "text", 3, 0.3)
+      idx.frames.foreach(p.own)
+      assert(rows(Dedup.prefixCrossJaccardAgainst(in, idx, "doc_id",
+        "text")) == full)
+    }
   }
 
   test("prefixCrossJaccard == crossDedupNear across thresholds (lossless)") {

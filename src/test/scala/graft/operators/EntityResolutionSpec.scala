@@ -1,5 +1,7 @@
 package graft.operators
 
+import org.apache.spark.sql.functions.col
+
 import graft.SparkSpec
 
 class EntityResolutionSpec extends SparkSpec {
@@ -51,6 +53,28 @@ class EntityResolutionSpec extends SparkSpec {
     val row = m.head
     assert(row.getLong(0) == 1L && row.getLong(1) == 11L) // tie → min rid
     assert(row.getString(2) == "fuzzy" && row.getDouble(3) > 0.5)
+  }
+
+  test("fuzzy terminal scores equal tfCosinePairs' cosine at dfCap = 0") {
+    val l = Seq((1L, "Red Plate"), (2L, "blue bolt "), (3L, "green cog"))
+      .toDF("lid", "lname")
+    val r = Seq((11L, "red plates"), (12L, "blue bolts"),
+      (13L, "green cogs deluxe"), (14L, "plate red")).toDF("rid", "rname")
+    val names = (l.select(col("lid").as("id"), col("lname").as("name")) union
+      r.select(col("rid").as("id"), col("rname").as("name")))
+      .collect().map(x => x.getLong(0) -> x.getString(1).trim.toLowerCase)
+      .toMap
+    val cos = Fuzzy.tfCosinePairs(l.select(col("lname").as("name")) union
+        r.select(col("rname").as("name")), "name", 3, 0.0, dfCap = 0)
+      .collect().map(x => (x.getString(0), x.getString(1)) -> x.getDouble(2))
+      .toMap
+    val m = EntityResolution.fuzzyBest(l, "lid", "lname", r, "rid", "rname",
+      n = 3, theta = 0.1, dfCap = 0).collect()
+    assert(m.length == 3)
+    m.foreach { x =>
+      val (a, b) = (names(x.getLong(0)), names(x.getLong(1)))
+      assert(x.getDouble(3) == cos(if (a < b) (a, b) else (b, a)), (a, b))
+    }
   }
 
   test("matched ids never reappear in later stages") {
